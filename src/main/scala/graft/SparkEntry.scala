@@ -1572,9 +1572,9 @@ object SparkEntry {
       }.flatten
       require(markers.contains("v_rewrite_g"),
         s"ann_rewrite_graph: rule did not select the graph index (markers $markers)")
-      val engine = graft.index.IndexCatalog.load(Ann.root(s), "v_rewrite_g").engine
-      require(engine == "diskann",
-        s"ann_rewrite_graph: selected index is not a graph engine ($engine)")
+      val meta = graft.index.IndexCatalog.load(Ann.root(s), "v_rewrite_g")
+      require(graft.index.AnnEngine.of(meta).isGraph,
+        s"ann_rewrite_graph: selected index is not a graph engine (${meta.engine})")
       df
     }),
 

@@ -1,12 +1,10 @@
 package graft.index
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession, Row, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.core.{Metric, GraphIndex, VamanaIndex, HnswIndex, VectorOps,
-  DiskannFormat, HnswFormat, LshCodec, Sq8Codec}
+import graft.core.{Metric, VamanaIndex, HnswIndex, VectorOps, HnswFormat, LshCodec}
 import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_product,
   array_cosine_similarity}
 
@@ -27,9 +25,9 @@ import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_prod
  *  - Row fetch-back uses an `isin` pushdown filter on the id column (a k-row
  *    literal reaches the parquet scan) + a broadcast join for `_distance` —
  *    the 100 TB-safe analog of the reference's rowid `DataTable::Fetch`.
- *  - Engines: `diskann` (Vamana graph), `flat` (exact scan, Spark-native
- *    TakeOrderedAndProject), `ivfflat` (sampled k-means centroids + parquet
- *    partitioned by cluster id → nprobe partition pruning).
+ *  - Engines: one [[AnnEngine]] family per stored representation — graph
+ *    shards (diskann, hnsw), exact tables (flat, ivfflat), PQ codes (pq,
+ *    ivfpq), scalar codes (ivfsq) and LSH sign codes (lsh).
  *
  * Distances surfaced follow the reference engine: L2 is *squared* L2, IP is
  * the negated dot product, cosine is the negated cosine (lower = closer;
@@ -38,7 +36,7 @@ import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_prod
 object Ann {
 
   case class BuildParams(
-      engine: String = "diskann",          // diskann | hnsw | flat | ivfflat | pq
+      engine: String = "diskann",          // an AnnEngine name
       metric: String = "l2",               // l2 | ip | cosine
       maxDegree: Int = VamanaIndex.DefaultMaxDegree,
       buildComplexity: Int = VamanaIndex.DefaultBuildComplexity,
@@ -102,12 +100,6 @@ object Ann {
       // >1 on a cluster requires spark.task.cpus to match. 1 = serial,
       // deterministic build.
       buildThreads: Int = 1)
-
-  /** Engines whose shards are graph files searched via ShardCache (hnsw
-   *  reuses the diskann shard lifecycle; its IndexMeta stores m in
-   *  `maxDegree` and efConstruction in `buildComplexity`). */
-  private[graft] def isGraphEngine(engine: String): Boolean =
-    engine == "diskann" || engine == "hnsw"
 
   def root(spark: SparkSession): String =
     IndexCatalog.rootDir(k => spark.conf.getOption(k))
@@ -274,31 +266,30 @@ object Ann {
         "',SQ8'/',SQ4'/',SQ6' (diskann or IVF<nlist>) or ',RFlat' " +
         "(PQ/LSH/IVFSQ engines); other transform chains are not implemented")
     }
+    val engine = AnnEngine(p.engine, desc)
     val p2 = sqSuffix.headOption match {
       // FAISS `IVF<n>,SQ8/SQ4/SQ6` (IndexIVFScalarQuantizer with
       // QT_8bit/QT_4bit/QT_6bit, by_residual=false): inverted lists over
       // scalar-quantized codes — a distinct engine (the diskann SQ suffix
       // quantizes graph-shard storage instead); SQ4/SQ6 pack sub-byte rows
-      case Some(q) if p.engine == "ivfflat" && p.imiB == 0 && p.pcaDim == 0 =>
+      case Some(q) if engine == AnnEngine.IvfFlat && p.imiB == 0 && p.pcaDim == 0 =>
         p.copy(engine = "ivfsq", quantization = q)
       case Some(q) =>
-        require(p.engine == "diskann",
+        require(engine == AnnEngine.Diskann,
           s"${q.toUpperCase} requires the diskann or IVF engine " +
           "(IMI/PCA+SQ chains are not implemented)")
         p.copy(quantization = q)
       case None => p
     }
     if (refine) {
-      require(p2.engine == "pq" || p2.engine == "ivfpq" || p2.engine == "lsh" ||
-        p2.engine == "ivfsq",
+      val refined = AnnEngine(p2.engine, desc)
+      require(refined.adcCodes || refined == AnnEngine.Lsh,
         "RFlat refine applies to code engines (e.g. 'PQ8,RFlat', " +
         "'IVF64,PQ8,RFlat', 'LSH32,RFlat', 'IVF64,SQ8,RFlat')")
       p2.copy(refine = true)
     } else p2
   }
 
-  /** Build from a factory description string (`Flat`, `HNSW32`,
-   *  `IVF256,Flat`, `DiskANN64,SQ8`, `PQ8,RFlat`, `IVF64,PQ8,RFlat`). */
   /** Coarse-graph degree from the `_HNSW<m>` form: an EXPLICIT m must be a
    *  usable graph degree (m ≥ 2 — same floor HnswIndex itself requires), so
    *  a user who wrote `IVF64_HNSW0` gets a parse error rather than a
@@ -311,12 +302,12 @@ object Ann {
       m.toInt
     }
 
+  /** Build from a factory description string (`Flat`, `HNSW32`,
+   *  `IVF256,Flat`, `DiskANN64,SQ8`, `PQ8,RFlat`, `IVF64,PQ8,RFlat`). */
   def buildIndexFactory(df: DataFrame, column: String, idColumn: String,
       name: String, factory: String,
       base: BuildParams = BuildParams()): IndexMeta =
     buildIndex(df, column, idColumn, name, parseFactory(factory, base))
-
-  private def sortableVec(c: Column): Column = c
 
   // ------------------------------------------------------------------ build
 
@@ -374,6 +365,7 @@ object Ann {
       return IndexCatalog.load(root(spark), name)
     }
     val metric = Metric.fromName(params.metric)
+    val engine = AnnEngine(params.engine.toLowerCase, name)
     val dir = IndexCatalog.indexDir(root(spark), name)
     IndexCatalog.drop(root(spark), name)
     new java.io.File(dir).mkdirs()
@@ -389,8 +381,8 @@ object Ann {
     // the index neither knows nor cares a transform exists; queries map
     // through the same file in prepQuery.
     val (data, origDim, pcaPath, chainVariant) = if (params.pcaDim > 0) {
-      require(params.engine == "flat" || params.engine == "ivfflat" ||
-        params.engine == "ivfpq",
+      require(engine == AnnEngine.Flat || engine == AnnEngine.IvfFlat ||
+        engine == AnnEngine.IvfPq,
         s"PCA pre-transform supports flat/ivfflat/ivfpq terminals (got ${params.engine})")
       require(metric eq Metric.L2,
         "PCA pre-transform supports the l2 metric (centering shifts IP/cosine values)")
@@ -415,7 +407,7 @@ object Ann {
       // PCA-chain fold unchanged. Mean zero means no centering: rotations
       // preserve norms and dots, so the chain is metric-safe for
       // l2/ip/cosine (normalize∘rotate = rotate∘normalize).
-      require(params.engine == "ivfpq",
+      require(engine == AnnEngine.IvfPq,
         s"the OPQ chain form targets the ivfpq terminal (got ${params.engine})")
       import spark.implicits._
       val inDim = inferDim(data0)
@@ -438,17 +430,7 @@ object Ann {
     } else (data0, 0, "", "")
 
     val srcFiles = sourceRootPaths(df)
-    val built = params.engine.toLowerCase match {
-      case "diskann" => buildGraph(data, name, dir, metric, params, "diskann")
-      case "hnsw"    => buildGraph(data, name, dir, metric, params, "hnsw")
-      case "flat"    => buildFlat(data, name, dir, metric, params)
-      case "ivfflat" => buildIvf(data, name, dir, metric, params)
-      case "pq"      => buildPq(data, name, dir, metric, params)
-      case "ivfpq"   => buildIvfPq(data, name, dir, metric, params)
-      case "ivfsq"   => buildIvfSq(data, name, dir, metric, params)
-      case "lsh"     => buildLsh(data, name, dir, metric, params)
-      case e => throw new IllegalArgumentException(s"unknown engine: $e")
-    }
+    val built = engine.build(data, name, dir, metric, params)
     // record the user-facing binding (original column names + source files)
     val bound = built.copy(column = column, idColumn = idColumn,
       sourceFiles = srcFiles, inputDim = origDim, pcaFile = pcaPath,
@@ -475,187 +457,13 @@ object Ann {
   /** Shared cosine-normalization UDF: builders normalize ONCE into the
    *  stored `vec`; downstream assignment/encoding reads the normalized
    *  column instead of re-normalizing per row. */
-  private lazy val normalizeVecUdf =
+  private[index] lazy val normalizeVecUdf =
     udf((v: Array[Float]) => VectorOps.normalize(v.clone()))
 
-  private def inferDim(data: DataFrame): Int = {
+  private[index] def inferDim(data: DataFrame): Int = {
     val row = data.select(size(col("vec")).as("d")).limit(1).collect()
     require(row.nonEmpty, "cannot build an index over an empty input")
     row(0).getInt(0)
-  }
-
-  private def buildGraph(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams, engine: String): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    require(engine == "diskann" || params.quantization.isEmpty,
-      "scalar quantization (sq8/sq4/sq6) is supported for the diskann engine only")
-    require(Set("", "sq8", "sq4", "sq6")(params.quantization),
-      s"unknown quantization '${params.quantization}' (supported: sq8, sq4, sq6)")
-    require(engine != "hnsw" || params.hnswM <= 8192,
-      s"hnsw m=${params.hnswM} exceeds the .hnsw format bound (8192)")
-    val dim = inferDim(data)
-    val n = data.count()
-    val nShards = if (params.numShards > 0) params.numShards
-      else math.max(1, math.ceil(n.toDouble / params.targetShardSize).toInt)
-
-    val ds = data.as[(Long, Array[Float])]
-    val repart = if (nShards == 1) ds.coalesce(1) else ds.repartition(nShards)
-    val maxDeg = params.maxDegree; val bc = params.buildComplexity
-    val alpha = params.alpha; val quant = params.quantization
-    val hnswM = params.hnswM; val efc = params.efConstruction
-    val metricName = metric.name
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
-    // escape hatch / A-B knob for the pilot-seeded insert order (captured
-    // driver-side so it reaches executor closures on a real cluster)
-    val pilotSeed = spark.conf.getOption("spark.graft.ann.pilotSeed")
-      .forall(_.toBoolean)
-    val buildThreads = params.buildThreads
-    val shardMetas = repart.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val ix: GraphIndex =
-        if (engine == "hnsw") new HnswIndex(dim, m, hnswM, efc)
-        else new VamanaIndex(dim, m, maxDeg, bc, alpha)
-      val normalize = m eq Metric.Cosine
-      var bad = -1L
-      if (engine == "hnsw" && buildThreads > 1) {
-        // deterministic batch-parallel bulk build (HnswIndex.addAll — the
-        // same kernel the coarse-quantizer build uses): labels follow
-        // arrival order exactly like the serial insert loop, so the
-        // id↔label mapping stays a pure function of (shard rows, level
-        // seed) at any core count. OPT-IN via buildThreads, the vamana
-        // convention (idle task cores; cluster equivalent:
-        // spark.task.cpus = buildThreads) — running addAll UNGATED inside
-        // every shard task measured 182 s vs 62 s serial at 1.5M/32
-        // shards on 32 cores: with the shard axis already saturating the
-        // host, the common-pool fan-out oversubscribes and refineLayer0's
-        // extra re-search pass has no idle cores to pay for it. A scoped
-        // pool bounds each task to its declared cpus; determinism means
-        // the pool size cannot change the result, only the speed.
-        val vs = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-        it.foreach { case (id, v) =>
-          if (v.length != dim) bad = id
-          else {
-            vs += (if (normalize) VectorOps.normalize(v.clone()) else v)
-            ids += id
-          }
-        }
-        if (bad < 0) {
-          val pool = new java.util.concurrent.ForkJoinPool(buildThreads)
-          try pool.submit(new Runnable {
-            def run(): Unit =
-              ix.asInstanceOf[HnswIndex].addAll(vs.toArray[Array[Float]])
-          }).get()
-          finally pool.shutdown()
-        }
-      } else if (engine == "hnsw" || !pilotSeed) {
-        // hnsw default: serial insertion — at full shard-axis parallelism
-        // there are no idle cores for a per-shard pool to use
-        it.foreach { case (id, v) =>
-          if (v.length != dim) bad = id
-          else {
-            ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
-            ids += id
-          }
-        }
-      } else {
-        // vamana: two-pass pilot seeding per shard (the reference's
-        // streaming build trains a pilot graph from a max(√N, 1000)-point
-        // sample, then stream-inserts the rest,
-        // rust_lib/src/streaming_build.rs:46-122 — early inserts see a
-        // well-spread graph instead of whatever arrived first, improving
-        // edge quality at equal cost). Buffers the partition's rows
-        // (references only; the index copies on add) — shard sizing already
-        // assumes the shard's vectors fit the task.
-        val rows = it.toArray
-        rows.foreach { case (id, v) => if (v.length != dim) bad = id }
-        if (bad < 0 && rows.nonEmpty) {
-          val nRows = rows.length
-          val pilot = math.min(nRows.toLong,
-            math.max(math.sqrt(nRows.toDouble).toLong, 1000L)).toInt
-          val stride = math.max(1, nRows / pilot)
-          val isPilot = new Array[Boolean](nRows)
-          var p = 0
-          var taken = 0
-          while (p < nRows && taken < pilot) {
-            isPilot(p) = true; taken += 1; p += stride
-          }
-          def prep(i: Int): Array[Float] = {
-            val v = rows(i)._2
-            if (normalize) VectorOps.normalize(v.clone()) else v
-          }
-          // ids follow label order: pilot block first, then the tail — the
-          // id↔label mapping is identical on the serial and parallel routes
-          var i = 0
-          while (i < nRows) { if (isPilot(i)) ids += rows(i)._1; i += 1 }
-          i = 0
-          while (i < nRows) { if (!isPilot(i)) ids += rows(i)._1; i += 1 }
-          val vx = ix.asInstanceOf[VamanaIndex]
-          i = 0
-          while (i < nRows) { if (isPilot(i)) vx.add(prep(i)); i += 1 }
-          if (buildThreads > 1) {
-            // tail inserted by a per-shard worker pool (idle task cores;
-            // cluster equivalent: spark.task.cpus = buildThreads)
-            val tail = Array.newBuilder[Array[Float]]
-            tail.sizeHint(nRows - taken)
-            i = 0
-            while (i < nRows) { if (!isPilot(i)) tail += prep(i); i += 1 }
-            vx.addAllParallel(tail.result(), buildThreads)
-          } else {
-            i = 0
-            while (i < nRows) { if (!isPilot(i)) vx.add(prep(i)); i += 1 }
-          }
-        }
-      }
-      if (bad >= 0) throw new IllegalArgumentException(
-        s"vector for id $bad does not have expected dimension $dim")
-      if (ix.size == 0) Iterator.empty
-      else {
-        val f = f"$dir/shard-$pid%05d.$ext"
-        val idsF = f"$dir/shard-$pid%05d.ids"
-        ix match {
-          case v: VamanaIndex =>
-            if (quant.nonEmpty) v.quantize(quant.stripPrefix("sq").toInt)
-            DiskannFormat.writeFile(v, f)
-          case h: HnswIndex => HnswFormat.writeFile(h, f)
-        }
-        IndexCatalog.writeIds(idsF, ids.toArray)
-        Iterator.single(ShardMeta(f, idsF, ids.length.toLong))
-      }
-    }.collect().toList.sortBy(_.file)
-
-    // hnsw reuses the (maxDegree, buildComplexity) metadata slots for (m,
-    // efConstruction) — keeps metadata.json schema-stable across engines
-    val (md, bcMeta) =
-      if (engine == "hnsw") (params.hnswM, params.efConstruction)
-      else (params.maxDegree, params.buildComplexity)
-    val meta = IndexMeta(name, engine, "vec", "id", dim, metric.name,
-      md, bcMeta, params.alpha,
-      params.quantization.nonEmpty, shardMetas.map(_.count).sum, 0L, shardMetas,
-      quantBits = if (params.quantization.isEmpty) 8
-        else params.quantization.stripPrefix("sq").toInt)
-    IndexCatalog.save(root(spark), meta)
-    meta
-  }
-
-  private def buildFlat(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    val dim = inferDim(data)
-    val out = s"$dir/data"
-    val stored =
-      if (metric eq Metric.Cosine) {
-        val normalizeUdf = udf((v: Array[Float]) => VectorOps.normalize(v.clone()))
-        data.withColumn("vec", normalizeUdf(col("vec")))
-      } else data
-    stored.write.mode("overwrite").parquet(out)
-    val n = spark.read.parquet(out).count()
-    val meta = IndexMeta(name, "flat", "vec", "id", dim, metric.name,
-      0, 0, 0f, false, n, 0L, Nil, sourcePath = out)
-    IndexCatalog.save(root(spark), meta)
-    meta
   }
 
   /** Deterministic stride sample across the WHOLE dataset, cosine-prepped —
@@ -663,7 +471,7 @@ object Ann {
    *  25600, faiss_index.cpp:304-319). A prefix limit() would train on a
    *  biased slice of sorted/clustered input; never more than trainSample
    *  vectors reach the driver. */
-  private def strideSample(data: DataFrame, params: BuildParams,
+  private[index] def strideSample(data: DataFrame, params: BuildParams,
       cosine: Boolean): Array[Array[Float]] = {
     val spark = data.sparkSession
     import spark.implicits._
@@ -677,84 +485,6 @@ object Ann {
     if (cosine) sample.map(v => VectorOps.normalize(v.clone())) else sample
   }
 
-  private def buildIvf(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val dim = inferDim(data)
-    val cosine = metric eq Metric.Cosine
-    // lazy: the seeded IMI branch never samples (its codebooks come from
-    // the kh lowest-id rows), so seed-mode builds skip the corpus pass
-    lazy val prepped = strideSample(data, params, cosine)
-    // IMI2x<b>: two half-space codebooks; the STORED centroid table is the
-    // cross-product concatenation [c1_i ; c2_j] (cell = i·|cb2| + j), so
-    // every downstream serve surface — probe-pruned scans, cluster-radii
-    // range pruning, ExactServe — works UNCHANGED on centroids.bin:
-    // ||q − [c1;c2]||² = ||q₁−c1||² + ||q₂−c2||², hence cell ranking over
-    // product centroids IS the half-distance-sum ranking classic IMI
-    // computes. IMI buys both ends: the BUILD gets 2^(2b) cells from two
-    // 2^b-centroid trainings (FAISS IndexIVF over a MultiIndexQuantizer),
-    // and probe SELECTION decomposes into O(2·2^b) half distances + a heap
-    // merge (KMeansLite.nearestPImi — the FAISS multi-sequence analog,
-    // dispatched via meta.imiB) instead of a 2^(2b)·dim product-table scan,
-    // 128× less per-query distance work at the grammar's allowed b=8.
-    val (cents, imiHalves) = if (params.imiB > 0) {
-      require(dim % 2 == 0, s"IMI2x splits vectors into equal halves (dim=$dim is odd)")
-      val half = dim / 2
-      val kh = 1 << params.imiB
-      val (cb1, cb2) = if (params.seedK > 0) {
-        // seed mode: half-codebooks = halves of the kh lowest-id vectors,
-        // verbatim — SQL-replayable (the ann_imi_probe1 oracle)
-        val seeds = data.orderBy("id").limit(kh).select("vec").as[Array[Float]].collect()
-        val sp = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-        (sp.map(_.take(half)), sp.map(_.drop(half)))
-      } else
-        (KMeansLite.train(prepped.map(_.take(half)), kh),
-         KMeansLite.train(prepped.map(_.drop(half)), kh))
-      (for (c1 <- cb1; c2 <- cb2) yield c1 ++ c2, Some((cb1, cb2)))
-    } else (KMeansLite.train(prepped, params.nlist), None)
-    val nlist = cents.length
-    val centPath = s"$dir/centroids.bin"
-    IndexCatalog.writeCentroids(centPath, cents, dim)
-    writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
-
-    val centsB = spark.sparkContext.broadcast(cents)
-    // IMI assignment decomposes: argmin over the product = (argmin half 1,
-    // argmin half 2) — O(2·2^b) per row instead of O(2^(2b))
-    val assignUdf = imiHalves match {
-      case Some((cb1, cb2)) =>
-        val half = dim / 2
-        val cb1B = spark.sparkContext.broadcast(cb1)
-        val cb2B = spark.sparkContext.broadcast(cb2)
-        udf((v: Array[Float]) =>
-          KMeansLite.nearest(cb1B.value, v.take(half)) * cb2B.value.length +
-            KMeansLite.nearest(cb2B.value, v.drop(half)))
-      case None => udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-    }
-    val out = s"$dir/data"
-    val withCluster = (if (cosine) data.withColumn("vec", normalizeVecUdf(col("vec"))) else data)
-      .withColumn("cluster", assignUdf(col("vec")))
-    // co-locate each cluster before the partitioned write: without it every
-    // writer task emits a file per cluster it holds (writers x nlist tiny
-    // files — 8192 at 1.5M vectors), and the probed scan then pays a file
-    // open per fragment (256 uneven scan tasks, 2.3x skew). One file per
-    // cluster keeps the scan's byte-based bin-packing even; IMI-sized
-    // nlists flip to the bucketed layout (writeClustered).
-    writeClustered(withCluster, nlist, out, "overwrite")
-    val n = spark.read.parquet(out).count()
-    // per-cluster max member↔centroid L2 radius (one distributed agg over
-    // the freshly written table): lets range queries prune clusters by the
-    // triangle inequality EXACTLY — d(q, member) ≥ d(q, centroid) − r_c
-    IndexCatalog.writeRadii(s"$dir/radii.bin",
-      clusterRadii(spark.read.parquet(out), centsB, nlist))
-    val meta = IndexMeta(name, "ivfflat", "vec", "id", dim, metric.name,
-      0, 0, 0f, false, n, 0L, Nil, sourcePath = out,
-      nlist = nlist, nprobe = math.min(params.nprobe, nlist),
-      imiB = params.imiB, coarseHnswM = params.coarseHnswM)
-    IndexCatalog.save(root(spark), meta)
-    meta
-  }
-
   /** Build + persist the HNSW coarse quantizer over the centroid table
    *  (`coarse.hnsw`, the FAISS quantizer=IndexHNSWFlat analog; L2 — the
    *  same metric every IVF assignment/probe ranking here uses). Driver-side
@@ -764,7 +494,7 @@ object Ann {
    *  nlist ≈ √N ≈ 10⁵–10⁶ a 100 TB corpus wants, the graph builds in
    *  seconds once per index. The graph is frozen WITH the centroids:
    *  append/vacuum/merge never move centroids, so they never invalidate it. */
-  private def writeCoarseHnsw(dir: String, cents: Array[Array[Float]],
+  private[index] def writeCoarseHnsw(dir: String, cents: Array[Array[Float]],
       dim: Int, m: Int): Unit = if (m > 0) {
     val ix = new HnswIndex(dim, Metric.L2, m)
     // deterministic batch-parallel bulk build (HnswIndex.addAll): the
@@ -779,7 +509,7 @@ object Ann {
    *  upper bound on the true distance (double-accumulation error ~dim·2⁻⁵²
    *  is absorbed by the ulp round-up), so pruning with it can only
    *  over-probe, never miss. */
-  private def clusterRadii(clustered: DataFrame,
+  private[index] def clusterRadii(clustered: DataFrame,
       centsB: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
       nlist: Int): Array[Float] = {
     val distUdf = udf((v: Array[Float], cl: Int) => {
@@ -816,7 +546,7 @@ object Ann {
    *  bound quantized range search needs (its per-row filter compares
    *  d(q, x̂), which raw-vector radii do not bound). Same double-accumulate
    *  + ulp-round-up contract, so pruning can only over-probe. */
-  private def sqClusterRadii(stored: DataFrame,
+  private[index] def sqClusterRadii(stored: DataFrame,
       centsB: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
       cbB: org.apache.spark.broadcast.Broadcast[PqCodec.Codebook],
       nlist: Int, bits: Int = 8): Array[Float] = {
@@ -831,430 +561,6 @@ object Ann {
       .groupBy("cluster").agg(max(col("__d")).as("__r"))
       .collect().map(r => r.getInt(0) -> r.getFloat(1)).toMap
     Array.tabulate(nlist)(c => maxes.getOrElse(c, 0f))
-  }
-
-  /**
-   * PQ<m> build (reference factory passthrough, faiss_index.cpp:39-60):
-   * train per-subspace codebooks on a stride sample, then encode every
-   * vector to m bytes distributed. Compressed codes land in parquet —
-   * the 100 TB story: a billion dim-768 vectors at m=96 is ~96 GB of
-   * codes vs 3 TB of floats, and the ADC scan reads only (id, code).
-   */
-  private def buildPq(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val dim = inferDim(data)
-    require(params.pqM > 0 && dim % params.pqM == 0,
-      s"pq requires dim % m == 0 (dim=$dim, m=${params.pqM})")
-    val cosine = metric eq Metric.Cosine
-    // OPQ: learn rotation + codebook together; codes store R·v and search
-    // rotates the query (distances are rotation-invariant)
-    // PqCodec.write/read is a float-exact round trip, so the in-memory
-    // codebook is used directly — no read-back
-    val (rotation, cb) = if (params.seedK > 0) {
-      // seed mode: codebook = subvectors of the seedK lowest-id vectors,
-      // verbatim — no sampling job, no training; SQL-replayable by design
-      val seeds = data.orderBy("id").limit(params.seedK)
-        .select("vec").as[Array[Float]].collect()
-      val prepped = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-      if (params.opq) {
-        // seeded OPQ: a deterministic REVERSAL permutation as the rotation —
-        // orthogonal like a trained OPQ matrix, exercises the production
-        // rotate→encode→ADC path (the generic matmul over a permutation is
-        // float-exact: one nonzero term per output), and replays in SQL as
-        // a list reindex (rv[i] = v[dim−i+1]) with no SVD to replicate
-        val rot = Array.tabulate(dim, dim)((i, j) =>
-          if (j == dim - 1 - i) 1.0f else 0.0f)
-        IndexCatalog.writeCentroids(s"$dir/rotation.bin", rot, dim)
-        val t = PqCodec.fromSeeds(prepped.map(OpqCodec.rotate(rot, _)), params.pqM)
-        PqCodec.write(s"$dir/pq.bin", t)
-        (rot, t)
-      } else {
-        val t = PqCodec.fromSeeds(prepped, params.pqM)
-        PqCodec.write(s"$dir/pq.bin", t)
-        (null, t)
-      }
-    } else {
-      val prepped = strideSample(data, params, cosine)
-      if (params.opq) {
-        val trained = OpqCodec.train(prepped, params.pqM)
-        IndexCatalog.writeCentroids(s"$dir/rotation.bin", trained.rotation, dim)
-        PqCodec.write(s"$dir/pq.bin", trained.codebook)
-        (trained.rotation, trained.codebook)
-      } else {
-        val t = PqCodec.train(prepped, params.pqM)
-        PqCodec.write(s"$dir/pq.bin", t)
-        (null, t)
-      }
-    }
-
-    val cbB = spark.sparkContext.broadcast(cb)
-    val rotB = spark.sparkContext.broadcast(rotation)
-    val encodeUdf = udf((v: Array[Float]) => {
-      val r = rotB.value
-      PqCodec.encode(cbB.value, if (r == null) v else OpqCodec.rotate(r, v))
-    })
-    val out = s"$dir/data"
-    val dataP = if (cosine) data.withColumn("vec", normalizeVecUdf(col("vec"))) else data
-    val stored0 = dataP.select(col("id"), encodeUdf(col("vec")).as("code"), col("vec"))
-    // RFlat refine stage keeps the raw (UNROTATED) vectors beside the codes
-    // for the exact re-rank (FAISS IndexRefineFlat stores the flat copy the
-    // same way)
-    val stored = if (params.refine) stored0 else stored0.drop("vec")
-    stored.write.mode("overwrite").parquet(out)
-    val n = spark.read.parquet(out).count()
-    val meta = IndexMeta(name, "pq", "vec", "id", dim, metric.name,
-      maxDegree = params.pqM, // pq reuses the maxDegree slot for m
-      buildComplexity = 0, alpha = 0f, quantized = true, numVectors = n,
-      numDeleted = 0L, shards = Nil, sourcePath = out, refine = params.refine,
-      refineK = params.refineK, opq = params.opq)
-    IndexCatalog.save(root(spark), meta)
-    meta
-  }
-
-  /**
-   * `IVF<nlist>,PQ<m>` build: coarse k-means partitions the codes
-   * cluster-wise (parquet `partitionBy`, so probes prune whole files) and
-   * PQ encodes the RESIDUAL v − centroid (FAISS IVFPQ semantics: residuals
-   * have far less variance than raw vectors, so the same byte budget
-   * quantizes much tighter). The scale shape: a probe touches
-   * nprobe/nlist of the data, each row costing m table adds.
-   */
-  private def buildIvfPq(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val dim = inferDim(data)
-    require(params.pqM > 0 && dim % params.pqM == 0,
-      s"ivfpq requires dim % m == 0 (dim=$dim, m=${params.pqM})")
-    val cosine = metric eq Metric.Cosine
-    def residualOf(cents: Array[Array[Float]], v: Array[Float]): Array[Float] = {
-      val c = cents(KMeansLite.nearest(cents, v))
-      val r = new Array[Float](dim)
-      var i = 0
-      while (i < dim) { r(i) = v(i) - c(i); i += 1 }
-      r
-    }
-    // IMI2x<b>,PQ<m>: the coarse quantizer is the same product-centroid
-    // construction as buildIvf's IMI branch — the STORED centroid table is
-    // the cross product [c1_i ; c2_j], so probe enumeration, residual
-    // encode, ADC serving, and ExactServe are all centroid-table-generic
-    // and need no IMI awareness; only assignment decomposes (O(2·2^b)).
-    // Trained mode collects ONE stride sample and reuses it for both the
-    // half codebooks and the PQ residual training (a second full-corpus
-    // sampling pass would double build IO for identical data).
-    lazy val trainedSample: Array[Array[Float]] = strideSample(data, params, cosine)
-    val imiHalves: Option[(Array[Array[Float]], Array[Array[Float]])] =
-      if (params.imiB > 0) {
-        require(dim % 2 == 0, s"IMI2x splits vectors into equal halves (dim=$dim is odd)")
-        val half = dim / 2
-        val kh = 1 << params.imiB
-        val (cb1, cb2) = if (params.seedK > 0) {
-          val seeds = data.orderBy("id").limit(kh).select("vec").as[Array[Float]].collect()
-          val sp = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-          (sp.map(_.take(half)), sp.map(_.drop(half)))
-        } else
-          (KMeansLite.train(trainedSample.map(_.take(half)), kh),
-           KMeansLite.train(trainedSample.map(_.drop(half)), kh))
-        Some((cb1, cb2))
-      } else None
-    val (cents, cb) = imiHalves match {
-      case Some((cb1, cb2)) =>
-        val cents = for (c1 <- cb1; c2 <- cb2) yield c1 ++ c2
-        // residuals use the DECOMPOSED per-half argmin — the same float
-        // arithmetic the stored assignment (assignUdf below) and the DuckDB
-        // oracle's half-argmin CTEs run. A full-product float scan agrees
-        // in real arithmetic but can round a near-tie differently (one
-        // 64-dim accumulation vs two 32-dim ones), which would seed the
-        // codebook against a different centroid than the row is stored
-        // under and bit-desync the oracle.
-        val half = dim / 2
-        def imiResidual(v: Array[Float]): Array[Float] = {
-          val cell = KMeansLite.nearest(cb1, v.take(half)) * cb2.length +
-            KMeansLite.nearest(cb2, v.drop(half))
-          val c = cents(cell)
-          val r = new Array[Float](dim)
-          var i = 0
-          while (i < dim) { r(i) = v(i) - c(i); i += 1 }
-          r
-        }
-        // PQ codebook on residuals vs the assigned PRODUCT centroid — seeded
-        // from the seedK lowest ids (SQL-replayable) or trained on the sample
-        val cb = if (params.seedK > 0) {
-          val seeds = data.orderBy("id").limit(params.seedK)
-            .select("vec").as[Array[Float]].collect()
-          val sp = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-          PqCodec.fromSeeds(sp.map(imiResidual), params.pqM)
-        } else PqCodec.train(trainedSample.map(imiResidual), params.pqM)
-        (cents, cb)
-      case None if params.seedK > 0 =>
-        // seed mode: coarse centroids = the nlist lowest-id vectors verbatim;
-        // PQ codebook = residuals of the seedK lowest-id vectors against their
-        // assigned coarse centroid — both SQL-replayable for the bit oracle
-        val seeds = data.orderBy("id").limit(math.max(params.nlist, params.seedK))
-          .select("vec").as[Array[Float]].collect()
-        val prepped = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-        val cents = prepped.take(params.nlist)
-        val cb = PqCodec.fromSeeds(
-          prepped.take(params.seedK).map(residualOf(cents, _)), params.pqM)
-        (cents, cb)
-      case None =>
-        // coarse quantizer (L2 assignment — the standard IVF choice for every
-        // metric; cosine inputs are normalized so L2 and cosine ranking agree)
-        val cents = KMeansLite.train(trainedSample, params.nlist)
-        // PQ trains on the sample's residuals against its assigned centroids
-        val cb = PqCodec.train(trainedSample.map(residualOf(cents, _)), params.pqM)
-        (cents, cb)
-    }
-    IndexCatalog.writeCentroids(s"$dir/centroids.bin", cents, dim)
-    PqCodec.write(s"$dir/pq.bin", cb)
-    writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
-
-    val centsB = spark.sparkContext.broadcast(cents)
-    val cbB = spark.sparkContext.broadcast(cb)
-    val assignUdf = imiHalves match {
-      case Some((cb1, cb2)) =>
-        val half = dim / 2
-        val cb1B = spark.sparkContext.broadcast(cb1)
-        val cb2B = spark.sparkContext.broadcast(cb2)
-        udf((v: Array[Float]) =>
-          KMeansLite.nearest(cb1B.value, v.take(half)) * cb2B.value.length +
-            KMeansLite.nearest(cb2B.value, v.drop(half)))
-      case None => udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-    }
-    val encodeUdf = udf((v: Array[Float], cluster: Int) => {
-      val c = centsB.value(cluster)
-      val r = new Array[Float](v.length)
-      var i = 0
-      while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
-      PqCodec.encode(cbB.value, r)
-    })
-    val out = s"$dir/data"
-    val dataP = if (cosine) data.withColumn("vec", normalizeVecUdf(col("vec"))) else data
-    val stored0 = dataP.withColumn("cluster", assignUdf(col("vec")))
-      .select(col("id"), encodeUdf(col("vec"), col("cluster")).as("code"),
-        col("vec"), col("cluster"))
-    val stored = if (params.refine) stored0 else stored0.drop("vec")
-    // same cluster co-location as the ivfflat write: one file per cluster,
-    // not writers x nlist fragments; IMI-sized nlists bucket
-    writeClustered(stored, cents.length, out, "overwrite")
-    val n = spark.read.parquet(out).count()
-    val meta = IndexMeta(name, "ivfpq", "vec", "id", dim, metric.name,
-      maxDegree = params.pqM, buildComplexity = 0, alpha = 0f, quantized = true,
-      numVectors = n, numDeleted = 0L, shards = Nil, sourcePath = out,
-      nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
-      refine = params.refine, refineK = params.refineK, imiB = params.imiB,
-      coarseHnswM = params.coarseHnswM)
-    IndexCatalog.save(root(spark), meta)
-    meta
-  }
-
-  /**
-   * LSH build (FAISS `IndexLSH`, factory `LSH[nbits]`): encode every vector
-   * to an nbits-bit sign code against a fixed hyperplane set and land
-   * (id, code BIGINT) in parquet — 8 bytes/row at any dim, so the 100 TB
-   * scan reads codes only and the Hamming ranking is a single codegen'd
-   * `bit_count(code XOR qcode)` over the pruned two-column projection.
-   * `seedK > 0` seeds hyperplanes verbatim from the nbits lowest-id vectors
-   * (deterministic and SQL-replayable — the `ann_lsh_exact` oracle);
-   * otherwise fixed-seed Gaussian hyperplanes ([[LshCodec.randomHyperplanes]]).
-   * Like FAISS, encoding ignores the metric (signs are scale/normalization
-   * invariant).
-   */
-  /**
-   * `IVF<nlist>,SQ8` build (FAISS IndexIVFScalarQuantizer with
-   * by_residual=false): inverted lists over u8 scalar-quantized codes —
-   * 4× vector compression with per-dim reconstruction far tighter than
-   * PQ's subspace centroids. The per-dim min/max train over the WHOLE
-   * corpus in one order-independent distributed agg (exact, and exactly
-   * what the DuckDB saturation oracle replays); codes quantize RAW stored
-   * vectors (not residuals), so ONE query LUT serves every probe.
-   *
-   * Serving reuses the PQ ADC machinery wholesale: pq.bin stores a
-   * SYNTHETIC codebook with m = dim, dsub = 1, k = 256 whose "centroids"
-   * are the 256 dequantization levels per dimension
-   * (`min_d + (b/255)·scale_d` — bit-identical to [[Sq8Data.dequantize]]),
-   * so `PqCodec.lut/adc`, the codegen'd [[PqAdcScore]] batch path, the
-   * RFlat refine stage, and ExactServe's code route all work unchanged.
-   * Encoding does NOT go through codebook argmin (an exact-midpoint value
-   * would round down by argmin's lowest-index tiebreak but UP by the SQ
-   * round rule the oracle replays) — it uses [[Sq8Codec.encodeRow]].
-   */
-  private def buildIvfSq(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val dim = inferDim(data)
-    val cosine = metric eq Metric.Cosine
-    val dataP = if (cosine) data.withColumn("vec", normalizeVecUdf(col("vec"))) else data
-    // coarse centroids: same seeded/trained construction as buildIvf
-    val cents = if (params.seedK > 0) {
-      val seeds = data.orderBy("id").limit(math.max(params.nlist, params.seedK))
-        .select("vec").as[Array[Float]].collect()
-      val prepped = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-      prepped.take(params.nlist)
-    } else KMeansLite.train(strideSample(data, params, cosine), params.nlist)
-    IndexCatalog.writeCentroids(s"$dir/centroids.bin", cents, dim)
-    writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
-    // per-dim min/max over the STORED representation (normalized if cosine):
-    // elementwise min/max is order-independent, so the distributed agg is
-    // exact and host-count-invariant
-    val zero = (Array.fill(dim)(Float.MaxValue), Array.fill(dim)(Float.MinValue))
-    val (mins, maxs) = dataP.select("vec").as[Array[Float]].rdd.treeAggregate(zero)(
-      (acc, v) => {
-        var d = 0
-        while (d < dim) {
-          if (v(d) < acc._1(d)) acc._1(d) = v(d)
-          if (v(d) > acc._2(d)) acc._2(d) = v(d)
-          d += 1
-        }
-        acc
-      },
-      (a, b) => {
-        var d = 0
-        while (d < dim) {
-          if (b._1(d) < a._1(d)) a._1(d) = b._1(d)
-          if (b._2(d) > a._2(d)) a._2(d) = b._2(d)
-          d += 1
-        }
-        a
-      })
-    val scales = Array.tabulate(dim) { d =>
-      val r = maxs(d) - mins(d)
-      if (r > 0f) r else 1.0f
-    }
-    // sq.bin: [mins row; scales row] in the centroids file format (append
-    // re-encodes against these frozen ranges)
-    IndexCatalog.writeCentroids(s"$dir/sq.bin", Array(mins, scales), dim)
-    // code width: 8 = u8 byte-per-dim (the FAISS QT_8bit analog), 4/6 =
-    // packed sub-byte rows via SqPackedCodec (QT_4bit/QT_6bit) — the
-    // synthetic codebook just has fewer levels, so every LUT consumer is
-    // width-generic; only encode/extract branch on the packing
-    val bits = params.quantization match {
-      case "sq4" => 4
-      case "sq6" => 6
-      case _ => 8
-    }
-    val nLevels = (1 << bits) - 1
-    // synthetic per-dim codebook — the dequantization levels
-    val levels: Array[Array[Array[Float]]] = Array.tabulate(dim) { d =>
-      Array.tabulate(1 << bits)(b =>
-        Array(mins(d) + (b / nLevels.toFloat) * scales(d)))
-    }
-    PqCodec.write(s"$dir/pq.bin", PqCodec.Codebook(dim, 1, 1 << bits, levels))
-
-    val centsB = spark.sparkContext.broadcast(cents)
-    val minsB = spark.sparkContext.broadcast(mins)
-    val scalesB = spark.sparkContext.broadcast(scales)
-    val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-    val encodeUdf =
-      if (bits == 8) udf((v: Array[Float]) =>
-        Sq8Codec.encodeRow(v, minsB.value, scalesB.value))
-      else udf((v: Array[Float]) =>
-        graft.core.SqPackedCodec.encodeRow(v, minsB.value, scalesB.value, bits))
-    val out = s"$dir/data"
-    val stored0 = dataP.select(col("id"), encodeUdf(col("vec")).as("code"),
-      col("vec"), assignUdf(col("vec")).as("cluster"))
-    val stored = if (params.refine) stored0 else stored0.drop("vec")
-    // same cluster co-location as the ivfflat write: one file per cluster
-    writeClustered(stored, cents.length, out, "overwrite")
-    val n = spark.read.parquet(out).count()
-    // CODE-SPACE cluster radii (one distributed agg over the written codes):
-    // range search on a quantized engine filters distances to the
-    // DEQUANTIZED reconstructions, and raw-vector radii do not bound those
-    // (quantization can move a point up to half a level outward) — so the
-    // stored radius is max over members of d(x̂, centroid), making the
-    // triangle-inequality pruning exact in code space at any nprobe
-    val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dir/pq.bin"))
-    IndexCatalog.writeRadii(s"$dir/radii.bin",
-      sqClusterRadii(spark.read.parquet(out), centsB, cbB, cents.length, bits))
-    val meta = IndexMeta(name, "ivfsq", "vec", "id", dim, metric.name,
-      maxDegree = 0, buildComplexity = 0, alpha = 0f, quantized = true,
-      numVectors = n, numDeleted = 0L, shards = Nil, sourcePath = out,
-      nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
-      refine = params.refine, refineK = params.refineK, quantBits = bits,
-      coarseHnswM = params.coarseHnswM)
-    IndexCatalog.save(root(spark), meta)
-    meta
-  }
-
-  private def buildLsh(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val dim = inferDim(data)
-    val nbits =
-      if (params.lshNbits > 0) params.lshNbits else math.min(dim, LshCodec.MaxBits)
-    require(nbits <= LshCodec.MaxBitsWide,
-      s"lsh supports at most ${LshCodec.MaxBitsWide} bits per code (got $nbits)")
-    val wide = nbits > LshCodec.MaxBits
-    // `r` suffix (IndexLSH rotate_data): at nbits ≤ dim, orthonormalize the
-    // projection rows — classical Gram-Schmidt in double, deterministic,
-    // SQL-replayable (VectorOps.orthonormalizeRows documents the exact
-    // operation order the oracle unrolls). At nbits > dim no such rows
-    // exist (rank ≤ dim) — FAISS pads instead: a seeded orthonormal
-    // nbits×nbits rotation applied to the zero-padded input
-    // (LshCodec.paddedRotationRows), data-independent like FAISS's, so
-    // seed mode does not alter it. Stored hyperplanes.bin holds the FINAL
-    // rows either way.
-    val hyps: Array[Array[Float]] =
-      if (params.lshRotate && nbits > dim) LshCodec.paddedRotationRows(nbits, dim)
-      else {
-        val hyps0: Array[Array[Float]] =
-          if (params.seedK > 0)
-            data.orderBy("id").limit(nbits).select("vec").as[Array[Float]].collect()
-          else LshCodec.randomHyperplanes(nbits, dim)
-        require(hyps0.length == nbits,
-          s"lsh seed mode needs >= $nbits rows (got ${hyps0.length})")
-        if (params.lshRotate)
-          VectorOps.orthonormalizeRows(hyps0.map(_.map(_.toDouble)))
-            .map(_.map(_.toFloat))
-        else hyps0
-      }
-    IndexCatalog.writeCentroids(s"$dir/hyperplanes.bin", hyps, dim)
-    val cosine = metric eq Metric.Cosine
-    // `t` suffix (IndexLSH train_thresholds): per-bit cut point = mean
-    // projection over the trainSample LOWEST-ID vectors (id order, double) —
-    // deterministic and replayable; trained on the same representation the
-    // encode sees (normalized when the metric is cosine, since thresholds —
-    // unlike plain sign codes — are NOT scale-invariant)
-    val thresholds: Array[Double] =
-      if (params.lshThresholds) {
-        val sample0 = data.orderBy("id").limit(params.trainSample)
-          .select("vec").as[Array[Float]].collect()
-        val sample = if (cosine) sample0.map(v => VectorOps.normalize(v.clone()))
-                     else sample0
-        val t = LshCodec.trainThresholds(hyps, sample)
-        IndexCatalog.writeThresholds(s"$dir/thresholds.bin", t)
-        t
-      } else null
-    val hypsB = spark.sparkContext.broadcast(hyps)
-    val thrB = spark.sparkContext.broadcast(thresholds)
-    // ≤64 bits: one BIGINT `code` column; wider: array<bigint> of
-    // ⌈nbits/64⌉ words (word 0's layout identical to the single-long code)
-    val encodeUdf =
-      if (wide) udf((v: Array[Float]) => LshCodec.encodeWords(hypsB.value, v, thrB.value))
-      else udf((v: Array[Float]) => LshCodec.encode(hypsB.value, v, thrB.value))
-    val out = s"$dir/data"
-    // RFlat ('LSH<nbits>,RFlat'): the raw vectors ride along for the exact
-    // re-rank stage, same as refined PQ — candidates still come from the
-    // codes-only projection, so the Hamming scan never reads them
-    val dataP = if (cosine) data.withColumn("vec", normalizeVecUdf(col("vec"))) else data
-    val stored = Seq(col("id"), encodeUdf(col("vec")).as("code")) ++
-      (if (params.refine) Seq(col("vec")) else Nil)
-    dataP.select(stored: _*).write.mode("overwrite").parquet(out)
-    val n = spark.read.parquet(out).count()
-    // nlist carries nbits (the hnsw precedent: IndexMeta reuses maxDegree
-    // for m); quantized marks the code-only storage
-    val meta = IndexMeta(name, "lsh", "vec", "id", dim, metric.name,
-      maxDegree = 0, buildComplexity = 0, alpha = 0f, quantized = true,
-      numVectors = n, numDeleted = 0L, shards = Nil, sourcePath = out,
-      nlist = nbits, refine = params.refine, refineK = params.refineK,
-      lshVariant = (if (params.lshRotate) "r" else "") +
-        (if (params.lshThresholds) "t" else ""))
-    IndexCatalog.save(root(spark), meta)
-    meta
   }
 
   // ----------------------------------------------------------------- search
@@ -1371,58 +677,13 @@ object Ann {
       searchComplexity: Int = 0, oversample: Int = 1): DataFrame = {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    val fetchK = k * math.max(1, oversample)
-    meta.engine match {
-      case e if isGraphEngine(e) =>
-        diskannScan(spark, meta, query, fetchK, searchComplexity, tomb)
-      case "flat" | "ivfflat" => exactScanIds(spark, meta, query, fetchK, tomb)
-      case "pq" => pqScanIds(spark, meta, query, fetchK, tomb)
-      case "ivfpq" => ivfPqScanIds(spark, meta, query, fetchK, tomb)
-      case "ivfsq" => ivfSqScanIds(spark, meta, query, fetchK, tomb)
-      case "lsh" => lshScanIds(spark, meta, query, fetchK, tomb)
-    }
+    AnnEngine.of(meta).scan(spark, meta, query, k * math.max(1, oversample), tomb,
+      searchComplexity)
   }
-
-  /** `IVF<n>,SQ8/SQ4/SQ6` top-k: probe-pruned parquet scan over scalar
-   *  codes, ranked by the per-dim dequantization LUT (ADC with m = dim,
-   *  k = 2^bits against the synthetic codebook buildIvfSq wrote; packed
-   *  sub-byte rows extract level indices inline). Codes quantize RAW
-   *  vectors, so one query LUT serves every probe — no per-probe residual
-   *  tables. */
-  private def ivfSqScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None,
-      nprobeOverride: Int = 0): DataFrame = {
-    val query = prepQuery(meta, query0)
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-    val cb = PqCodec.read(s"$dirPath/pq.bin")
-    val l2 = meta.metricObj eq Metric.L2
-    val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
-    val probes = selectProbes(cents, 0, query, nprobe, coarseProbe(spark, meta))
-    val lut = PqCodec.lut(cb, query, l2)
-    val k = cb.k
-    val bits = meta.quantBits
-    val dim = meta.dim
-    val lutB = spark.sparkContext.broadcast(lut)
-    val adcUdf =
-      if (bits == 8) udf((code: Array[Byte]) => PqCodec.adc(lutB.value, k, code))
-      else udf((code: Array[Byte]) =>
-        graft.core.SqPackedCodec.adc(lutB.value, bits, dim, code))
-    val scan0 = probeFilter(spark.read.parquet(meta.sourcePath), probes.toSeq,
-      cents.length)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), adcUdf(col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-  }
-
   /** Trained per-bit thresholds for an lsh index built with the `t` suffix
    *  (null otherwise) — every encode site, build or serve, must pass these
    *  so database codes and query codes share the cut points. */
-  private def lshThresholdsOf(spark: SparkSession, meta: IndexMeta): Array[Double] =
+  private[index] def lshThresholdsOf(spark: SparkSession, meta: IndexMeta): Array[Double] =
     if (meta.lshVariant.contains("t"))
       IndexCatalog.readThresholds(
         s"${IndexCatalog.indexDir(root(spark), meta.name)}/thresholds.bin")
@@ -1432,7 +693,7 @@ object Ann {
    *  codes are one `bit_count(code XOR qcode)`; wide codes (array<bigint>)
    *  sum per-word XOR popcounts — the word count is a plan-time constant,
    *  so this stays builtin expressions with no UDF on the scan hot path. */
-  private def hammingCol(codeCol: Column, qcode: Array[Long]): Column =
+  private[index] def hammingCol(codeCol: Column, qcode: Array[Long]): Column =
     if (qcode.length == 1) bit_count(codeCol.bitwiseXOR(lit(qcode(0))))
     else qcode.indices.map(w =>
       bit_count(element_at(codeCol, w + 1).bitwiseXOR(lit(qcode(w)))))
@@ -1440,88 +701,13 @@ object Ann {
 
   /** Query code in the stored layout: one word for ≤64-bit codes (the
    *  meta.nlist slot carries nbits), ⌈nbits/64⌉ words otherwise. */
-  private def lshQueryCode(meta: IndexMeta, hyps: Array[Array[Float]],
+  private[index] def lshQueryCode(meta: IndexMeta, hyps: Array[Array[Float]],
       query: Array[Float], thr: Array[Double]): Array[Long] =
     if (meta.nlist > LshCodec.MaxBits) LshCodec.encodeWords(hyps, query, thr)
     else Array(LshCodec.encode(hyps, query, thr))
-
-  /** Hamming top-k over the binary code table: encode the query against the
-   *  frozen hyperplanes, then rank by codegen'd `bit_count(code XOR qcode)`
-   *  (per-word-summed for >64-bit codes) — no UDF, no vector column read;
-   *  ties break on row_id. `_distance` is the Hamming distance (integral,
-   *  surfaced as FLOAT like every engine). */
-  private def lshScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None): DataFrame = {
-    val query = prepQuery(meta, query0)
-    val hyps = IndexCatalog.readCentroids(
-      s"${IndexCatalog.indexDir(root(spark), meta.name)}/hyperplanes.bin")
-    val qcode = lshQueryCode(meta, hyps, query, lshThresholdsOf(spark, meta))
-    val scan0 = spark.read.parquet(meta.sourcePath)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), hammingCol(col("code"), qcode).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    // RFlat: Hamming picks fetchK·refineFactor candidate IDS from the
-    // codes-only projection; only those rows' vectors are fetched back and
-    // re-ranked by the exact metric distance (same two-phase contract as
-    // refined PQ — refineStage scaladoc)
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-  }
-
-  /** nprobe-pruned ADC scan over residual codes: per probed cluster the
-   *  lookup table is built from (q − centroid) for L2, or from q with a
-   *  −dot(q, centroid) offset for IP/cosine. Partition pruning on the
-   *  `cluster` directory keeps unprobed files unread. */
-  private def ivfPqScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None,
-      nprobeOverride: Int = 0): DataFrame = {
-    val query = prepQuery(meta, query0)
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-    val cb = PqCodec.read(s"$dirPath/pq.bin")
-    val l2 = meta.metricObj eq Metric.L2
-    val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
-    val probes = selectProbes(cents, meta.imiB, query, nprobe, coarseProbe(spark, meta))
-    val k = cb.k
-    // the IP/cosine LUT depends only on the query — build it once and vary
-    // only the per-probe -dot(q, centroid) offset; L2 needs a per-probe
-    // residual table
-    val ipLut = if (l2) null else PqCodec.lut(cb, query, l2 = false)
-    val perProbe: Map[Int, (Array[Float], Float)] = probes.map { p =>
-      val c = cents(p)
-      if (l2) {
-        val qr = new Array[Float](query.length)
-        var i = 0
-        while (i < query.length) { qr(i) = query(i) - c(i); i += 1 }
-        p -> (PqCodec.lut(cb, qr, l2 = true), 0.0f)
-      } else {
-        p -> (ipLut, -VectorOps.dot(query, c))
-      }
-    }.toMap
-    val lutB = spark.sparkContext.broadcast(perProbe)
-    val adcUdf = udf((cluster: Int, code: Array[Byte]) => {
-      val (t, off) = lutB.value(cluster)
-      PqCodec.adc(t, k, code) + off
-    })
-    val scan0 = probeFilter(spark.read.parquet(meta.sourcePath), probes.toSeq,
-      cents.length)
-    // filtered search: the id predicate splices BEFORE the ADC projection
-    // and top-k, so it pushes to the parquet scan beside the probe pruning
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"),
-        adcUdf(col("cluster").cast(IntegerType), col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-  }
-
   /** OPQ rotation matrix (d rows of d floats; rotation.bin reuses the
    *  centroids file format). */
-  private def readRotation(spark: SparkSession, meta: IndexMeta): Array[Array[Float]] =
+  private[index] def readRotation(spark: SparkSession, meta: IndexMeta): Array[Array[Float]] =
     IndexCatalog.readCentroids(
       s"${IndexCatalog.indexDir(root(spark), meta.name)}/rotation.bin")
 
@@ -1540,7 +726,7 @@ object Ann {
    *  this stage, preserving PQ's scan compression; (2) only the candidates'
    *  vectors are fetched back (pushed `In` filter) and re-ranked by the
    *  exact metric distance in double precision. */
-  private def refineStage(spark: SparkSession, meta: IndexMeta, scored: DataFrame,
+  private[index] def refineStage(spark: SparkSession, meta: IndexMeta, scored: DataFrame,
       query: Array[Float], fetchK: Int): DataFrame = {
     val candIds = scored.orderBy(col("__dd"), col("row_id"))
       .limit(fetchK * refineFactor(spark, meta))
@@ -1552,30 +738,6 @@ object Ann {
       .orderBy(col("__ed"), col("row_id")).limit(fetchK)
       .select(col("row_id"), col("__ed").cast(FloatType).as("_distance"))
   }
-
-  /** ADC top-k over the compressed code table (approximate → rows-only
-   *  check; PQ distances are quantized, not exact). */
-  private def pqScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None): DataFrame = {
-    val query = prepQuery(meta, query0)
-    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
-    // OPQ: ADC runs in rotated space — rotate the query once; the RFlat
-    // refine below re-ranks raw (unrotated) vectors with the UNROTATED query
-    val adcQuery = if (meta.opq) OpqCodec.rotate(readRotation(spark, meta), query) else query
-    val table = PqCodec.lut(cb, adcQuery, l2 = meta.metricObj eq Metric.L2)
-    val k = cb.k
-    val tB = spark.sparkContext.broadcast(table)
-    val adcUdf = udf((code: Array[Byte]) => PqCodec.adc(tB.value, k, code))
-    val scan0 = spark.read.parquet(meta.sourcePath)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), adcUdf(col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-  }
-
   /** Max shard count for which a diskann search runs driver-local instead of
    *  as a Spark job. The reference serves every query single-node; for small
    *  shard counts the job-launch overhead dominates, so the driver searches
@@ -1629,24 +791,17 @@ object Ann {
    *  cheap enough to leave on as telemetry). */
   private[graft] val searchCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Collected (id, distance) hits for k·oversample results — uses the
-   *  driver-local path when the index is small enough, else a shard job. */
+  /** Collected (id, distance) hits for k·oversample results over the
+   *  engine's cheapest route: driver-local for small graph indexes
+   *  ([[localSearchMaxShards]]) and small table indexes ([[ExactServe]]),
+   *  else a Spark job. */
   private[graft] def collectHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, searchComplexity: Int, oversample: Int): Array[(Long, Float)] = {
     searchCount.incrementAndGet()
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    val fetchK = k * math.max(1, oversample)
-    if (isGraphEngine(meta.engine) && meta.shards.size <= localSearchMaxShards(spark))
-      searchShardsLocal(meta, tomb, query, fetchK, searchComplexity)
-    else if (ExactServe.eligible(spark, meta))
-      // small exact/quantized index: serve from the driver-local cache (one
-      // warming collect, then no Spark job per query) — bit-identical to the
-      // distributed scan (ExactServe scaladoc)
-      ExactServe.search(spark, meta, tomb, query, fetchK)
-    else
-      indexScan(spark, name, query, k, searchComplexity, oversample)
-        .collect().map(r => (r.getLong(0), r.getFloat(1)))
+    AnnEngine.of(meta).collectHits(spark, meta, tomb, query,
+      k * math.max(1, oversample), searchComplexity)
   }
 
   /** Range search promises a metric-space ball: `radius` compares against
@@ -1680,29 +835,6 @@ object Ann {
       s"query dimension ${query.length} != index dimension ${meta.dim}")
     if (meta.metricObj eq Metric.Cosine) VectorOps.normalize(query.clone()) else query
   }
-
-  private def diskannScan(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, searchComplexity: Int, tomb: Set[Long]): DataFrame = {
-    import spark.implicits._
-    val query = prepQuery(meta, query0)
-    // over-request k + |tombstones| like the reference (diskann_index.cpp:558-561)
-    val perShardK = fetchK + tomb.size
-    val shards = meta.shards
-    val cosine = meta.metricObj eq Metric.Cosine
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val sc = searchComplexity
-    val rdd = spark.sparkContext.parallelize(shards, math.max(shards.size, 1)).flatMap { sh =>
-      val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-      val (labels, dists) = loaded.index.searchSaturationChecked(query, perShardK, sc)
-      val t = tombB.value
-      labels.indices.iterator
-        .map(i => (loaded.ids(labels(i)), dists(i)))
-        .filterNot { case (id, _) => t.contains(id) }
-    }
-    rdd.toDF("row_id", "_distance")
-      .orderBy(col("_distance"), col("row_id")).limit(fetchK)
-  }
-
   /** Above this many tombstones the exclusion predicate switches from a
    *  literal `In` list to a single Catalyst `InSet` node. */
   private[index] val TombInlineMax = 1000
@@ -1742,58 +874,6 @@ object Ann {
       GraftShim.column(InSet(GraftShim.expression(idCol),
         ids.map(x => Long.box(x): Any)))
     }
-
-  /** Exact scan for flat/ivfflat → (row_id, _distance), sorted, limit fetchK. */
-  private def exactScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long]): DataFrame = {
-    val query = prepQuery(meta, query0)
-    val distCol = metricDistanceCol(meta.metricObj, col("vec"), query)
-    val base = scanIvfOrFlat(spark, meta, query)
-    // order in full double precision (near-ties must resolve identically to an
-    // exact oracle); surface the reference's FLOAT _distance afterwards
-    val unfiltered = base
-      .select(col("id").as("row_id"), distCol.as("__dd"))
-    val filtered = if (tomb.isEmpty) unfiltered
-      else unfiltered.where(notTombstoned(col("row_id"), tomb))
-    filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-  }
-
-  /**
-   * Scan for a radius query. flat: full scan. ivfflat + L2 with stored
-   * cluster radii: triangle-inequality pruning — cluster c can hold a
-   * member within √radius of q only if d(q, centroid_c) − r_c ≤ √radius —
-   * which keeps range search EXACT while skipping every cluster whose ball
-   * cannot intersect the query ball (the nprobe top-k heuristic would
-   * silently miss rows). The query-to-centroid distance accumulates in
-   * DOUBLE (error ~dim·2⁻⁵², provably below the 1e-6 relative slack at any
-   * realistic dim — the float kernel's ~dim·2⁻²⁴ would not be) and the
-   * stored radii are ulp-rounded-up double-accumulated upper bounds, so the
-   * slack strictly dominates all rounding; the per-row distance filter
-   * downstream is exact, so slack only ever over-probes. Metrics without a
-   * metric-space triangle
-   * inequality (IP; cosine's negated-dot surface) fall back to the nprobe
-   * probe set, matching top-k approximation semantics.
-   */
-  private def rangeScan(spark: SparkSession, meta: IndexMeta,
-      query: Array[Float], radius: Float): DataFrame = {
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val radiiPath = s"$dirPath/radii.bin"
-    if (meta.engine == "ivfflat" && (meta.metricObj eq Metric.L2) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-      val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-      val radii = IndexCatalog.readRadii(radiiPath)
-      val rq = math.sqrt(math.max(0.0, radius.toDouble))
-      val keep = cents.indices.filter { c =>
-        val dc = math.sqrt(VectorOps.l2SqDoubleAcc(query, cents(c)))
-        dc - radii(c) <= rq + 1e-6 * (1.0 + rq)
-      }
-      probeFilter(spark.read.parquet(meta.sourcePath), keep, cents.length)
-    } else if (meta.engine == "ivfflat") {
-      scanIvfOrFlat(spark, meta, query)
-    } else spark.read.parquet(meta.sourcePath)
-  }
-
   /** Above this nlist the per-cluster `partitionBy("cluster")` layout flips
    *  to bucketed: IMI2x8's 65,536 cluster DIRECTORIES cost 271 s of write
    *  commit at 1.5M rows (the many-small-files regime, which only worsens
@@ -1816,7 +896,7 @@ object Ann {
    *  (probeFilter/probeJoinCond) already detects layout per-table, so the
    *  two sides share one convention: the schema is the truth, nlist is
    *  only the fresh-write default. */
-  private def writeClustered(stored: DataFrame, nlist: Int, path: String,
+  private[index] def writeClustered(stored: DataFrame, nlist: Int, path: String,
       mode: String): Unit = {
     val bucketed =
       if (mode == "append")
@@ -1846,7 +926,7 @@ object Ann {
    *  applies); bucketed tables ALSO equi-join on `bucket` so DPP prunes the
    *  bucket directories — `probeCol % ClusterBuckets` is a plan-side
    *  expression on the broadcast (small) side. */
-  private def probeJoinCond(scan: DataFrame, probeCol: Column): Column = {
+  private[index] def probeJoinCond(scan: DataFrame, probeCol: Column): Column = {
     val base = scan("cluster") === probeCol
     if (scan.schema.fieldNames.contains("bucket"))
       base && scan("bucket") === pmod(probeCol, lit(ClusterBuckets))
@@ -1883,7 +963,7 @@ object Ann {
    *  semantic no-op, so no filter is planted at all; large-but-partial
    *  probe lists ride [[clusterIn]]'s `InSet` form instead of a
    *  multi-thousand-literal `In`. */
-  private def probeFilter(df: DataFrame, probes: Seq[Int], nlist: Int): DataFrame = {
+  private[index] def probeFilter(df: DataFrame, probes: Seq[Int], nlist: Int): DataFrame = {
     val ds = probes.distinct
     if (nlist > 0 && ds.size >= nlist) df
     else if (df.schema.fieldNames.contains("bucket")) {
@@ -1891,20 +971,6 @@ object Ann {
       df.where(clusterIn(col("bucket"), buckets) && clusterIn(col("cluster"), ds))
     } else df.where(clusterIn(col("cluster"), ds))
   }
-
-  /** flat: full scan; ivfflat: nprobe-pruned partition scan. */
-  private def scanIvfOrFlat(spark: SparkSession, meta: IndexMeta,
-      query: Array[Float], nprobeOverride: Int = 0): DataFrame = {
-    val df = spark.read.parquet(meta.sourcePath)
-    if (meta.engine == "ivfflat") {
-      val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
-      val cents = IndexCatalog.readCentroids(
-        s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin")
-      val probes = selectProbes(cents, meta.imiB, query, nprobe, coarseProbe(spark, meta))
-      probeFilter(df, probes.toSeq, cents.length)
-    } else df
-  }
-
   /** Whether to round-robin-rebalance the probed scan in the exact TABLE
    *  paths. Per-task work there is sum(size(cluster) x probing-queries) —
    *  a popularity-weighted product byte-based file bin-packing cannot see
@@ -1921,7 +987,7 @@ object Ann {
    *  central cells bin-packed into one scan split). Few-query lookups
    *  keep the direct cluster-pruned scan.
    *  `spark.graft.ann.rebalanceProbedScan` force-overrides (true/false). */
-  private def rebalanceProbedScan(spark: SparkSession, queriesDf: DataFrame,
+  private[index] def rebalanceProbedScan(spark: SparkSession, queriesDf: DataFrame,
       dim: Int): Boolean =
     spark.conf.getOption("spark.graft.ann.rebalanceProbedScan") match {
       case Some(v) => v.toBoolean
@@ -1951,14 +1017,11 @@ object Ann {
     s
   }
 
-  /** Engine-semantics distance column: squared L2 / negated IP / negated cos. */
-  private def metricDistanceCol(metric: Metric, vec: Column, query: Array[Float]): Column = {
-    val q = graft.functions.floatVec(query.toSeq)
-    metric match {
-      case Metric.L2 => array_distance_sq(vec, q)
-      case _ => array_negative_inner_product(vec, q) // IP & cosine (vecs normalized)
-    }
-  }
+  /** Engine-semantics distance to a literal query: squared L2 / negated
+   *  IP / negated cos (stored vectors normalized). */
+  private[index] def metricDistanceCol(metric: Metric, vec: Column,
+      query: Array[Float]): Column =
+    AnnEngine.metricDist(metric, vec, graft.functions.floatVec(query.toSeq))
 
   /**
    * `ann_search`: index scan + row fetch-back → base columns + `_distance`,
@@ -1987,6 +1050,14 @@ object Ann {
       .drop("__ann_rank")
   }
 
+  /** (row_id, _distance) LocalRelation over already-collected hit rows —
+   *  consumption is job-free, so a scan whose result was materialized for
+   *  an under-fill check is never re-executed. */
+  private[index] def localHitRows(spark: SparkSession, rows: Array[Row]): DataFrame =
+    spark.createDataFrame(rows.toSeq.asJava,
+      StructType(Seq(StructField("row_id", LongType, nullable = false),
+        StructField("_distance", FloatType, nullable = false))))
+
   /**
    * Single-query serving surface: top k·oversample `(row_id, _distance)` as
    * a LOCAL relation — no Spark job anywhere on the path. The search itself
@@ -2003,21 +1074,10 @@ object Ann {
    * Falls back to a distributed scan + collect transparently for indexes
    * too large for the local routes.
    */
-  /** (row_id, _distance) LocalRelation over already-collected hit rows —
-   *  consumption is job-free, so a scan whose result was materialized for
-   *  an under-fill check is never re-executed. */
-  private def localHitRows(spark: SparkSession, rows: Array[Row]): DataFrame =
-    spark.createDataFrame(rows.toSeq.asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
-
   def searchHits(spark: SparkSession, name: String, query: Array[Float],
-      k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame = {
-    val hits = collectHits(spark, name, query, k, searchComplexity, oversample)
-    spark.createDataFrame(hits.toSeq.map(h => Row(h._1, h._2)).asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
-  }
+      k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame =
+    localHitRows(spark, collectHits(spark, name, query, k, searchComplexity, oversample)
+      .map(h => Row(h._1, h._2)))
 
   /**
    * Job-free FILTERED serving surface — [[searchHits]]'s analog for
@@ -2035,10 +1095,8 @@ object Ann {
     if (!ExactServe.eligible(spark, meta))
       return searchFiltered(spark, name, query, k, filter, searchComplexity)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    val hits = ExactServe.searchFiltered(spark, meta, tomb, query, k, filter.fn)
-    spark.createDataFrame(hits.toSeq.map(h => Row(h._1, h._2)).asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
+    localHitRows(spark, ExactServe.searchFiltered(spark, meta, tomb, query, k, filter.fn)
+      .map(h => Row(h._1, h._2)))
   }
 
   /** Row-id selector for filtered search: `column` is the predicate over
@@ -2183,98 +1241,11 @@ object Ann {
    *
    * Returns `(row_id, _distance)` ordered, ≤ k rows.
    */
-  def searchFiltered(spark: SparkSession, name: String, query0: Array[Float],
+  def searchFiltered(spark: SparkSession, name: String, query: Array[Float],
       k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame = {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    if (meta.engine == "pq" || meta.engine == "ivfpq" || meta.engine == "lsh" ||
-        meta.engine == "ivfsq") {
-      // quantized engines: the id predicate splices into the ADC/Hamming
-      // scan so the code compression survives (a raw-vector fallback would
-      // read the flat copy at 100 TB). The answer is the code-space top-k of
-      // the allowed subset — approximate exactly like unfiltered search,
-      // recall-gated by ann_filtered_ivfpq. IVFPQ under-fill escalates
-      // nprobe to nlist (FAISS IVF + IDSelector: selectivity does not widen
-      // the probe; the escalation is this library's saturation treatment);
-      // pq/lsh scan the full code table, so no escalation exists.
-      def topK(np: Int): DataFrame = {
-        val scored = meta.engine match {
-          case "pq" => pqScanIds(spark, meta, query0, k, tomb, Some(filter.column))
-          case "lsh" => lshScanIds(spark, meta, query0, k, tomb, Some(filter.column))
-          case "ivfsq" => ivfSqScanIds(spark, meta, query0, k, tomb,
-            Some(filter.column), np)
-          case _ => ivfPqScanIds(spark, meta, query0, k, tomb,
-            Some(filter.column), np)
-        }
-        scored.select(col("row_id"), col("_distance"))
-      }
-      val probed = topK(0)
-      if ((meta.engine == "ivfpq" || meta.engine == "ivfsq") &&
-          meta.nprobe < meta.nlist) {
-        // under-fill check: collect the ≤ k probed rows ONCE and decide
-        // escalation from the local length — a count()-then-return would
-        // re-execute the probed scan when the caller consumes the result,
-        // doubling serving latency on the common non-escalating path
-        val rows = probed.collect()
-        if (rows.length < k) topK(meta.nlist) else localHitRows(spark, rows)
-      } else probed
-    } else if (!isGraphEngine(meta.engine)) {
-      val query = prepQuery(meta, query0)
-      val distCol = metricDistanceCol(meta.metricObj, col("vec"), query)
-      def topK(nprobeOverride: Int): DataFrame = {
-        val base = scanIvfOrFlat(spark, meta, query, nprobeOverride)
-          .where(filter.column)
-        val unfiltered = base.select(col("id").as("row_id"), distCol.as("__dd"))
-        val live = if (tomb.isEmpty) unfiltered
-          else unfiltered.where(notTombstoned(col("row_id"), tomb))
-        live.orderBy(col("__dd"), col("row_id")).limit(k)
-          .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-      }
-      val probed = topK(0)
-      // ivfflat nprobe saturation: a selective filter whose survivors live
-      // in unprobed clusters would silently under-fill — escalate to a full
-      // scan when the probed answer is short. The check collects the ≤ k
-      // probed rows once; non-escalating queries return them as a
-      // LocalRelation so the scan job runs exactly once per query
-      // (FilteredJobCountSpec pins this).
-      if (meta.engine == "ivfflat" && meta.nprobe < meta.nlist) {
-        val rows = probed.collect()
-        if (rows.length < k) topK(meta.nlist) else localHitRows(spark, rows)
-      } else probed
-    } else {
-      import spark.implicits._
-      val query = prepQuery(meta, query0)
-      val cosine = meta.metricObj eq Metric.Cosine
-      val tombB = spark.sparkContext.broadcast(tomb)
-      val allow = filter.fn
-      val sc0 = searchComplexity
-      val startFetch = math.max(k * filteredOverfetch(spark), k) + tomb.size
-      val shards = meta.shards
-      val rdd = spark.sparkContext.parallelize(shards, math.max(shards.size, 1))
-        .flatMap { sh =>
-          val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-          val t = tombB.value
-          val n = loaded.ids.length
-          var fetch = math.min(math.max(startFetch, 1), math.max(n, 1))
-          var out: Seq[(Long, Float)] = Seq.empty
-          var done = n == 0
-          while (!done) {
-            val (labels, dists) = loaded.index.searchSaturationChecked(query, fetch,
-              math.max(sc0, fetch))
-            // labels arrive distance-ordered; the first k allowed are the
-            // shard's filtered top-k at this beam width
-            out = labels.indices.iterator
-              .map(i => (loaded.ids(labels(i)), dists(i)))
-              .filter { case (id, _) => allow(id) && !t.contains(id) }
-              .take(k).toSeq
-            if (out.length >= k || fetch >= n) done = true
-            else fetch = math.min(n, fetch * 2)
-          }
-          out.iterator
-        }
-      rdd.toDF("row_id", "_distance")
-        .orderBy(col("_distance"), col("row_id")).limit(k)
-    }
+    AnnEngine.of(meta).searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
   }
 
   /**
@@ -2316,123 +1287,7 @@ object Ann {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     requireMetricSpaceRadius(meta, "rangeSearch")
-    meta.engine match {
-      case "flat" | "ivfflat" =>
-        val q = prepQuery(meta, query)
-        val base = rangeScan(spark, meta, q, radius)
-          .select(col("id").as("__ann_id"),
-            metricDistanceCol(meta.metricObj, col("vec"), q).as("__dd"))
-          .where(col("__dd") <= radius.toDouble)
-        val hits = (if (tomb.isEmpty) base
-          else base.where(notTombstoned(col("__ann_id"), tomb)))
-          .select(col("__ann_id"), col("__dd").cast(FloatType).as("_distance"))
-        // plain equi-join (not forced broadcast): a wide radius can match
-        // a large fraction of the base table; AQE broadcasts if small
-        df.join(hits, col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
-      case "ivfsq" | "pq" | "ivfpq" =>
-        // Quantized range search (FAISS IndexIVFScalarQuantizer/IndexIVFPQ
-        // range_search analog): ONE distributed filter over the code table,
-        // no top-k heap, no driver pooling. `_distance` is the CODE-SPACE
-        // distance — the metric distance to the dequantized reconstruction,
-        // the only distance a quantized engine can know (FAISS likewise
-        // compares reconstructed distances against the radius) — computed
-        // in DOUBLE like the exact engines' range filter, so the radius
-        // decision follows the same convention the saturation oracle
-        // replays; the top-k path keeps its float ADC LUT. Scan pruning:
-        //  - pq: full code scan — exact in code space.
-        //  - ivfsq + L2: triangle-inequality pruning over radii.bin, which
-        //    buildIvfSq computes from the DEQUANTIZED reconstructions —
-        //    exact in code space at ANY nprobe, like the ivfflat range scan.
-        //  - ivfpq (and non-L2 ivfsq): the nprobe probe set — approximate
-        //    exactly like top-k; nprobe = nlist makes it exact in code
-        //    space. (IVFPQ residual reconstructions straddle cluster
-        //    boundaries, so exact pruning radii would need a build-time
-        //    decode pass; the honest nprobe semantics match FAISS's.)
-        // The RFlat refine flag does not apply here (FAISS IndexRefineFlat
-        // has no range_search either): refined indexes answer in code space.
-        val q0 = prepQuery(meta, query)
-        val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        // OPQ codes live in rotated space; rotate the query once (distances
-        // are rotation-invariant up to float rounding — code space anyway)
-        val q = if (meta.engine == "pq" && meta.opq)
-          OpqCodec.rotate(readRotation(spark, meta), q0) else q0
-        val l2 = meta.metricObj eq Metric.L2
-        val radiiPath = s"$dirPath/radii.bin"
-        val scan0 = spark.read.parquet(meta.sourcePath)
-        val scan = meta.engine match {
-          case "pq" => scan0
-          case "ivfsq" if l2 &&
-              java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath)) =>
-            val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-            val radii = IndexCatalog.readRadii(radiiPath)
-            val rq = math.sqrt(math.max(0.0, radius.toDouble))
-            val keep = cents.indices.filter { c =>
-              val dc = math.sqrt(VectorOps.l2SqDoubleAcc(q, cents(c)))
-              dc - radii(c) <= rq + 1e-6 * (1.0 + rq)
-            }
-            probeFilter(scan0, keep, cents.length)
-          case _ =>
-            val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-            val probes = selectProbes(cents, meta.imiB, q, meta.nprobe,
-              coarseProbe(spark, meta))
-            probeFilter(scan0, probes.toSeq, cents.length)
-        }
-        val cbB = spark.sparkContext.broadcast(cb)
-        // codegen'd reconstruction distance (QuantRangeDist): decode
-        // (+ centroid for ivfpq residuals; sqDecode handles packed sub-byte
-        // ivfsq rows), then the sequential double fold — the UDF
-        // formulation broke the probe-pruned scan's whole-stage span
-        val qCol = graft.functions.floatVec(q.toSeq)
-        val (state, clusterCol) =
-          if (meta.engine == "ivfpq")
-            (new QuantRangeState(cbB, spark.sparkContext.broadcast(
-              IndexCatalog.readCentroids(s"$dirPath/centroids.bin")), l2),
-              col("cluster").cast(IntegerType))
-          else
-            (new QuantRangeState(cbB, null, l2,
-              if (meta.engine == "ivfsq") meta.quantBits else 8), lit(-1))
-        val scored = scan.select(col("id").as("__ann_id"),
-          graft.functions.mkCol(QuantRangeDist(
-            graft.functions.mkExpr(col("code")),
-            graft.functions.mkExpr(clusterCol),
-            graft.functions.mkExpr(qCol), state)).as("__dd"))
-        val base = scored.where(col("__dd") <= radius.toDouble)
-        val hits = (if (tomb.isEmpty) base
-          else base.where(notTombstoned(col("__ann_id"), tomb)))
-          .select(col("__ann_id"), col("__dd").cast(FloatType).as("_distance"))
-        df.join(hits, col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
-      case _ =>
-        var k = 64
-        var hits = collectHits(spark, name, query, k, searchComplexity, 1)
-        // grow until the tail clears the radius or the index is exhausted
-        while (hits.length >= k && hits.last._2 <= radius) {
-          k *= 4
-          hits = collectHits(spark, name, query, k, searchComplexity, 1)
-        }
-        val within = hits.filter(_._2 <= radius)
-        val distDf = spark.createDataFrame(within.toSeq.map(h =>
-            Row(h._1, h._2)).asJava,
-          StructType(Seq(StructField("__ann_id", LongType),
-            StructField("_distance", FloatType))))
-        // the inner join below already restricts to the hit ids; the isin
-        // only exists to PUSH that filter into the base scan, so it is
-        // gated like notTombstoned — a wide radius can return unbounded
-        // hit counts and a literal In list would blow up plan size
-        val fetched =
-          if (within.length <= TombInlineMax)
-            df.where(col(idColumn).isin(within.map(h =>
-              java.lang.Long.valueOf(h._1)).toSeq: _*))
-          else df
-        fetched
-          .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
-    }
+    AnnEngine.of(meta).rangeSearch(df, idColumn, meta, tomb, query, radius, searchComplexity)
   }
 
   /**
@@ -2454,6 +1309,15 @@ object Ann {
    * ivfsq + L2 prunes per query over the DEQUANTIZED cluster radii (exact
    * in code space at any nprobe), ivfpq and non-L2 ivfsq use the per-query
    * nprobe probe set, pq scans all codes.
+   *
+   * Graph engines (diskann/hnsw) run the single-query expanding-k beam loop
+   * per (query, shard) on the [[searchTable]] task grid. Completeness
+   * contract (same as single-query graph range): results are a SUBSET of
+   * the exact ball — distances are re-checked — with misses possible
+   * exactly where beam traversal would miss them; a saturating
+   * `searchComplexity` ≥ shard size makes each shard's ball exact (the
+   * oracled-twin pattern, docs/ORACLES.md §3). lsh is rejected: Hamming
+   * codes carry no metric-space distance.
    */
   def rangeSearchTable(queriesDf: DataFrame, queryVecColumn: String,
       baseDf: DataFrame, idColumn: String, name: String,
@@ -2461,213 +1325,10 @@ object Ann {
     val spark = queriesDf.sparkSession
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    require(meta.engine == "flat" || meta.engine == "ivfflat" ||
-      meta.engine == "pq" || meta.engine == "ivfpq" || meta.engine == "ivfsq" ||
-      isGraphEngine(meta.engine),
-      s"rangeSearchTable supports flat/ivfflat/pq/ivfpq/ivfsq/diskann/hnsw, " +
-        s"got ${meta.engine}")
     requireMetricSpaceRadius(meta, "rangeSearchTable")
-    if (isGraphEngine(meta.engine))
-      return rangeSearchTableGraph(queriesDf, queryVecColumn, baseDf,
-        idColumn, meta, radius, searchComplexity, tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val l2 = meta.metricObj eq Metric.L2
-    // quantized engines answer in CODE SPACE — the metric distance to the
-    // dequantized reconstruction, double-folded, exactly the single-query
-    // quantized range semantics (rangeSearch scaladoc): ivfsq + L2 prunes
-    // per query over the DEQUANTIZED cluster radii (exact in code space at
-    // any nprobe), ivfpq / non-L2 ivfsq fall back to the nprobe probe set,
-    // pq scans all codes.
-    val quant = meta.engine == "pq" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val prepped = {
-      val base0 = queriesDf.withColumn(queryVecColumn, toFloatVec(col(queryVecColumn)))
-      // pca indexes: __q maps through the frozen transform. The PCA engines
-      // are L2-only, but OPQ-CHAIN ivfpq indexes store their rotation as
-      // pca.bin and DO allow cosine — transform FIRST, normalize AFTER,
-      // prepQuery's float order (rotation preserves norms only in exact
-      // arithmetic; the single-query path would otherwise diverge by an ulp
-      // at a cell boundary).
-      val qExpr =
-        if (meta.pcaFile.nonEmpty) {
-          val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-          val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-          if (cosine) toFloatVec(normalizeCol(tUdf(col(queryVecColumn))))
-          else tUdf(col(queryVecColumn))
-        } else if (meta.engine == "pq" && meta.opq) {
-          // plain-pq OPQ codes live in rotated space: rotate each query once
-          // (after the cosine normalize, matching prepQuery-then-rotate)
-          val rotB = spark.sparkContext.broadcast(readRotation(spark, meta))
-          val rUdf = udf((v: Array[Float]) => OpqCodec.rotate(rotB.value, v))
-          if (cosine) rUdf(toFloatVec(normalizeCol(col(queryVecColumn))))
-          else rUdf(col(queryVecColumn))
-        }
-        else if (cosine) toFloatVec(normalizeCol(col(queryVecColumn)))
-        else col(queryVecColumn)
-      base0.withColumn("__q", qExpr)
-    }
-    val base = spark.read.parquet(meta.sourcePath)
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val radiiPath = s"$dirPath/radii.bin"
-    val joined: DataFrame =
-      if ((meta.engine == "ivfflat" || meta.engine == "ivfsq") && l2 &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-        val centsB = spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dirPath/centroids.bin"))
-        val radiiB = spark.sparkContext.broadcast(IndexCatalog.readRadii(radiiPath))
-        val rq = math.sqrt(math.max(0.0, radius.toDouble))
-        val keepUdf = udf((q: Array[Float]) => {
-          val cs = centsB.value; val rs = radiiB.value
-          cs.indices.filter { c =>
-            math.sqrt(VectorOps.l2SqDoubleAcc(q, cs(c))) - rs(c) <=
-              rq + 1e-6 * (1.0 + rq)
-          }.toArray
-        })
-        val qprobe = prepped.withColumn("__cluster", explode(keepUdf(col("__q"))))
-        base.join(broadcast(qprobe), probeJoinCond(base, qprobe("__cluster")))
-      } else if (meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-          meta.engine == "ivfsq") {
-        val centsB = spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dirPath/centroids.bin"))
-        val np = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val probesUdf = udf((q: Array[Float]) =>
-          selectProbes(centsB.value, imiB, q, np,
-            if (coarseB == null) null else coarseB.value))
-        val qprobe = prepped.withColumn("__cluster", explode(probesUdf(col("__q"))))
-        base.join(broadcast(qprobe), probeJoinCond(base, qprobe("__cluster")))
-      } else base.crossJoin(broadcast(prepped))
-    val distCol =
-      if (!quant) meta.metricObj match {
-        case Metric.L2 => array_distance_sq(base("vec"), col("__q"))
-        case _ => array_negative_inner_product(base("vec"), col("__q"))
-      } else {
-        // codegen'd reconstruction distance against the per-pair query
-        // column — rangeSearch's QuantRangeDist kernel with __q as the
-        // third child, keeping the broadcast-gemm stage in one span
-        val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
-        val (state, clusterCol) =
-          if (meta.engine == "ivfpq")
-            (new QuantRangeState(cbB, spark.sparkContext.broadcast(
-              IndexCatalog.readCentroids(s"$dirPath/centroids.bin")), l2),
-              base("cluster").cast(IntegerType))
-          else
-            (new QuantRangeState(cbB, null, l2,
-              if (meta.engine == "ivfsq") meta.quantBits else 8), lit(-1))
-        graft.functions.mkCol(QuantRangeDist(
-          graft.functions.mkExpr(base("code")),
-          graft.functions.mkExpr(clusterCol),
-          graft.functions.mkExpr(toFloatVec(col("__q"))), state))
-      }
-    val scored = joined
-      .withColumn("__dd", distCol)
-      .where(col("__dd") <= radius.toDouble)
-    val noTomb = if (tomb.isEmpty) scored
-      else scored.where(notTombstoned(base("id"), tomb))
-    val inCols = queriesDf.schema.fieldNames.toSeq
-    val hits = noTomb.select(inCols.map(prepped(_)) ++
-      Seq(base("id").as("row_id"),
-        col("__dd").cast(FloatType).as("_distance")): _*)
-    joinBaseWithPrefix(baseDf, idColumn, hits, inCols.toSet)
-  }
-
-  /**
-   * Graph-engine (diskann/hnsw) TABLE-range search: the single-query
-   * expanding-k beam loop ([[rangeSearch]]'s graph branch) run PER
-   * (query, shard) on the same (shard × query-block) task grid as
-   * [[searchTable]] — each cell's queries beam through one executor-cached
-   * shard, growing k geometrically (64, ×4) until the shard-local tail
-   * clears the radius or the shard is exhausted, then keep only in-radius
-   * hits. No per-query driver collect (the single-query path's expanding
-   * loop runs ON the driver once per query — fatal for a query TABLE), no
-   * global top-k heap: the union of shard-local balls IS the answer, so
-   * nothing pools anywhere.
-   *
-   * Completeness contract (same as single-query graph range): results are
-   * a SUBSET of the exact ball — distances are re-checked — with misses
-   * possible exactly where beam traversal would miss them; a saturating
-   * `searchComplexity` ≥ shard size makes each shard's ball exact (the
-   * oracled-twin pattern, docs/ORACLES.md §3). Termination is guaranteed:
-   * k grows geometrically toward the shard size.
-   */
-  private def rangeSearchTableGraph(queriesDf: DataFrame, queryVecColumn: String,
-      baseDf: DataFrame, idColumn: String, meta: IndexMeta, radius: Float,
-      searchComplexity: Int, tomb: Set[Long]): DataFrame = {
-    val spark = queriesDf.sparkSession
-    val inSchema = queriesDf.schema
-    val shardsArr = meta.shards.toArray
-    val outSchema = StructType(inSchema.fields.toSeq :+
-      StructField("row_id", LongType) :+ StructField("_distance", FloatType))
-    if (shardsArr.isEmpty) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], outSchema)
-      return joinBaseWithPrefix(baseDf, idColumn, empty,
-        inSchema.fieldNames.toSet)
-    }
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val nShards = shardsArr.length
-    val sc0 = searchComplexity
-    val dim = meta.dim
-    val vecIdx = inSchema.fieldIndex(queryVecColumn)
-    val metricName = meta.metric
-    val rad = radius
-    val prepped = queriesDf.withColumn(queryVecColumn,
-      toFloatVec(col(queryVecColumn)))
-    // same stable-id + grid shuffle rationale as searchTable (there the id
-    // keys the per-query top-k re-merge; here it only balances blocks)
-    val qRdd = prepped.rdd.zipWithUniqueId()
-    val nBlocks = math.max(1, spark.sparkContext.defaultParallelism / nShards)
-    val keyed = qRdd.flatMap { case (row, qid) =>
-      val b = (qid % nBlocks).toInt
-      (0 until nShards).iterator.map(si => ((si, b), row))
-    }
-    val gridPartitioner = new org.apache.spark.Partitioner {
-      def numPartitions: Int = nShards * nBlocks
-      def getPartition(key: Any): Int = key match {
-        case (si: Int, b: Int) => si * nBlocks + b
-      }
-    }
-    val hitsRdd = keyed.partitionBy(gridPartitioner).mapPartitions { it =>
-      val cell = it.toArray // one (shard, block) cell per task
-      if (cell.isEmpty) Iterator.empty
-      else {
-        val si = cell(0)._1._1
-        val sh = shardsArr(si)
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val m = Metric.fromName(metricName)
-        val n = loaded.ids.length
-        cell.iterator.map(_._2)
-          .filter(_.getSeq[Float](vecIdx).length == dim)
-          .flatMap { row =>
-            val raw = row.getSeq[Float](vecIdx).toArray
-            val q = if (m eq Metric.Cosine) VectorOps.normalize(raw) else raw
-            var fetch = math.min(math.max(1, n), 64)
-            var out: Seq[(Long, Float)] = Seq.empty
-            var done = n == 0
-            while (!done) {
-              val (labels, dists) = loaded.index.searchSaturationChecked(q,
-                fetch, math.max(sc0, fetch))
-              out = labels.indices.iterator
-                .map(i => (loaded.ids(labels(i)), dists(i)))
-                .filterNot { case (id, _) => t.contains(id) }.toSeq
-              // tail checked on the UNFILTERED beam: the k-th best distance
-              // in the shard clearing the radius bounds everything deeper,
-              // tombstoned or not
-              val tailClear = labels.nonEmpty &&
-                dists(labels.length - 1) > rad
-              if (tailClear || labels.length < fetch || fetch >= n) done = true
-              else fetch = math.min(n, fetch * 4)
-            }
-            out.iterator.filter(_._2 <= rad)
-              .map { case (id, d) => Row.fromSeq(row.toSeq :+ id :+ d) }
-          }
-      }
-    }
-    val hits = spark.createDataFrame(hitsRdd, outSchema)
-    joinBaseWithPrefix(baseDf, idColumn, hits, inSchema.fieldNames.toSet)
+    val hits = AnnEngine.of(meta).rangeSearchTable(queriesDf, queryVecColumn, meta, tomb,
+      radius, searchComplexity)
+    joinBaseWithPrefix(baseDf, idColumn, hits, queriesDf.schema.fieldNames.toSet)
   }
 
   private implicit class SeqOps[T](s: Seq[T]) {
@@ -2687,60 +1348,10 @@ object Ann {
   def searchBatch(df: DataFrame, idColumn: String, name: String,
       queries: Seq[Array[Float]], k: Int, searchComplexity: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    val scored: DataFrame = meta.engine match {
-      case e if isGraphEngine(e) =>
-        val qArr = queries.map(prepQuery(meta, _)).toArray
-        val perShardK = k + tomb.size
-        val cosine = meta.metricObj eq Metric.Cosine
-        val tombB = spark.sparkContext.broadcast(tomb)
-        val qB = spark.sparkContext.broadcast(qArr)
-        val sc = searchComplexity
-        // (shard × query-block) task grid: with fewer shards than cores the
-        // shard-only axis strands parallelism (8 shards on 32 cores = 24
-        // idle), so queries split into round-robin blocks until the grid
-        // covers the cluster. Shards are executor-cached, so the extra
-        // shard touches amortize across the batch; at high shard counts
-        // nBlocks collapses to 1 and this reverts to shard-parallel.
-        val nShards = math.max(meta.shards.size, 1)
-        val nBlocks = math.max(1, math.min(qArr.length,
-          spark.sparkContext.defaultParallelism / nShards))
-        val grid = for (sh <- meta.shards; b <- 0 until nBlocks) yield (sh, b)
-        spark.sparkContext.parallelize(grid, math.max(grid.size, 1))
-          .flatMap { case (sh, b) =>
-            val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-            val t = tombB.value
-            // the block's queries advance in LOCK-STEP through the shard:
-            // each hop's candidate distances for all of them are one SIMD
-            // block (BeamSearcher.searchBatch) — bit-identical to per-query
-            // search, so the oracle contract is unchanged
-            val qis = qB.value.indices.filter(_ % nBlocks == b).toArray
-            val results =
-              loaded.index.searchBatchSaturationChecked(qis.map(qB.value(_)), perShardK, sc)
-            qis.iterator.zip(results.iterator).flatMap { case (qi, (labels, dists)) =>
-              labels.indices.iterator
-                .map(i => (qi, loaded.ids(labels(i)), dists(i)))
-                .filterNot { case (_, id, _) => t.contains(id) }
-            }
-          }.toDF("query_idx", "row_id", "_distance")
-      case _ =>
-        // exact/pq engines route through the broadcast gemm plan shared with
-        // searchTable: the queries become a small broadcast table scored
-        // against ONE base scan. A per-query plan union would grow the
-        // driver's analysis/codegen cost linearly in nq — fatal at nq in the
-        // thousands, where this stays a single fixed-size plan.
-        val qDim = if (meta.inputDim > 0) meta.inputDim else meta.dim
-        queries.foreach(q => require(q.length == qDim,
-          s"query dimension ${q.length} != index dimension $qDim"))
-        val qDf = spark.createDataFrame(
-          queries.zipWithIndex.map { case (q, qi) => Row(qi, q.toSeq) }.asJava,
-          StructType(Seq(StructField("query_idx", IntegerType),
-            StructField("__qvec", ArrayType(FloatType)))))
-        scoreTableExact(qDf, "__qvec", meta, k, tomb)
-          .select(col("query_idx"), col("row_id"), col("_distance"))
-    }
+    val scored = AnnEngine.of(meta).searchBatch(spark, meta, queries, k, tomb,
+      searchComplexity)
     val w = Window.partitionBy("query_idx").orderBy(col("_distance"), col("row_id"))
     val topPerQuery = scored.withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= k).drop("__rn")
@@ -2748,18 +1359,6 @@ object Ann {
       .orderBy(col("query_idx"), col("_distance"), col(idColumn))
   }
 
-  /**
-   * `ann_search_table`: DataFrame-input batch search — output = input columns
-   * + base columns (collisions prefixed `tbl_`) + `_distance`
-   * (reference src/ann_search.cpp:397-691).
-   *
-   * Graph engines run a (query-block × shard) task grid: every task holds ONE
-   * shard and lock-step-searches its query block against it, and a per-query
-   * window re-merges shard-local top-k into global top-k. No task ever needs
-   * more than one shard resident, so the index can exceed executor memory —
-   * shards spread across the cluster while query blocks keep all cores busy
-   * even at low shard counts.
-   */
   /** First numeric-array column of `schema` — the reference's query-vector
    *  auto-detection for TABLE inputs (src/ann_search.cpp:471-494: first LIST
    *  or ARRAY column with FLOAT/DOUBLE/DECIMAL/integer child, schema order). */
@@ -2780,117 +1379,31 @@ object Ann {
     searchTable(queriesDf, detectVectorColumn(queriesDf.schema), baseDf,
       idColumn, name, k, searchComplexity)
 
+  /**
+   * `ann_search_table`: DataFrame-input batch search — output = input columns
+   * + base columns (collisions prefixed `tbl_`) + `_distance`
+   * (reference src/ann_search.cpp:397-691).
+   *
+   * Graph engines run a (query-block × shard) task grid: every task holds ONE
+   * shard and lock-step-searches its query block against it, and a per-query
+   * window re-merges shard-local top-k into global top-k. No task ever needs
+   * more than one shard resident, so the index can exceed executor memory —
+   * shards spread across the cluster while query blocks keep all cores busy
+   * even at low shard counts. Table engines broadcast the query block
+   * against one scan of the index table (the gemm-shaped plan).
+   */
   def searchTable(queriesDf: DataFrame, queryVecColumn: String, baseDf: DataFrame,
       idColumn: String, name: String, k: Int, searchComplexity: Int = 0): DataFrame = {
     val spark = queriesDf.sparkSession
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    if (!isGraphEngine(meta.engine))
-      return searchTableExact(queriesDf, queryVecColumn, baseDf, idColumn, meta, k, tomb)
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val shardsArr = meta.shards.toArray
-    if (shardsArr.isEmpty) {
-      // vacuum after deleting every row leaves a zero-shard index
-      val inSchema0 = queriesDf.schema
-      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(inSchema0.fields.toSeq :+
-          StructField("row_id", LongType) :+ StructField("_distance", FloatType)))
-      return joinBaseWithPrefix(baseDf, idColumn, empty, inSchema0.fieldNames.toSet)
-    }
-    val nShards = shardsArr.length
-    val perShardK = k + tomb.size
-    val sc = searchComplexity
-    val dim = meta.dim
-    val inSchema = queriesDf.schema
-    val vecIdx = inSchema.fieldIndex(queryVecColumn)
-    val outSchema = StructType(
-      StructField("__qid", LongType) +: inSchema.fields.toSeq :+
-      StructField("row_id", LongType) :+ StructField("_distance", FloatType))
-    val metricName = meta.metric
-
-    val prepped = queriesDf.withColumn(queryVecColumn,
-      toFloatVec(col(queryVecColumn)))
-    // stable per-row id keys the per-query re-merge across the grid shuffle:
-    // zipWithUniqueId is lazy (no partition-counting job at plan build, so
-    // the TVF stays EXPLAIN-safe and the queries subtree runs once) and as
-    // retry-stable as zipWithIndex — a re-run map task recomputes its
-    // partition and derives the same ids from the fixed partition index, as
-    // long as the upstream scan is deterministic (the same caveat
-    // zipWithIndex's within-partition ordering already carries). NOT
-    // monotonically_increasing_id: its ids shift if the number of upstream
-    // partitions changes between attempts.
-    val qRdd = prepped.rdd.zipWithUniqueId()
-    val nBlocks = math.max(1, spark.sparkContext.defaultParallelism / nShards)
-    val keyed = qRdd.flatMap { case (row, qid) =>
-      val b = (qid % nBlocks).toInt
-      (0 until nShards).iterator.map(si => ((si, b), (qid, row)))
-    }
-    val gridPartitioner = new org.apache.spark.Partitioner {
-      def numPartitions: Int = nShards * nBlocks
-      def getPartition(key: Any): Int = key match {
-        case (si: Int, b: Int) => si * nBlocks + b
-      }
-    }
-    val scoredRdd = keyed.partitionBy(gridPartitioner).mapPartitions { it =>
-      val cell = it.toArray // one (shard, block) cell per task
-      if (cell.isEmpty) Iterator.empty
-      else {
-        val si = cell(0)._1._1
-        val sh = shardsArr(si)
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val m = Metric.fromName(metricName)
-        val valid = cell.iterator.map(_._2).filter { case (_, row) =>
-          row.getSeq[Float](vecIdx).length == dim
-        }.toArray
-        val qs = valid.map { case (_, row) =>
-          val raw = row.getSeq[Float](vecIdx).toArray
-          if (m eq Metric.Cosine) VectorOps.normalize(raw) else raw
-        }
-        // the block advances through this shard in lock-step (one SIMD
-        // block per hop) — bit-identical to per-query search
-        val results = loaded.index.searchBatchSaturationChecked(qs, perShardK, sc)
-        valid.iterator.zip(results.iterator).flatMap { case ((qid, row), (labels, dists)) =>
-          labels.indices.iterator
-            .map(i => (loaded.ids(labels(i)), dists(i)))
-            .filterNot { case (id, _) => t.contains(id) }
-            .map { case (id, d) => Row.fromSeq(qid +: row.toSeq :+ id :+ d) }
-        }
-      }
-    }
-    val scored = spark.createDataFrame(scoredRdd, outSchema)
-    // global top-k per query from the ≤ nShards·perShardK shard-local hits
-    val w = Window.partitionBy("__qid").orderBy(col("_distance"), col("row_id"))
-    val topK = scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k).drop("__rn", "__qid")
-    joinBaseWithPrefix(baseDf, idColumn, topK, inSchema.fieldNames.toSet)
+    val hits = AnnEngine.of(meta).searchTable(queriesDf, queryVecColumn, meta, k, tomb,
+      searchComplexity)
+    joinBaseWithPrefix(baseDf, idColumn, hits, queriesDf.schema.fieldNames.toSet)
   }
 
-  /**
-   * Exact (flat/ivfflat) DataFrame-input batch search: broadcast the query
-   * table against the index data scan — the gemm-shaped plan (each base
-   * partition scores all queries locally, then a per-query window top-k).
-   * At 100 TB the base side stays partition-parallel and only the (small)
-   * query table is replicated; ivfflat additionally prunes each query's scan
-   * to its nprobe clusters via an explode-join on the cluster id.
-   */
-  private def searchTableExact(queriesDf: DataFrame, queryVecColumn: String,
-      baseDf: DataFrame, idColumn: String, meta: IndexMeta, k: Int,
-      tomb: Set[Long]): DataFrame = {
-    val scored = scoreTableExact(queriesDf, queryVecColumn, meta, k, tomb)
-    joinBaseWithPrefix(baseDf, idColumn, scored, queriesDf.schema.fieldNames.toSet)
-  }
-
-  /** Broadcast-gemm exact scoring core shared by [[searchTableExact]] and the
-   *  exact-engine route of [[searchBatch]]: input columns + `row_id` +
-   *  `_distance`, ≤ k rows per input row. Rankings reproduce the single-query
-   *  scan paths bit-exactly: flat/ivfflat rank by the same double-precision
-   *  distance expression ([[exactScanIds]]); pq/ivfpq rank by the same float
-   *  ADC accumulation ([[pqScanIds]]/[[ivfPqScanIds]]), so near-float-ties
-   *  select the same rows whether a query arrives alone or in a batch. */
   /** Executor-JVM-wide ADC lookup-table cache for the TABLE-path quantized
-   *  scores in [[scoreTableExact]], scoped per plan by a driver-issued
+   *  scores in [[TableEngine.searchTable]], scoped per plan by a driver-issued
    *  token (captured in the scoring UDF's closure, so task retries see the
    *  same token). Keyed (qid, probe); a hit verifies the stored query
    *  bit-for-bit (`Arrays.equals`) before use, so a `__qid` that maps to a
@@ -2951,265 +1464,7 @@ object Ann {
         (compute: => (Array[Float], Float)): Entry =
       getIn(subFor(token), qid, probe, q)(compute)
   }
-  private val adcPlanTokens = new java.util.concurrent.atomic.AtomicLong()
-
-  private def scoreTableExact(queriesDf: DataFrame, queryVecColumn: String,
-      meta: IndexMeta, k: Int, tomb: Set[Long]): DataFrame = {
-    val spark = queriesDf.sparkSession
-    val cosine = meta.metricObj eq Metric.Cosine
-    val l2 = meta.metricObj eq Metric.L2
-    val inSchema = queriesDf.schema
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val prepped0 = {
-      val base0 = queriesDf.withColumn(queryVecColumn, toFloatVec(col(queryVecColumn)))
-      // pca indexes: __q is the frozen-transformed query — the USER's query
-      // column stays untouched, it is part of the output contract. The PCA
-      // engines are L2-only, but OPQ-chain ivfpq indexes store their
-      // rotation as pca.bin and DO allow cosine: transform FIRST, normalize
-      // AFTER (prepQuery's float order — see rangeSearchTable's twin note).
-      val qExpr =
-        if (meta.pcaFile.nonEmpty) {
-          val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-          val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-          if (cosine) toFloatVec(normalizeCol(tUdf(col(queryVecColumn))))
-          else tUdf(col(queryVecColumn))
-        }
-        else if (cosine) toFloatVec(normalizeCol(col(queryVecColumn)))
-        else col(queryVecColumn)
-      base0.withColumn("__q", qExpr)
-    }
-    // OPQ (pq engine only): ADC runs in rotated space — rotate each query
-    // once on the broadcast side; exact re-ranks keep the unrotated `__q`
-    val prepped1 =
-      if (meta.opq) {
-        val rotB = spark.sparkContext.broadcast(readRotation(spark, meta))
-        val rotUdf = udf((v: Array[Float]) => OpqCodec.rotate(rotB.value, v))
-        prepped0.withColumn("__qadc", rotUdf(col("__q")))
-      } else prepped0
-    // __qid needs only uniqueness WITHIN the broadcast payload: each query
-    // row and its qid travel together through the join, and the broadcast
-    // side is computed exactly once per execution and reused by every
-    // consumer partition, so monotonically_increasing_id is safe here — and,
-    // unlike rdd.zipWithIndex, stays fully lazy (ZippedWithIndexRDD runs a
-    // partition-counting job the moment the RDD is built, which would make
-    // even EXPLAIN over the batch TVFs execute the queries subtree and then
-    // compute it a second time at execution). The grid path in
-    // [[searchTable]] keys qids across a real shuffle and uses
-    // zipWithUniqueId instead — see its comment.
-    val prepped = prepped1.withColumn("__qid", monotonically_increasing_id())
-    // pq/ivfpq only: FREEZE the (broadcast-small) query table at plan time —
-    // one collect of the queries subtree, qids assigned by driver index, and
-    // a broadcast (qid → ADC query) map. The scoring UDF then carries ONLY
-    // (__qid[, __probe], code) primitives per joined row: shipping the
-    // d-float query array on every row cost ~45 s for 512 queries × nprobe
-    // 32 at 1.5M vectors (per-row ArrayData→Array[Float] conversion over
-    // ~100M pairs) vs ivfflat's 5.6 s codegen join of the same shape. The
-    // frozen map is immutable across task retries, and executors resolve the
-    // SAME broadcast array instance every call, so the AdcLutCache content
-    // verify hits its reference fast-path.
-    def frozenQueries(adcCol: String): (DataFrame,
-        org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]) = {
-      val rows = prepped1.collect()
-      val schema2 = prepped1.schema.add("__qid", LongType, nullable = false)
-      val withQid = rows.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(r.toSeq :+ i.toLong) }
-      val dfQ = spark.createDataFrame(
-        java.util.Arrays.asList(withQid: _*), schema2)
-      val idx = prepped1.schema.fieldIndex(adcCol)
-      // qid IS the array index — the per-row hot path resolves a query by
-      // plain array indexing, no boxed map lookup
-      val qArr: Array[Array[Float]] = rows.map(_.getSeq[Float](idx).toArray)
-      (dfQ, spark.sparkContext.broadcast(qArr))
-    }
-    def distTo(vc: Column, qc: Column): Column = meta.metricObj match {
-      case Metric.L2 => array_distance_sq(vc, qc)
-      case _ => array_negative_inner_product(vc, qc)
-    }
-    // all references to the index scan go through the DataFrame instance so
-    // a query table that also has id/vec/cluster columns can't capture them
-    val base = spark.read.parquet(meta.sourcePath)
-    // per-engine (joined plan, ranking score). pq/ivfpq never decode: the
-    // score is PqCodec.adc over the codes — the very accumulation the
-    // single-query scans rank by, and m byte-lookups per pair instead of a
-    // d-float reconstruction. Each (query, probe)'s m·k-float lookup table
-    // is NOT carried on the joined rows: shipping it per row cost ~8 KB of
-    // UDF array conversion per pair (measured 161 s for 512 queries ×
-    // nprobe 32 at 1.5M vectors — ~100M joined rows ≈ 800 GB of copying vs
-    // 7.8 s for the ivfflat join of the same shape). The executor computes
-    // each LUT once via [[AdcLutCache]]; the row carries only (__qid,
-    // __probe) and the d-float query it already carries for re-ranking.
-    val (joined, rawScore, qSide, frozenOut): (DataFrame, Column, DataFrame, Option[DataFrame]) = meta.engine match {
-      case "pq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val token = adcPlanTokens.incrementAndGet()
-        val (frozen, qMapB) =
-          frozenQueries(if (meta.opq) "__qadc" else "__q")
-        val state = new AdcScoreState(cbB, null, qMapB, l2, token)
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(lit(-1)),
-          graft.functions.mkExpr(base("code")), state))
-        (base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
-      case "ivfpq" =>
-        // probe join on the cluster column (prunes when nprobe < nlist,
-        // degrades to a full cluster-partitioned scan otherwise); per
-        // (query, probe) ADC inputs match ivfPqScanIds: L2 uses the residual
-        // (q − centroid) table with offset 0, IP/cosine reuse the query's
-        // own table with a −dot(q, centroid) offset
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val cbK = cb.k
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val token = adcPlanTokens.incrementAndGet()
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, imiB, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val (frozen, qMapB) = frozenQueries("__q")
-        val state = new AdcScoreState(cbB, centsB, qMapB, l2, token)
-        val probed = frozen.withColumn("__probe", explode(probeUdf(col("__q"))))
-        // same popularity-skew rebalance as the ivfflat probe join below
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(col("__probe")),
-          graft.functions.mkExpr(stream("code")), state))
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          score, probed, Some(frozen))
-      case "ivfsq" =>
-        // ivfpq's probe join for cluster pruning, but the score rides the
-        // probe-independent flat LUT (codes quantize raw vectors, not
-        // residuals): PqAdcScore with probe = -1 resolves one LUT per
-        // (query, plan) from the executor cache — same codegen span
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val token = adcPlanTokens.incrementAndGet()
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, 0, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val (frozen, qMapB) = frozenQueries("__q")
-        val state = new AdcScoreState(cbB, null, qMapB, l2, token, meta.quantBits)
-        val probed = frozen.withColumn("__probe", explode(probeUdf(col("__q"))))
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(lit(-1)),
-          graft.functions.mkExpr(stream("code")), state))
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          score, probed, Some(frozen))
-      case "ivfflat" if meta.nprobe < meta.nlist =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, imiB, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val probed = prepped.withColumn("__probe", explode(probeUdf(col("__q"))))
-        // per-task work here is sum over the task's clusters of
-        // size(cluster) x queries-probing(cluster) — a popularity-weighted
-        // product the byte-based file bin-packing cannot see, which showed
-        // up as 7x task skew at 1.5M vectors x 512 queries (AnnScaleSmoke).
-        // A round-robin rebalance of the scanned rows equalizes it; the
-        // extra exchange moves only the base subset and is gated so
-        // small-query lookups (where DPP cluster pruning is the win) keep
-        // the direct scan.
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          distTo(stream("vec"), col("__q")), probed, None)
-      case "lsh" =>
-        // batch Hamming rides the FROZEN-query route: queries collect once,
-        // encode to one LONG code each on the driver, and the score is the
-        // same codegen'd bit_count(XOR) the single-query scan ranks by. The
-        // frozen LocalRelation is what lets the shared narrow-ranking branch
-        // below shuffle only (__qid, id, score) through the per-query window
-        // — the first cut of this path windowed the full 1.5M×512 cross
-        // join WITH the 256-byte query array on every row and OOMed an 8 GB
-        // driver at the scale smoke (the exact failure mode the PQ branch's
-        // narrow ranking documents).
-        val hyps = IndexCatalog.readCentroids(s"$dirPath/hyperplanes.bin")
-        val hypsB = spark.sparkContext.broadcast(hyps)
-        val thrB = spark.sparkContext.broadcast(lshThresholdsOf(spark, meta))
-        val wide = meta.nlist > LshCodec.MaxBits
-        val qcodeUdf =
-          if (wide) udf((v: Array[Float]) => LshCodec.encodeWords(hypsB.value, v, thrB.value))
-          else udf((v: Array[Float]) => LshCodec.encode(hypsB.value, v, thrB.value))
-        val (frozen0, _) = frozenQueries("__q")
-        val frozen = frozen0.withColumn("__qcode", qcodeUdf(col("__q")))
-        // wide codes: per-word XOR popcounts summed — the word count is a
-        // plan-time constant, so the score stays builtin expressions
-        val score =
-          if (wide) (0 until LshCodec.words(meta.nlist)).map(w =>
-              bit_count(element_at(base("code"), w + 1)
-                .bitwiseXOR(element_at(col("__qcode"), w + 1))))
-            .reduce(_ + _).cast(DoubleType)
-          else bit_count(base("code").bitwiseXOR(col("__qcode"))).cast(DoubleType)
-        (base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
-      case _ =>
-        (base.crossJoin(broadcast(prepped)), distTo(base("vec"), col("__q")),
-          prepped, None)
-    }
-    val live0 = if (tomb.isEmpty) joined
-      else joined.where(notTombstoned(base("id"), tomb))
-    frozenOut match {
-      case Some(qOut) =>
-        // NARROW ranking for the frozen-query engines: the probe join's
-        // ~(queries x nprobe x cluster-size) rows shuffle only
-        // (__qid, id, score) through the ranking window - ~24 bytes/row
-        // instead of the ~0.5 KB query payload - and the query fields (for
-        // refine, also the raw vectors) rejoin AFTER the k-cut, when at
-        // most k*refineFactor rows per query remain. Safe here exactly
-        // because qOut is a driver-frozen LocalRelation: its two plan
-        // occurrences are deterministic row-for-row, which the lazy
-        // mono-qid side of flat/ivfflat cannot promise.
-        val scoredN = live0.select(col("__qid"), base("id").as("__rid"),
-          rawScore.as("__rawdd"))
-        val w1 = Window.partitionBy("__qid").orderBy(col("__rawdd"), col("__rid"))
-        // name-based refs after the using-column join: dataset-tagged
-        // qOut(f) refs would trip DetectAmbiguousSelfJoin (qOut is already
-        // in scoredN's lineage); the narrow side carries only __-prefixed
-        // columns, so user field names resolve uniquely
-        val outCols = inSchema.fieldNames.map(f => col(f)).toSeq
-        if (!meta.refine) {
-          scoredN.withColumn("__rn", row_number().over(w1)).where(col("__rn") <= k)
-            .join(broadcast(qOut), "__qid")
-            .select(outCols :+ col("__rid").as("row_id") :+
-              col("__rawdd").cast(FloatType).as("_distance"): _*)
-        } else {
-          // refine: exact double re-rank of the ADC top k*refineFactor,
-          // same candidate cut and fold order as refineStage
-          val cand = scoredN.withColumn("__crn", row_number().over(w1))
-            .where(col("__crn") <= k * refineFactor(spark, meta))
-          val bv = base.select(col("id").as("__rid"), col("vec"))
-          val rejoined = cand.join(bv, "__rid")
-            .join(broadcast(qOut), "__qid")
-            .withColumn("__dd", distTo(col("vec"), col("__q")))
-          val w2 = Window.partitionBy("__qid").orderBy(col("__dd"), col("__rid"))
-          rejoined.withColumn("__rn", row_number().over(w2)).where(col("__rn") <= k)
-            .select(outCols :+ col("__rid").as("row_id") :+
-              col("__dd").cast(FloatType).as("_distance"): _*)
-        }
-      case None =>
-        val unfiltered = live0.withColumn("__dd", rawScore)
-        val w = Window.partitionBy("__qid").orderBy(col("__dd"), base("id"))
-        unfiltered.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-          .select(inSchema.fieldNames.map(f => qSide(f)).toSeq :+
-            base("id").as("row_id") :+ col("__dd").cast(FloatType).as("_distance"): _*)
-    }
-  }
-
+  private[index] val adcPlanTokens = new java.util.concurrent.atomic.AtomicLong()
   /**
    * Measured recall@k of an index against exact brute force, over a
    * deterministic sample of the base table's own vectors — the operability
@@ -3392,7 +1647,7 @@ object Ann {
 
   /** Join back to base, prefixing base columns that collide with query-input
    *  columns with `tbl_` (reference src/ann_search.cpp:521-525). */
-  private def joinBaseWithPrefix(base: DataFrame, idColumn: String, hits: DataFrame,
+  private[index] def joinBaseWithPrefix(base: DataFrame, idColumn: String, hits: DataFrame,
       inputCols: Set[String]): DataFrame = {
     val renamed = base.columns.foldLeft(base) { (b, c) =>
       if (inputCols.contains(c)) b.withColumnRenamed(c, s"tbl_$c") else b
@@ -3423,7 +1678,7 @@ object Ann {
     df.withColumn("_distance", dist.cast(FloatType))
   }
 
-  private def normalizeCol(vec: Column): Column = {
+  private[index] def normalizeCol(vec: Column): Column = {
     val n = sqrt(aggregate(transform(vec, x => x * x), lit(0.0d), (a, x) => a + x))
     transform(vec, x => when(n > 0, x / n).otherwise(x))
   }
@@ -3481,84 +1736,14 @@ object Ann {
       id => id >= i0 && id < end && !tomb.contains(id))
   }
 
-  /** Shared engine arms for [[reconstruct]]/[[reconstructN]]: `pred` filters
-   *  the code/vector table scan (Column form — pushes to parquet); `keep` is
-   *  the same predicate as a closure for the graph-shard arm, which decodes
-   *  outside Catalyst. The two MUST agree (the [[IdFilter]] contract). */
+  /** Shared tail of [[reconstruct]]/[[reconstructN]]: the engine decodes the
+   *  selected ids — `pred` filters the code/vector table scan (Column form,
+   *  pushes to parquet), `keep` is the same predicate as a closure for graph
+   *  shards, which decode outside Catalyst; the two MUST agree (the
+   *  [[IdFilter]] contract) — then transform chains are inverted. */
   private def reconstructImpl(spark: SparkSession, meta: IndexMeta,
       pred: Column, keep: Long => Boolean): DataFrame = {
-    import spark.implicits._
-    val name = meta.name
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    def fromStored(): DataFrame =
-      spark.read.parquet(meta.sourcePath)
-        .where(pred)
-        .select(col("id").as("row_id"), toFloatVec(col("vec")).as("vector"))
-    val out: DataFrame = meta.engine match {
-      // RFlat-refined code engines keep the raw vec column — reconstruct
-      // returns the refine storage exactly (FAISS IndexRefineFlat), so
-      // this arm must win over the unrefined-LSH reject below
-      case "pq" | "ivfpq" | "ivfsq" | "lsh" if meta.refine => fromStored()
-      case "lsh" => throw new IllegalArgumentException(
-        s"index '$name' is LSH: sign codes are not reconstructible " +
-        "(FAISS IndexLSH has no reconstruct)")
-      case e if isGraphEngine(e) =>
-        val cosine = meta.metricObj eq Metric.Cosine
-        val keepB = spark.sparkContext.broadcast(keep)
-        val shards = meta.shards
-        spark.sparkContext.parallelize(shards, math.max(shards.size, 1))
-          .flatMap { sh =>
-            val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-            val w = keepB.value
-            loaded.ids.indices.iterator.collect {
-              case l if w(loaded.ids(l)) => (loaded.ids(l), loaded.index.vector(l))
-            }
-          }.toDF("row_id", "vector")
-      case "flat" | "ivfflat" => fromStored()
-      case "pq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        // OPQ stores codes in rotated space; reconstruct applies Rᵀ (the
-        // inverse of the orthogonal rotation) to the decode
-        val rotT = if (!meta.opq) null else {
-          val r = readRotation(spark, meta)
-          Array.tabulate(r.length)(i => Array.tabulate(r.length)(j => r(j)(i)))
-        }
-        val cbB = spark.sparkContext.broadcast(cb)
-        val rotTB = spark.sparkContext.broadcast(rotT)
-        val dec = udf((code: Array[Byte]) => {
-          val y = PqCodec.decode(cbB.value, code)
-          if (rotTB.value == null) y else OpqCodec.rotate(rotTB.value, y)
-        })
-        spark.read.parquet(meta.sourcePath)
-          .where(pred)
-          .select(col("id").as("row_id"), dec(col("code")).as("vector"))
-      case "ivfpq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val centsB = spark.sparkContext.broadcast(cents)
-        val dec = udf((code: Array[Byte], cluster: Int) => {
-          val r = PqCodec.decode(cbB.value, code)
-          val c = centsB.value(cluster)
-          var i = 0
-          while (i < r.length) { r(i) = c(i) + r(i); i += 1 }
-          r
-        })
-        spark.read.parquet(meta.sourcePath)
-          .where(pred)
-          .select(col("id").as("row_id"),
-            dec(col("code"), col("cluster").cast(IntegerType)).as("vector"))
-      case "ivfsq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val bits = meta.quantBits
-        val cbB = spark.sparkContext.broadcast(cb)
-        val dec = udf((code: Array[Byte]) => sqDecode(cbB.value, bits, code))
-        spark.read.parquet(meta.sourcePath)
-          .where(pred)
-          .select(col("id").as("row_id"), dec(col("code")).as("vector"))
-      case other => throw new IllegalArgumentException(
-        s"reconstruct: unsupported engine '$other' for index '$name'")
-    }
+    val out = AnnEngine.of(meta).reconstruct(spark, meta, pred, keep)
     // transform-chained indexes (PCA/PCAR/OPQ-chain) store vectors in the
     // rotated space; reconstruct maps them back through Rᵀ·y + mean —
     // FAISS IndexPreTransform.reconstruct's reverse_transform, valid for
@@ -3567,7 +1752,7 @@ object Ann {
     // not orthonormal: reject, like rangeSearch does.
     val back = if (meta.pcaFile.isEmpty) out else {
       require(meta.pcaVariant != "w",
-        s"reconstruct: whitened PCAW index '$name' has no orthonormal " +
+        s"reconstruct: whitened PCAW index '${meta.name}' has no orthonormal " +
         "inverse (FAISS PCAMatrix reverse_transform requires is_orthonormal)")
       val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
       val invUdf = udf((y: Array[Float]) => pcaB.value.inverseTransform(y))
@@ -3592,206 +1777,8 @@ object Ann {
    *  their parquet table (encoded with the EXISTING codebooks/centroids —
    *  FAISS add() semantics: the quantizer never retrains on add). */
   def append(df: DataFrame, column: String, idColumn: String, name: String): IndexMeta = {
-    val spark = df.sparkSession
-    val r = root(spark)
-    val meta = IndexCatalog.load(r, name)
-    if (!isGraphEngine(meta.engine)) return appendExact(df, column, idColumn, meta)
-    val dir = IndexCatalog.indexDir(r, name)
-    import spark.implicits._
-    val dim = meta.dim
-    val data = df.select(col(idColumn).cast(LongType), toFloatVec(col(column)))
-      .as[(Long, Array[Float])]
-    val metricName = meta.metric
-    val engine = meta.engine
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quant = meta.quantized
-    val quantBits = meta.quantBits
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
-    // Parallel delta build: a big batch splits into ceil(n/targetShardSize)
-    // delta shards built concurrently — a single coalesce(1) task was the
-    // streaming-ingest throughput ceiling (one thread serializing every
-    // micro-batch). Small batches still produce exactly one delta shard.
-    val targetShardSize = spark.conf.getOption("spark.graft.ann.append.targetShardSize")
-      .map(_.toLong).getOrElse(BuildParams().targetShardSize)
-    // cache the batch: sizing (count) and shard building both evaluate it,
-    // and micro-batch appends are latency-sensitive
-    data.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = data.count()
-    val nDelta = math.max(1, math.ceil(n.toDouble / targetShardSize).toInt)
-    val deltaTag = s"delta-${meta.shards.size}"
-    val repart = if (nDelta == 1) data.coalesce(1) else data.repartition(nDelta)
-    val newShards = repart.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
-      val ix: GraphIndex =
-        if (engine == "hnsw") new HnswIndex(dim, m, maxDeg, bc)
-        else new VamanaIndex(dim, m, maxDeg, bc, alpha)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val normalize = m eq Metric.Cosine
-      it.foreach { case (id, v) =>
-        require(v.length == dim, s"vector for id $id has dimension ${v.length}, expected $dim")
-        ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
-        ids += id
-      }
-      if (ix.size == 0) Iterator.empty
-      else {
-        val f = f"$dir/shard-$deltaTag-$pid%05d.$ext"
-        ix match {
-          case vx: VamanaIndex =>
-            if (quant) vx.quantize(quantBits)
-            DiskannFormat.writeFile(vx, f)
-          case h: HnswIndex => HnswFormat.writeFile(h, f)
-        }
-        IndexCatalog.writeIds(f"$dir/shard-$deltaTag-$pid%05d.ids", ids.toArray)
-        Iterator.single(ShardMeta(f, f"$dir/shard-$deltaTag-$pid%05d.ids", ids.length.toLong))
-      }
-    }.collect().toList.sortBy(_.file)
-    data.unpersist()
-    val updated = meta.copy(shards = meta.shards ++ newShards,
-      numVectors = meta.numVectors + newShards.map(_.count).sum)
-    IndexCatalog.save(r, updated)
-    updated
-  }
-
-  /** Exact/quantized-engine append: encode with the existing
-   *  centroids/codebooks, append to the parquet table. */
-  private def appendExact(df: DataFrame, column: String, idColumn: String,
-      meta: IndexMeta): IndexMeta = {
-    val spark = df.sparkSession
-    // pca indexes: appended rows arrive in the ORIGINAL dim and encode
-    // through the frozen transform, like the PQ frozen codebook
-    val dim = if (meta.inputDim > 0) meta.inputDim else meta.dim
-    val cosine = meta.metricObj eq Metric.Cosine
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    // transform FIRST, normalize AFTER — the build's float order (buildIndex
-    // rotates raw vectors, then the engine normalizes; prepQuery matches).
-    // Normalizing before an OPQ-chain rotation agrees only in exact
-    // arithmetic — in float the two orders differ by an ulp, enough to
-    // flip an appended row's cluster/code at a cell boundary and break the
-    // frozen-transform append's bit-parity convention.
-    val checkUdf = udf((v: Array[Float]) => {
-      require(v.length == dim, s"appended vector has dimension ${v.length}, expected $dim")
-      v
-    })
-    val data0 = df
-      .select(col(idColumn).cast(LongType).as("id"), toFloatVec(col(column)).as("vec"))
-      .where(col(idColumn).isNotNull && col(column).isNotNull)
-      .withColumn("vec", checkUdf(col("vec")))
-    val transformed = if (meta.pcaFile.isEmpty) data0 else {
-      val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-      val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-      data0.withColumn("vec", tUdf(col("vec")))
-    }
-    val data = if (!cosine) transformed else {
-      val nUdf = udf((v: Array[Float]) => VectorOps.normalize(v.clone()))
-      transformed.withColumn("vec", nUdf(col("vec")))
-    }
-    val n = data.count()
-    if (n == 0) return meta
-    meta.engine match {
-      case "flat" =>
-        data.write.mode("append").parquet(meta.sourcePath)
-      case "ivfflat" =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-        val clustered = data.withColumn("cluster", assignUdf(col("vec")))
-        // writeClustered detects the existing table's layout on append, so
-        // the batch lands in the same per-cluster or bucketed shape the
-        // build wrote — including legacy large-nlist per-cluster tables
-        writeClustered(clustered, meta.nlist, meta.sourcePath, "append")
-        // appended members may extend a cluster's radius: merge-max the
-        // batch's radii into radii.bin so range pruning stays exact
-        val radiiPath = s"$dirPath/radii.bin"
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-          val old = IndexCatalog.readRadii(radiiPath)
-          val add = clusterRadii(clustered, centsB, old.length)
-          IndexCatalog.writeRadii(radiiPath,
-            Array.tabulate(old.length)(c => math.max(old(c), add(c))))
-        }
-      case "pq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        // frozen-codebook append (FAISS add()): OPQ indexes also keep the
-        // frozen rotation, so appended rows encode R·v like the build did
-        val rotB = spark.sparkContext.broadcast(
-          if (meta.opq) readRotation(spark, meta) else null)
-        val encodeUdf = udf((v: Array[Float]) => {
-          val r = rotB.value
-          PqCodec.encode(cbB.value, if (r == null) v else OpqCodec.rotate(r, v))
-        })
-        val pqCols = Seq(col("id"), encodeUdf(col("vec")).as("code")) ++
-          (if (meta.refine) Seq(col("vec")) else Nil) // data's vec is already prepped
-        data.select(pqCols: _*)
-          .write.mode("append").parquet(meta.sourcePath)
-      case "ivfpq" =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val cbB = spark.sparkContext.broadcast(cb)
-        val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-        val encodeUdf = udf((v: Array[Float], cluster: Int) => {
-          val c = centsB.value(cluster)
-          val rr = new Array[Float](v.length)
-          var i = 0
-          while (i < v.length) { rr(i) = v(i) - c(i); i += 1 }
-          PqCodec.encode(cbB.value, rr)
-        })
-        val ipqCols = Seq(col("id"), encodeUdf(col("vec"), col("cluster")).as("code")) ++
-          (if (meta.refine) Seq(col("vec")) else Nil) :+ col("cluster")
-        writeClustered(data.withColumn("cluster", assignUdf(col("vec")))
-          .select(ipqCols: _*), meta.nlist, meta.sourcePath, "append")
-      case "ivfsq" =>
-        // frozen-range append (FAISS add()): new rows quantize against the
-        // build's per-dim min/scale from sq.bin — values outside the
-        // trained range clamp, same as FAISS's trained ScalarQuantizer
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val sq = IndexCatalog.readCentroids(s"$dirPath/sq.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val minsB = spark.sparkContext.broadcast(sq(0))
-        val scalesB = spark.sparkContext.broadcast(sq(1))
-        val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-        val sqBits = meta.quantBits
-        val encodeUdf =
-          if (sqBits == 8) udf((v: Array[Float]) =>
-            graft.core.Sq8Codec.encodeRow(v, minsB.value, scalesB.value))
-          else udf((v: Array[Float]) =>
-            graft.core.SqPackedCodec.encodeRow(v, minsB.value, scalesB.value, sqBits))
-        val isqCols = Seq(col("id"), encodeUdf(col("vec")).as("code")) ++
-          (if (meta.refine) Seq(col("vec")) else Nil) :+ col("cluster")
-        val encoded = data.withColumn("cluster", assignUdf(col("vec")))
-          .select(isqCols: _*)
-        writeClustered(encoded, meta.nlist, meta.sourcePath, "append")
-        // appended reconstructions may extend a cluster's code-space radius:
-        // merge-max the batch's dequantized radii so range pruning stays
-        // exact (the ivfflat append's radii contract, over x̂ not v)
-        val radiiPath = s"$dirPath/radii.bin"
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-          val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
-          val old = IndexCatalog.readRadii(radiiPath)
-          val add = sqClusterRadii(encoded, centsB, cbB, old.length, sqBits)
-          IndexCatalog.writeRadii(radiiPath,
-            Array.tabulate(old.length)(c => math.max(old(c), add(c))))
-        }
-      case "lsh" =>
-        // frozen-hyperplane append (FAISS add()): new rows encode against
-        // the build's hyperplanes, exactly like the PQ frozen codebook
-        val hyps = IndexCatalog.readCentroids(s"$dirPath/hyperplanes.bin")
-        val hypsB = spark.sparkContext.broadcast(hyps)
-        val thrB = spark.sparkContext.broadcast(lshThresholdsOf(spark, meta))
-        val encodeUdf =
-          if (meta.nlist > LshCodec.MaxBits)
-            udf((v: Array[Float]) => LshCodec.encodeWords(hypsB.value, v, thrB.value))
-          else udf((v: Array[Float]) => LshCodec.encode(hypsB.value, v, thrB.value))
-        val lshCols = Seq(col("id"), encodeUdf(col("vec")).as("code")) ++
-          (if (meta.refine) Seq(col("vec")) else Nil) // data's vec is already prepped
-        data.select(lshCols: _*)
-          .write.mode("append").parquet(meta.sourcePath)
-      case e => throw new IllegalArgumentException(s"append: unknown engine $e")
-    }
-    val updated = meta.copy(numVectors = meta.numVectors + n)
-    IndexCatalog.save(root(spark), updated)
-    updated
+    val meta = IndexCatalog.load(root(df.sparkSession), name)
+    AnnEngine.of(meta).append(df, column, idColumn, meta)
   }
 
   /** Serve-time probe width, matching FAISS's MUTABLE `index.nprobe` field
@@ -3803,8 +1790,7 @@ object Ann {
   def setNprobe(spark: SparkSession, name: String, nprobe: Int): IndexMeta = {
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
     val meta = IndexCatalog.load(root(spark), name)
-    require(meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq",
+    require(AnnEngine.of(meta).ivf,
       s"nprobe applies to IVF engines; '$name' is ${meta.engine}")
     val updated = meta.copy(nprobe = math.min(nprobe, meta.nlist))
     IndexCatalog.save(root(spark), updated)
@@ -3824,71 +1810,20 @@ object Ann {
     updated
   }
 
-  /** Vacuum: rebuild shards without tombstoned rows, clear tombstones
-   *  (reference src/diskann_index.cpp:701-741). */
+  /** Vacuum: rewrite the index without tombstoned rows, clear tombstones
+   *  (reference src/diskann_index.cpp:701-741). Graph engines rebuild their
+   *  shards; exact/quantized engines rewrite the parquet table into a
+   *  versioned directory — without this, deletes would pay the NOT IN
+   *  filter on every scan forever. The new generation is published before
+   *  the superseded files and tombstones are deleted, so a failure at any
+   *  step leaves a consistent index. Single-writer (like the reference's
+   *  Vacuum): re-plan after mutations. */
   def vacuum(spark: SparkSession, name: String): IndexMeta = {
     val r = root(spark)
     val meta = IndexCatalog.load(r, name)
     val tomb = IndexCatalog.readTombstones(r, name)
-    if (tomb.isEmpty) return meta
-    if (!isGraphEngine(meta.engine)) return vacuumExact(spark, meta, tomb)
-    val dir = IndexCatalog.indexDir(r, name)
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val ver = meta.version + 1
-    val engine = meta.engine
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quant = meta.quantized
-    val quantBits = meta.quantBits
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
-    val newShards = spark.sparkContext
-      .parallelize(meta.shards.zipWithIndex, math.max(meta.shards.size, 1))
-      .flatMap { case (sh, i) =>
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val keep = loaded.ids.indices.filter(l => !t.contains(loaded.ids(l)))
-        if (keep.isEmpty) Iterator.empty
-        else {
-          val ix: GraphIndex =
-            if (engine == "hnsw")
-              new HnswIndex(loaded.index.dim, loaded.index.metric, maxDeg, bc)
-            else
-              new VamanaIndex(loaded.index.dim, loaded.index.metric, maxDeg, bc, alpha)
-          keep.foreach(l => ix.add(loaded.index.vector(l)))
-          val f = f"$dir/shard-$i%05d-v$ver.$ext"
-          val idsF = f"$dir/shard-$i%05d-v$ver.ids"
-          ix match {
-            case vx: VamanaIndex =>
-              if (quant) vx.quantize(quantBits)
-              DiskannFormat.writeFile(vx, f)
-            case h: HnswIndex => HnswFormat.writeFile(h, f)
-          }
-          IndexCatalog.writeIds(idsF, keep.map(loaded.ids(_)).toArray)
-          Iterator.single(ShardMeta(f, idsF, keep.size.toLong))
-        }
-      }.collect().toList
-    meta.shards.foreach { sh =>
-      new java.io.File(sh.file).delete(); new java.io.File(sh.idsFile).delete()
-    }
-    new java.io.File(IndexCatalog.tombstonePath(r, name)).delete()
-    val updated = meta.copy(shards = newShards, version = ver,
-      numVectors = newShards.map(_.count).sum, numDeleted = 0L)
-    IndexCatalog.save(r, updated)
-    updated
+    if (tomb.isEmpty) meta else AnnEngine.of(meta).vacuum(spark, meta, tomb)
   }
-
-  /** Exact/quantized-engine vacuum: rewrite the parquet table without the
-   *  tombstoned rows (versioned directory, atomic metadata swap), then
-   *  clear tombstones. Without this, deletes on flat/ivf/pq indexes would
-   *  pay the NOT IN filter on every scan forever.
-   *
-   *  Single-writer assumption (same as the graph vacuum and the reference's
-   *  Vacuum): the superseded data directory is deleted as soon as the new
-   *  metadata is live, so a DataFrame planned against the OLD sourcePath
-   *  and executed after the vacuum fails with FileNotFound. Re-plan (reload
-   *  the index) after mutations. */
-  private def vacuumExact(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long]): IndexMeta = rewriteExact(spark, meta, tomb)
 
   /** Compact an exact/quantized index's parquet table: repeated micro-batch
    *  appends accumulate one small file per batch (the exact-engine analog of
@@ -3899,111 +1834,33 @@ object Ann {
   def compactExact(spark: SparkSession, name: String): IndexMeta = {
     val r = root(spark)
     val meta = IndexCatalog.load(r, name)
-    require(!isGraphEngine(meta.engine),
+    val engine = AnnEngine.of(meta)
+    require(!engine.isGraph,
       s"compactExact applies to exact/quantized engines (got ${meta.engine}); " +
       "graph indexes compact via StreamingIndex.compact")
-    rewriteExact(spark, meta, IndexCatalog.readTombstones(r, name))
+    engine.vacuum(spark, meta, IndexCatalog.readTombstones(r, name))
   }
 
-  /** Shared exact-engine rewrite (vacuum + compaction): live rows into a
-   *  fresh versioned dir with a bounded file count, atomic metadata swap. */
-  private def rewriteExact(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long]): IndexMeta = {
-    val r = root(spark)
-    val dir = IndexCatalog.indexDir(r, meta.name)
-    val ver = meta.version + 1
-    val newPath = s"$dir/data-v$ver"
-    val df0 = spark.read.parquet(meta.sourcePath)
-    val live = if (tomb.isEmpty) df0 else df0.where(notTombstoned(col("id"), tomb))
-    val ivf = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val targetBytes = spark.conf.getOption("spark.graft.ann.compactTargetBytes")
-      .map(_.toLong).getOrElse(128L << 20)
-    val estBytes = dirBytes(new java.io.File(meta.sourcePath))
-    val nFiles = math.max(1, math.ceil(estBytes.toDouble / targetBytes).toInt)
-    // ivf: writeClustered keeps the build's layout — one file per cluster
-    // partition below MaxClusterDirs, bucketed above (drop the read-back
-    // bucket partition column first; writeClustered re-derives it);
-    // flat/pq: nFiles even splits
-    if (ivf) writeClustered(live.drop("bucket"), meta.nlist, newPath, "overwrite")
-    else live.repartition(nFiles).write.mode("overwrite").parquet(newPath)
-    val n = spark.read.parquet(newPath).count()
-    // new data dir is complete — publish metadata atomically, then clean up
-    val updated = meta.copy(sourcePath = newPath, version = ver,
-      numVectors = n, numDeleted = 0L)
-    IndexCatalog.save(r, updated)
-    new java.io.File(IndexCatalog.tombstonePath(r, meta.name)).delete()
-    IndexCatalog.deleteTree(meta.sourcePath)
-    updated
-  }
-
-  private def dirBytes(f: java.io.File): Long = {
+  private[index] def dirBytes(f: java.io.File): Long = {
     val kids = f.listFiles()
     if (kids == null) 0L
     else kids.map(c => if (c.isDirectory) dirBytes(c) else c.length()).sum
   }
 
-  /** Merge `source` into `target`: adopt its live shards + tombstones
-   *  (reference MergeIndexes re-inserts vectors, src/diskann_index.cpp:655-699;
-   *  the shard model makes adoption sufficient). */
+  /** Merge `source` into `target` (engines of one family, same dim and
+   *  metric): graph indexes adopt the source's live shards + tombstones
+   *  (reference MergeIndexes, src/diskann_index.cpp:655-699), flat indexes
+   *  its parquet files (FAISS `IndexFlat::merge_from`). */
   def merge(spark: SparkSession, target: String, source: String): IndexMeta = {
     val r = root(spark)
     val t = IndexCatalog.load(r, target)
     val s = IndexCatalog.load(r, source)
-    require((isGraphEngine(t.engine) || t.engine == "flat") && s.engine == t.engine,
-      s"merge supports graph or flat engines of matching type (got ${t.engine}/${s.engine})")
+    val engine = AnnEngine.of(t)
+    require(AnnEngine.of(s) == engine,
+      s"merge needs indexes of one engine (got ${t.engine}/${s.engine})")
     require(t.dim == s.dim && t.metric == s.metric,
       s"incompatible indexes: ${t.dim}/${t.metric} vs ${s.dim}/${s.metric}")
-    if (t.engine == "flat") return mergeFlat(spark, r, t, s)
-    val tDir = new java.io.File(IndexCatalog.indexDir(r, target))
-    val adopted = s.shards.zipWithIndex.map { case (sh, i) =>
-      val srcExt = sh.file.substring(sh.file.lastIndexOf('.') + 1)
-      val nf = new java.io.File(tDir, s"merged-${t.shards.size + i}.$srcExt")
-      val ni = new java.io.File(tDir, s"merged-${t.shards.size + i}.ids")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(sh.file), nf.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.copy(java.nio.file.Paths.get(sh.idsFile), ni.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ShardMeta(nf.getAbsolutePath, ni.getAbsolutePath, sh.count)
-    }
-    val tomb = IndexCatalog.readTombstones(r, target) ++ IndexCatalog.readTombstones(r, source)
-    if (tomb.nonEmpty) IndexCatalog.writeTombstones(r, target, tomb)
-    val updated = t.copy(shards = t.shards ++ adopted,
-      numVectors = t.numVectors + s.numVectors, numDeleted = tomb.size.toLong)
-    IndexCatalog.save(r, updated)
-    updated
-  }
-
-  /** Flat-engine merge (FAISS `IndexFlat::merge_from` analog): adopt the
-   *  source's parquet data files into the target's storage directory. The
-   *  merged index stays EXACT — searches scan the union — which makes this
-   *  the oracle-checkable instantiation of the merge operator (graph merges
-   *  adopt approximate shards and are checked by parity specs instead). */
-  private def mergeFlat(spark: SparkSession, r: String,
-      t: IndexMeta, s: IndexMeta): IndexMeta = {
-    import java.nio.file.{Files, Paths}
-    val tData = Paths.get(t.sourcePath)
-    val sData = Paths.get(s.sourcePath)
-    require(Files.isDirectory(tData) && Files.isDirectory(sData),
-      s"flat merge expects parquet storage dirs (${t.sourcePath}, ${s.sourcePath})")
-    val it = Files.list(sData).iterator()
-    var i = 0
-    while (it.hasNext) {
-      val f = it.next()
-      val nm = f.getFileName.toString
-      if (nm.endsWith(".parquet") || nm.startsWith("part-")) {
-        Files.copy(f, tData.resolve(s"merged-${t.shards.size}-$i-$nm"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        i += 1
-      }
-    }
-    val tomb = IndexCatalog.readTombstones(r, t.name) ++
-      IndexCatalog.readTombstones(r, s.name)
-    if (tomb.nonEmpty) IndexCatalog.writeTombstones(r, t.name, tomb)
-    val updated = t.copy(numVectors = t.numVectors + s.numVectors,
-      numDeleted = tomb.size.toLong)
-    IndexCatalog.save(r, updated)
-    updated
+    engine.merge(spark, r, t, s)
   }
 
   // ------------------------------------------------------------ diagnostics

@@ -63,38 +63,28 @@ private[graft] object ExactServe {
     spark.conf.getOption("spark.graft.ann.localExactMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
-  def eligible(spark: SparkSession, meta: IndexMeta): Boolean = {
-    // REFINED quantized indexes cache codes PLUS the raw vec column for the
-    // exact re-rank, so the estimate adds the per-row code bytes on top of
-    // the vec term (~dim·5 bytes/row for refined ivfsq) — without it the
-    // driver cache could exceed localExactMaxBytes by ~25% for exactly the
-    // indexes that cache the most
-    val codeBytes: Long =
-      if (!meta.refine) 0L
-      else meta.engine match {
-        case "pq" | "ivfpq" => meta.maxDegree.toLong // m bytes/row
-        case "ivfsq" => (meta.dim.toLong * meta.quantBits + 7) / 8
-        case "lsh" => ((meta.nlist + 63) / 64).toLong * 8
-        case _ => 0L
-      }
-    // side artifacts the cache also holds: the centroid table for IVF
-    // engines, twice when an IVF_HNSW coarse graph rides along (graph
-    // vectors ≈ another centroid-table copy; links are a small multiple
-    // of m·nlist ints, absorbed by the ×2)
-    val sideBytes: Long =
-      meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
-    (meta.engine == "flat" || meta.engine == "ivfflat" ||
-     meta.engine == "pq" || meta.engine == "ivfpq" ||
-     meta.engine == "ivfsq" || meta.engine == "lsh") &&
-      // OPQ is servable job-free since r17: the ADC query rotates through
-      // the cached rotation matrix (Data.rot) exactly like the scan path
+  def eligible(spark: SparkSession, meta: IndexMeta): Boolean = AnnEngine.of(meta) match {
+    case engine: TableEngine =>
+      // REFINED quantized indexes cache codes PLUS the raw vec column for
+      // the exact re-rank, so the estimate adds the per-row code bytes on
+      // top of the vec term (~dim·5 bytes/row for refined ivfsq) — without
+      // it the driver cache could exceed localExactMaxBytes by ~25% for
+      // exactly the indexes that cache the most
+      val codeBytes: Long = if (meta.refine) engine.codeBytes(meta) else 0L
+      // side artifacts the cache also holds: the centroid table for IVF
+      // engines, twice when an IVF_HNSW coarse graph rides along (graph
+      // vectors ≈ another centroid-table copy; links are a small multiple
+      // of m·nlist ints, absorbed by the ×2)
+      val sideBytes: Long =
+        meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
       meta.sourcePath.nonEmpty &&
-      // vec-based estimate: exact for flat/ivf, conservative (over) for
-      // unrefined code engines — pq stores m bytes/row, lsh 8; erring high
-      // only keeps a servable index on the distributed route, never the
-      // reverse
-      meta.numVectors * (meta.dim.toLong * 4 + 16 + codeBytes) + sideBytes <=
-        maxBytes(spark)
+        // vec-based estimate: exact for flat/ivf, conservative (over) for
+        // unrefined code engines — pq stores m bytes/row, lsh 8; erring
+        // high only keeps a servable index on the distributed route, never
+        // the reverse
+        meta.numVectors * (meta.dim.toLong * 4 + 16 + codeBytes) + sideBytes <=
+          maxBytes(spark)
+    case _ => false
   }
 
   private def fingerprint(path: String): String = {
@@ -113,11 +103,10 @@ private[graft] object ExactServe {
   }
 
   private def load(spark: SparkSession, meta: IndexMeta, fp: String): Data = {
-    val hasCluster = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val hasCodes = meta.engine == "pq" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val isLsh = meta.engine == "lsh"
+    val engine = AnnEngine.of(meta)
+    val hasCluster = engine.ivf
+    val hasCodes = engine.adcCodes
+    val isLsh = engine == AnnEngine.Lsh
     val df = spark.read.parquet(meta.sourcePath)
     // refined pq/ivfpq/lsh: raw vecs ride along for the exact re-rank stage
     val cols = Seq(col("id").cast(LongType)) ++
@@ -150,7 +139,7 @@ private[graft] object ExactServe {
       // plain-pq OPQ: codes live in rotated space; the ADC query rotates
       // through the same stored matrix the distributed scan uses (the
       // refine re-rank stays UNROTATED, like refineStage)
-      rot = if (meta.engine == "pq" && meta.opq)
+      rot = if (meta.opq)
         IndexCatalog.readCentroids(s"$dirPath/rotation.bin") else null)
   }
 
@@ -237,7 +226,7 @@ private[graft] object ExactServe {
       // scan UDFs. ivfsq codes quantize RAW vectors (no residual), so its
       // LUT is probe-independent — the flat table with the probeSet filter
       val k = d.cb.k
-      val noResidual = meta.engine == "ivfsq"
+      val noResidual = AnnEngine.of(meta) == AnnEngine.IvfSq
       // packed ivfsq rows (SQ4/SQ6) extract level indices inline; byte
       // codes take the PqCodec.adc fast path — float-identical to the scan
       val sqBits = if (noResidual) meta.quantBits else 8
@@ -315,9 +304,7 @@ private[graft] object ExactServe {
   def searchFiltered(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
       query0: Array[Float], k: Int, allow: Long => Boolean): Array[(Long, Float)] = {
     val probed = search(spark, meta, tomb, query0, k, allow)
-    val ivf = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    if (ivf && meta.nprobe < meta.nlist && probed.length < k)
+    if (AnnEngine.of(meta).ivf && meta.nprobe < meta.nlist && probed.length < k)
       search(spark, meta, tomb, query0, k, allow, nprobeOverride = meta.nlist)
     else probed
   }

@@ -19,7 +19,7 @@ case class ShardMeta(file: String, idsFile: String, count: Long)
  */
 case class IndexMeta(
     name: String,
-    engine: String,               // "diskann" | "flat" | "ivfflat"
+    engine: String,               // an AnnEngine name (AnnEngine.known)
     column: String,
     idColumn: String,
     dim: Int,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRelation}
 import org.apache.spark.sql.types._
 import graft.expressions._
-import graft.index.{Ann, IndexCatalog, IndexMeta}
+import graft.index.{Ann, AnnEngine, IndexCatalog, IndexMeta}
 
 /**
  * Marker kept in the injected filter so the rewrite is applied once per plan
@@ -234,17 +234,17 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // a rewrite would silently change the query's _distance semantics
         // (every other engine returns true metric distances; only the
         // RANKING is approximate)
-        m.engine != "lsh" &&
+        AnnEngine.of(m) != AnnEngine.Lsh &&
         // pca-transformed indexes serve transformed-space distances (and
         // take original-dim queries) — same value-semantics exclusion
         m.pcaFile.isEmpty
-    }.sortBy(m => (if (m.engine == "flat") 0 else 1, m.name))
+    }.sortBy(m => (if (AnnEngine.of(m) == AnnEngine.Flat) 0 else 1, m.name))
       .headOption.getOrElse(return None)
 
     // cost gates (reference src/ann_optimizer.cpp:459-472)
     val rows = meta.numVectors
     if (rows < 50) return None
-    val frac = if (Ann.isGraphEngine(meta.engine)) 0.30 else 0.10
+    val frac = if (AnnEngine.of(meta).isGraph) 0.30 else 0.10
     if (k > rows * frac) return None
 
     // fetch size: plain k, or k·mult + 100 when a filter must re-filter

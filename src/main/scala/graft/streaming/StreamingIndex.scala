@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.index.{Ann, IndexCatalog, ShardCache, ShardMeta}
+import graft.index.{Ann, AnnEngine, IndexCatalog, ShardCache, ShardMeta}
 
 /**
  * Structured-Streaming incremental ANN index maintenance — the Spark
@@ -62,7 +62,7 @@ object StreamingIndex {
     import spark.implicits._
     val r = Ann.root(spark)
     val meta = IndexCatalog.load(r, name)
-    require(Ann.isGraphEngine(meta.engine), "compact supports graph engines")
+    require(AnnEngine.of(meta).isGraph, "compact supports graph engines")
     val tomb = IndexCatalog.readTombstones(r, name)
     val tombB = spark.sparkContext.broadcast(tomb)
     val cosine = meta.metricObj eq graft.core.Metric.Cosine

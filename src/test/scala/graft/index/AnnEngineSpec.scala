@@ -1,0 +1,109 @@
+package graft.index
+
+import java.io.File
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the engine abstraction's contracts: unknown engines fail at the
+ *  factory, graph vacuum publishes before it deletes, the distributed graph
+ *  route answers like the driver-local one, and IMI appends assign cells
+ *  exactly like the build. */
+class AnnEngineSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.graft.ann.root", s"/tmp/graft-test-engine-${System.nanoTime()}")
+    .getOrCreate()
+  locally { spark.sparkContext.setLogLevel("ERROR") }
+
+  /** 500 deterministic 64-d vectors around 8 centres (ids 0..499). */
+  private lazy val all: Array[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(7)
+    val centres = Array.fill(8, 64)(rnd.nextGaussian().toFloat * 4f)
+    Array.tabulate(500)(i =>
+      (i.toLong, centres(i % 8).map(_ + rnd.nextGaussian().toFloat)))
+  }
+  lazy val emb: DataFrame = {
+    import spark.implicits._
+    all.toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+  }
+
+  private def hits(name: String, q: Array[Float], k: Int): Seq[(Long, Float)] =
+    Ann.searchHits(spark, name, q, k, searchComplexity = 64).collect()
+      .map(r => (r.getLong(0), r.getFloat(1))).toSeq
+
+  test("unknown engine: search and append fail at the factory with one error") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "e_bogus",
+      Ann.BuildParams(engine = "flat"))
+    val r = Ann.root(spark)
+    IndexCatalog.save(r, IndexCatalog.load(r, "e_bogus").copy(engine = "bogus"))
+    def check(e: IllegalArgumentException): Unit = {
+      val msg = e.getMessage
+      assert(msg.contains("e_bogus") && msg.contains("bogus"), msg)
+      AnnEngine.known.foreach(k => assert(msg.contains(k.name), msg))
+    }
+    check(intercept[IllegalArgumentException](hits("e_bogus", all(0)._2, 5)))
+    check(intercept[IllegalArgumentException](
+      Ann.append(emb.limit(3), "embedding", "vec_id", "e_bogus")))
+  }
+
+  test("graph vacuum publishes the new generation before deleting the old") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "e_vac",
+      Ann.BuildParams(engine = "diskann", numShards = 2))
+    val deleted = all.take(20).map(_._1).toSeq
+    Ann.delete(spark, "e_vac", deleted)
+    val r = Ann.root(spark)
+    // a directory where save() writes its temp file makes the publish fail
+    val blocker = new File(s"${IndexCatalog.indexDir(r, "e_vac")}/metadata.json.tmp")
+    assert(blocker.mkdirs())
+    intercept[Exception](Ann.vacuum(spark, "e_vac"))
+    val meta = IndexCatalog.load(r, "e_vac")
+    meta.shards.foreach { sh =>
+      assert(new File(sh.file).isFile && new File(sh.idsFile).isFile, sh)
+    }
+    val got = all.take(20).flatMap { case (_, v) => hits("e_vac", v, 10).map(_._1) }
+    assert(got.nonEmpty && !got.exists(deleted.contains))
+    assert(blocker.delete())
+    val vac = Ann.vacuum(spark, "e_vac")
+    assert(vac.numDeleted == 0 && vac.numVectors == all.length - deleted.size)
+    assert(IndexCatalog.readTombstones(r, "e_vac").isEmpty)
+    val after = all.take(20).flatMap { case (_, v) => hits("e_vac", v, 10).map(_._1) }
+    assert(after.nonEmpty && !after.exists(deleted.contains))
+  }
+
+  test("localSearchMaxShards=0 (distributed graph job) == driver-local search") {
+    for (engine <- Seq("diskann", "hnsw")) {
+      val name = s"e_route_$engine"
+      Ann.buildIndex(emb, "embedding", "vec_id", name,
+        Ann.BuildParams(engine = engine, numShards = 3))
+      assert(IndexCatalog.load(Ann.root(spark), name).shards.size >= 3)
+      Ann.delete(spark, name, all.indices.filter(_ % 7 == 0).map(all(_)._1))
+      val queries = all.indices.filter(_ % 25 == 1).map(all(_)._2)
+      val local = queries.map(q => hits(name, q, 10))
+      spark.conf.set("spark.graft.ann.localSearchMaxShards", "0")
+      try {
+        val distributed = queries.map(q => hits(name, q, 10))
+        assert(distributed == local, engine)
+      } finally spark.conf.unset("spark.graft.ann.localSearchMaxShards")
+    }
+  }
+
+  test("IMI append assigns each copied row the cell of its original") {
+    import spark.implicits._
+    for ((factory, i) <- Seq("IMI2x4,Flat", "IMI2x4,PQ8").zipWithIndex) {
+      val name = s"e_imi_$i"
+      val meta = Ann.buildIndexFactory(emb, "embedding", "vec_id", name, factory)
+      assert(meta.imiB == 4 && meta.nlist == 256, factory)
+      val offset = 1000000L
+      val copies = all.take(200).map { case (id, v) => (id + offset, v.toSeq) }.toSeq
+        .toDF("vec_id", "embedding")
+      Ann.append(copies, "embedding", "vec_id", name)
+      val cell = spark.read.parquet(meta.sourcePath).select("id", "cluster").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      all.take(200).foreach { case (id, _) =>
+        assert(cell(id + offset) == cell(id), s"$factory: copy of $id")
+      }
+    }
+  }
+}

@@ -10,7 +10,7 @@ import graft.core.Sq8Codec
  * dequantized reconstruction, computed as a sequential double fold — and
  *  - ivfsq + L2 answers EXACTLY in code space at ANY nprobe, because its
  *    cluster-pruning radii are computed over the reconstructions themselves
- *    (buildIvfSq's radii.bin);
+ *    (the ivfsq build's radii.bin);
  *  - pq answers exactly in code space via a full code scan;
  *  - ivfpq at saturating nprobe equals the reconstruction brute force
  *    (centroid + decoded residual), and at nprobe < nlist returns a subset.
