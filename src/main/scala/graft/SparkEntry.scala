@@ -1521,7 +1521,7 @@ object SparkEntry {
     // global top-130, and the vec_id % 3 filter keeps ≥ 77 of those at every
     // shipped SF, so the filtered top-10 is bit-exact vs DuckDB's
     // post-filter sort. The entry hard-fails unless the rewrite fired AND
-    // the over-fetch engaged (In-list strictly larger than k).
+    // the over-fetch engaged (hit-id set strictly larger than k).
     "ann_rewrite_filtered" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.buildIndex(emb, "embedding", "vec_id", "v_rewrite_f",
@@ -1536,13 +1536,13 @@ object SparkEntry {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter
             if f.condition.exists(_.isInstanceOf[graft.plans.AnnRewrittenMarker]) =>
           f.condition.collectFirst {
-            case in: org.apache.spark.sql.catalyst.expressions.In => in.list.size
+            case in: org.apache.spark.sql.catalyst.expressions.InSet => in.hset.size
           }.getOrElse(0)
       }
       require(inSizes.nonEmpty,
         "ann_rewrite_filtered: AnnTopKRule did not rewrite the filtered plan")
       require(inSizes.exists(_ > 10),
-        s"ann_rewrite_filtered: overfetch did not engage (In sizes $inSizes, want > k=10)")
+        s"ann_rewrite_filtered: overfetch did not engage (hit-set sizes $inSizes, want > k=10)")
       df
     }),
 

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Row, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, InSet, Literal, Not}
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.{Metric, VamanaIndex, HnswIndex, VectorOps, HnswFormat, LshCodec}
 import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_product,
   array_cosine_similarity}
@@ -22,8 +25,8 @@ import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_prod
  *  - Search fans out shard-parallel tasks (`parallelize(shards)`), each
  *    over-fetching `k·oversample + |tombstones|` like the reference
  *    (src/diskann_index.cpp:558-561), then merges with Spark's native top-k.
- *  - Row fetch-back uses an `isin` pushdown filter on the id column (a k-row
- *    literal reaches the parquet scan) + a broadcast join for `_distance` —
+ *  - Row fetch-back uses an [[idIn]] pushdown filter on the id column (the
+ *    k hit ids reach the parquet scan) + a broadcast join for `_distance` —
  *    the 100 TB-safe analog of the reference's rowid `DataTable::Fetch`.
  *  - Engines: one [[AnnEngine]] family per stored representation — graph
  *    shards (diskann, hnsw), exact tables (flat, ivfflat), PQ codes (pq,
@@ -724,7 +727,7 @@ object Ann {
    *  top (fetchK · spark.graft.ann.refineFactor, default 4) candidate IDS
    *  come from the codes-only scan — the raw `vec` column is never read at
    *  this stage, preserving PQ's scan compression; (2) only the candidates'
-   *  vectors are fetched back (pushed `In` filter) and re-ranked by the
+   *  vectors are fetched back (pushed [[idIn]] filter) and re-ranked by the
    *  exact metric distance in double precision. */
   private[index] def refineStage(spark: SparkSession, meta: IndexMeta, scored: DataFrame,
       query: Array[Float], fetchK: Int): DataFrame = {
@@ -733,7 +736,7 @@ object Ann {
       .select(col("row_id")).collect().map(_.getLong(0))
     val exact = metricDistanceCol(meta.metricObj, col("vec"), query)
     spark.read.parquet(meta.sourcePath)
-      .where(col("id").isin(candIds.map(java.lang.Long.valueOf).toSeq: _*))
+      .where(idIn(candIds))
       .select(col("id").as("row_id"), exact.as("__ed"))
       .orderBy(col("__ed"), col("row_id")).limit(fetchK)
       .select(col("row_id"), col("__ed").cast(FloatType).as("_distance"))
@@ -796,10 +799,17 @@ object Ann {
    *  ([[localSearchMaxShards]]) and small table indexes ([[ExactServe]]),
    *  else a Spark job. */
   private[graft] def collectHits(spark: SparkSession, name: String, query: Array[Float],
-      k: Int, searchComplexity: Int, oversample: Int): Array[(Long, Float)] = {
+      k: Int, searchComplexity: Int, oversample: Int): Array[(Long, Float)] =
+    collectHits(spark, IndexCatalog.load(root(spark), name),
+      IndexCatalog.readTombstones(root(spark), name), query, k, searchComplexity, oversample)
+
+  /** [[collectHits]] over an index whose metadata and tombstones the caller
+   *  has already read (the top-k rewrite selects the index from the parsed
+   *  catalog listing). */
+  private[graft] def collectHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], k: Int, searchComplexity: Int,
+      oversample: Int): Array[(Long, Float)] = {
     searchCount.incrementAndGet()
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
     AnnEngine.of(meta).collectHits(spark, meta, tomb, query,
       k * math.max(1, oversample), searchComplexity)
   }
@@ -852,28 +862,43 @@ object Ann {
   private[index] def notTombstoned(idCol: Column, tomb: Set[Long]): Column =
     if (tomb.size <= TombInlineMax) !idCol.isin(tomb.toSeq: _*)
     else {
-      import org.apache.spark.sql.catalyst.expressions.{InSet, Not}
-      import org.apache.spark.sql.graftshim.GraftShim
       GraftShim.column(Not(InSet(GraftShim.expression(idCol),
         tomb.map(x => Long.box(x): Any))))
     }
 
-  /** Inclusion predicate with O(1) plan size at any id count — the positive
-   *  twin of [[notTombstoned]]: a literal `In` below [[TombInlineMax]] (reads
-   *  well in EXPLAIN, pushes to the scan), one hash-set `InSet` expression
-   *  above it (`InSet` is the optimized form Catalyst rewrites `In` to, so
-   *  results are bit-identical across the threshold). Point-lookup surfaces
-   *  that accept caller id lists (reconstruct, refine fetch-back) route
-   *  through this so a 100k-id call cannot blow up analysis/codegen. */
-  private[index] def idIn(idCol: Column, ids: Set[Long]): Column =
-    if (ids.size <= TombInlineMax)
-      idCol.isin(ids.toSeq.sorted.map(java.lang.Long.valueOf): _*)
-    else {
-      import org.apache.spark.sql.catalyst.expressions.InSet
-      import org.apache.spark.sql.graftshim.GraftShim
-      GraftShim.column(InSet(GraftShim.expression(idCol),
-        ids.map(x => Long.box(x): Any)))
-    }
+  /** The LONG key the index stores for an id column of `dataType` (every
+   *  build keys rows by `CAST(id AS BIGINT)`): the id itself, else
+   *  `try_cast(id AS BIGINT)`, so a STRING "0095" matches hit 95. */
+  private[graft] def idKey(idExpr: Expression, dataType: DataType): Expression =
+    if (dataType == LongType) idExpr
+    else Cast(idExpr, LongType, Some(SQLConf.get.sessionLocalTimeZone), EvalMode.TRY)
+
+  /** Inclusion predicate for a per-query id list (hit fetch-back, refine
+   *  candidates, reconstruct, id filters): one `InSet` at any size, matching
+   *  the [[idKey]] of an id column of `dataType`. Byte/Short/Int ids get the
+   *  set converted once to their own type instead, with no cast around the
+   *  column; LONG and those push to parquet as `sources.In`. Generated code
+   *  references the set as an object, where a literal `In` inlines every id
+   *  and so compiles new classes for each distinct list; with `InSet` every
+   *  query after the first reuses the cached compiled plan. Byte/Short/Int
+   *  sets below `spark.sql.optimizer.inSetSwitchThreshold` compile to an
+   *  inlined `switch`, so those id types still compile once per list. */
+  private[graft] def idInSet(idExpr: Expression, dataType: DataType,
+      ids: Iterable[Long]): InSet = dataType match {
+    case ByteType | ShortType | IntegerType =>
+      InSet(idExpr, ids.iterator.map(id => Cast(Literal(id), dataType).eval()).toSet)
+    case _ => InSet(idKey(idExpr, dataType), ids.iterator.map(Long.box(_): Any).toSet)
+  }
+
+  /** [[idInSet]] over column `idColumn` of a caller's table `df`. */
+  private[graft] def idIn(df: DataFrame, idColumn: String, ids: Iterable[Long]): Column =
+    GraftShim.column(idInSet(GraftShim.expression(col(idColumn)),
+      df.select(col(idColumn)).schema.head.dataType, ids))
+
+  /** [[idInSet]] over the index storage's LONG `id` column. */
+  private[index] def idIn(ids: Iterable[Long]): Column =
+    GraftShim.column(idInSet(GraftShim.expression(col("id")), LongType, ids))
+
   /** Above this nlist the per-cluster `partitionBy("cluster")` layout flips
    *  to bucketed: IMI2x8's 65,536 cluster DIRECTORIES cost 271 s of write
    *  commit at 1.5M rows (the many-small-files regime, which only worsens
@@ -933,21 +958,21 @@ object Ann {
     else base
   }
 
-  /** Int-column inclusion predicate with O(1) plan size at any probe count —
-   *  [[idIn]]'s cluster-id twin: a literal `In` below [[TombInlineMax]]
-   *  (readable EXPLAIN, prunes partition dirs / parquet row groups), one
-   *  hash-set `InSet` expression above it. `InSet` is the optimized form
-   *  Catalyst rewrites `In` to, it still prunes partitions (the file index
-   *  evaluates arbitrary predicates over partition values) and still
-   *  translates to a `sources.In` for the parquet scan, so results and
-   *  pruning behavior are identical across the threshold — only the
-   *  analysis/codegen cost stops scaling with nprobe. */
+  /** Int-column inclusion predicate with O(1) plan size at any probe count:
+   *  a literal `In` below [[TombInlineMax]] (readable EXPLAIN, prunes
+   *  partition dirs / parquet row groups), one hash-set `InSet` expression
+   *  above it. `InSet` is the optimized form Catalyst rewrites `In` to, it
+   *  still prunes partitions (the file index evaluates arbitrary predicates
+   *  over partition values) and still translates to a `sources.In` for the
+   *  parquet scan, so results and pruning behavior are identical across the
+   *  threshold — only the analysis/codegen cost stops scaling with nprobe.
+   *  Unlike [[idIn]], an `InSet` would not spare a per-probe-set compile
+   *  here: Spark compiles an INT set below
+   *  `spark.sql.optimizer.inSetSwitchThreshold` to an inlined `switch`. */
   private[index] def clusterIn(c: Column, ids: Seq[Int]): Column = {
     val ds = ids.distinct
     if (ds.size <= TombInlineMax) c.isin(ds.sorted.map(Integer.valueOf): _*)
     else {
-      import org.apache.spark.sql.catalyst.expressions.InSet
-      import org.apache.spark.sql.graftshim.GraftShim
       GraftShim.column(InSet(GraftShim.expression(c),
         ds.map(x => Int.box(x): Any).toSet))
     }
@@ -1036,14 +1061,15 @@ object Ann {
         Row(h._1, h._2, i) }.asJava,
       StructType(Seq(StructField("__ann_id", LongType),
         StructField("_distance", FloatType), StructField("__ann_rank", IntegerType))))
-    // isin literal reaches the parquet scan (PushedFilters: In(id, ...)) —
-    // the scale-safe analog of rowid fetch; then a broadcast join attaches
-    // the distance. Output order preserves the ENGINE's ranking (carried as
-    // __ann_rank) rather than re-sorting by the f32-cast `_distance`: the
-    // engine ranks near-ties by the full double distance (refine re-rank,
-    // ExactServe's double fold), and a float re-sort would flip any pair
-    // whose doubles differ only below f32 precision.
-    df.where(col(idColumn).isin(ids.map(java.lang.Long.valueOf).toSeq: _*))
+    // the id set reaches the parquet scan (PushedFilters: In(id, ...)) for
+    // integral ids (idInSet) — the scale-safe analog of rowid fetch; then a
+    // broadcast join attaches the distance. Output order preserves the
+    // ENGINE's ranking (carried as __ann_rank) rather than re-sorting by the
+    // f32-cast `_distance`: the engine ranks near-ties by the full double
+    // distance (refine re-rank, ExactServe's double fold), and a float
+    // re-sort would flip any pair whose doubles differ only below f32
+    // precision.
+    df.where(idIn(df, idColumn, ids))
       .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
       .drop("__ann_id")
       .orderBy(col("__ann_rank"))
@@ -1111,7 +1137,7 @@ object Ann {
       IdFilter(pmod(col("id"), lit(m)) === lit(r),
         id => ((id % m) + m) % m == r)
     def inSet(ids: Set[Long]): IdFilter =
-      IdFilter(idIn(col("id"), ids), ids.contains)
+      IdFilter(idIn(ids), ids.contains)
   }
 
   /** [[IdFilter]] from a SQL predicate string over the column name `id`
@@ -1124,7 +1150,6 @@ object Ann {
    *  executor thread, codegen'd like any WHERE clause). This is what the
    *  `ann_search_filtered` SQL table function constructs. */
   def idFilterFromSql(spark: SparkSession, predSql: String): IdFilter = {
-    import org.apache.spark.sql.graftshim.GraftShim
     val parsed = spark.sessionState.sqlParser.parseExpression(predSql)
     val colPred = GraftShim.column(parsed)
     // resolve + OPTIMIZE against a one-column (id LONG) plan: the closure
@@ -1713,10 +1738,9 @@ object Ann {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     val want = ids.toSet -- tomb
-    // threshold-gated inclusion (idIn): a reconstruct_n-sized id list (100k+)
-    // must not inline as a literal In — the exact plan-size blowup
-    // notTombstoned solved for tombstones (TombInlineMax)
-    reconstructImpl(spark, meta, idIn(col("id"), want), want.contains)
+    // idIn: a reconstruct_n-sized id list (100k+) rides one InSet node, never
+    // a 100k-literal In
+    reconstructImpl(spark, meta, idIn(want), want.contains)
   }
 
   /** FAISS `reconstruct_n(i0, ni)` analog: reconstruct the contiguous id

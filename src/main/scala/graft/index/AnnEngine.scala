@@ -118,16 +118,11 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
       java.util.Arrays.asList(within.map(h => Row(h._1, h._2)): _*),
       StructType(Seq(StructField("__ann_id", LongType),
         StructField("_distance", FloatType))))
-    // the inner join below already restricts to the hit ids; the isin
-    // only exists to PUSH that filter into the base scan, so it is
-    // gated like notTombstoned — a wide radius can return unbounded
-    // hit counts and a literal In list would blow up plan size
-    val fetched =
-      if (within.length <= Ann.TombInlineMax)
-        df.where(col(idColumn).isin(within.map(h =>
-          java.lang.Long.valueOf(h._1)).toSeq: _*))
-      else df
-    fetched
+    // the inner join below already restricts to the hit ids; the id set only
+    // PUSHES that filter into the base scan (Ann.idInSet). Past TombInlineMax
+    // hits (a wide radius) its plan string costs more than the pushdown saves
+    (if (within.length > Ann.TombInlineMax) df
+      else df.where(Ann.idIn(df, idColumn, within.map(_._1))))
       .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
       .drop("__ann_id")
       .orderBy(col("_distance"), col(idColumn))

@@ -36,10 +36,11 @@ case class AnnHitsExec(indexName: String, query: Seq[Float], fetchK: Int,
     val spark = SparkSession.active
     val rootDir = Ann.root(spark)
     val metaPath = s"${IndexCatalog.indexDir(rootDir, indexName)}/metadata.json"
-    val hits = AnnTopKRule.cachedHits(metaPath, AnnTopKRule.metaHashOf(metaPath),
+    val meta = IndexCatalog.load(rootDir, indexName)
+    val hits = AnnTopKRule.cachedHits(metaPath, AnnTopKRule.metaHashOf(metaPath), meta,
         query.toArray, fetchK, searchComplexity) {
-      Ann.collectHits(spark, indexName, query.toArray, fetchK,
-        searchComplexity, oversample = 1)
+      Ann.collectHits(spark, meta, IndexCatalog.readTombstones(rootDir, indexName),
+        query.toArray, fetchK, searchComplexity, oversample = 1)
     }
     val proj = UnsafeProjection.create(schema)
     // 1 attr: hit ids (the rewrite's LeftSemi shape); 2 attrs: (id, distance)

@@ -47,12 +47,17 @@ case class AnnRewrittenMarker(indexName: String) extends LeafExpression {
  *      functions that returns the LEAST similar rows; we match the
  *      semantically-correct direction instead)
  *
- * and rewrites the relation to `Filter(id IN (<hit ids>), relation)`,
+ * and rewrites the relation to `Filter(id INSET <hit ids>, relation)`,
  * keeping the original Project/Filter/Sort/Limit on top:
  *   - the index search runs eagerly (driver-local over cached shards for
  *     small indexes — the serving path; shard-fan-out job otherwise);
- *   - the IN literal is pushed into the parquet scan at planning time, so
- *     the 100 TB base table is never re-scanned;
+ *   - integral hit ids are pushed into the parquet scan at planning time
+ *     (`PushedFilters: [In(id, …)]`), so the 100 TB base table is never
+ *     re-scanned (other id types match `try_cast(id AS BIGINT)`, the key
+ *     the index was built on, which does not push);
+ *   - the ids ride one `InSet` that generated code references as an
+ *     object instead of inlining them as literals, so one compiled plan
+ *     serves every query ([[Ann.idInSet]]);
  *   - keeping Sort preserves exact output ordering and the user-visible
  *     distance values (computed by the original projection), where the
  *     reference substitutes index-internal distances (its documented
@@ -67,25 +72,27 @@ case class AnnRewrittenMarker(indexName: String) extends LeafExpression {
  */
 object AnnTopKRule {
   /** Planning-time search results, cached per (index path, catalog content
-   *  hash, query, k) so repeated optimizations of one plan (explain → count
-   *  → collect, AQE re-planning) don't re-run the ANN search. Every index
-   *  mutation (build, append, delete, vacuum, merge) rewrites metadata.json
-   *  — keying on its CONTENT hash (not mtime, whose granularity can alias
-   *  rapid mutations) plus the full path (two roots may hold same-named
-   *  indexes) keeps cached hits consistent. Bounded LRU. */
+   *  hash, metadata searched, query, k) so repeated optimizations of one
+   *  plan (explain → count → collect, AQE re-planning) don't re-run the ANN
+   *  search. Every index mutation (build, append, delete, vacuum, merge)
+   *  rewrites metadata.json — keying on its CONTENT hash (not mtime, whose
+   *  granularity can alias rapid mutations) plus the full path (two roots
+   *  may hold same-named indexes) keeps cached hits consistent. The parsed
+   *  `meta` the search runs over is in the key too: the caller parses it
+   *  before hashing, so a writer committing in between leaves an entry no
+   *  later read matches. Bounded LRU. */
   private val MaxCached = 128
+  private type Key = (String, Long, IndexMeta, Seq[Float], Int, Int)
   private val hitsCache =
-    new java.util.LinkedHashMap[(String, Long, Seq[Float], Int, Int), Array[(Long, Float)]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Seq[Float], Int, Int), Array[(Long, Float)]]) =
+    new java.util.LinkedHashMap[Key, Array[(Long, Float)]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Array[(Long, Float)]]) =
         size() > MaxCached
     }
 
-  private[plans] def cachedHits(metaPath: String, contentHash: Long, query: Array[Float],
-      fetchK: Int, searchComplexity: Int = 0)(
+  private[plans] def cachedHits(metaPath: String, contentHash: Long, meta: IndexMeta,
+      query: Array[Float], fetchK: Int, searchComplexity: Int = 0)(
       compute: => Array[(Long, Float)]): Array[(Long, Float)] = {
-    val key = (metaPath, contentHash, query.toSeq, fetchK, searchComplexity)
+    val key = (metaPath, contentHash, meta, query.toSeq, fetchK, searchComplexity)
     hitsCache.synchronized {
       val hit = hitsCache.get(key)
       if (hit != null) return hit
@@ -117,8 +124,9 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     spark.conf.getOption("spark.graft.ann.rewriteEnabled").forall(_.toBoolean)
 
-  /** "eager" (default): search at planning time, push a literal In into the
-   *  scan (keeps parquet row-group skipping — the 100 TB priority).
+  /** "eager" (default): search at planning time, push the hit ids into the
+   *  scan as one `InSet` (keeps parquet row-group skipping — the 100 TB
+   *  priority — and one compiled plan for every query).
    *  "lazy": graft a LeftSemi join against [[AnnHitsNode]]; the search runs
    *  at execution, so EXPLAIN / cached plans / AQE never trigger index I/O,
    *  at the cost of the static scan pushdown. */
@@ -250,18 +258,17 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // fetch size: plain k, or k·mult + 100 when a filter must re-filter
     // (README.md:164)
     val fetchK = if (hasFilter) k * overfetchMultiplier + 100 else k
-    val idAttr0 = lr.output.find(_.name == meta.idColumn).getOrElse(return None)
+    val idAttr = lr.output.find(_.name == meta.idColumn).getOrElse(return None)
 
     if (rewriteMode == "lazy") {
       // defer the search to execution: LeftSemi against the lazy hits node
       // (broadcast — its stats report ~fetchK rows)
       val hitAttr = AttributeReference("__ann_hit_id", LongType, nullable = false)()
       val hitsNode = AnnHitsNode(meta.name, query.toSeq, fetchK, Seq(hitAttr))
-      val joinKey: Expression =
-        if (idAttr0.dataType == LongType) hitAttr else Cast(hitAttr, idAttr0.dataType)
+      val idKey = Ann.idKey(idAttr, idAttr.dataType)
       def injectJoin(p: LogicalPlan): LogicalPlan = p match {
         case rel: LogicalRelation if rel eq lr =>
-          Join(rel, hitsNode, LeftSemi, Some(EqualTo(idAttr0, joinKey)), JoinHint.NONE)
+          Join(rel, hitsNode, LeftSemi, Some(EqualTo(idKey, hitAttr)), JoinHint.NONE)
         case other => other.withNewChildren(other.children.map(injectJoin))
       }
       logInfo(s"ANN top-k LAZY rewrite: index=${meta.name} k=$k fetchK=$fetchK " +
@@ -271,22 +278,12 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     val metaPath = s"${IndexCatalog.indexDir(rootDir, meta.name)}/metadata.json"
     val metaHash = AnnTopKRule.metaHashOf(metaPath)
-    val hits = AnnTopKRule.cachedHits(metaPath, metaHash, query, fetchK) {
-      Ann.collectHits(spark, meta.name, query, fetchK,
-        searchComplexity = 0, oversample = 1)
-    }
-    val idAttr = idAttr0
-
-    // literals in the id column's own type, so the In predicate reaches the
-    // parquet scan as a pushed filter (a Cast around the attribute blocks it)
-    val inList: Seq[Expression] = idAttr.dataType match {
-      case LongType    => hits.map(h => Literal(h._1, LongType)).toSeq
-      case IntegerType => hits.map(h => Literal(h._1.toInt, IntegerType)).toSeq
-      case _ => hits.map(h =>
-        Cast(Literal(h._1, LongType), idAttr.dataType).asInstanceOf[Expression]).toSeq
+    val hits = AnnTopKRule.cachedHits(metaPath, metaHash, meta, query, fetchK) {
+      Ann.collectHits(spark, meta, IndexCatalog.readTombstones(rootDir, meta.name), query,
+        fetchK, searchComplexity = 0, oversample = 1)
     }
     val cond = And(
-      In(idAttr, inList),
+      Ann.idInSet(idAttr, idAttr.dataType, hits.map(_._1)),
       AnnRewrittenMarker(meta.name))
     // graft the filter directly above the relation, under any existing ops
     def inject(p: LogicalPlan): LogicalPlan = p match {

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
@@ -11,6 +13,7 @@ import org.apache.spark.sql.SparkSession
  *  so the dumped plan is the one the timed action executes.
  */
 object PlanDump {
+  private val ExecRows = 1000 // rows exec mode pulls to the driver per query
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -35,10 +38,11 @@ object PlanDump {
       val fn = qs.getOrElse(name, sys.error(s"unknown query: $name"))
       val df = fn(spark, sfDir)
       val txt = if (execMode) {
-        // collect() executes THIS df's QueryExecution (a noop write would
-        // plan its own copy and leave this one isFinalPlan=false); every
-        // dumped entry is a bounded declared query, so the collect is safe
-        df.collect()
+        // toLocalIterator executes THIS df's QueryExecution (a noop write
+        // would plan its own copy and leave this one isFinalPlan=false); AQE
+        // finalizes before the first row, and the result stage then runs a
+        // partition at a time, so only ExecRows rows reach the driver
+        df.toLocalIterator().asScala.take(ExecRows).foreach(_ => ())
         df.queryExecution.executedPlan.toString
       } else df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -31,10 +31,23 @@ object SfReplicate {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // key columns offset by replica·off, primary and foreign alike
+    val keys = Map("customer" -> Seq("c_custkey"), "orders" -> Seq("o_orderkey", "o_custkey"),
+      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"), "part" -> Seq("p_partkey"),
+      "supplier" -> Seq("s_suppkey"), "events" -> Seq("event_id", "user_id"),
+      "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id"))
+    // a source key ≥ off would collide with the next replica's shifted copy
+    if (factor > 1) for ((name, cols) <- keys; c <- cols) {
+      val top = spark.read.parquet(s"$src/$name.parquet").agg(max(col(c)).cast("long")).head()
+      require(top.isNullAt(0) || top.getLong(0) < off,
+        s"$name.$c reaches ${top.get(0)} >= $off: replica keys would collide")
+    }
+
     def write(name: String, build: (DataFrame, Int) => DataFrame,
         replicas: Int = factor): Unit = {
       val path = s"$out/$name.parquet"
-      if (new java.io.File(path).exists()) {
+      // a crashed run can leave the directory without its commit marker
+      if (new java.io.File(s"$path/_SUCCESS").exists()) {
         System.err.println(s"[sfreplicate] $path exists, skipping"); return
       }
       val srcDf = spark.read.parquet(s"$src/$name.parquet")
@@ -43,22 +56,18 @@ object SfReplicate {
         .write.mode("overwrite").parquet(path)
       System.err.println(s"[sfreplicate] wrote $path")
     }
-    def shifted(cols: String*)(d: DataFrame, r: Int): DataFrame =
-      cols.foldLeft(d)((acc, c) => acc.withColumn(c, col(c) + lit(r * off)))
+    def shifted(name: String)(d: DataFrame, r: Int): DataFrame =
+      keys(name).foldLeft(d)((acc, c) => acc.withColumn(c, col(c) + lit(r * off)))
 
     // fixed dimension tables: ONE copy (their keys are FK'd unchanged)
     write("region", (d, _) => d, replicas = 1)
     write("nation", (d, _) => d, replicas = 1)
-    write("customer", shifted("c_custkey"))
-    write("orders", shifted("o_orderkey", "o_custkey"))
-    write("lineitem", shifted("l_orderkey", "l_partkey", "l_suppkey"))
-    write("part", shifted("p_partkey"))
-    write("supplier", shifted("s_suppkey"))
-    write("events", shifted("event_id", "user_id"))
-    write("documents", (d, r) => shifted("doc_id")(d, r)
+    Seq("customer", "orders", "lineitem", "part", "supplier", "events")
+      .foreach(name => write(name, shifted(name)))
+    write("documents", (d, r) => shifted("documents")(d, r)
       .withColumn("text",
         if (r == 0) col("text") else concat(col("text"), lit(s" replica$r"))))
-    write("embeddings", (d, r) => shifted("vec_id")(d, r)
+    write("embeddings", (d, r) => shifted("embeddings")(d, r)
       .withColumn("embedding",
         if (r == 0) col("embedding")
         else transform(col("embedding"), x => x + lit(r * 1e-4f))
