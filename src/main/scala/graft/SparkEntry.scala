@@ -1781,14 +1781,14 @@ object SparkEntry {
     // bucketCliqueCap (same treatment ngram_cap_audit gives the df cap).
     "lsh_cap_audit" -> ((s, dir) => {
       // the oracle's closed-form CASE is generated from capDefaults; a
-      // session running non-default spark.graft.neardup.* knobs would
-      // hash-mismatch it SILENTLY (the counters are all that differs), so
-      // fail loudly here instead
+      // session running a non-default spark.graft.neardup.bucketCliqueCap
+      // would hash-mismatch it SILENTLY (the counters are all that
+      // differs), so fail loudly here instead
       val knobs = TextOps.capKnobs(s)
       require(knobs == TextOps.capDefaults,
         s"lsh_cap_audit oracle is generated from default neardup knobs " +
           s"${TextOps.capDefaults} but session has $knobs — reset " +
-          "spark.graft.neardup.* or regenerate the oracle")
+          "spark.graft.neardup.bucketCliqueCap or regenerate the oracle")
       TextOps.lshBucketStats(t(s, dir, "documents"), "text", "doc_id")
     }),
 

@@ -225,9 +225,8 @@ private[core] object BeamSearcher {
    *  cache-resident, while a group's hop still exposes ~group*degree
    *  independent memory loads for the CPU to overlap (the DRAM-latency
    *  hiding that is the CPU counterpart of the reference's GPU batch
-   *  dispatch). Tunable via -Dgraft.ann.lockstepGroup. */
-  private def groupSize: Int =
-    sys.props.get("graft.ann.lockstepGroup").map(_.toInt).getOrElse(64)
+   *  dispatch). */
+  private val GroupSize = 64
 
   /** Below this vector footprint the shard is cache-resident and the serial
    *  per-query miss chain is already cheap — lock-step's extra state/gather
@@ -239,7 +238,7 @@ private[core] object BeamSearcher {
     sys.props.get("graft.ann.lockstepMinBytes").map(_.toLong).getOrElse(32L << 20)
 
   /** Batch entry: auto-routes small shards to per-query search, otherwise
-   *  runs lock-step within groups of [[groupSize]], groups sequential.
+   *  runs lock-step within groups of [[GroupSize]], groups sequential.
    *  Per-query results are identical on every route (each query's traversal
    *  is independent and per-row kernels match). */
   def searchBatch(store: NodeStore, metric: Metric, queries: Array[Array[Float]],
@@ -254,7 +253,7 @@ private[core] object BeamSearcher {
           if (perQueryEps != null) perQueryEps(qi) else store.entryPointIds)
         b.topK(k)
       }
-    val g = math.max(groupSize, 1)
+    val g = GroupSize
     if (queries.length <= g) searchLockstep(store, metric, queries, k, l, perQueryEps)
     else {
       val out = new Array[(Array[Int], Array[Float])](queries.length)

@@ -434,14 +434,12 @@ case class NgramsOfText(child: Expression, n: Int, distinct: Boolean)
  * (no companion class) guarantees Java static forwarders, so generated
  * whole-stage code calls these directly — the expressions codegen to one
  * static call instead of paying the CodegenFallback boundary (boxed eval
- * dispatch + broken codegen span). `-Dgraft.text.forceInterpreted=true`
- * flips the three expressions back to CodegenFallback for A/B profiling
- * (tools/ProfileTextKernels; numbers in the scaladoc there).
+ * dispatch + broken codegen span). Measured against forced CodegenFallback
+ * on a 150× text replica (750k docs): no measurable gap, as the kernel
+ * bodies dominate; `doGenCode` stays because it keeps the whole-stage span
+ * intact.
  */
 object TextKernels {
-  def forceInterpreted: Boolean =
-    sys.props.get("graft.text.forceInterpreted").contains("true")
-
   @inline private def isTok(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
 
@@ -678,9 +676,7 @@ object TextKernels {
  * divisions of these exact integers, computed in the caller so both engines
  * perform the identical IEEE op.
  *
- * Codegens to one static [[TextKernels]] call inside the whole-stage span
- * (CodegenFallback only under `-Dgraft.text.forceInterpreted=true`, the
- * A/B profile switch).
+ * Codegens to one static [[TextKernels]] call inside the whole-stage span.
  */
 /**
  * `gate_reason(text)` — the curation pipeline's entire row-local gate
@@ -729,7 +725,7 @@ case class GateReason(child: Expression, langTable: Seq[(String, Seq[String])],
 }
 
 case class NgramRepetition(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(n > 0, "n-gram size must be positive")
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -746,8 +742,7 @@ case class NgramRepetition(child: Expression, n: Int)
     TextKernels.ngramRepetition(s.asInstanceOf[UTF8String], n)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (TextKernels.forceInterpreted) super[CodegenFallback].doGenCode(ctx, ev)
-    else defineCodeGen(ctx, ev, c =>
+    defineCodeGen(ctx, ev, c =>
       s"graft.expressions.TextKernels.ngramRepetition($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1025,7 +1020,7 @@ case class BoundedCollectSet(child: Expression, cap: Int,
  * vocabulary-sized.
  */
 case class TermCounts(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -1040,8 +1035,7 @@ case class TermCounts(child: Expression)
     TextKernels.termCounts(s.asInstanceOf[UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (TextKernels.forceInterpreted) super[CodegenFallback].doGenCode(ctx, ev)
-    else defineCodeGen(ctx, ev, c =>
+    defineCodeGen(ctx, ev, c =>
       s"graft.expressions.TextKernels.termCounts($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1083,7 +1077,7 @@ object TermCounts {
  * Value-identical to that formulation (same `[a-z0-9]+` lowercase tokens).
  */
 case class WordLines(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(k > 0, "line width must be positive")
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -1097,8 +1091,7 @@ case class WordLines(child: Expression, k: Int)
     TextKernels.wordLines(s.asInstanceOf[UTF8String], k)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (TextKernels.forceInterpreted) super[CodegenFallback].doGenCode(ctx, ev)
-    else defineCodeGen(ctx, ev, c =>
+    defineCodeGen(ctx, ev, c =>
       s"graft.expressions.TextKernels.wordLines($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1116,7 +1109,7 @@ case class WordLines(child: Expression, k: Int)
  * (TextOpsSpec parity test).
  */
 case class ChunkSpans(child: Expression, budget: Int, overlap: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(budget > 0 && overlap >= 0 && overlap < budget,
     s"need 0 <= overlap < budget, got budget=$budget overlap=$overlap")
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -1135,8 +1128,7 @@ case class ChunkSpans(child: Expression, budget: Int, overlap: Int)
     TextKernels.chunkSpans(s.asInstanceOf[UTF8String], budget, overlap)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (TextKernels.forceInterpreted) super[CodegenFallback].doGenCode(ctx, ev)
-    else defineCodeGen(ctx, ev, c =>
+    defineCodeGen(ctx, ev, c =>
       s"graft.expressions.TextKernels.chunkSpans($c, $budget, $overlap)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

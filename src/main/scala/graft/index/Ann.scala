@@ -575,15 +575,18 @@ object Ann {
    *  deserialize the closure (the graph at nlist ≈ 10⁵–10⁶ is tens of MB;
    *  a per-task decode would cost more than the O(nlist) scan it
    *  replaces). L2 graph search is read-only with per-call scratch, so the
-   *  shared instance serves all task threads. `ef` is the graph beam
-   *  width (≥ nprobe; FAISS quantizer efSearch analog). */
-  private[graft] final class CoarseProbe(bytes: Array[Byte], ef: Int,
+   *  shared instance serves all task threads. The graph beam width is
+   *  max([[CoarseEfSearch]], 2·nprobe) (FAISS quantizer efSearch analog). */
+  private[graft] final class CoarseProbe(bytes: Array[Byte],
       path: String, fingerprint: String) extends Serializable {
     @transient private lazy val graph: HnswIndex =
       cachedCoarseGraph(path, fingerprint, bytes)
     def select(query: Array[Float], nprobe: Int): Array[Int] =
-      graph.search(query, nprobe, math.max(ef, 2 * nprobe))._1
+      graph.search(query, nprobe, math.max(CoarseEfSearch, 2 * nprobe))._1
   }
+
+  /** Beam floor of the coarse probe-selection graph search. */
+  private val CoarseEfSearch = 64
 
   /** path → (generation fingerprint, decoded coarse graph), process-wide
    *  and GENERATION-EVICTING: a rebuild changes the (mtime, length)
@@ -599,32 +602,27 @@ object Ann {
     coarseGraphCache.compute(path, (_, old) =>
       if (old != null && old._1 == fp) old else (fp, HnswFormat.readBytes(bytes)))._2
 
-  /** path → (generation fingerprint, ef, probe) — same replacement rule as
-   *  [[coarseGraphCache]]; an ef change (session conf) also replaces, so
-   *  the map holds one entry (one byte image) per index path. */
+  /** path → (generation fingerprint, probe) — same replacement rule as
+   *  [[coarseGraphCache]], so the map holds one entry (one byte image) per
+   *  index path. */
   private val coarseProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, CoarseProbe)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, CoarseProbe)]()
 
   /** Load the probe-selection accelerator for an index, or null when the
-   *  index has none (`coarseHnswM == 0`). Cached per (file generation, ef):
+   *  index has none (`coarseHnswM == 0`). Cached per file generation:
    *  single-query serves stopped paying a file read + graph decode per
-   *  query. Session conf `spark.graft.ann.coarseEfSearch` (default 64)
-   *  sets the graph beam floor — probe recall vs exact selection is
-   *  ef-tunable without touching the stored graph, like FAISS
-   *  quantizer->hnsw.efSearch. */
+   *  query. */
   private[graft] def coarseProbe(spark: SparkSession, meta: IndexMeta): CoarseProbe =
     if (meta.coarseHnswM == 0) null
     else {
       val dir = IndexCatalog.indexDir(root(spark), meta.name)
       val path = s"$dir/coarse.hnsw"
-      val ef = spark.conf.getOption("spark.graft.ann.coarseEfSearch")
-        .map(_.toInt).getOrElse(64)
       val f = new java.io.File(path)
       val graphFp = s"$path:${f.lastModified}:${f.length}"
       coarseProbeCache.compute(path, (_, old) =>
-        if (old != null && old._1 == graphFp && old._2 == ef) old
-        else (graphFp, ef, new CoarseProbe(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), ef, path, graphFp)))._3
+        if (old != null && old._1 == graphFp) old
+        else (graphFp, new CoarseProbe(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)), path, graphFp)))._2
     }
 
   /** path → (probe instance, its Spark broadcast): executor-side batch/ADC
@@ -632,7 +630,7 @@ object Ann {
    *  full coarse.hnsw byte image (tens of MB at nlist ≈ 10⁵–10⁶) would ship
    *  in every stage's task binary, unlike the centroid table broadcast right
    *  next to it. Keyed on the probe INSTANCE: [[coarseProbe]] replaces its
-   *  cached instance exactly when the generation or ef changes, so a stale
+   *  cached instance exactly when the generation changes, so a stale
    *  broadcast is replaced at the same moment (the old one is unreferenced
    *  and the ContextCleaner reclaims it). */
   private val coarseProbeBCache = new java.util.concurrent.ConcurrentHashMap[
@@ -1010,21 +1008,16 @@ object Ann {
    *  alone silently skipped the rebalance for in-memory query batches
    *  and left a 45x hot-cell task on the clustered 1.5M corpus (popular
    *  central cells bin-packed into one scan split). Few-query lookups
-   *  keep the direct cluster-pruned scan.
-   *  `spark.graft.ann.rebalanceProbedScan` force-overrides (true/false). */
-  private[index] def rebalanceProbedScan(spark: SparkSession, queriesDf: DataFrame,
-      dim: Int): Boolean =
-    spark.conf.getOption("spark.graft.ann.rebalanceProbedScan") match {
-      case Some(v) => v.toBoolean
-      case None =>
-        val plan = queriesDf.queryExecution.optimizedPlan
-        val nQueries: BigInt = plan.stats.rowCount.getOrElse(plan match {
-          case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            BigInt(l.data.length)
-          case _ => plan.stats.sizeInBytes / math.max(1, dim * 4)
-        })
-        nQueries >= 64
-    }
+   *  keep the direct cluster-pruned scan. */
+  private[index] def rebalanceProbedScan(queriesDf: DataFrame, dim: Int): Boolean = {
+    val plan = queriesDf.queryExecution.optimizedPlan
+    val nQueries: BigInt = plan.stats.rowCount.getOrElse(plan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        BigInt(l.data.length)
+      case _ => plan.stats.sizeInBytes / math.max(1, dim * 4)
+    })
+    nQueries >= 64
+  }
 
   /** Sequential double fold over float inputs — the exact accumulation of
    *  the Catalyst distance expressions (and ExactServe): squared L2, or the
@@ -1220,11 +1213,8 @@ object Ann {
     }
   }
 
-  /** Default escalation start for filtered graph search, as a multiple of
-   *  k (`spark.graft.ann.filteredOverfetch`). */
-  def filteredOverfetch(spark: SparkSession): Int =
-    math.max(1, spark.conf.getOption("spark.graft.ann.filteredOverfetch")
-      .map(_.toInt).getOrElse(4))
+  /** Escalation start for filtered graph search, as a multiple of k. */
+  val FilteredOverfetch = 4
 
   /**
    * Attribute-filtered ANN search — the FAISS `SearchParameters.sel`
@@ -1247,7 +1237,7 @@ object Ann {
    *    any selectivity at full-scan cost — the IVF analog of the graph
    *    route's saturation.
    *  - **graph engine** (diskann): per-shard beam search with escalating
-   *    over-fetch — start at `k·filteredOverfetch` (default 4×), drop
+   *    over-fetch — start at `k·FilteredOverfetch` (4×), drop
    *    disallowed hits, and double the fetch until the shard yields k
    *    allowed hits or the beam reaches the shard's node count, at which
    *    point every node REACHABLE from the entry points has been visited
@@ -1852,7 +1842,7 @@ object Ann {
   /** Compact an exact/quantized index's parquet table: repeated micro-batch
    *  appends accumulate one small file per batch (the exact-engine analog of
    *  graph delta shards, which StreamingIndex.compact folds); this rewrites
-   *  the table into ~`spark.graft.ann.compactTargetBytes`-sized files
+   *  the table into ~128 MB files
    *  (ivf engines: one file per cluster partition), dropping any tombstoned
    *  rows on the way. Same single-writer contract as vacuum. */
   def compactExact(spark: SparkSession, name: String): IndexMeta = {

@@ -281,10 +281,6 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
       if (params.quantization.isEmpty) 0 else params.quantization.stripPrefix("sq").toInt
     val metricName = metric.name
     val isHnsw = hnsw
-    // escape hatch / A-B knob for the pilot-seeded insert order (captured
-    // driver-side so it reaches executor closures on a real cluster)
-    val pilotSeed = spark.conf.getOption("spark.graft.ann.pilotSeed")
-      .forall(_.toBoolean)
     val buildThreads = params.buildThreads
     val shardMetas = repart.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
@@ -323,7 +319,7 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
           }).get()
           finally pool.shutdown()
         }
-      } else if (isHnsw || !pilotSeed) {
+      } else if (isHnsw) {
         // hnsw default: serial insertion — at full shard-axis parallelism
         // there are no idle cores for a per-shard pool to use
         it.foreach { case (id, v) =>
@@ -439,7 +435,7 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     val tombB = spark.sparkContext.broadcast(tomb)
     val allow = filter.fn
     val sc0 = searchComplexity
-    val startFetch = math.max(k * Ann.filteredOverfetch(spark), k) + tomb.size
+    val startFetch = k * Ann.FilteredOverfetch + tomb.size
     val shards = meta.shards
     val rdd = spark.sparkContext.parallelize(shards, math.max(shards.size, 1))
       .flatMap { sh =>
@@ -830,7 +826,7 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
   def probeJoin(q: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val probed = q.withColumn("__probe",
       explode(AnnEngine.probesUdf(spark, meta, centsB)(col("__q"))))
-    val stream = if (Ann.rebalanceProbedScan(spark, queriesDf, meta.dim))
+    val stream = if (Ann.rebalanceProbedScan(queriesDf, meta.dim))
       base.repartition(spark.sessionState.conf.numShufflePartitions) else base
     (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))), stream, probed)
   }
@@ -1229,7 +1225,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     updated
   }
 
-  /** Live rows into a fresh versioned dir of ~`spark.graft.ann.compactTargetBytes`
+  /** Live rows into a fresh versioned dir of ~[[TableEngine.CompactTargetBytes]]
    *  files (IVF: the build's cluster layout), atomic metadata swap, then
    *  clean-up. Single-writer: a DataFrame planned against the OLD
    *  sourcePath and executed afterwards fails with FileNotFound — re-plan
@@ -1242,10 +1238,9 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val newPath = s"$dir/data-v$ver"
     val df0 = spark.read.parquet(meta.sourcePath)
     val live = if (tomb.isEmpty) df0 else df0.where(notTombstoned(col("id"), tomb))
-    val targetBytes = spark.conf.getOption("spark.graft.ann.compactTargetBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     val estBytes = Ann.dirBytes(new java.io.File(meta.sourcePath))
-    val nFiles = math.max(1, math.ceil(estBytes.toDouble / targetBytes).toInt)
+    val nFiles = math.max(1,
+      math.ceil(estBytes.toDouble / TableEngine.CompactTargetBytes).toInt)
     // ivf: drop the read-back bucket partition column; writeClustered
     // re-derives it
     if (ivf) writeClustered(live.drop("bucket"), meta.nlist, newPath, "overwrite")
@@ -1262,6 +1257,9 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
 }
 
 object TableEngine {
+  /** Target file size of a vacuumed / compacted index table. */
+  private[index] val CompactTargetBytes = 128L << 20
+
   /** TABLE-path query column: PCA-mapped through the frozen transform, then
    *  cosine-normalized — transform FIRST, normalize AFTER, prepQuery's
    *  float order (OPQ-chain ivfpq indexes store their rotation as pca.bin

@@ -163,9 +163,9 @@ private[graft] object ExactServe {
         val p = new Array[Boolean](math.max(meta.nlist, d.cents.length))
         // the SAME graph selection as the distributed scans — the job-free
         // route must answer identically to the cluster route at any nprobe.
-        // Resolved PER CALL (Ann.coarseProbe is cached per (generation, ef))
-        // so a mid-session coarseEfSearch change reaches this route exactly
-        // when it reaches the distributed scans, not on the next data change
+        // Resolved PER CALL (Ann.coarseProbe is cached per generation) so a
+        // rebuilt coarse graph reaches this route exactly when it reaches
+        // the distributed scans
         Ann.selectProbes(d.cents, meta.imiB, query, nprobe,
           Ann.coarseProbe(spark, meta)).foreach(p(_) = true)
         p

@@ -218,6 +218,9 @@ object Multimodal {
       .sortBy(r => if (r.getClass.getName.contains("Midi")) 1 else 0)
   }
 
+  /** Payloads the MIDI reader may see: Standard MIDI Files (`MThd`) only.
+   *  RIFF-wrapped RMID (`RIFF`….`RMID`) is not routed there because the
+   *  JDK's MIDI file reader rejects it anyway (MultimodalSpec pins both). */
   private def isMidiMagic(p: Array[Byte]): Boolean =
     p.length >= 4 && p(0) == 'M' && p(1) == 'T' && p(2) == 'h' && p(3) == 'd'
   @transient private lazy val audioConverters: Array[javax.sound.sampled.spi.FormatConversionProvider] = {

@@ -303,20 +303,17 @@ object SemDedup {
       toFloatVec(col(vecCol)).as("v"))
     val outSchema = StructType(Seq(StructField("id", LongType),
       StructField("cluster", IntegerType), StructField("kept", BooleanType)))
-    // partitions scale with k (clusters/partition configurable) with a
+    // partitions scale with k (16 clusters per partition) with a
     // floor of 4 waves over the session parallelism: per-cluster pairwise
     // work is data-dependent (clique-heavy clusters early-exit, diverse
     // clusters scan fully), so the floor gives the scheduler enough tasks
     // to average the residual variance LPT packing can't see (early-exit
     // rates). k ∝ N keeps per-partition data ~constant as the corpus
     // grows. Per-task memory is bounded by ONE cluster regardless (the
-    // reducer streams), so this knob trades scheduling overhead against
+    // reducer streams), so the ratio trades scheduling overhead against
     // wave-averaging, not against memory.
-    val perPart = spark.conf
-      .getOption("spark.graft.semdedup.clustersPerPartition")
-      .map(_.toInt).getOrElse(16)
     val parts = math.max(4 * spark.sparkContext.defaultParallelism,
-      centroids.length / math.max(1, perPart))
+      centroids.length / 16)
     implicit val keyOrd: Ordering[(Int, Long)] = Ordering.Tuple2[Int, Long]
     // cost-aware placement: a cheap assignment-only pre-pass counts cluster
     // sizes (shuffles k (cluster, count) pairs — nothing else), then LPT

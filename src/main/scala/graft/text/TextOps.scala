@@ -570,8 +570,8 @@ object TextOps {
    *  keep the exact clique pairing — the output is bit-identical to the
    *  uncapped shape. Oversized buckets switch to LINEAR chain+anchor
    *  pairing over the bucket's id order: each member pairs with its
-   *  `bucketChainPredecessors` (default 8) immediate id-order predecessors
-   *  plus the `bucketChainAnchors` (default 8) smallest-id members. For a
+   *  P = 8 immediate id-order predecessors plus the A = 8 smallest-id
+   *  members ([[capDefaults]]). For a
    *  true duplicate cluster (every pair qualifies) the drop/component
    *  semantics are unchanged — every non-min member still meets a
    *  qualifying smaller partner (its predecessor), and the anchors keep a
@@ -597,22 +597,20 @@ object TextOps {
       .select(explode(col("__partners")).as("id_a"), col("id").as("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_bands"))
 
-  /** Default (cap, chain-predecessor, anchor) knob values — the single
-   *  source for both [[capKnobs]] fallbacks and the `lsh_cap_audit` oracle's
-   *  closed-form CASE (SparkEntry generates the SQL from these so a changed
-   *  default can never silently desync operator from oracle). */
+  /** Default (cap, chain-predecessor, anchor) values — the single source
+   *  for [[capKnobs]] and the `lsh_cap_audit` oracle's closed-form CASE
+   *  (SparkEntry generates the SQL from these so a changed default can
+   *  never silently desync operator from oracle). Only the cap is a
+   *  session conf. */
   val capDefaults: (Int, Int, Int) = (64, 8, 8)
 
-  /** The (cap, chain-predecessor, anchor) knobs candidatePairs reads.
-   *  Public so the `lsh_cap_audit` query can assert its oracle (generated
-   *  from [[capDefaults]]) matches the session's effective knobs. */
-  def capKnobs(spark: org.apache.spark.sql.SparkSession): (Int, Int, Int) = (
-    spark.conf.getOption("spark.graft.neardup.bucketCliqueCap")
-      .map(_.toInt).getOrElse(capDefaults._1),
-    spark.conf.getOption("spark.graft.neardup.bucketChainPredecessors")
-      .map(_.toInt).getOrElse(capDefaults._2),
-    spark.conf.getOption("spark.graft.neardup.bucketChainAnchors")
-      .map(_.toInt).getOrElse(capDefaults._3))
+  /** The (cap, chain-predecessor, anchor) triple candidatePairs uses: the
+   *  session's `spark.graft.neardup.bucketCliqueCap` plus the fixed chain
+   *  and anchor counts. Public so the `lsh_cap_audit` query can assert its
+   *  oracle (generated from [[capDefaults]]) matches the session. */
+  def capKnobs(spark: org.apache.spark.sql.SparkSession): (Int, Int, Int) =
+    capDefaults.copy(_1 = spark.conf.getOption("spark.graft.neardup.bucketCliqueCap")
+      .map(_.toInt).getOrElse(capDefaults._1))
 
   /** DuckDB SQL expression for the pre-dedup pair count a bucket of `n`
    *  members emits under knobs (cap, p, a): full clique n·(n−1)/2 at or
@@ -739,7 +737,7 @@ object TextOps {
     // default sort-merge for both verify joins — NOT shuffle-hash hints.
     // Theory said hashing the one-row-per-doc signature side would spare
     // the second join its sort of pair rows carrying a shingle array each;
-    // measurement said otherwise (ProfileLshAb, 300× replica, 2 rounds ×
+    // measurement said otherwise (300× replica, 2 rounds ×
     // both candidate routes: sort-merge won all 6 comparisons, e.g. 90.6 s
     // vs 159.7 s cold, 54.6 s vs 65.3 s warm). Building 32 concurrent
     // hashed relations of wide array rows costs more than sorting the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.index.{Ann, IndexCatalog, ShardCache}
@@ -23,41 +22,6 @@ import graft.index.{Ann, IndexCatalog, ShardCache}
  * bars from VERDICT r7 item 1: recall >= 0.9, no OOM, skew < 4x.
  */
 object AnnScaleSmoke {
-
-  private val taskTimes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-  private class SkewListener extends SparkListener {
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (te.taskInfo != null && te.taskInfo.successful)
-        taskTimes.add((te.stageId, te.taskInfo.duration))
-  }
-  /** (worst ratio over all qualifying stages, worst over MAJOR stages —
-   *  ≥5% of the op's total task-time). The all-stages ratio can be inflated
-   *  by a single GC pause in a sub-second stage; the major-stage ratio is
-   *  the straggler signal that matters at scale (same split as ScaleSmoke). */
-  private def worstSkew(): (Double, Double) = {
-    import scala.jdk.CollectionConverters._
-    val byStage = taskTimes.asScala.toSeq.groupBy(_._1)
-    val totalMs = byStage.valuesIterator.flatMap(_.iterator.map(_._2.toDouble)).sum
-    val perStage = byStage.flatMap { case (sid, ts) =>
-      val ds = ts.map(_._2.toDouble).sorted
-      if (ds.length < 8) None
-      else {
-        val med = ds(ds.length / 2)
-        if (med < 200.0) None
-        else Some((sid, ds.length, med, ds.last, ds.last / med, ds.sum))
-      }
-    }.toSeq.sortBy(_._1)
-    if (sys.env.get("SPARK_GRAFT_ANN_STAGE_DETAIL").contains("1"))
-      perStage.foreach { case (sid, n, med, mx, r, _) =>
-        System.err.println(f"[annscale]   stage $sid%4d tasks=$n%3d med=${med / 1e3}%6.2fs max=${mx / 1e3}%6.2fs ratio=$r%.2f")
-      }
-    if (perStage.isEmpty) (1.0, 1.0)
-    else {
-      val major = perStage.filter(_._6 >= 0.05 * totalMs)
-      (perStage.map(_._5).max,
-        if (major.isEmpty) 1.0 else major.map(_._5).max)
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("SCALE_ANN_r08.json")
@@ -98,7 +62,8 @@ object AnnScaleSmoke {
       .config("spark.graft.ann.root", s"$workDir/indexes")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addSparkListener(new SkewListener)
+    val stages = new StageStats
+    spark.sparkContext.addSparkListener(stages)
     // the smoke must take the DISTRIBUTED serving routes, not driver-local
     // fast paths sized for interactive small indexes
     spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
@@ -168,14 +133,14 @@ object AnnScaleSmoke {
     val onlyOps = sys.env.get("SPARK_GRAFT_ANN_OPS").map(_.split(",").toSet)
     def run(name: String)(body: => Long): Unit = {
       if (onlyOps.exists(o => !o(name))) return
-      taskTimes.clear()
+      stages.clear()
       val h0 = HostLoad.sample()
       val t0 = System.nanoTime()
       val rows = body
       val sec = (System.nanoTime() - t0) / 1e9
       val (hostBusy, hostSteal) = HostLoad.frac(h0, HostLoad.sample())
-      Thread.sleep(300)
-      val (skew, majorSkew) = worstSkew()
+      stages.drain(spark.sparkContext)
+      val StageStats.Skew(skew, _, majorSkew, _) = stages.skew()
       ops(name) = Map("sec" -> sec, "rows" -> rows, "worst_task_skew" -> skew,
         "major_stage_skew" -> majorSkew,
         "host_busy" -> f"$hostBusy%.3f".toDouble,
@@ -189,7 +154,7 @@ object AnnScaleSmoke {
     // 29 s vs 15 s for the identical ivfpq TABLE serve with and without a
     // preceding 1.5M build in the same JVM — and the min over two runs is
     // the steady-state number a serving deployment sees. Skew is taken
-    // from the min trial's stage set (taskTimes is cleared between trials).
+    // from the min trial's stage set (stages are cleared between trials).
     def runServe(name: String)(body: => Long): Unit = {
       if (onlyOps.exists(o => !o(name))) return
       var best = Double.MaxValue; var rows = 0L
@@ -198,17 +163,17 @@ object AnnScaleSmoke {
       var i = 0
       while (i < 2) {
         i += 1
-        taskTimes.clear()
+        stages.clear()
         val h0 = HostLoad.sample()
         val t0 = System.nanoTime()
         rows = body
         val sec = (System.nanoTime() - t0) / 1e9
         val (hb, hs) = HostLoad.frac(h0, HostLoad.sample())
-        Thread.sleep(300)
+        stages.drain(spark.sparkContext)
         if (sec < best) {
           best = sec
           hostBusy = hb; hostSteal = hs
-          val (s, ms) = worstSkew(); skew = s; majorSkew = ms
+          val sk = stages.skew(); skew = sk.worst; majorSkew = sk.major
         }
       }
       ops(name) = Map("sec" -> best, "rows" -> rows, "worst_task_skew" -> skew,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.Ann
@@ -17,50 +16,6 @@ import graft.text.TextOps
  */
 object ScaleSmoke {
 
-  /** (stageId, taskMs) sink for straggler ratios. */
-  private val taskTimes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-
-  private class SkewListener extends SparkListener {
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (te.taskInfo != null && te.taskInfo.successful)
-        taskTimes.add((te.stageId, te.taskInfo.duration))
-  }
-
-  /** Worst max/median task-time ratio over stages with enough, big-enough
-   *  tasks to make skew meaningful (≥8 tasks, median ≥200 ms) — plus the
-   *  same ratio restricted to MAJOR stages (≥5% of the op's total
-   *  task-time). A single GC pause in a 0.5-s stage prints a 3-4×
-   *  max/median ratio with zero data skew (measured: curate_report's
-   *  heaviest stages run ratio ≤1.06 while a 0.6-s-median stage hit 2.3×
-   *  on one paused task); the straggler that matters at cluster scale is
-   *  the one in a stage that carries weight. */
-  private def worstSkew(): (Double, Int, Double, Int) = {
-    import scala.jdk.CollectionConverters._
-    val byStage = taskTimes.asScala.toSeq.groupBy(_._1)
-    val totalMs = byStage.valuesIterator.flatMap(_.iterator.map(_._2.toDouble)).sum
-    val ratios = byStage.toSeq.flatMap { case (sid, ts) =>
-      val ds = ts.map(_._2.toDouble).sorted
-      if (ds.length < 8) None
-      else {
-        val med = ds(ds.length / 2)
-        if (med < 200.0) None
-        else {
-          if (sys.env.get("SPARK_GRAFT_SCALE_STAGE_DETAIL").contains("1"))
-            System.err.println(f"[scale]   stage $sid%4d tasks=${ds.length}%3d " +
-              f"med=${med / 1e3}%6.2fs max=${ds.last / 1e3}%6.2fs ratio=${ds.last / med}%.2f")
-          Some((ds.last / med, sid, ds.sum))
-        }
-      }
-    }
-    if (ratios.isEmpty) (1.0, -1, 1.0, -1)
-    else {
-      val m = ratios.maxBy(_._1)
-      val major = ratios.filter(_._3 >= 0.05 * totalMs)
-      val mm = if (major.isEmpty) (1.0, -1, 0.0) else major.maxBy(_._1)
-      (m._1, m._2, mm._1, mm._2)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = if (args.length > 1) args(1) else "SCALE_r07.json"
@@ -73,7 +28,8 @@ object ScaleSmoke {
       .config("spark.graft.ann.root", s"$scaleDir/indexes")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addSparkListener(new SkewListener)
+    val stages = new StageStats
+    spark.sparkContext.addSparkListener(stages)
 
     // ---- replicate with id offsets (idempotent: skip if already written)
     val off = 10000000L
@@ -127,15 +83,14 @@ object ScaleSmoke {
     def run(name: String)(body: => Long): Unit = {
       if (skipOps(name) || !onlyOps.forall(_.contains(name))) {
         System.err.println(s"[scale] $name SKIPPED (env)"); return }
-      taskTimes.clear()
+      stages.clear()
       val h0 = HostLoad.sample()
       val t0 = System.nanoTime()
       val rows = body
       val sec = (System.nanoTime() - t0) / 1e9
       val (hostBusy, hostSteal) = HostLoad.frac(h0, HostLoad.sample())
-      // allow listener events to drain before reading skew
-      Thread.sleep(300)
-      val (skew, stage, majorSkew, majorStage) = worstSkew()
+      stages.drain(spark.sparkContext)
+      val StageStats.Skew(skew, stage, majorSkew, majorStage) = stages.skew()
       ops(name) = Map("sec" -> sec, "rows" -> rows,
         "worst_task_skew" -> skew, "skew_stage" -> stage,
         "major_stage_skew" -> majorSkew, "major_skew_stage" -> majorStage,

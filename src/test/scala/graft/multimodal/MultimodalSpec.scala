@@ -128,6 +128,29 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.audioFeatures(Array.emptyByteArray, bands) == null)
   }
 
+  test("MIDI: a Standard MIDI File decodes; its RIFF-wrapped RMID form does not") {
+    import java.io.ByteArrayInputStream
+    import javax.sound.midi.{InvalidMidiDataException, MidiSystem}
+    // one track: note on, note off a beat later, end of track
+    val track = Array[Byte](0, 0x90.toByte, 60, 100, 0x60, 0x80.toByte, 60, 0,
+      0, 0xff.toByte, 0x2f, 0)
+    val smf = java.nio.ByteBuffer.allocate(22 + track.length)
+      .put("MThd".getBytes).putInt(6).putShort(0).putShort(1).putShort(96)
+      .put("MTrk".getBytes).putInt(track.length).put(track).array()
+    // RMID: a little-endian RIFF container holding the SMF as its data chunk
+    val rmid = java.nio.ByteBuffer.allocate(20 + smf.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put("RIFF".getBytes).putInt(12 + smf.length).put("RMID".getBytes)
+      .put("data".getBytes).putInt(smf.length).put(smf).array()
+    assert(MidiSystem.getSequence(new ByteArrayInputStream(smf)).getTracks.length == 1)
+    val got = Multimodal.audioFeatures(smf, 4)
+    assert(got != null && got.length == 4, "SMF must render through the MIDI reader")
+    // the JDK's MIDI reader rejects RMID, so only SMF payloads route to it
+    intercept[InvalidMidiDataException](
+      MidiSystem.getSequence(new ByteArrayInputStream(rmid)))
+    assert(Multimodal.audioFeatures(rmid, 4) == null)
+  }
+
   test("synthWav container is byte-identical to AudioSystem.write WAVE output") {
     import javax.sound.sampled.{AudioSystem, AudioFileFormat}
     for (seed <- Seq(0L, 1L, 7L, 12345L)) {

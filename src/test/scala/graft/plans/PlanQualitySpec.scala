@@ -235,4 +235,69 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(distLines.exists(_.contains("*(")),
       s"quant_range_dist fell out of codegen:\n${distLines.mkString("\n")}\n$p")
   }
+
+  test("fused text kernels compile to static TextKernels calls inside whole-stage codegen") {
+    import graft.text.TextOps
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val df = docs.select(col("doc_id"),
+      TextOps.termCountsCol(col("text")).as("tc"),
+      TextOps.wordLines(col("text"), 4).as("wl"),
+      graft.functions.mkCol(graft.expressions.NgramRepetition(
+        graft.functions.mkExpr(col("text")), 2)).as("rep"))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    for (k <- Seq("term_counts", "word_lines", "ngram_repetition"))
+      assert(p.linesIterator.exists(l => l.contains(k) && l.contains("*(")),
+        s"$k is outside a whole-stage codegen span:\n$p")
+    val code = codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString("\n")
+    for (k <- Seq("termCounts", "wordLines", "ngramRepetition"))
+      assert(code.contains(s"graft.expressions.TextKernels.$k("),
+        s"generated code does not call TextKernels.$k statically:\n$code")
+  }
+
+  /** Filter conditions evaluated directly over a parquet scan, plus each
+   *  scan's own data filters — where an inferred predicate would re-run a
+   *  projected kernel once per scanned row. */
+  private def scanFilters(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def overScan(p: SparkPlan): Boolean = p match {
+      case _: FileSourceScanExec => true
+      case c: ColumnarToRowExec => overScan(c.child)
+      case i: InputAdapter => overScan(i.child)
+      case _ => false
+    }
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FilterExec if overScan(f.child) => f.condition.sql
+      case s: FileSourceScanExec => s.dataFilters.map(_.sql).mkString(" AND ")
+    }
+  }
+
+  test("dedup_blocklist never hashes text inside a scan filter") {
+    val df = graft.SparkEntry.queries("dedup_blocklist")(spark, sf)
+    val filters = scanFilters(df)
+    assert(filters.nonEmpty, "expected at least one parquet scan")
+    assert(!filters.exists(_.contains("rolling_hash")),
+      s"rolling_hash pushed into a scan filter:\n${filters.mkString("\n")}")
+  }
+
+  test("exact-rank ANN entries rank in SQL, never through an ExistingRDD") {
+    val root = s"/tmp/graft-rank-plan-${System.nanoTime()}"
+    spark.conf.set("spark.graft.ann.root", root)
+    try for (name <- Seq("ann_sq8_exact", "ann_sq4_exact", "ann_sq6_exact",
+        "ann_pca_exact", "ann_pcar_exact", "ann_imi_exact", "ann_imi_probe1",
+        "ann_imipq_exact", "ann_ivfsq_exact", "ann_ivfsq4_exact",
+        "ann_ivfsq6_exact", "ann_ivf_exact", "ann_ivfhnsw_exact",
+        "ann_merge_flat", "ann_diskann_exact", "ann_hnsw_exact", "ann_pq_exact",
+        "ann_opq_exact", "ann_ivfpq_exact", "ann_opqivf_exact",
+        "ann_serve_filtered", "ann_filtered_flat")) {
+      val p = plan(graft.SparkEntry.queries(name)(spark, sf))
+      assert(!p.contains("ExistingRDD"), s"$name plans an ExistingRDD:\n$p")
+    } finally {
+      spark.conf.unset("spark.graft.ann.root")
+      graft.index.IndexCatalog.deleteTree(root)
+    }
+  }
 }
