@@ -22,10 +22,14 @@ import org.apache.spark.sql.functions._
  * report in one DAG: row-local gates are pure codegen projections; the
  * set-based stages (4/6) compute drop sets over the preceding stage's
  * survivors — sequential semantics, exactly how a curation run composes —
- * and come back as left joins keyed on the id. All shuffles are the
- * primitives' own (band buckets, df-capped n-gram buckets); nothing here
- * adds a driver collect or an all-pairs product, so the composition
- * inherits the 100 TB story of its parts.
+ * and come back as left joins keyed on the id. Every shuffle and every
+ * driver collect is a primitive's own: above `spark.graft.text.localMaxBytes`
+ * the set-based stages run their distributed plans (band buckets, df-capped
+ * n-gram buckets), below it [[TextOps.jaccardPairs]] and
+ * [[TextOps.contaminationCounts]] each collect one narrow projection and
+ * finish on the driver, eagerly, while the pipeline is built. Nothing here
+ * adds an all-pairs product, so the composition inherits the 100 TB story of
+ * its parts.
  */
 object Curate {
 

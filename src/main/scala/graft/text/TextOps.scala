@@ -10,11 +10,16 @@ import org.apache.spark.sql.types._
  * per BASELINE.md; the reference itself delegates all text work to its host
  * engine, so these are Spark-native designs, not ports).
  *
- * Everything here is a composition of `org.apache.spark.sql.functions`
- * higher-order array functions — whole-stage-codegen'd, no UDFs, no driver
- * materialization. The only shuffles are the LSH band-bucket joins, which is
- * the 100 TB-safe shape for near-dup detection (candidates per band bucket,
- * never an all-pairs product).
+ * The distributed plans here are compositions of `org.apache.spark.sql.functions`
+ * and compiled text kernels — whole-stage-codegen'd, no UDFs. Their near-dup
+ * shuffles are the LSH band-bucket exchanges, the 100 TB-safe shape
+ * (candidates per band bucket, never an all-pairs product). Small inputs take
+ * driver-local routes instead: below one scan-size gate
+ * (`spark.graft.text.localMaxBytes`, see [[localMaxBytes]]) [[rareTerms]],
+ * the n-gram pair ops and [[jaccardPairs]] collect one narrow projection and
+ * finish on the driver, and [[connectedComponents]] resolves small edge sets
+ * with a driver union-find. Each driver route evaluates the same kernels and
+ * gives the distributed plan's answer.
  *
  * All hashing is modular integer arithmetic (base/mod constants below), so
  * results are engine-independent and bit-exactly reproducible in the DuckDB
@@ -384,11 +389,8 @@ object TextOps {
     // vocabulary-sized df/rank bookkeeping runs on the driver. Distributed
     // fallback below is the 100 TB path.
     val projected = df.select(col(idCol), col(textCol))
-    val est = scanBoundedSizeEstimate(projected)
-    val gate = df.sparkSession.conf
-      .getOption("spark.graft.text.localRareMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    if (est <= gate) return rareTermsLocal(projected, idCol, k)
+    if (scanBoundedSizeEstimate(projected) <= localMaxBytes(df.sparkSession))
+      return rareTermsLocal(projected, idCol, k)
     // fused per-doc term counting: the token explosion never materializes
     // and (doc, term) needs no shuffle — the explode below is partition-local
     val tf = df
@@ -532,12 +534,14 @@ object TextOps {
    *  join-back shape shuffled one row per (doc, shingle) and re-joined the
    *  corpus by id, the two largest stages of the 1000× dedup smoke. As a
    *  projection it also column-prunes per consumer: the Jaccard verify
-   *  branches read only (id, shingles) and never pay the minhash compute. */
+   *  branches read only (id, shingles) and never pay the minhash compute.
+   *  `carry` columns (name, expr) ride along after `shingles`. */
   def signatures(df: DataFrame, textCol: String, idCol: String,
-      shingleK: Int = 3): DataFrame = {
+      shingleK: Int = 3, carry: Seq[(String, Column)] = Nil): DataFrame = {
     val toks = tokens(col(textCol))
     val sh = shingleHashes(toks, shingleK)
-    df.select(col(idCol).as("id"), sh.as("shingles"))
+    df.select(col(idCol).as("id") +: sh.as("shingles") +:
+        carry.map { case (n, c) => c.as(n) }: _*)
       .withColumn("sig", graft.functions.mkCol(graft.expressions.MinhashSig(
         graft.functions.mkExpr(col("shingles")), NumHashes)))
       .withColumn("bands", bandHashes(col("sig")))
@@ -709,26 +713,37 @@ object TextOps {
    *  one-row-per-doc signature sides (NOT through the 8×-exploded band
    *  shuffle), so a caller that needs per-side metadata on the emitted
    *  pairs (dedupVsCorpus's frame flag) gets it for free instead of
-   *  re-joining the corpus onto the pair table afterwards. */
+   *  re-joining the corpus onto the pair table afterwards.
+   *
+   *  Route: when the signature projection's scan estimate is at or under
+   *  [[localMaxBytes]], ONE narrow job collects (id, shingles, bands, carry)
+   *  and the driver buckets, pairs ([[bucketPartners]]' clique / chain+anchor
+   *  rule and knobs), counts `n_bands` and verifies with the same sorted merge;
+   *  the result is a LocalRelation with the distributed schema, built eagerly
+   *  when this is called. Above the gate the distributed plan below runs: one
+   *  window exchange on the band bucket, one `groupBy` on the pair and two
+   *  sort-merge verify joins. The driver route falls back to that plan for an
+   *  id type other than BYTE/SHORT/INT/BIGINT (the driver orders ids as
+   *  longs) and for null or duplicated ids (the window and joins treat those
+   *  differently); rows with NULL text form no pair on either route. */
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, minJaccard: Double = 0.0,
       carry: Seq[(String, Column)] = Nil): DataFrame = {
     // no .cache() here: a library-held cache can never be safely unpersisted
-    // (the returned plan still references it). Since the carry refactor,
-    // sigs is a pure projection consumed ONLY by candidatePairs (the join
-    // sides re-project from df below), so there is no shared shuffle to
-    // cache; callers iterating across actions can cache at the call site.
-    val sigs = signatures(df, textCol, idCol, shingleK)
+    // (the returned plan still references it). sigs is a pure projection,
+    // so there is no shared shuffle to cache; callers iterating across
+    // actions can cache at the call site.
+    val sigs = signatures(df, textCol, idCol, shingleK, carry)
+    val carried = carry.map(_._1)
+    val local = jaccardPairsLocal(sigs, minJaccard, carried)
+    if (local.isDefined) return local.get
     val cands = candidatePairs(sigs)
-    // the join sides re-project from df (id, shingles, carry) — the sig and
-    // band columns prune away regardless, so this is the same scan either way
-    val side = df.select(col(idCol).as("id") +:
-      shingleHashes(tokens(col(textCol)), shingleK).as("shingles") +:
-      carry.map { case (n, c) => c.as(n) }: _*)
-    val sa = side.select(col("id").as("id_a") +: col("shingles").as("sh_a") +:
-      carry.map { case (n, _) => col(n).as(s"${n}_a") }: _*)
-    val sb = side.select(col("id").as("id_b") +: col("shingles").as("sh_b") +:
-      carry.map { case (n, _) => col(n).as(s"${n}_b") }: _*)
+    // the join sides read (id, shingles, carry) of the same projection —
+    // the sig and band columns prune away, so both sides are one scan
+    val sa = sigs.select(col("id").as("id_a") +: col("shingles").as("sh_a") +:
+      carried.map(n => col(n).as(s"${n}_a")): _*)
+    val sb = sigs.select(col("id").as("id_b") +: col("shingles").as("sh_b") +:
+      carried.map(n => col(n).as(s"${n}_b")): _*)
     // shingle arrays are sorted (ShingleHashes contract): a codegen'd linear
     // merge counts the intersection without array_intersect's per-pair hash
     // set + output array — the former top cost of the whole dedup pipeline
@@ -743,15 +758,111 @@ object TextOps {
     // hashed relations of wide array rows costs more than sorting the
     // narrow pair side, and the octave smokes regressed ~20-45% while the
     // hints were in (SCALE{300,1000}_r12 vs _r11 dedup_minhash_keep).
-    val joined = cands.join(sa, "id_a")
+    cands.join(sa, "id_a")
       .join(sb, "id_b")
       .withColumn("n_inter", inter)
       .withColumn("jaccard", col("n_inter").cast(DoubleType) /
         (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast(DoubleType))
       .where(col("jaccard") >= minJaccard)
       .select((Seq("id_a", "id_b", "n_bands", "jaccard") ++
-        carry.flatMap { case (n, _) => Seq(s"${n}_a", s"${n}_b") }).map(col): _*)
-    joined
+        carried.flatMap(n => Seq(s"${n}_a", s"${n}_b"))).map(col): _*)
+  }
+
+  /** The driver route of [[jaccardPairs]] over its signature projection, or
+   *  None when the route does not apply (gate exceeded, id type, null or
+   *  duplicated ids). Each document's shingles stay in its collected
+   *  UnsafeRow as a primitive long array, which the verify hands to
+   *  [[graft.expressions.TextHash.sortedIntersectCount]] as is. */
+  private def jaccardPairsLocal(sigs: DataFrame, minJaccard: Double,
+      carry: Seq[String]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.graftshim.GraftShim
+    val spark = sigs.sparkSession
+    val projected = sigs.select((Seq("id", "shingles", "bands") ++ carry).map(col): _*)
+    val fields = projected.schema.fields
+    val idType = fields(0).dataType
+    idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case _ => return None
+    }
+    if (scanBoundedSizeEstimate(projected) > localMaxBytes(spark)) return None
+    val rows = GraftShim.collectInternal(projected)
+    if (rows.exists(_.isNullAt(0))) return None
+    val ids = rows.map(_.get(0, idType).asInstanceOf[Number].longValue)
+    val byId = rows.indices.toArray.sortBy(ids(_))
+    if ((1 until byId.length).exists(k => ids(byId(k)) == ids(byId(k - 1)))) return None
+    // documents in id order; rank in this array is the bucket order
+    val docs = byId.filter(i => !rows(i).isNullAt(1)).map(rows(_))
+    val m = docs.length
+    val (cap, chainP, anchorA) = capKnobs(spark)
+    // each emitted (rank_a, rank_b) pair, rank_a < rank_b, packed in a long
+    val emitted = new scala.collection.mutable.ArrayBuilder.ofLong
+    def emit(a: Int, b: Int): Unit = emitted += a.toLong * m + b
+    var band = 0
+    while (band < NumBands) {
+      val buckets = new java.util.HashMap[java.lang.Long,
+        scala.collection.mutable.ArrayBuilder.ofInt]()
+      var d = 0
+      while (d < m) {
+        buckets.computeIfAbsent(docs(d).getArray(2).getLong(band),
+          _ => new scala.collection.mutable.ArrayBuilder.ofInt) += d
+        d += 1
+      }
+      buckets.values().forEach { b =>
+        val members = b.result() // ascending rank = ascending id
+        val n = members.length
+        // bucketPartners' rule: a bucket at or under the cap (or cap <= 0)
+        // pairs as a clique; above it each member pairs with the first
+        // anchorA ids below it and its last chainP predecessors
+        val clique = cap <= 0 || n <= cap
+        var r = 1
+        while (r < n) {
+          val anchors = if (clique) r else math.min(anchorA, r)
+          var q = 0
+          while (q < anchors) { emit(members(q), members(r)); q += 1 }
+          q = math.max(anchors, r - chainP)
+          while (q < r) { emit(members(q), members(r)); q += 1 }
+          r += 1
+        }
+      }
+      band += 1
+    }
+    // n_bands = the number of buckets that emitted a pair: a run in the sort
+    val keys = emitted.result()
+    java.util.Arrays.sort(keys)
+    def value(r: InternalRow, k: Int): Any =
+      if (r.isNullAt(k)) null else r.get(k, fields(k).dataType)
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var i = 0
+    while (i < keys.length) {
+      var j = i + 1
+      while (j < keys.length && keys(j) == keys(i)) j += 1
+      val a = docs((keys(i) / m).toInt); val b = docs((keys(i) % m).toInt)
+      val sa = a.getArray(1); val sb = b.getArray(1)
+      val inter = graft.expressions.TextHash.sortedIntersectCount(sa, sb)
+      val jaccard = inter.toDouble / (sa.numElements() + sb.numElements() - inter).toDouble
+      if (jaccard >= minJaccard) {
+        val row = new GenericInternalRow(4 + 2 * carry.length)
+        row.update(0, value(a, 0)); row.update(1, value(b, 0))
+        row.update(2, (j - i).toLong); row.update(3, jaccard)
+        carry.indices.foreach { c =>
+          row.update(4 + 2 * c, value(a, 3 + c))
+          row.update(5 + 2 * c, value(b, 3 + c))
+        }
+        out += row
+      }
+      i = j
+    }
+    val schema = StructType(Seq(StructField("id_a", idType, nullable = false),
+      StructField("id_b", idType, nullable = false),
+      StructField("n_bands", LongType, nullable = false),
+      StructField("jaccard", DoubleType, nullable = false)) ++
+      carry.indices.flatMap { c =>
+        Seq(fields(3 + c).copy(name = s"${carry(c)}_a"),
+          fields(3 + c).copy(name = s"${carry(c)}_b"))
+      })
+    Some(GraftShim.localRelation(spark, out.toSeq, schema))
   }
 
   /**
@@ -1042,11 +1153,13 @@ object TextOps {
    * Connected components over near-dup pairs by iterative min-id label
    * propagation (large-star-ish): every id starts as its own label; each
    * round joins labels across edges in both directions and keeps the min,
-   * until a fixpoint (or maxIter). Handles CHAINS of near-duplicates
+   * until a fixpoint. Handles CHAINS of near-duplicates
    * (a~b~c where a≁c) that single-pass dedup misses. Returns
    * (id, component) where component = min id of the cluster.
    * Each round is two shuffle joins over the (small) edge set — the
    * standard scalable CC shape for dedup graphs with tiny components.
+   * When round `maxIter` still changes a label, the distributed loop throws
+   * an IllegalStateException instead of returning a partial labelling.
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     val spark = pairs.sparkSession
@@ -1116,6 +1229,12 @@ object TextOps {
       iter += 1
     }
     edges.unpersist()
+    if (!converged) {
+      labels.unpersist()
+      throw new IllegalStateException(s"connectedComponents did not converge: " +
+        s"round $iter of maxIter = $maxIter still changed a label, so the " +
+        "labelling is partial; raise maxIter")
+    }
     labels
   }
 
@@ -1275,16 +1394,18 @@ object TextOps {
     plan.stats.sizeInBytes.min(bound(plan))
   }
 
-  /** Size gate for the driver-local n-gram route (default 64 MB of scan
-   *  input, same auto-route family as ExactServe / the local
-   *  connected-components union-find): below it, the posting map fits the
-   *  driver trivially and the shuffle's fixed cost dominates end-to-end
-   *  latency, so the group-by runs driver-side on rows from ONE narrow
-   *  (shuffle-free) Spark job; above it, the distributed single-exchange
-   *  plan takes over. Results are identical on both routes — the narrow job
-   *  evaluates the SAME tokenize/n-gram expressions. */
-  private def localNgramMaxBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.text.localNgramMaxBytes")
+  /** The one size gate of every driver-local text route ([[rareTerms]],
+   *  [[ngramDupPairs]], [[contaminationCounts]], [[jaccardPairs]]):
+   *  `spark.graft.text.localMaxBytes`, default 64 MB of scan input
+   *  ([[scanBoundedSizeEstimate]]), the same auto-route family as ExactServe
+   *  and the local connected-components union-find. Below it, the driver-side
+   *  state fits trivially and a shuffle's fixed cost dominates end-to-end
+   *  latency, so the route collects ONE narrow (shuffle-free) projection and
+   *  finishes on the driver; above it, the distributed plan takes over.
+   *  Results are identical on both routes, because the narrow job evaluates
+   *  the same kernels. Set it to 0 to force every distributed route. */
+  private[text] def localMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption("spark.graft.text.localMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
   /** Driver-local n-gram posting map: `ngram → distinct ids` (insertion
@@ -1302,16 +1423,15 @@ object TextOps {
       ngramsOfTextCol(col(textCol), n).as("ngrams")) ++
       flagCol.map(_.as("flag"))
     val projected = df.select(cols: _*)
-    val est = scanBoundedSizeEstimate(projected)
-    if (est > localNgramMaxBytes(df)) return None
+    if (scanBoundedSizeEstimate(projected) > localMaxBytes(df.sparkSession)) return None
     val cap = dfMax + 1
     val map = new java.util.HashMap[String, java.util.LinkedHashSet[java.lang.Long]]()
     val flags = new java.util.HashMap[java.lang.Long, java.lang.Boolean]()
     projected.collect().foreach { r =>
       val id = r.getLong(0)
       if (flagCol.isDefined) flags.put(id, r.getBoolean(2))
-      val ngrams = r.getSeq[String](1)
-      ngrams.foreach { g =>
+      // NULL text has no n-grams (the distributed explode emits no row)
+      if (!r.isNullAt(1)) r.getSeq[String](1).foreach { g =>
         val s = map.computeIfAbsent(g, _ => new java.util.LinkedHashSet[java.lang.Long]())
         if (s.size < cap) s.add(id)
       }

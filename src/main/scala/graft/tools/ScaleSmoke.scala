@@ -57,8 +57,7 @@ object ScaleSmoke {
 
     // force every driver-local fast path OFF — this smoke tests the
     // distributed routes that a 100 TB deployment would take
-    spark.conf.set("spark.graft.text.localNgramMaxBytes", "0")
-    spark.conf.set("spark.graft.text.localRareMaxBytes", "0")
+    spark.conf.set("spark.graft.text.localMaxBytes", "0")
     spark.conf.set("spark.graft.neardup.broadcastMaxBytes", "0")
     spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
     spark.conf.set("spark.graft.pack.serialMaxBytes", "0") // segmented route

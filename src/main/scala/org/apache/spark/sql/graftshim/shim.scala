@@ -5,15 +5,19 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
 
 /** Bridge into Spark's `private[sql]` Column<->Expression converters (Spark 4
  *  moved Column onto ColumnNode; extensions conventionally shim into the sql
- *  package for this) and the Arrow row<->batch converters Spark's own Python
- *  path runs on. Keep this the ONLY file outside the graft namespace. */
+ *  package for this), the Arrow row<->batch converters Spark's own Python
+ *  path runs on, and InternalRow-level collect / LocalRelation construction.
+ *  Keep this the ONLY file outside the graft namespace. */
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -42,4 +46,20 @@ object GraftShim {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** The rows of `df` as InternalRows, under its own SQL execution (what
+   *  `Dataset.collect` runs, without decoding each row into a `Row`). */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** InternalRows + schema → DataFrame over a LocalRelation, the plan
+   *  `createDataFrame(java.util.List[Row], schema)` builds: consumers plan
+   *  a LocalTableScan and collecting it launches no job. */
+  def localRelation(spark: SparkSession, rows: Seq[InternalRow],
+      schema: StructType): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

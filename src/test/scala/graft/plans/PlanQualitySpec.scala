@@ -62,6 +62,27 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("partial_sum"), s"expected map-side partial aggregation:\n$p")
   }
 
+  test("q3_join hints the orders-key broadcast only under spark.graft.q3.broadcastMaxBytes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    def q3(maxBytes: Long): DataFrame = {
+      spark.conf.set("spark.graft.q3.broadcastMaxBytes", maxBytes.toString)
+      try graft.SparkEntry.queries("q3_join")(spark, sf)
+      finally spark.conf.unset("spark.graft.q3.broadcastMaxBytes")
+    }
+    def keysHinted(df: DataFrame): Boolean = df.queryExecution.analyzed.exists {
+      case h: ResolvedHint => h.hints.strategy.contains(BROADCAST) &&
+        h.output.map(_.name) == Seq("o_orderkey")
+      case _ => false
+    }
+    val hinted = q3(1L << 30) // far above the sf0.001 orders scan
+    assert(keysHinted(hinted), hinted.queryExecution.analyzed.toString)
+    val p = plan(hinted)
+    assert("BroadcastHashJoin \\[l_orderkey#\\d+L?\\], \\[o_orderkey#\\d+L?\\], Inner, BuildRight"
+      .r.findFirstIn(p).isDefined, s"orders keys not broadcast:\n$p")
+    val unhinted = q3(1L)
+    assert(!keysHinted(unhinted), unhinted.queryExecution.analyzed.toString)
+  }
+
   test("anti-join plans as BroadcastHashJoin LeftAnti, not a cartesian shape") {
     val p = plan(graft.SparkEntry.queries("q_antijoin")(spark, sf))
     assert(p.contains("LeftAnti"), s"expected anti join:\n$p")
@@ -169,9 +190,9 @@ class PlanQualitySpec extends AnyFunSuite {
         "pack_sequences" -> TextOps.packSequences(docs, "text", "doc_id", "lang", 256L),
         "hashed_tf" -> docs.select(explode(TextOps.hashedTf(col("text"), 64))),
         "rare_terms_dist" -> {
-          spark.conf.set("spark.graft.text.localRareMaxBytes", "0")
+          spark.conf.set("spark.graft.text.localMaxBytes", "0")
           try TextOps.rareTerms(docs, "text", "doc_id", 3)
-          finally spark.conf.unset("spark.graft.text.localRareMaxBytes")
+          finally spark.conf.unset("spark.graft.text.localMaxBytes")
         })) {
       val pl = plan(df)
       assert(!pl.contains("CartesianProduct"), s"$name went cartesian:\n$pl")

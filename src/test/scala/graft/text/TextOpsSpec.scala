@@ -319,12 +319,12 @@ class TextOpsSpec extends AnyFunSuite {
     }
     val (pLocal, cLocal) = run()
     assert(pLocal.nonEmpty && cLocal.nonEmpty, "fixture produced no overlaps")
-    spark.conf.set("spark.graft.text.localNgramMaxBytes", "0")
+    spark.conf.set("spark.graft.text.localMaxBytes", "0")
     try {
       val (pDist, cDist) = run()
       assert(pDist == pLocal, s"pair routes diverged: $pDist vs $pLocal")
       assert(cDist == cLocal, s"contamination routes diverged: $cDist vs $cLocal")
-    } finally spark.conf.unset("spark.graft.text.localNgramMaxBytes")
+    } finally spark.conf.unset("spark.graft.text.localMaxBytes")
   }
 
   test("repetitionColumns: fractions match a naive n-gram recount") {
@@ -419,12 +419,12 @@ class TextOpsSpec extends AnyFunSuite {
           r.getLong(4))).toSeq
     val local = run()
     assert(local.nonEmpty)
-    spark.conf.set("spark.graft.text.localRareMaxBytes", "0")
+    spark.conf.set("spark.graft.text.localMaxBytes", "0")
     try {
       val dist = run()
       assert(local == dist, "size-gated driver route must be bit-identical " +
         "to the distributed broadcast-join/window plan")
-    } finally spark.conf.unset("spark.graft.text.localRareMaxBytes")
+    } finally spark.conf.unset("spark.graft.text.localMaxBytes")
   }
 
   test("TermCounts expression matches explode+groupBy token counting") {
