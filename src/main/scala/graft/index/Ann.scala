@@ -739,12 +739,9 @@ object Ann {
       .orderBy(col("__ed"), col("row_id")).limit(fetchK)
       .select(col("row_id"), col("__ed").cast(FloatType).as("_distance"))
   }
-  /** Max shard count for which a diskann search runs driver-local instead of
-   *  as a Spark job. The reference serves every query single-node; for small
-   *  shard counts the job-launch overhead dominates, so the driver searches
-   *  the (cached) shards directly. Large indexes fan out as tasks. */
-  def localSearchMaxShards(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.ann.localSearchMaxShards").map(_.toInt).getOrElse(64)
+  /** The graph route's [[graft.core.Route]] limit, in shards: fan-out decides
+   *  it, not driver memory (shards are mmap-served or soft-cached). */
+  val LocalSearchMaxShards = 64
 
   /** Driver-local diskann search across shards → (id, distance) sorted,
    *  ≤ fetchK. Shards are searched concurrently on a bounded pool (the
@@ -794,7 +791,7 @@ object Ann {
 
   /** Collected (id, distance) hits for k·oversample results over the
    *  engine's cheapest route: driver-local for small graph indexes
-   *  ([[localSearchMaxShards]]) and small table indexes ([[ExactServe]]),
+   *  ([[LocalSearchMaxShards]]) and small table indexes ([[ExactServe]]),
    *  else a Spark job. */
   private[graft] def collectHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, searchComplexity: Int, oversample: Int): Array[(Long, Float)] =
@@ -1081,7 +1078,7 @@ object Ann {
    * Single-query serving surface: top k·oversample `(row_id, _distance)` as
    * a LOCAL relation — no Spark job anywhere on the path. The search itself
    * already runs driver-local for eligible indexes (graph engines under
-   * [[localSearchMaxShards]] serve from the mmap shard cache; small exact/
+   * [[LocalSearchMaxShards]] serve from the mmap shard cache; small exact/
    * quantized engines from [[ExactServe]]); what made [[search]]'s e2e p50
    * ~70× the in-process search cost was the base-row fetch-back JOB, which
    * exists only to attach base-table columns. A serving caller that needs

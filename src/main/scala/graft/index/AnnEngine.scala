@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{DiskannFormat, GraphIndex, HnswFormat, HnswIndex, LshCodec, Metric,
-  Sq8Codec, SqPackedCodec, VamanaIndex, VectorOps}
+  Route, Sq8Codec, SqPackedCodec, VamanaIndex, VectorOps}
 import graft.functions.{array_distance_sq, array_negative_inner_product, floatVec, mkCol,
   mkExpr, toFloatVec}
 import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
@@ -415,11 +415,11 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
   }
 
   /** Driver-local search (no Spark job) while the shard count is at most
-   *  [[Ann.localSearchMaxShards]]; a shard-parallel job above it. */
+   *  [[Ann.LocalSearchMaxShards]]; a shard-parallel job above it. */
   override private[index] def collectHits(spark: SparkSession, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], fetchK: Int,
       searchComplexity: Int): Array[(Long, Float)] =
-    if (meta.shards.size <= Ann.localSearchMaxShards(spark))
+    if (Route.local(spark, "ann.graph", meta.shards.size, Ann.LocalSearchMaxShards))
       Ann.searchShardsLocal(meta, tomb, query, fetchK, searchComplexity)
     else super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
 

@@ -7,16 +7,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.core.Metric
+import graft.core.{Metric, Route}
 
 /**
  * Driver-local serving for SMALL exact/quantized indexes (flat, ivfflat, pq,
  * ivfpq): the reference serves every query in-process, and for an index a
  * few MB in size a Spark job launch (~0.1-0.5 s) dwarfs the scan itself. The
  * first query pays one collect to warm the cache; subsequent queries scan
- * the cached arrays on the driver with NO job. Indexes above
- * `spark.graft.ann.localExactMaxBytes` (default 64 MB) keep the distributed
- * scan — that is the 100 TB path, this is the serving-latency path.
+ * the cached arrays on the driver with NO job, while [[graft.core.Route]]
+ * allows it; larger indexes keep the distributed (100 TB) scan.
  *
  * Bit-parity with the distributed scans is load-bearing (the DuckDB oracle
  * hash-checks `ann_oversample`/`ann_delete_search`): distances replicate the
@@ -56,20 +55,12 @@ private[graft] object ExactServe {
 
   private val cache = new ConcurrentHashMap[String, Data]()
 
-  /** Serving-path telemetry + spec hook: driver-local searches served. */
-  private[graft] val localServeCount = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def maxBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ann.localExactMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-
+  /** Routes `meta` (op `ann.exact`): true when it serves from the driver. */
   def eligible(spark: SparkSession, meta: IndexMeta): Boolean = AnnEngine.of(meta) match {
-    case engine: TableEngine =>
+    case engine: TableEngine if meta.sourcePath.nonEmpty =>
       // REFINED quantized indexes cache codes PLUS the raw vec column for
-      // the exact re-rank, so the estimate adds the per-row code bytes on
-      // top of the vec term (~dim·5 bytes/row for refined ivfsq) — without
-      // it the driver cache could exceed localExactMaxBytes by ~25% for
-      // exactly the indexes that cache the most
+      // the exact re-rank: add the per-row code bytes (~dim·5 bytes/row for
+      // refined ivfsq), or the cache could exceed the gate by ~25%
       val codeBytes: Long = if (meta.refine) engine.codeBytes(meta) else 0L
       // side artifacts the cache also holds: the centroid table for IVF
       // engines, twice when an IVF_HNSW coarse graph rides along (graph
@@ -77,13 +68,12 @@ private[graft] object ExactServe {
       // of m·nlist ints, absorbed by the ×2)
       val sideBytes: Long =
         meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
-      meta.sourcePath.nonEmpty &&
-        // vec-based estimate: exact for flat/ivf, conservative (over) for
-        // unrefined code engines — pq stores m bytes/row, lsh 8; erring
-        // high only keeps a servable index on the distributed route, never
-        // the reverse
-        meta.numVectors * (meta.dim.toLong * 4 + 16 + codeBytes) + sideBytes <=
-          maxBytes(spark)
+      // vec-based estimate: exact for flat/ivf, conservative (over) for
+      // unrefined code engines — pq stores m bytes/row, lsh 8; erring high
+      // only keeps a servable index on the distributed route, never the
+      // reverse
+      Route.local(spark, "ann.exact",
+        meta.numVectors * (meta.dim.toLong * 4 + 16 + codeBytes) + sideBytes)
     case _ => false
   }
 
@@ -154,7 +144,6 @@ private[graft] object ExactServe {
     val fp = fingerprint(meta.sourcePath)
     val d = cache.compute(meta.name, (_, old) =>
       if (old != null && old.fingerprint == fp) old else load(spark, meta, fp))
-    localServeCount.incrementAndGet()
     val query = Ann.prepQuery(meta, query0)
     val l2 = meta.metricObj eq Metric.L2
     val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe

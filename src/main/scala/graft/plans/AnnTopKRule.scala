@@ -271,8 +271,6 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
           Join(rel, hitsNode, LeftSemi, Some(EqualTo(idKey, hitAttr)), JoinHint.NONE)
         case other => other.withNewChildren(other.children.map(injectJoin))
       }
-      logInfo(s"ANN top-k LAZY rewrite: index=${meta.name} k=$k fetchK=$fetchK " +
-        s"metric=$requiredMetric")
       return Some(injectJoin(child))
     }
 
@@ -290,8 +288,6 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case rel: LogicalRelation if rel eq lr => Filter(cond, rel)
       case other => other.withNewChildren(other.children.map(inject))
     }
-    logInfo(s"ANN top-k rewrite: index=${meta.name} k=$k fetchK=$fetchK " +
-      s"hits=${hits.length} metric=$requiredMetric")
     Some(inject(child))
   }
 

@@ -23,13 +23,10 @@ import org.apache.spark.sql.functions._
  * set-based stages (4/6) compute drop sets over the preceding stage's
  * survivors — sequential semantics, exactly how a curation run composes —
  * and come back as left joins keyed on the id. Every shuffle and every
- * driver collect is a primitive's own: above `spark.graft.text.localMaxBytes`
- * the set-based stages run their distributed plans (band buckets, df-capped
- * n-gram buckets), below it [[TextOps.jaccardPairs]] and
- * [[TextOps.contaminationCounts]] each collect one narrow projection and
- * finish on the driver, eagerly, while the pipeline is built. Nothing here
- * adds an all-pairs product, so the composition inherits the 100 TB story of
- * its parts.
+ * driver collect is a primitive's own ([[graft.core.Route]] picks each
+ * set-based stage's version; the driver-local ones run eagerly, while the
+ * pipeline is built). Nothing here adds an all-pairs product, so the
+ * composition inherits the 100 TB story of its parts.
  */
 object Curate {
 

@@ -47,6 +47,10 @@ import org.apache.spark.sql.types._
  */
 private[text] object SegmentedPack {
 
+  /** Largest token budget this engine composes (16M tokens): composing
+   *  collects up to one head-window entry per budget token per boundary. */
+  val MaxComposeBudget: Long = 16L * 1024 * 1024
+
   /** One group-run summary (first and/or last run of a partition). */
   private case class RunSum(part: Int, gNull: Boolean, g: String,
       isFirst: Boolean, isLast: Boolean, docs: Long, tokens: Long,

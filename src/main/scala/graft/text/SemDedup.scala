@@ -1,7 +1,7 @@
 package graft.text
 
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -164,22 +164,16 @@ object SemDedup {
 
     /** nprobe: 0 ⇒ auto (linear ≤ gate, else two-level with default probes);
      *  -1 ⇒ force linear; >0 ⇒ force two-level with that many probes. */
-    def build(centroids: Array[(Int, Array[Float])], nprobe: Int = 0): Assigner = {
+    def build(spark: SparkSession, centroids: Array[(Int, Array[Float])],
+        nprobe: Int = 0): Assigner = {
       val sorted = centroids.sortBy(_._1)
       val ids = sorted.map(_._1)
       val vecs = sorted.map(_._2)
-      val twoLevel = nprobe > 0 || (nprobe == 0 && vecs.length > TwoLevelGate)
-      // the auto gate used to engage SILENTLY — a reader of an artifact
-      // could not tell whether assignment scanned all k or probed √k cells;
-      // announce the engaged route once, at build time, on the driver
-      if (nprobe == 0 && twoLevel)
-        System.err.println(s"[semdedup] two-level assignment ENGAGED: " +
-          s"k=${vecs.length} > gate=$TwoLevelGate " +
-          s"(route=${assignRouteInfo(vecs.length, nprobe)})")
-      if (!twoLevel) Assigner(ids, vecs, null, null, 0)
+      val (route, kCoarse, np) = assignRouteInfo(vecs.length, nprobe)
+      graft.core.Route.post(spark, "semdedup.assign", route, vecs.length, TwoLevelGate)
+      if (route == "linear") Assigner(ids, vecs, null, null, 0)
       else {
         val normed = vecs.map(v => graft.core.VectorOps.normalize(v.clone()))
-        val kCoarse = math.max(1, math.ceil(math.sqrt(vecs.length.toDouble)).toInt)
         val coarse = graft.index.KMeansLite.train(normed, kCoarse)
         val members = Array.fill(coarse.length)(
           scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -190,25 +184,22 @@ object SemDedup {
         }
         // members ascend (fill order is ascending id) — the tie-break scan
         // inside a cell then visits lowest ids first, matching linear
-        val np = if (nprobe > 0) nprobe
-          else math.max(4, coarse.length / 8) // ~√k/8 cells ⇒ recall >> IVF default
         Assigner(ids, vecs, coarse, members.map(_.toArray), np)
       }
     }
   }
 
-  /** The assignment route the gate picks for `nCentroids` centroids at a
-   *  given `nprobe` knob — ("linear", 0, 0) or ("two-level", kCoarse,
-   *  nprobe) — from the SAME decision logic [[Assigner.build]] runs, so
-   *  audits (ScaleSmoke's semdedup counters, logs, specs) can report which
-   *  route engaged instead of inferring it. kCoarse/nprobe here are the
-   *  requested values; build's actuals can only be ≤ (KMeansLite may
-   *  return fewer cells than asked on degenerate data). */
+  /** The assignment route for `nCentroids` centroids at a given `nprobe`
+   *  knob — ("linear", 0, 0) or ("two-level", kCoarse, nprobe) — the one
+   *  decision [[Assigner.build]] takes (and posts as a `semdedup.assign`
+   *  [[graft.core.GraftRouteEvent]]), so audits (ScaleSmoke's semdedup
+   *  counters, specs) report which route engaged instead of inferring it. */
   def assignRouteInfo(nCentroids: Int, nprobe: Int = 0): (String, Int, Int) = {
     val twoLevel = nprobe > 0 || (nprobe == 0 && nCentroids > Assigner.TwoLevelGate)
     if (!twoLevel) ("linear", 0, 0)
     else {
       val kCoarse = math.max(1, math.ceil(math.sqrt(nCentroids.toDouble)).toInt)
+      // ~√k/8 cells ⇒ recall >> IVF default
       val np = if (nprobe > 0) nprobe else math.max(4, kCoarse / 8)
       ("two-level", kCoarse, np)
     }
@@ -222,7 +213,7 @@ object SemDedup {
   def assign(df: DataFrame, vecCol: String, idCol: String,
       centroids: Array[(Int, Array[Float])], assignNprobe: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(Assigner.build(centroids, assignNprobe))
+    val bc = spark.sparkContext.broadcast(Assigner.build(spark, centroids, assignNprobe))
     val in = df.select(col(idCol).cast(LongType).as("id"),
       toFloatVec(col(vecCol)).as("v"))
     val outSchema = StructType(Seq(StructField("id", LongType),
@@ -298,7 +289,7 @@ object SemDedup {
       centroids: Array[(Int, Array[Float])], threshold: Double,
       assignNprobe: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(Assigner.build(centroids, assignNprobe))
+    val bc = spark.sparkContext.broadcast(Assigner.build(spark, centroids, assignNprobe))
     val in = df.select(col(idCol).cast(LongType).as("id"),
       toFloatVec(col(vecCol)).as("v"))
     val outSchema = StructType(Seq(StructField("id", LongType),

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Route
 
 /**
  * Text-analysis + near-duplicate operators for large-scale training-data
@@ -14,12 +15,8 @@ import org.apache.spark.sql.types._
  * and compiled text kernels — whole-stage-codegen'd, no UDFs. Their near-dup
  * shuffles are the LSH band-bucket exchanges, the 100 TB-safe shape
  * (candidates per band bucket, never an all-pairs product). Small inputs take
- * driver-local routes instead: below one scan-size gate
- * (`spark.graft.text.localMaxBytes`, see [[localMaxBytes]]) [[rareTerms]],
- * the n-gram pair ops and [[jaccardPairs]] collect one narrow projection and
- * finish on the driver, and [[connectedComponents]] resolves small edge sets
- * with a driver union-find. Each driver route evaluates the same kernels and
- * gives the distributed plan's answer.
+ * the driver-local versions [[graft.core.Route]] picks: one narrow collect
+ * finished on the driver, or a driver union-find for [[connectedComponents]].
  *
  * All hashing is modular integer arithmetic (base/mod constants below), so
  * results are engine-independent and bit-exactly reproducible in the DuckDB
@@ -384,12 +381,10 @@ object TextOps {
   def rareTerms(df: DataFrame, textCol: String, idCol: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val termCounts = termCountsCol(col(textCol))
-    // size-gated driver route (same pattern as ngramPostingsLocal): one
-    // narrow job evaluates the SAME fused TermCounts expression, the
-    // vocabulary-sized df/rank bookkeeping runs on the driver. Distributed
-    // fallback below is the 100 TB path.
+    // driver route: one narrow job evaluates the SAME fused TermCounts
+    // expression, the df/rank bookkeeping runs on the driver
     val projected = df.select(col(idCol), col(textCol))
-    if (scanBoundedSizeEstimate(projected) <= localMaxBytes(df.sparkSession))
+    if (Route.local(df.sparkSession, "text.rareTerms", scanBoundedSizeEstimate(projected)))
       return rareTermsLocal(projected, idCol, k)
     // fused per-doc term counting: the token explosion never materializes
     // and (doc, term) needs no shuffle — the explode below is partition-local
@@ -715,17 +710,16 @@ object TextOps {
    *  pairs (dedupVsCorpus's frame flag) gets it for free instead of
    *  re-joining the corpus onto the pair table afterwards.
    *
-   *  Route: when the signature projection's scan estimate is at or under
-   *  [[localMaxBytes]], ONE narrow job collects (id, shingles, bands, carry)
-   *  and the driver buckets, pairs ([[bucketPartners]]' clique / chain+anchor
-   *  rule and knobs), counts `n_bands` and verifies with the same sorted merge;
-   *  the result is a LocalRelation with the distributed schema, built eagerly
-   *  when this is called. Above the gate the distributed plan below runs: one
-   *  window exchange on the band bucket, one `groupBy` on the pair and two
-   *  sort-merge verify joins. The driver route falls back to that plan for an
-   *  id type other than BYTE/SHORT/INT/BIGINT (the driver orders ids as
-   *  longs) and for null or duplicated ids (the window and joins treat those
-   *  differently); rows with NULL text form no pair on either route. */
+   *  Driver route: ONE narrow job collects (id, shingles, bands, carry) and
+   *  the driver buckets, pairs ([[bucketPartners]]' clique / chain+anchor
+   *  rule and knobs), counts `n_bands` and verifies with the same sorted
+   *  merge into an eager LocalRelation. Distributed: one window exchange on
+   *  the band bucket, one `groupBy` on the pair and two sort-merge verify
+   *  joins. The driver route falls back to that plan for an id type other
+   *  than BYTE/SHORT/INT/BIGINT (the driver orders ids as longs; no route
+   *  event) and, after its event read local, for null or duplicated ids (the
+   *  window and joins treat those differently); rows with NULL text form no
+   *  pair on either route. */
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, minJaccard: Double = 0.0,
       carry: Seq[(String, Column)] = Nil): DataFrame = {
@@ -786,7 +780,8 @@ object TextOps {
       case ByteType | ShortType | IntegerType | LongType =>
       case _ => return None
     }
-    if (scanBoundedSizeEstimate(projected) > localMaxBytes(spark)) return None
+    if (!Route.local(spark, "text.jaccardPairs", scanBoundedSizeEstimate(projected)))
+      return None
     val rows = GraftShim.collectInternal(projected)
     if (rows.exists(_.isNullAt(0))) return None
     val ids = rows.map(_.get(0, idType).asInstanceOf[Number].longValue)
@@ -1162,20 +1157,14 @@ object TextOps {
    * an IllegalStateException instead of returning a partial labelling.
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    val spark = pairs.sparkSession
-    // auto-route: dedup edge sets are usually tiny relative to the corpus
-    // (they are the near-DUPLICATE pairs). Below the threshold a driver
-    // union-find resolves them in microseconds instead of 3 Spark jobs per
-    // propagation round; above it the distributed loop takes over.
-    val maxLocalEdges = spark.conf
-      .getOption("spark.graft.dedup.localCcMaxEdges").map(_.toLong)
-      .getOrElse(10000000L)
-    // persist around the routing count: the upstream pair plan (LSH verify
-    // or the pairwise similarity job) must not run once for the count and
-    // again for the route
+    // dedup edge sets are usually tiny (near-DUPLICATE pairs): a driver
+    // union-find over the two collected longs per edge beats 3 Spark jobs
+    // per propagation round. Persist around the routing count, so the
+    // upstream pair plan does not run once for the count and again after.
     val cached = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (cached.count() <= maxLocalEdges) connectedComponentsLocal(cached)
+      if (Route.local(pairs.sparkSession, "text.cc", BigInt(cached.count()) * 16))
+        connectedComponentsLocal(cached)
       else connectedComponentsLoop(cached, maxIter) // loop runs eagerly
     } finally cached.unpersist(blocking = false)
   }
@@ -1394,28 +1383,14 @@ object TextOps {
     plan.stats.sizeInBytes.min(bound(plan))
   }
 
-  /** The one size gate of every driver-local text route ([[rareTerms]],
-   *  [[ngramDupPairs]], [[contaminationCounts]], [[jaccardPairs]]):
-   *  `spark.graft.text.localMaxBytes`, default 64 MB of scan input
-   *  ([[scanBoundedSizeEstimate]]), the same auto-route family as ExactServe
-   *  and the local connected-components union-find. Below it, the driver-side
-   *  state fits trivially and a shuffle's fixed cost dominates end-to-end
-   *  latency, so the route collects ONE narrow (shuffle-free) projection and
-   *  finishes on the driver; above it, the distributed plan takes over.
-   *  Results are identical on both routes, because the narrow job evaluates
-   *  the same kernels. Set it to 0 to force every distributed route. */
-  private[text] def localMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.text.localMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-
   /** Driver-local n-gram posting map: `ngram → distinct ids` (insertion
    *  capped at dfMax+1 — saturated n-grams are dropped like the distributed
-   *  route's sentinel), or None when the input's estimated scan size exceeds
-   *  the local gate. `flagCol` (a per-id boolean, e.g. an eval-split
-   *  predicate) rides along in the SAME narrow job so callers get its value
-   *  per id without a second Spark action — and with exactly the
-   *  distributed route's predicate semantics. */
-  private def ngramPostingsLocal(df: DataFrame, textCol: String, idCol: String,
+   *  route's sentinel), or None when [[graft.core.Route]] sends `op`
+   *  distributed. `flagCol` (a per-id boolean, e.g. an eval-split predicate)
+   *  rides along in the SAME narrow job so callers get its value per id
+   *  without a second Spark action — and with exactly the distributed
+   *  route's predicate semantics. */
+  private def ngramPostingsLocal(op: String, df: DataFrame, textCol: String, idCol: String,
       n: Int, dfMax: Int, flagCol: Option[Column] = None):
       Option[(java.util.HashMap[String, java.util.LinkedHashSet[java.lang.Long]],
         java.util.HashMap[java.lang.Long, java.lang.Boolean])] = {
@@ -1423,7 +1398,7 @@ object TextOps {
       ngramsOfTextCol(col(textCol), n).as("ngrams")) ++
       flagCol.map(_.as("flag"))
     val projected = df.select(cols: _*)
-    if (scanBoundedSizeEstimate(projected) > localMaxBytes(df.sparkSession)) return None
+    if (!Route.local(df.sparkSession, op, scanBoundedSizeEstimate(projected))) return None
     val cap = dfMax + 1
     val map = new java.util.HashMap[String, java.util.LinkedHashSet[java.lang.Long]]()
     val flags = new java.util.HashMap[java.lang.Long, java.lang.Boolean]()
@@ -1490,7 +1465,7 @@ object TextOps {
   def ngramDupPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int = 5, minShared: Int = 3, dfMax: Int = 50): DataFrame = {
     val spark = df.sparkSession
-    ngramPostingsLocal(df, textCol, idCol, n, dfMax) match {
+    ngramPostingsLocal("text.ngramDupPairs", df, textCol, idCol, n, dfMax) match {
       case Some((map, _)) =>
         val counts = new java.util.HashMap[(Long, Long), Long]()
         keptPostings(map, dfMax).foreach { ids =>
@@ -1535,7 +1510,7 @@ object TextOps {
   def contaminationCounts(df: DataFrame, textCol: String, idCol: String,
       evalPred: Column => Column, n: Int = 5, dfMax: Int = 50): DataFrame = {
     val spark = df.sparkSession
-    ngramPostingsLocal(df, textCol, idCol, n, dfMax,
+    ngramPostingsLocal("text.contaminationCounts", df, textCol, idCol, n, dfMax,
         flagCol = Some(evalPred(col(idCol).cast(LongType)))) match {
       case Some((map, flags)) =>
         import scala.jdk.CollectionConverters._
@@ -1671,27 +1646,17 @@ object TextOps {
    * chains across ranges with a binary search per boundary. Deterministic
    * on any partition layout; pure integer arithmetic.
    *
-   * Routing (both routes spec-pinned bit-identical): inputs whose
-   * scan-bounded plan estimate is under `spark.graft.pack.serialMaxBytes`
-   * (default 64 MB; 0 forces segmented) take the SERIAL one-shuffle scan —
-   * at toy scale the segmented engine's range sampling + composition
-   * passes are pure fixed cost, and a 64 MB corpus has no straggler
-   * problem a single task can't absorb. A budget above
-   * `spark.graft.pack.maxComposeBudget` (default 16M tokens) also falls
-   * back to the serial scan, whose boundary "head windows" the
-   * composition would otherwise have to collect (up to one entry per
-   * token of budget per boundary).
+   * Small inputs ([[graft.core.Route]]; both routes spec-pinned
+   * bit-identical) take the SERIAL one-shuffle scan: at toy scale the
+   * segmented passes are pure fixed cost. So does a budget above
+   * [[SegmentedPack.MaxComposeBudget]], without a route decision.
    */
   def packSequences(df: DataFrame, textCol: String, idCol: String,
       groupCol: String, budget: Long): DataFrame = {
-    val spark = df.sparkSession
     require(budget > 0, "token budget must be positive")
     val counted = countedForPack(df, textCol, idCol, groupCol)
-    val maxCompose = spark.conf.getOption("spark.graft.pack.maxComposeBudget")
-      .map(_.toLong).getOrElse(16L * 1024 * 1024)
-    val serialMax = spark.conf.getOption("spark.graft.pack.serialMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    if (budget > maxCompose || scanBoundedSizeEstimate(df) <= serialMax)
+    if (budget > SegmentedPack.MaxComposeBudget ||
+        Route.local(df.sparkSession, "text.pack", scanBoundedSizeEstimate(df)))
       packSequencesSerial(counted, budget, groupCol, idCol)
     else SegmentedPack.pack(counted, budget, groupCol, idCol)
   }

@@ -65,8 +65,8 @@ object AnnScaleSmoke {
     val stages = new StageStats
     spark.sparkContext.addSparkListener(stages)
     // the smoke must take the DISTRIBUTED serving routes, not driver-local
-    // fast paths sized for interactive small indexes
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    // fast paths, until the serve-latency section measures the local graph
+    spark.conf.set("spark.graft.localMaxBytes", "0")
 
     // ---- corpus: deterministic, generated in parallel, persisted once ----
     val path = s"$workDir/embeddings.parquet"
@@ -713,6 +713,7 @@ object AnnScaleSmoke {
     // (Ann.search end-to-end, which adds the fetch-back Spark job).
     val qs200 = queries.orderBy("qid").limit(200).collect()
       .map(_.getSeq[Float](1).toArray)
+    spark.conf.unset("spark.graft.localMaxBytes")
     def pct(sorted: Array[Double], p: Double): Double =
       sorted(math.min(sorted.length - 1, math.round(p * (sorted.length - 1)).toInt))
     if (onlyOps.forall(o => o("latency_search_200q") || o("latency_e2e_200q")))

@@ -57,10 +57,8 @@ object ScaleSmoke {
 
     // force every driver-local fast path OFF — this smoke tests the
     // distributed routes that a 100 TB deployment would take
-    spark.conf.set("spark.graft.text.localMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     spark.conf.set("spark.graft.neardup.broadcastMaxBytes", "0")
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
-    spark.conf.set("spark.graft.pack.serialMaxBytes", "0") // segmented route
 
     val ops = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Any]]
     // SPARK_GRAFT_SCALE_SKIP=a,b skips named ops: the 300× octave runs

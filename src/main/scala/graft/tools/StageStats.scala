@@ -4,12 +4,14 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import graft.core.GraftRouteEvent
 
 /**
  * Per-stage task statistics from the listener bus, shared by `Profile` and
  * the scale smokes: successful tasks per stage, stage wall time, summed
  * executor run time, scheduler delay, shuffle read/write bytes, spill bytes
- * and GC time, plus the task-skew pair the smokes report. `clear()` starts
+ * and GC time, plus the task-skew pair the smokes report and the
+ * [[graft.core.GraftRouteEvent]]s posted in the window. `clear()` starts
  * a new window; `drain()` waits until the events of work already run have
  * arrived. `SPARK_GRAFT_STAGE_DETAIL=1` prints every skew-qualifying stage
  * to stderr.
@@ -17,6 +19,7 @@ import org.apache.spark.scheduler._
 final class StageStats extends SparkListener {
   import StageStats._
   private val ends = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+  private val routeEvents = new ConcurrentLinkedQueue[GraftRouteEvent]()
   private val wallMs = new ConcurrentHashMap[Int, java.lang.Long]()
   private val markerStages = ConcurrentHashMap.newKeySet[Int]()
   private val markerJobs = new ConcurrentHashMap[Int, java.lang.Long]()
@@ -41,7 +44,15 @@ final class StageStats extends SparkListener {
       wallMs.put(i.stageId, c - s)
   }
 
-  def clear(): Unit = { ends.clear(); wallMs.clear() }
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case r: GraftRouteEvent => routeEvents.add(r)
+    case _ =>
+  }
+
+  def clear(): Unit = { ends.clear(); wallMs.clear(); routeEvents.clear() }
+
+  /** This window's route decisions, in posting order. */
+  def routes: Seq[GraftRouteEvent] = routeEvents.asScala.toSeq
 
   /** Block until the listener has seen every event posted before this call:
    *  run a one-task marker job and wait for its end event (the bus delivers

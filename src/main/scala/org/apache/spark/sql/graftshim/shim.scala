@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -16,11 +17,14 @@ import org.apache.spark.sql.util.ArrowUtils
 /** Bridge into Spark's `private[sql]` Column<->Expression converters (Spark 4
  *  moved Column onto ColumnNode; extensions conventionally shim into the sql
  *  package for this), the Arrow row<->batch converters Spark's own Python
- *  path runs on, and InternalRow-level collect / LocalRelation construction.
+ *  path runs on, InternalRow-level collect / LocalRelation construction, and
+ *  the `private[spark]` listener bus.
  *  Keep this the ONLY file outside the graft namespace. */
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def post(spark: SparkSession, e: SparkListenerEvent): Unit =
+    spark.sparkContext.listenerBus.post(e)
 
   /** Rows → encapsulated Arrow IPC RecordBatch messages (the byte format
    *  pyspark's toPandas/mapInArrow consume). errorOnDuplicatedFieldNames on,

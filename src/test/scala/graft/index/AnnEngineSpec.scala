@@ -72,7 +72,7 @@ class AnnEngineSpec extends AnyFunSuite {
     assert(after.nonEmpty && !after.exists(deleted.contains))
   }
 
-  test("localSearchMaxShards=0 (distributed graph job) == driver-local search") {
+  test("localMaxBytes=0 (distributed graph job) == driver-local search") {
     for (engine <- Seq("diskann", "hnsw")) {
       val name = s"e_route_$engine"
       Ann.buildIndex(emb, "embedding", "vec_id", name,
@@ -81,11 +81,11 @@ class AnnEngineSpec extends AnyFunSuite {
       Ann.delete(spark, name, all.indices.filter(_ % 7 == 0).map(all(_)._1))
       val queries = all.indices.filter(_ % 25 == 1).map(all(_)._2)
       val local = queries.map(q => hits(name, q, 10))
-      spark.conf.set("spark.graft.ann.localSearchMaxShards", "0")
+      spark.conf.set("spark.graft.localMaxBytes", "0")
       try {
         val distributed = queries.map(q => hits(name, q, 10))
         assert(distributed == local, engine)
-      } finally spark.conf.unset("spark.graft.ann.localSearchMaxShards")
+      } finally spark.conf.unset("spark.graft.localMaxBytes")
     }
   }
 

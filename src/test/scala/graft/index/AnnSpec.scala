@@ -319,8 +319,8 @@ class AnnSpec extends AnyFunSuite {
     // lookup keeps the direct cluster-pruned scan.
     Ann.buildIndex(emb, "embedding", "vec_id", "t_ivf_rb",
       Ann.BuildParams(engine = "ivfflat", nlist = 8, nprobe = 2))
-    val prevLocal = spark.conf.getOption("spark.graft.ann.localExactMaxBytes")
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    val prevLocal = spark.conf.getOption("spark.graft.localMaxBytes")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       import spark.implicits._
       def qBatch(n: Int) = emb.orderBy("vec_id").limit(n)
@@ -338,8 +338,8 @@ class AnnSpec extends AnyFunSuite {
         "8-query lookup must keep the direct cluster-pruned scan")
     } finally {
       prevLocal match {
-        case Some(v) => spark.conf.set("spark.graft.ann.localExactMaxBytes", v)
-        case None => spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+        case Some(v) => spark.conf.set("spark.graft.localMaxBytes", v)
+        case None => spark.conf.unset("spark.graft.localMaxBytes")
       }
     }
   }

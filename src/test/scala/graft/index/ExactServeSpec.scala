@@ -1,9 +1,10 @@
 package graft.index
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{GraftRouteEvent, Route}
 
 /** Driver-local serving for small exact/quantized indexes must be
  *  bit-identical to the distributed scan, job-free once warm, and
@@ -35,9 +36,9 @@ class ExactServeSpec extends AnyFunSuite {
       Ann.buildIndex(emb, "embedding", "vec_id", name,
         Ann.BuildParams(engine = engine, nlist = 4, nprobe = 4, pqM = 8,
           refine = refine))
-      spark.conf.set("spark.graft.ann.localExactMaxBytes", "0") // force job path
+      spark.conf.set("spark.graft.localMaxBytes", "0") // force job path
       val viaJob = hits(name, 7, over = 2)
-      spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+      spark.conf.unset("spark.graft.localMaxBytes")
       val local = hits(name, 7, over = 2)
       assert(local == viaJob,
         s"$engine refine=$refine: local route diverged from the scan")
@@ -47,16 +48,20 @@ class ExactServeSpec extends AnyFunSuite {
   test("warm cache serves with no Spark job") {
     hits("t_srv_flat", 5) // warm
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val routes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case r: GraftRouteEvent => routes.add(r.route)
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val before = ExactServe.localServeCount.get()
       val r = hits("t_srv_flat", 5)
       assert(r.length == 5)
-      assert(ExactServe.localServeCount.get() == before + 1, "must use the local route")
       Thread.sleep(500) // listener bus is async
+      assert(routes.toArray.toSeq == Seq(Route.Local), "must use the local route")
       assert(jobs.get() == 0, s"warm local serving launched ${jobs.get()} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -90,7 +90,7 @@ class IvfHnswSpec extends AnyFunSuite {
     val coarse = Ann.coarseProbe(spark, meta)
     val probes = Ann.selectProbes(cents, 0, q0, 4, coarse).toSet
     // distributed route
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     val dist = Ann.search(emb, "vec_id", "ivfh_probe", q0, 10)
       .select("vec_id", "_distance").collect()
       .map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -108,12 +108,12 @@ class IvfHnswSpec extends AnyFunSuite {
     }.sortBy(t => (t._2, t._1)).take(10).map(t => (t._1, t._2.toFloat)).toSeq
     assert(dist == want)
     // job-free route answers identically (same CoarseProbe selection)
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", (64L << 20).toString)
+    spark.conf.set("spark.graft.localMaxBytes", (64L << 20).toString)
     val local = Ann.search(emb, "vec_id", "ivfh_probe", q0, 10)
       .select("vec_id", "_distance").collect()
       .map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(local == dist)
-    spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+    spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("append assigns against frozen centroids; graph keeps serving the union") {

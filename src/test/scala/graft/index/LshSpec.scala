@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.LshCodec
+import graft.core.{LshCodec, Route, RouteParity}
 
 /** Pins the LSH engine (FAISS IndexLSH analog, factory `LSH[nbits]`):
  *  factory grammar (including the unsupported-form error naming the
@@ -157,14 +157,14 @@ class LshSpec extends AnyFunSuite {
 
   /** Run `body` with the serve budget pinned to `bytes`, restoring whatever
    *  the shared session had before — suites share one SparkSession, and
-   *  TombstoneScaleSpec's builder leaves localExactMaxBytes=0 behind. */
+   *  a suite may leave the gate set. */
   private def withServeBudget[A](bytes: Long)(body: => A): A = {
-    val prev = spark.conf.getOption("spark.graft.ann.localExactMaxBytes")
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", bytes.toString)
+    val prev = spark.conf.getOption("spark.graft.localMaxBytes")
+    spark.conf.set("spark.graft.localMaxBytes", bytes.toString)
     try body
     finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.ann.localExactMaxBytes", v)
-      case None => spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+      case Some(v) => spark.conf.set("spark.graft.localMaxBytes", v)
+      case None => spark.conf.unset("spark.graft.localMaxBytes")
     }
   }
 
@@ -173,11 +173,10 @@ class LshSpec extends AnyFunSuite {
     val served = withServeBudget(64L << 20) {
       val meta = IndexCatalog.load(Ann.root(spark), "lsh_sv")
       assert(ExactServe.eligible(spark, meta), "small lsh index should be servable")
-      val before = ExactServe.localServeCount.get()
-      val s = Ann.search(emb, "vec_id", "lsh_sv", q0, 10)
+      val (s, routes) = RouteParity.routed(spark)(Ann.search(emb, "vec_id", "lsh_sv", q0, 10)
         .select("vec_id", "_distance").collect()
-        .map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(ExactServe.localServeCount.get() > before,
+        .map(r => (r.getLong(0), r.getFloat(1))).toSeq)
+      assert(routes.map(r => (r.op, r.route)) == Seq(("ann.exact", Route.Local)),
         "search did not take the driver-local route")
       s
     }
@@ -267,9 +266,9 @@ class LshSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getFloat(1).toInt)).toSeq
     assert(got() == want)
     // force the distributed Hamming scan (summed per-word popcount columns)
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try assert(got() == want)
-    finally spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+    finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("LSH256rt: padded rotation (nbits > dim) is norm-preserving and the " +

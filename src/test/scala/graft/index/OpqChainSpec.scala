@@ -156,11 +156,11 @@ class OpqChainSpec extends AnyFunSuite {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "oc_srv_r",
       "OPQ8,PQ8,RFlat", Ann.BuildParams(seedK = 16, refineK = 4))
     for (nm <- Seq("oc_srv", "oc_srv_r")) {
-      spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+      spark.conf.set("spark.graft.localMaxBytes", "0")
       val dist = Ann.search(emb, "vec_id", nm, q0, 10)
         .select("vec_id", "_distance").collect()
         .map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      spark.conf.set("spark.graft.ann.localExactMaxBytes", (64L << 20).toString)
+      spark.conf.set("spark.graft.localMaxBytes", (64L << 20).toString)
       val meta = IndexCatalog.load(Ann.root(spark), nm)
       assert(ExactServe.eligible(spark, meta), s"$nm should be job-free eligible")
       val local = Ann.search(emb, "vec_id", nm, q0, 10)
@@ -168,7 +168,7 @@ class OpqChainSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(local == dist, s"$nm job-free route diverged")
     }
-    spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+    spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("cosine OPQ chain: append encodes identically to the build (rotate THEN normalize)") {

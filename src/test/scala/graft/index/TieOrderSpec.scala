@@ -82,12 +82,12 @@ class TieOrderSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(hits == want, s"searchHits: $hits != $want")
     // distributed scan route too (ExactServe off)
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val dist = Ann.search(df, "vec_id", "tie_flat", q, rows.length)
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(dist == want, s"distributed search: $dist != $want")
-    } finally spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("searchBatch presents (f32 distance, id) order after the double cut") {

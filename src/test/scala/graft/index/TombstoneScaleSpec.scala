@@ -18,9 +18,6 @@ class TombstoneScaleSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .config("spark.graft.ann.root", s"/tmp/graft-tomb-scale-${System.nanoTime()}")
-    // force the distributed scan paths (the sites under test); the
-    // driver-local ExactServe cache filters via Set already
-    .config("spark.graft.ann.localExactMaxBytes", "0")
     .getOrCreate()
   locally { spark.sparkContext.setLogLevel("ERROR") }
 
@@ -35,6 +32,14 @@ class TombstoneScaleSpec extends AnyFunSuite {
   /** 100k tombstones: a few real ids + synthetic ids beyond the corpus. */
   private def bigTomb(realIds: Seq[Long]): Seq[Long] =
     realIds ++ (10000000L until 10100000L)
+
+  /** Runs `body` on the distributed scan paths (the sites under test; the
+   *  driver-local ExactServe cache filters via Set already). Set and unset
+   *  here, not on the builder: suites share one session. */
+  private def distributed[A](body: => A): A = {
+    spark.conf.set("spark.graft.localMaxBytes", "0")
+    try body finally spark.conf.unset("spark.graft.localMaxBytes")
+  }
 
   /** Every expression in every node of the analyzed plan. */
   private def allExprs(df: DataFrame) =
@@ -56,7 +61,7 @@ class TombstoneScaleSpec extends AnyFunSuite {
     assert(bigDf.collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
-  test("flat search stays exact with 100k tombstones (distributed scan)") {
+  test("flat search stays exact with 100k tombstones (distributed scan)") (distributed {
     import graft.functions._
     Ann.buildIndex(emb, "embedding", "vec_id", "tomb_flat",
       Ann.BuildParams(engine = "flat"))
@@ -69,9 +74,9 @@ class TombstoneScaleSpec extends AnyFunSuite {
     val got = Ann.search(emb, "vec_id", "tomb_flat", q0, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(got == top13.drop(3), "post-delete top-10 = pre-delete top-13 minus deleted")
-  }
+  })
 
-  test("ivfpq search excludes 100k tombstones without plan blow-up") {
+  test("ivfpq search excludes 100k tombstones without plan blow-up") (distributed {
     Ann.buildIndex(emb, "embedding", "vec_id", "tomb_ivfpq",
       Ann.BuildParams(engine = "ivfpq", pqM = 4, nlist = 8, nprobe = 8,
         trainSample = 500))
@@ -84,7 +89,7 @@ class TombstoneScaleSpec extends AnyFunSuite {
     val got = Ann.search(emb, "vec_id", "tomb_ivfpq", q0, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(got == pre.drop(3))
-  }
+  })
 
   test("rangeSearch plan carries InSet, not 100k literals") {
     import graft.functions._

@@ -27,7 +27,7 @@ class IvfSqPlanSpec extends AnyFunSuite {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "isq_plan", "IVF8,SQ8",
       Ann.BuildParams(nprobe = 2))
     // force the distributed scan (ExactServe would hide the plan)
-    spark.conf.set("spark.graft.ann.localExactMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val df = Ann.indexScan(spark, "isq_plan", q0, 5)
       val plan = df.queryExecution.executedPlan.toString
@@ -38,6 +38,6 @@ class IvfSqPlanSpec extends AnyFunSuite {
       val read = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
       assert(read.contains("id") && read.contains("code") && !read.contains("vec"),
         s"scan reads more than (id, code): $read")
-    } finally spark.conf.unset("spark.graft.ann.localExactMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 }

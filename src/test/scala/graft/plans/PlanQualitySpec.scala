@@ -190,9 +190,9 @@ class PlanQualitySpec extends AnyFunSuite {
         "pack_sequences" -> TextOps.packSequences(docs, "text", "doc_id", "lang", 256L),
         "hashed_tf" -> docs.select(explode(TextOps.hashedTf(col("text"), 64))),
         "rare_terms_dist" -> {
-          spark.conf.set("spark.graft.text.localMaxBytes", "0")
+          spark.conf.set("spark.graft.localMaxBytes", "0")
           try TextOps.rareTerms(docs, "text", "doc_id", 3)
-          finally spark.conf.unset("spark.graft.text.localMaxBytes")
+          finally spark.conf.unset("spark.graft.localMaxBytes")
         })) {
       val pl = plan(df)
       assert(!pl.contains("CartesianProduct"), s"$name went cartesian:\n$pl")
@@ -203,10 +203,10 @@ class PlanQualitySpec extends AnyFunSuite {
     // frame, so count ShuffleDependency in the RDD lineage, not Exchange
     // nodes in the SQL plan. (The size gate would route this toy corpus
     // serial — force the segmented engine, the one under test.)
-    spark.conf.set("spark.graft.pack.serialMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     val packRdd =
       try TextOps.packSequences(docs, "text", "doc_id", "lang", 256L).rdd
-      finally spark.conf.unset("spark.graft.pack.serialMaxBytes")
+      finally spark.conf.unset("spark.graft.localMaxBytes")
     def countShuffles(r: org.apache.spark.rdd.RDD[_],
         seen: scala.collection.mutable.Set[Int]): Int =
       if (!seen.add(r.id)) 0

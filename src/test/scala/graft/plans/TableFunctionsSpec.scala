@@ -416,7 +416,7 @@ class TableFunctionsSpec extends AnyFunSuite {
     // force the distributed n-gram fallback: the SQL eval predicate must be
     // a genuine function of the id (applied to HOF element variables), not
     // a captured column reference
-    spark.conf.set("spark.graft.text.localMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val sql = spark.sql(
         "SELECT * FROM contamination_counts('docs', 'text', 'doc_id', 'doc_id % 5 = 0') ORDER BY id")
@@ -425,7 +425,7 @@ class TableFunctionsSpec extends AnyFunSuite {
           spark.table("docs"), "text", "doc_id", id => id % 5 === 0)
         .orderBy("id").collect().map(_.toSeq).toSeq
       assert(sql == scala && sql.nonEmpty)
-    } finally spark.conf.unset("spark.graft.text.localMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("ann_recall: flat index measures 1.0, diskann clears the floor") {

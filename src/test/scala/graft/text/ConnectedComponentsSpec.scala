@@ -21,7 +21,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
     val edge = Seq((7L, 8L)).toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.dedup.localCcMaxEdges", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val e = intercept[IllegalStateException](
         TextOps.connectedComponents(chain, maxIter = 1).collect())
@@ -31,6 +31,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val labels = TextOps.connectedComponents(edge, maxIter = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(labels == Seq((7L, 7L), (8L, 7L)))
-    } finally spark.conf.unset("spark.graft.dedup.localCcMaxEdges")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 }

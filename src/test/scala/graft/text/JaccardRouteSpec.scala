@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Route-forced parity for [[TextOps.jaccardPairs]]: the driver-local route
-  * (default `spark.graft.text.localMaxBytes`) must give the distributed
+  * (default `spark.graft.localMaxBytes`) must give the distributed
   * plan's answer (`localMaxBytes = 0`) row for row — pair set, `n_bands`,
   * `jaccard` bits and carried columns — on planted cliques and chains, one
   * bucket over every cap, a NULL-text row, INT and LONG ids, every cap
@@ -21,7 +21,7 @@ class JaccardRouteSpec extends AnyFunSuite {
     s
   }
 
-  private val Gate = "spark.graft.text.localMaxBytes"
+  private val Gate = "spark.graft.localMaxBytes"
   private val Cap = "spark.graft.neardup.bucketCliqueCap"
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {

@@ -16,9 +16,6 @@ class PackSequencesSkewSpec extends AnyFunSuite {
       .master("local[4]")
       // small ranges on purpose: groups MUST cross partition boundaries
       .config("spark.sql.shuffle.partitions", "7")
-      // force the SEGMENTED route (the size gate would send these toy
-      // corpora down the serial path, which is the parity REFERENCE here)
-      .config("spark.graft.pack.serialMaxBytes", "0")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
@@ -31,7 +28,12 @@ class PackSequencesSkewSpec extends AnyFunSuite {
       .sortBy(t => (Option(t._1).getOrElse(""), t._2)).toSeq
 
   private def parity(docs: DataFrame, budget: Long): Unit = {
-    val seg = collectPack(TextOps.packSequences(docs, "text", "doc_id", "g", budget))
+    // force the SEGMENTED route (the size gate would send these toy corpora
+    // down the serial path, which is the parity REFERENCE here); set per
+    // call, not on the builder, because suites share one session
+    spark.conf.set("spark.graft.localMaxBytes", "0")
+    val seg = try collectPack(TextOps.packSequences(docs, "text", "doc_id", "g", budget))
+      finally spark.conf.unset("spark.graft.localMaxBytes")
     val counted = TextOps.countedForPack(docs, "text", "doc_id", "g")
     val ser = collectPack(TextOps.packSequencesSerial(counted, budget, "g", "doc_id"))
     assert(seg == ser, s"segmented != serial at budget=$budget\n" +
@@ -104,8 +106,6 @@ class PackSequencesSkewSpec extends AnyFunSuite {
     val rows = (0L until 100L).map(i =>
       ("g", i, Seq.fill((i % 5).toInt)("w").mkString(" ")))
     val docs = mkDocs(rows)
-    spark.conf.set("spark.graft.pack.maxComposeBudget", "10")
-    try parity(docs, budget = 50L) // 50 > 10 -> serial route
-    finally spark.conf.unset("spark.graft.pack.maxComposeBudget")
+    parity(docs, budget = SegmentedPack.MaxComposeBudget + 1) // -> serial route
   }
 }

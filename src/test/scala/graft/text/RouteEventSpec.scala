@@ -1,0 +1,156 @@
+package graft.text
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{GraftRouteEvent, Route, RouteParity}
+import graft.index.{Ann, IndexCatalog}
+
+/** Every routed call posts exactly one [[GraftRouteEvent]] naming its op,
+ *  the route it took, its estimate and the limit it was held to. (In the
+ *  text package so the text estimates can be recomputed here.) */
+class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private val work = Files.createTempDirectory("graft-route-events").toFile
+
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.graft.ann.root", s"$work/indexes")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  override def afterAll(): Unit = IndexCatalog.deleteTree(work.getPath)
+
+  private val Gate = "spark.graft.localMaxBytes"
+  private val Default = 64L << 20
+  private val Dim = 16
+
+  private def events[A](body: => A): Seq[GraftRouteEvent] = RouteParity.routed(spark)(body)._2
+
+  private def withGate[A](v: String)(body: => A): A = {
+    spark.conf.set(Gate, v)
+    try body finally spark.conf.unset(Gate)
+  }
+
+  /** 500 16-d vectors, ids 0..499, as a parquet table. */
+  private lazy val emb: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val r = new scala.util.Random(3)
+    (0 until 500).map(i => (i.toLong, Seq.fill(Dim)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").repartition(2).write.parquet(s"$work/embeddings")
+    spark.read.parquet(s"$work/embeddings")
+  }
+
+  private lazy val q: Array[Float] = Array.tabulate(Dim)(i => (i % 5) / 5.0f)
+
+  /** 500 documents of 10 words from a 300-word vocabulary in 3 languages;
+   *  every fifth repeats its predecessor with one word changed. */
+  private lazy val docs: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val r = new scala.util.Random(9)
+    val texts = new Array[String](500)
+    for (i <- texts.indices) texts(i) =
+      if (i % 5 == 1) texts(i - 1).split(' ').init.mkString(" ") + s" w${r.nextInt(300)}"
+      else Seq.fill(10)(s"w${r.nextInt(300)}").mkString(" ")
+    texts.toSeq.zipWithIndex.map { case (t, i) => (i.toLong, t, s"l${i % 3}") }
+      .toDF("doc_id", "text", "lang").write.parquet(s"$work/docs")
+    spark.read.parquet(s"$work/docs")
+  }
+
+  test("Route.local: default gate, explicit limit, gate 0, oversized estimates") {
+    val ev = events {
+      assert(Route.local(spark, "t.default", 100))
+      assert(!Route.local(spark, "t.limit", 65, 64))
+      assert(!Route.local(spark, "t.huge", BigInt(Long.MaxValue) * 4))
+      withGate("0")(assert(!Route.local(spark, "t.forced", 1, 64)))
+    }
+    assert(ev == Seq(
+      GraftRouteEvent("t.default", Route.Local, 100, Default),
+      GraftRouteEvent("t.limit", Route.Distributed, 65, 64),
+      GraftRouteEvent("t.huge", Route.Distributed, Long.MaxValue, Default),
+      GraftRouteEvent("t.forced", Route.Distributed, 1, 64)))
+  }
+
+  test("ann.exact: one event per search, estimate = the driver cache's size") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_flat", Ann.BuildParams(engine = "flat"))
+    val est = 500L * (Dim * 4 + 16)
+    assert(events(Ann.searchHits(spark, "re_flat", q, 5)) ==
+      Seq(GraftRouteEvent("ann.exact", Route.Local, est, Default)))
+    assert(withGate((est - 1).toString)(events(Ann.searchHits(spark, "re_flat", q, 5))) ==
+      Seq(GraftRouteEvent("ann.exact", Route.Distributed, est, est - 1)))
+  }
+
+  test("ann.graph: one event per search, estimate in shards") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_disk",
+      Ann.BuildParams(engine = "diskann", numShards = 2))
+    val limit = Ann.LocalSearchMaxShards.toLong
+    assert(events(Ann.searchHits(spark, "re_disk", q, 5)) ==
+      Seq(GraftRouteEvent("ann.graph", Route.Local, 2, limit)))
+    assert(withGate("0")(events(Ann.searchHits(spark, "re_disk", q, 5))) ==
+      Seq(GraftRouteEvent("ann.graph", Route.Distributed, 2, limit)))
+  }
+
+  test("top-k rewrite: the search posts one event, a cached rewrite none") {
+    import graft.functions.{array_distance, floatVec, toFloatVec}
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_rule",
+      Ann.BuildParams(engine = "diskann", numShards = 1))
+    graft.plans.AnnTopKRule.clearCache()
+    // the rule applied directly, not registered: suites share one session
+    val rule = graft.plans.AnnTopKRule(spark)
+    def topk(): Unit = {
+      val plan = rule(emb.orderBy(array_distance(toFloatVec(col("embedding")),
+        floatVec(q.toSeq))).limit(5).queryExecution.analyzed)
+      assert(plan.toString.contains("ann_index_scan"), plan)
+    }
+    val Seq(e) = events(topk())
+    assert(e.op.startsWith("ann.") && e.route == Route.Local, e)
+    assert(events(topk()).isEmpty)
+  }
+
+  test("text ops: one event each, estimate = the scan-bounded projection size") {
+    val textEst = TextOps.scanBoundedSizeEstimate(docs.select(col("doc_id"), col("text")))
+    assert(events(TextOps.rareTerms(docs, "text", "doc_id")) ==
+      Seq(GraftRouteEvent("text.rareTerms", Route.Local, textEst.toLong, Default)))
+    assert(events(TextOps.packSequences(docs, "text", "doc_id", "lang", 64)) == Seq(
+      GraftRouteEvent("text.pack", Route.Local, TextOps.scanBoundedSizeEstimate(docs).toLong,
+        Default)))
+    for ((op, run) <- Seq[(String, () => Any)](
+        "text.ngramDupPairs" -> (() => TextOps.ngramDupPairs(docs, "text", "doc_id")),
+        "text.contaminationCounts" -> (() =>
+          TextOps.contaminationCounts(docs, "text", "doc_id", c => c % 7 === 0)),
+        "text.jaccardPairs" -> (() => TextOps.jaccardPairs(docs, "text", "doc_id")))) {
+      val Seq(e) = events(run())
+      assert(e.op == op && e.route == Route.Local && e.limit == Default && e.estimate > 0, e)
+      val Seq(f) = withGate("0")(events(run()))
+      assert(f == e.copy(route = Route.Distributed, limit = 0), f)
+    }
+  }
+
+  test("text.cc: estimate = 16 bytes per edge") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    assert(events(TextOps.connectedComponents(pairs).collect()) ==
+      Seq(GraftRouteEvent("text.cc", Route.Local, 48, Default)))
+    assert(withGate("47")(events(TextOps.connectedComponents(pairs).collect())) ==
+      Seq(GraftRouteEvent("text.cc", Route.Distributed, 48, 47)))
+  }
+
+  test("semdedup.assign: the assignment route, in centroids") {
+    val cents = SemDedup.seedCentroids(emb, "embedding", "vec_id", 8)
+    val gate = SemDedup.Assigner.TwoLevelGate.toLong
+    assert(events(SemDedup.assign(emb, "embedding", "vec_id", cents)) ==
+      Seq(GraftRouteEvent("semdedup.assign", "linear", 8, gate)))
+    assert(events(SemDedup.assign(emb, "embedding", "vec_id", cents, assignNprobe = 2)) ==
+      Seq(GraftRouteEvent("semdedup.assign", "two-level", 8, gate)))
+  }
+}

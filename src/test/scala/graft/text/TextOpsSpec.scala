@@ -112,12 +112,12 @@ class TextOpsSpec extends AnyFunSuite {
       (20L, 22L), (21L, 22L), (20L, 21L)).toDF("id_a", "id_b")
     val local = graft.text.TextOps.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    spark.conf.set("spark.graft.dedup.localCcMaxEdges", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val loop = graft.text.TextOps.connectedComponents(pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(local == loop, s"local $local vs loop $loop")
-    } finally spark.conf.unset("spark.graft.dedup.localCcMaxEdges")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
     assert(local == Seq((1L,1L),(2L,1L),(3L,1L),(4L,1L),(10L,10L),(11L,10L),
       (20L,20L),(21L,20L),(22L,20L)))
   }
@@ -319,12 +319,12 @@ class TextOpsSpec extends AnyFunSuite {
     }
     val (pLocal, cLocal) = run()
     assert(pLocal.nonEmpty && cLocal.nonEmpty, "fixture produced no overlaps")
-    spark.conf.set("spark.graft.text.localMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val (pDist, cDist) = run()
       assert(pDist == pLocal, s"pair routes diverged: $pDist vs $pLocal")
       assert(cDist == cLocal, s"contamination routes diverged: $cDist vs $cLocal")
-    } finally spark.conf.unset("spark.graft.text.localMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("repetitionColumns: fractions match a naive n-gram recount") {
@@ -419,12 +419,12 @@ class TextOpsSpec extends AnyFunSuite {
           r.getLong(4))).toSeq
     val local = run()
     assert(local.nonEmpty)
-    spark.conf.set("spark.graft.text.localMaxBytes", "0")
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val dist = run()
       assert(local == dist, "size-gated driver route must be bit-identical " +
         "to the distributed broadcast-join/window plan")
-    } finally spark.conf.unset("spark.graft.text.localMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("TermCounts expression matches explode+groupBy token counting") {

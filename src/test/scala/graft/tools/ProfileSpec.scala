@@ -7,7 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[StageStats]]' skew rule (the one both scale smokes report) on
- *  synthetic task times, and [[Profile]]'s per-entry JSON line. */
+ *  synthetic task times, and [[Profile]]'s per-entry JSON line with its
+ *  stages and route decisions. */
 class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -23,14 +24,17 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = graft.index.IndexCatalog.deleteTree(dir.getPath)
 
-  /** A scale-factor directory holding only a generated `events` table —
-   *  enough for the `events_agg` entry. */
+  /** A scale-factor directory holding generated `events` and `documents`
+   *  tables — enough for `events_agg` and `rare_terms`. */
   private lazy val sf: String = {
     spark.range(0, 2000, 1, 4).selectExpr(
       "concat('e', CAST(id % 5 AS STRING)) AS event_type",
       "CAST(timestamp_seconds(1700000000 + id * 97) AS TIMESTAMP_NTZ) AS ts",
       "CAST(id % 13 AS DOUBLE) / 4 AS value")
       .write.parquet(s"$dir/events.parquet")
+    spark.range(0, 300, 1, 2).selectExpr("id AS doc_id",
+      "concat('w', id % 7, ' w', id % 11, ' w', id % 13) AS text")
+      .write.parquet(s"$dir/documents.parquet")
     dir.getPath
   }
 
@@ -77,6 +81,21 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (st <- stages; f <- Seq("stage", "wall_ms", "task_ms", "scheduler_delay_ms",
         "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "gc_ms"))
       assert((st \ f) != JNothing, s"stage field $f missing: $line")
+  }
+
+  test("Profile lists the timed run's route decisions") {
+    val stats = new StageStats
+    spark.sparkContext.addSparkListener(stats)
+    implicit val fmts: Formats = DefaultFormats
+    def routes(entry: String): Seq[JValue] =
+      (JsonMethods.parse(Profile.run(spark, stats, sf, entry)) \ "routes").extract[Seq[JValue]]
+    try {
+      val rare = routes("rare_terms")
+      assert(rare.map(r => ((r \ "op").extract[String], (r \ "route").extract[String],
+        (r \ "limit").extract[Long])) == Seq(("text.rareTerms", "local", 64L << 20)))
+      assert((rare.head \ "estimate").extract[Long] > 0)
+      assert(routes("events_agg").isEmpty)
+    } finally spark.sparkContext.removeSparkListener(stats)
   }
 
   test("Profile rejects an unknown entry and names the known ones") {
