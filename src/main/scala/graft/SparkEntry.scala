@@ -1532,17 +1532,16 @@ object SparkEntry {
         .select(col("vec_id"),
           array_distance(toFloatVec(col("embedding")), floatVec(Q64)).as("_distance"))
         .orderBy(col("_distance")).limit(10)
-      val inSizes = df.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-            if f.condition.exists(_.isInstanceOf[graft.plans.AnnRewrittenMarker]) =>
-          f.condition.collectFirst {
-            case in: org.apache.spark.sql.catalyst.expressions.InSet => in.hset.size
-          }.getOrElse(0)
-      }
-      require(inSizes.nonEmpty,
+      // the marker carries the fetched hit count on both fetch routes (the
+      // driver-local one folds the InSet filter away)
+      val fetched = df.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition.collect { case m: graft.plans.AnnRewrittenMarker => m.fetched }
+      }.flatten
+      require(fetched.nonEmpty,
         "ann_rewrite_filtered: AnnTopKRule did not rewrite the filtered plan")
-      require(inSizes.exists(_ > 10),
-        s"ann_rewrite_filtered: overfetch did not engage (hit-set sizes $inSizes, want > k=10)")
+      require(fetched.exists(_ > 10),
+        s"ann_rewrite_filtered: overfetch did not engage (fetched hit counts $fetched, want > k=10)")
       df
     }),
 

@@ -1,25 +1,34 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import graft.expressions._
-import graft.index.{Ann, AnnEngine, IndexCatalog, IndexMeta}
+import graft.core.Route
+import graft.index.{Ann, AnnEngine, BaseRows, IndexCatalog, IndexMeta}
 
 /**
  * Marker kept in the injected filter so the rewrite is applied once per plan
  * (the reference attaches an EXPLAIN note to its rewritten scan instead,
- * src/ann_optimizer.cpp:508-524). Evaluates to true for every row; it is
- * deliberately non-foldable so no later simplification removes it, and it
- * codegens to a constant so it costs nothing at runtime.
+ * src/ann_optimizer.cpp:508-524), carrying the number of hit ids the search
+ * fetched. Evaluates to true for every row; it is deliberately non-foldable
+ * so no later simplification removes it, and it codegens to a constant so it
+ * costs nothing at runtime. Its one child, [[KeepMarker]], is never
+ * evaluated: it keeps Spark's `ConvertToLocalRelation`, which folds no
+ * filter holding an unevaluable expression, from folding the marker filter
+ * of a driver-answered read into its `LocalRelation`.
  */
-case class AnnRewrittenMarker(indexName: String) extends LeafExpression {
+case class AnnRewrittenMarker(indexName: String, fetched: Int,
+    child: Expression = KeepMarker) extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def foldable: Boolean = false
@@ -29,6 +38,16 @@ case class AnnRewrittenMarker(indexName: String) extends LeafExpression {
     ExprCode.forNonNullValue(org.apache.spark.sql.catalyst.expressions.codegen.JavaCode
       .literal("true", BooleanType))
   override def prettyName: String = s"ann_index_scan['$indexName']"
+  override def toString: String = s"$prettyName(fetched=$fetched)"
+  override def sql: String = toString
+  override protected def withNewChildInternal(c: Expression): AnnRewrittenMarker =
+    copy(child = c)
+}
+
+/** The never-evaluated child of [[AnnRewrittenMarker]]. */
+case object KeepMarker extends LeafExpression with Unevaluable {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
 }
 
 /**
@@ -51,10 +70,16 @@ case class AnnRewrittenMarker(indexName: String) extends LeafExpression {
  * keeping the original Project/Filter/Sort/Limit on top:
  *   - the index search runs eagerly (driver-local over cached shards for
  *     small indexes — the serving path; shard-fan-out job otherwise);
- *   - integral hit ids are pushed into the parquet scan at planning time
- *     (`PushedFilters: [In(id, …)]`), so the 100 TB base table is never
- *     re-scanned (other id types match `try_cast(id AS BIGINT)`, the key
- *     the index was built on, which does not push);
+ *   - the base rows are fetched by id on one of two routes (op
+ *     `ann.fetch`, [[graft.core.Route]]). Below the gate the rows come
+ *     from the [[BaseRows]] driver cache, the way the reference fetches
+ *     by row id (src/ann_optimizer.cpp:114-118), and the whole top-k folds
+ *     to `Filter(marker, LocalRelation)`: no scan and no Spark job. Above
+ *     it, integral hit ids are pushed into the parquet scan at planning
+ *     time (`PushedFilters: [In(id, …)]`), so the 100 TB base table is
+ *     never re-scanned either way (other id types match
+ *     `try_cast(id AS BIGINT)`, the key the index was built on, which does
+ *     not push);
  *   - the ids ride one `InSet` that generated code references as an
  *     object instead of inlining them as literals, so one compiled plan
  *     serves every query ([[Ann.idInSet]]);
@@ -124,8 +149,9 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     spark.conf.getOption("spark.graft.ann.rewriteEnabled").forall(_.toBoolean)
 
-  /** "eager" (default): search at planning time, push the hit ids into the
-   *  scan as one `InSet` (keeps parquet row-group skipping — the 100 TB
+  /** "eager" (default): search at planning time, then answer from the
+   *  driver row cache below the `ann.fetch` gate, else push the hit ids into
+   *  the scan as one `InSet` (keeps parquet row-group skipping — the 100 TB
    *  priority — and one compiled plan for every query).
    *  "lazy": graft a LeftSemi join against [[AnnHitsNode]]; the search runs
    *  at execution, so EXPLAIN / cached plans / AQE never trigger index I/O,
@@ -141,21 +167,15 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case gl @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, sort @ Sort(Seq(order), true, sortChild, _)))
           if k > 0 && !alreadyRewritten(sortChild) =>
-        tryRewrite(k, order, sortChild) match {
-          case Some(newChild) =>
-            gl.copy(child = ll.copy(child = sort.copy(child = newChild)))
-          case None => gl
-        }
+        tryRewrite(k, order, sortChild)(c =>
+          gl.copy(child = ll.copy(child = sort.copy(child = c)))).getOrElse(gl)
       case gl @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, proj @ Project(_,
             sort @ Sort(Seq(order), true, sortChild, _))))
           if k > 0 && !alreadyRewritten(sortChild) =>
-        tryRewrite(k, order, sortChild) match {
-          case Some(newChild) =>
-            gl.copy(child = ll.copy(child =
-              proj.copy(child = sort.copy(child = newChild))))
-          case None => gl
-        }
+        tryRewrite(k, order, sortChild)(c =>
+          gl.copy(child = ll.copy(child = proj.copy(child = sort.copy(child = c)))))
+          .getOrElse(gl)
     }
   }
 
@@ -176,7 +196,9 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def tryRewrite(k: Int, order: SortOrder, child: LogicalPlan): Option[LogicalPlan] = {
+  /** The rewritten top-k, `top` applied to the rewritten sort child. */
+  private def tryRewrite(k: Int, order: SortOrder, child: LogicalPlan)(
+      top: LogicalPlan => LogicalPlan): Option[LogicalPlan] = {
     // resolve the sort key through any child projection aliases
     val distExpr = order.child match {
       case a: Attribute =>
@@ -271,7 +293,7 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
           Join(rel, hitsNode, LeftSemi, Some(EqualTo(idKey, hitAttr)), JoinHint.NONE)
         case other => other.withNewChildren(other.children.map(injectJoin))
       }
-      return Some(injectJoin(child))
+      return Some(top(injectJoin(child)))
     }
 
     val metaPath = s"${IndexCatalog.indexDir(rootDir, meta.name)}/metadata.json"
@@ -280,15 +302,74 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       Ann.collectHits(spark, meta, IndexCatalog.readTombstones(rootDir, meta.name), query,
         fetchK, searchComplexity = 0, oversample = 1)
     }
-    val cond = And(
-      Ann.idInSet(idAttr, idAttr.dataType, hits.map(_._1)),
-      AnnRewrittenMarker(meta.name))
+    val ids = hits.map(_._1)
+    val inSet = Ann.idInSet(idAttr, idAttr.dataType, ids)
+    val marker = AnnRewrittenMarker(meta.name, hits.length)
     // graft the filter directly above the relation, under any existing ops
-    def inject(p: LogicalPlan): LogicalPlan = p match {
-      case rel: LogicalRelation if rel eq lr => Filter(cond, rel)
-      case other => other.withNewChildren(other.children.map(inject))
+    def inject(p: LogicalPlan, filter: LogicalPlan): LogicalPlan = p match {
+      case rel: LogicalRelation if rel eq lr => filter
+      case other => other.withNewChildren(other.children.map(inject(_, filter)))
     }
-    Some(inject(child))
+    // driver-local: the same filter over the fetched base rows, folded with
+    // everything above it; the marker (which would stop the fold) goes on top
+    val local = localRows(lr, idAttr, ids, top(child)).flatMap { rows =>
+      foldLocal(top(inject(child, Filter(inSet, LocalRelation(lr.output, rows)))))
+        .map(Filter(marker, _))
+    }
+    Some(local.getOrElse(top(inject(child, Filter(And(inSet, marker), lr)))))
+  }
+
+  /** The base rows a driver-local answer needs (every row whose id key is a
+   *  hit), when the read may take that route (op `ann.fetch`): a plain,
+   *  fresh parquet listing within the gate, read without `_metadata`
+   *  columns, under a top-k subtree [[foldLocal]] evaluates whole. */
+  private def localRows(lr: LogicalRelation, idAttr: Attribute, ids: Array[Long],
+      subtree: LogicalPlan): Option[Seq[InternalRow]] = {
+    val fs = lr.relation.asInstanceOf[HadoopFsRelation]
+    val plain = fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+      fs.partitionSchema.isEmpty && fs.bucketSpec.isEmpty && !lr.isStreaming &&
+      lr.output.map(_.name) == fs.dataSchema.map(_.name) && foldable(subtree, lr)
+    val bytes = fs.location.sizeInBytes
+    // each listed file is stat'ed, so only when the table is within the gate
+    val files = if (plain && bytes <= Route.maxBytes(spark)) BaseRows.listing(fs) else None
+    if (files.isEmpty) {
+      Route.post(spark, "ann.fetch", Route.Distributed, bytes, Route.maxBytes(spark))
+      None
+    } else if (!Route.local(spark, "ann.fetch", bytes)) None
+    else Some(BaseRows.fetch(fs, files.get, lr.output, idAttr, ids, Route.maxBytes(spark)))
+  }
+
+  /** True when `plan` is only limits, projections, filters and sorts of
+   *  deterministic, evaluable expressions over `lr`. */
+  private def foldable(plan: LogicalPlan, lr: LogicalRelation): Boolean = plan match {
+    case rel: LogicalRelation => rel eq lr
+    case _: GlobalLimit | _: LocalLimit | _: Project | _: Filter | _: Sort =>
+      plan.expressions.forall(_.find {
+        case _: AttributeReference | _: SortOrder => false
+        case e => !e.deterministic || e.isInstanceOf[Unevaluable] ||
+          e.isInstanceOf[SubqueryExpression]
+      }.isEmpty) && foldable(plan.children.head, lr)
+    case _ => false
+  }
+
+  /** `plan` evaluated on the driver over its LocalRelation leaf, when that
+   *  folds completely: Spark's own `ConvertToLocalRelation` to a fixpoint,
+   *  plus a stable sort of a LocalRelation by the interpreted ordering. */
+  private def foldLocal(plan: LogicalPlan): Option[LocalRelation] = {
+    var prev: LogicalPlan = null
+    var cur = plan
+    while (!(cur fastEquals prev)) {
+      prev = cur
+      cur = ConvertToLocalRelation(cur).transformUp {
+        case Sort(order, true, LocalRelation(output, data, false, None), _) =>
+          val ordering = new InterpretedOrdering(order, output)
+          LocalRelation(output, data.sortWith(ordering.lt))
+      }
+    }
+    cur match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
   }
 
   /** Evaluate a foldable array expression to f32 (any numeric element type —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{toFloatVec, floatVec, array_distance, array_inner_product,
   array_cosine_similarity}
+import graft.core.{Route, RouteParity}
 import graft.index.Ann
 
 class AnnTopKRuleSpec extends AnyFunSuite {
@@ -38,6 +39,17 @@ class AnnTopKRuleSpec extends AnyFunSuite {
   private def isRewritten(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("ann_index_scan")
 
+  /** `body` with the rewrite fetching base rows through the parquet scan
+   *  (the distributed `ann.fetch` route). */
+  private def scanRoute[A](body: => A): A = {
+    spark.conf.set("spark.graft.localMaxBytes", "0")
+    try {
+      val (a, routes) = RouteParity.routed(spark)(body)
+      assert(routes.exists(e => e.op == "ann.fetch" && e.route == Route.Distributed), routes)
+      a
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
+  }
+
   test("ORDER BY array_distance ASC LIMIT k rewrites to index scan") {
     builtOnce
     val topk = emb.orderBy(array_distance(toFloatVec(col("embedding")), floatVec(q.toSeq)))
@@ -57,7 +69,7 @@ class AnnTopKRuleSpec extends AnyFunSuite {
     builtOnce
     val topk = emb.orderBy(array_distance(toFloatVec(col("embedding")), floatVec(q.toSeq)))
       .limit(5)
-    val physical = topk.queryExecution.executedPlan.toString
+    val physical = scanRoute(topk.queryExecution.executedPlan.toString)
     assert(physical.contains("PushedFilters: [In(vec_id"),
       s"expected pushed In filter, got:\n$physical")
   }
@@ -98,7 +110,7 @@ class AnnTopKRuleSpec extends AnyFunSuite {
     val topk = emb.orderBy(array_distance(toFloatVec(col("embedding")),
       floatVec(eq.toSeq))).limit(5)
     val before = Ann.searchCount.get()
-    val physical = topk.queryExecution.executedPlan.toString
+    val physical = scanRoute(topk.queryExecution.executedPlan.toString)
     assert(Ann.searchCount.get() == before + 1, "eager mode searches at planning")
     assert(physical.contains("PushedFilters: [In(vec_id"),
       "eager mode must keep the scan pushdown")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{Route, RouteParity}
 import graft.index.{Ann, IndexCatalog}
 
 /** The ANN read paths pass each query's hit ids as one `InSet` that the
@@ -130,6 +131,16 @@ class CompileFreeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertCompileFreeSql(spark)
   }
 
+  test("rewritten SQL top-k reads compile nothing after the first on either fetch route") {
+    graphTable
+    val (_, local) = RouteParity.routed(spark)(assertCompileFreeSql(spark))
+    assert(local.filter(_.op == "ann.fetch").map(_.route).toSet == Set(Route.Local))
+    spark.conf.set("spark.graft.localMaxBytes", "0")
+    val (_, scan) = try RouteParity.routed(spark)(assertCompileFreeSql(spark))
+      finally spark.conf.unset("spark.graft.localMaxBytes")
+    assert(scan.filter(_.op == "ann.fetch").map(_.route).toSet == Set(Route.Distributed))
+  }
+
   test("Ann.search and graph rangeSearch compile nothing after the first") {
     val df = graphTable
     assert(compilesAfterWarmUp { q =>
@@ -154,10 +165,17 @@ class CompileFreeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
           (df, df.collect().toSeq)
         } finally spark.conf.unset("spark.graft.ann.rewriteMode")
         assert(isRewritten(rewritten), s"$name $mode: expected a rewritten plan")
-        // integral ids push into the scan; STRING ids match try_cast(id AS BIGINT)
-        if (mode == "eager" && idType != StringType)
-          assert(rewritten.queryExecution.executedPlan.toString.contains("In(id,"),
+        // on the scan route (the gate at 0) integral ids push into the scan;
+        // STRING ids match try_cast(id AS BIGINT)
+        if (mode == "eager" && idType != StringType) {
+          spark.conf.set("spark.graft.localMaxBytes", "0")
+          val (physical, routes) = try RouteParity.routed(spark)(
+              spark.sql(sql).queryExecution.executedPlan.toString)
+            finally spark.conf.unset("spark.graft.localMaxBytes")
+          assert(routes.exists(e => e.op == "ann.fetch" && e.route == Route.Distributed), routes)
+          assert(physical.contains("In(id,"),
             s"$name: expected the hit ids pushed into the scan")
+        }
         spark.conf.set("spark.graft.ann.rewriteEnabled", "false")
         val want = try spark.sql(sql).collect().toSeq
           finally spark.conf.unset("spark.graft.ann.rewriteEnabled")

@@ -111,9 +111,28 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
         floatVec(q.toSeq))).limit(5).queryExecution.analyzed)
       assert(plan.toString.contains("ann_index_scan"), plan)
     }
-    val Seq(e) = events(topk())
+    // the search's own route (every rewrite also posts one ann.fetch event,
+    // checked below)
+    def searchEvents(body: => Unit) = events(body).filter(_.op != "ann.fetch")
+    val Seq(e) = searchEvents(topk())
     assert(e.op.startsWith("ann.") && e.route == Route.Local, e)
-    assert(events(topk()).isEmpty)
+    assert(searchEvents(topk()).isEmpty)
+  }
+
+  test("ann.fetch: one event per rewrite, estimate = the listed file bytes") {
+    import graft.functions.{array_distance, floatVec, toFloatVec}
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_fetch", Ann.BuildParams(engine = "flat"))
+    val rule = graft.plans.AnnTopKRule(spark)
+    val bytes = new java.io.File(s"$work/embeddings").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    def topk(): Unit = rule(emb.orderBy(array_distance(toFloatVec(col("embedding")),
+      floatVec(q.toSeq))).limit(5).queryExecution.analyzed)
+    def fetches(body: => Unit) = events(body).filter(_.op == "ann.fetch")
+    // a cached rewrite (no search) still decides its fetch route
+    for (_ <- 0 until 2)
+      assert(fetches(topk()) == Seq(GraftRouteEvent("ann.fetch", Route.Local, bytes, Default)))
+    assert(withGate("0")(fetches(topk())) ==
+      Seq(GraftRouteEvent("ann.fetch", Route.Distributed, bytes, 0)))
   }
 
   test("text ops: one event each, estimate = the scan-bounded projection size") {
