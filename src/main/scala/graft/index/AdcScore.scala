@@ -35,19 +35,52 @@ final class AdcScoreState(
     val q = qArrB.value(qid.toInt)
     val e = Ann.AdcLutCache.getIn(sub, qid, probe, q) {
       if (centsB == null || probe < 0) (PqCodec.lut(cb, q, l2), 0.0f)
-      else {
-        val c = centsB.value(probe)
-        if (l2) {
-          val qr = new Array[Float](q.length)
-          var i = 0
-          while (i < q.length) { qr(i) = q(i) - c(i); i += 1 }
-          (PqCodec.lut(cb, qr, l2 = true), 0.0f)
-        } else (PqCodec.lut(cb, q, l2 = false),
-          -graft.core.VectorOps.dot(q, c))
-      }
+      else PqCodec.residualLut(cb, q, centsB.value(probe), l2, PqCodec.lut(cb, q, l2 = false))
     }
-    (if (bits == 8) PqCodec.adc(e.lut, cbK, code)
-     else graft.core.SqPackedCodec.adc(e.lut, bits, cb.m, code)) + e.off
+    AdcQuery.adc(e.lut, cbK, bits, cb.m, code) + e.off
+  }
+}
+
+/**
+ * One prepped query's ADC ranking score for the PQ and SQ families — the
+ * single ADC kernel behind their distributed scans (a broadcast UDF) and
+ * their driver-local scorers. Codes that quantize raw vectors (pq, ivfsq)
+ * read the one table `lut`; residual ivfpq codes read their cell's table
+ * `cellLuts(c)` plus offset `cellOffs(c)`, built for the probed cells only.
+ * `bits` < 8 marks packed SQ4/SQ6 rows of `m` dims.
+ */
+private[index] final class AdcQuery private (k: Int, bits: Int, m: Int, lut: Array[Float],
+    cellLuts: Array[Array[Float]], cellOffs: Array[Float]) extends Serializable {
+
+  /** The `__dd` of `code`, a row stored in IVF cell `cluster` (ignored
+   *  unless the codes are residuals). */
+  def score(cluster: Int, code: Array[Byte]): Float =
+    if (cellLuts == null) AdcQuery.adc(lut, k, bits, m, code)
+    else AdcQuery.adc(cellLuts(cluster), k, bits, m, code) + cellOffs(cluster)
+}
+
+private[index] object AdcQuery {
+  /** ADC of one byte code (`bits` = 8) or packed SQ row against a table. */
+  def adc(table: Array[Float], k: Int, bits: Int, m: Int, code: Array[Byte]): Float =
+    if (bits == 8) PqCodec.adc(table, k, code)
+    else graft.core.SqPackedCodec.adc(table, bits, m, code)
+
+  /** One table for every row: codes of raw (or OPQ-rotated) vectors. */
+  def flat(cb: PqCodec.Codebook, q: Array[Float], l2: Boolean, bits: Int): AdcQuery =
+    new AdcQuery(cb.k, bits, cb.m, PqCodec.lut(cb, q, l2), null, null)
+
+  /** Residual codes: one [[PqCodec.residualLut]] per probed cell. */
+  def residual(cb: PqCodec.Codebook, q: Array[Float], cents: Array[Array[Float]],
+      probes: Array[Int], l2: Boolean): AdcQuery = {
+    val luts = new Array[Array[Float]](cents.length)
+    val offs = new Array[Float](cents.length)
+    lazy val qLut = PqCodec.lut(cb, q, l2 = false)
+    probes.foreach { p =>
+      val (t, off) = PqCodec.residualLut(cb, q, cents(p), l2, qLut)
+      luts(p) = t
+      offs(p) = off
+    }
+    new AdcQuery(cb.k, 8, cb.m, null, luts, offs)
   }
 }
 
@@ -113,15 +146,9 @@ final class QuantRangeState(
       q: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
     val vhat =
       if (bits < 8) Ann.sqDecode(cb, bits, code)
-      else {
-        val r = PqCodec.decode(cb, code)
-        if (centsB != null && cluster >= 0) {
-          val c = centsB.value(cluster)
-          var i = 0
-          while (i < r.length) { r(i) += c(i); i += 1 }
-        }
-        r
-      }
+      else if (centsB != null && cluster >= 0)
+        PqCodec.decodeResidual(cb, code, centsB.value(cluster))
+      else PqCodec.decode(cb, code)
     Ann.doubleFoldDist(vhat, q.toFloatArray(), l2)
   }
 }

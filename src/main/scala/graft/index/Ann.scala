@@ -286,7 +286,7 @@ object Ann {
     }
     if (refine) {
       val refined = AnnEngine(p2.engine, desc)
-      require(refined.adcCodes || refined == AnnEngine.Lsh,
+      require(refined.storesCodes,
         "RFlat refine applies to code engines (e.g. 'PQ8,RFlat', " +
         "'IVF64,PQ8,RFlat', 'LSH32,RFlat', 'IVF64,SQ8,RFlat')")
       p2.copy(refine = true)
@@ -690,15 +690,15 @@ object Ann {
         s"${IndexCatalog.indexDir(root(spark), meta.name)}/thresholds.bin")
     else null
 
-  /** Codegen'd Hamming distance column against a query code: single-word
-   *  codes are one `bit_count(code XOR qcode)`; wide codes (array<bigint>)
-   *  sum per-word XOR popcounts — the word count is a plan-time constant,
-   *  so this stays builtin expressions with no UDF on the scan hot path. */
-  private[index] def hammingCol(codeCol: Column, qcode: Array[Long]): Column =
-    if (qcode.length == 1) bit_count(codeCol.bitwiseXOR(lit(qcode(0))))
-    else qcode.indices.map(w =>
-      bit_count(element_at(codeCol, w + 1).bitwiseXOR(lit(qcode(w)))))
-      .reduce(_ + _)
+  /** Codegen'd Hamming distance column against a `words`-word query code
+   *  (word w: `qword(w)`): single-word codes are one `bit_count(code XOR
+   *  qcode)`; wide codes (array<bigint>) sum per-word XOR popcounts — the
+   *  word count is a plan-time constant, so this stays builtin expressions
+   *  with no UDF on the scan hot path. */
+  private[index] def hammingCol(codeCol: Column, words: Int, qword: Int => Column): Column =
+    if (words == 1) bit_count(codeCol.bitwiseXOR(qword(0)))
+    else (0 until words).map(w =>
+      bit_count(element_at(codeCol, w + 1).bitwiseXOR(qword(w)))).reduce(_ + _)
 
   /** Query code in the stored layout: one word for ≤64-bit codes (the
    *  meta.nlist slot carries nbits), ⌈nbits/64⌉ words otherwise. */
@@ -1097,8 +1097,8 @@ object Ann {
 
   /**
    * Job-free FILTERED serving surface — [[searchHits]]'s analog for
-   * [[searchFiltered]]: for ExactServe-eligible indexes (small flat/ivfflat/
-   * pq/ivfpq) the filter closure is applied in the driver-local scan beside
+   * [[searchFiltered]]: for ExactServe-eligible indexes (small table
+   * engines) the filter closure is applied in the driver-local scan beside
    * the tombstone check (same candidate order, same nprobe-saturation
    * retry as the distributed route — FilteredServeSpec pins parity) and the
    * hits materialize as a LocalRelation, so a serving caller pays no Spark
@@ -1108,11 +1108,9 @@ object Ann {
   def searchFilteredHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame = {
     val meta = IndexCatalog.load(root(spark), name)
-    if (!ExactServe.eligible(spark, meta))
-      return searchFiltered(spark, name, query, k, filter, searchComplexity)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    localHitRows(spark, ExactServe.searchFiltered(spark, meta, tomb, query, k, filter.fn)
-      .map(h => Row(h._1, h._2)))
+    AnnEngine.of(meta).searchFilteredHits(spark, meta, tomb, query, k, filter,
+      searchComplexity)
   }
 
   /** Row-id selector for filtered search: `column` is the predicate over

@@ -11,9 +11,9 @@ import graft.core.{DiskannFormat, GraphIndex, HnswFormat, HnswIndex, LshCodec, M
 import graft.functions.{array_distance_sq, array_negative_inner_product, floatVec, mkCol,
   mkExpr, toFloatVec}
 import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
-  joinBaseWithPrefix, localHitRows, metricDistanceCol, normalizeCol, normalizeVecUdf,
-  notTombstoned, prepQuery, probeFilter, probeJoinCond, readRotation, refineFactor,
-  refineStage, root, selectProbes, strideSample, writeClustered, writeCoarseHnsw}
+  localHitRows, metricDistanceCol, normalizeCol, normalizeVecUdf, notTombstoned,
+  prepQuery, probeFilter, probeJoinCond, readRotation, refineFactor, refineStage, root,
+  selectProbes, strideSample, writeClustered, writeCoarseHnsw}
 
 /**
  * One implementation per ANN index family — the analog of the reference
@@ -22,7 +22,10 @@ import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
  * src/include/faiss_index.hpp:119). Each family owns the operations whose
  * behaviour depends on how the index stores its vectors: build and
  * encode-on-add, top-k / filtered / range scans, TABLE scoring,
- * reconstruction, vacuum and merge. The [[Ann]] surface resolves the family
+ * reconstruction, vacuum and merge. Each family also owns its driver-local
+ * search: graph engines search their cached shards, and each table family
+ * brings the one scorer the [[ExactServe]] cache serves through
+ * ([[TableEngine.localScorer]]). The [[Ann]] surface resolves the family
  * once per call and delegates.
  *
  * `metadata.json` keeps the engine as a string; [[AnnEngine.apply]] is the
@@ -37,8 +40,9 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
    *  nprobe applies (ivfflat, ivfpq, ivfsq). */
   def ivf: Boolean = false
 
-  /** Byte codes ranked through `pq.bin` ADC tables (pq, ivfpq, ivfsq). */
-  def adcCodes: Boolean = false
+  /** Stores codes instead of raw vectors, so RFlat can keep the raw vectors
+   *  beside them for an exact re-rank (pq, ivfpq, ivfsq, lsh). */
+  def storesCodes: Boolean = false
 
   /** Build an index of this family over prepped `(id LONG, vec)` rows. */
   private[index] def build(data: DataFrame, index: String, dir: String,
@@ -58,6 +62,12 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
   private[index] def searchFiltered(spark: SparkSession, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
       searchComplexity: Int): DataFrame
+
+  /** [[searchFiltered]] over the cheapest route (see [[Ann.searchFilteredHits]]). */
+  private[index] def searchFilteredHits(spark: SparkSession, meta: IndexMeta,
+      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
+      searchComplexity: Int): DataFrame =
+    searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
 
   /** Base rows of `df` within `radius` plus `_distance` (see [[Ann.rangeSearch]]). */
   private[index] def rangeSearch(df: DataFrame, idColumn: String, meta: IndexMeta,
@@ -832,12 +842,28 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
   }
 }
 
+/** A table index's rows on the driver, one [[ExactServe]] cache fill: the
+ *  ids, each row's IVF cell and the centroid table (null without cells),
+ *  the raw vectors an RFlat index re-ranks against (null without RFlat),
+ *  and the family's scorer ([[TableEngine.localScorer]]). */
+private[index] final case class LocalTable(ids: Array[Long], clusters: Array[Int],
+    cents: Array[Array[Float]], refineVecs: Array[Array[Float]], scorer: LocalScorer)
+
+/** A family's driver-local scorer. `apply(query, probes)` prepares one
+ *  prepped query for the probed cells (null: every cell); the returned
+ *  function gives row i's `__dd` under the family's distributed scan, as a
+ *  double, bit for bit. */
+private[index] trait LocalScorer {
+  def apply(query: Array[Float], probes: Array[Int]): Int => Double
+}
+
 /**
  * Engines whose index is one parquet table of `(id, vec | code[, vec]
  * [, cluster])` — exact, PQ, SQ and LSH. They share the scan tail, the
  * filtered-search nprobe saturation, metric-space range pruning, the
  * broadcast-gemm TABLE plan, append and the versioned rewrite; each family
- * supplies how rows are encoded and scored.
+ * supplies how rows are encoded and scored, on the distributed scan
+ * ([[scored]]) and on the driver ([[localScorer]]).
  */
 sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
 
@@ -845,6 +871,47 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
    *  the index's own), `filter`-ed index table; `__dd` orders the top-k. */
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame
+
+  /** The family's driver-local scorer over its stored column (`stored`, in
+   *  row order: `vec` or `code`), with the rows' IVF cells and the centroid
+   *  table (null without cells). Loads the family's artifacts once per
+   *  [[ExactServe]] cache fill; per query, its scores equal [[scored]]'s
+   *  `__dd` bit for bit. */
+  protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
+      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer
+
+  /** The stored rows collected to the driver, with the family's scorer. */
+  private[index] final def localTable(spark: SparkSession, meta: IndexMeta): LocalTable = {
+    // refined code engines: the raw vecs ride along for the exact re-rank
+    val cols = Seq(col("id").cast(LongType), col(if (storesCodes) "code" else "vec")) ++
+      refineCols(meta) ++ (if (ivf) Seq(col("cluster").cast(IntegerType)) else Nil)
+    val rows = spark.read.parquet(meta.sourcePath).select(cols: _*).collect()
+    val clusters = if (ivf) rows.map(_.getInt(cols.length - 1)) else null
+    val cents = if (ivf) IndexCatalog.readCentroids(
+      s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin") else null
+    LocalTable(rows.map(_.getLong(0)), clusters, cents,
+      if (meta.refine) rows.map(_.getSeq[Float](2).toArray) else null,
+      localScorer(spark, meta, rows.map(_.get(1)), clusters, cents))
+  }
+
+  /** Driver bytes of [[localTable]], the `ann.exact` route's estimate. */
+  private[index] final def localBytes(meta: IndexMeta): Long = {
+    // REFINED code engines cache codes PLUS the raw vec column for the
+    // exact re-rank: add the per-row code bytes (~dim·5 bytes/row for
+    // refined ivfsq), or the cache could exceed the gate by ~25%
+    val refineBytes: Long = if (meta.refine) codeBytes(meta) else 0L
+    // side artifacts the cache also holds: the centroid table for IVF
+    // engines, twice when an IVF_HNSW coarse graph rides along (graph
+    // vectors ≈ another centroid-table copy; links are a small multiple
+    // of m·nlist ints, absorbed by the ×2)
+    val sideBytes: Long =
+      meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
+    // vec-based estimate: exact for flat/ivf, conservative (over) for
+    // unrefined code engines — pq stores m bytes/row, lsh 8; erring high
+    // only keeps a servable index on the distributed route, never the
+    // reverse
+    meta.numVectors * (meta.dim.toLong * 4 + 16 + refineBytes) + sideBytes
+  }
 
   /** Stored table rows for prepped `(id, vec)` input, encoded against the
    *  index's frozen artifacts — the one encode path build and append share
@@ -865,7 +932,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
   protected def tableJoin(t: TableQueries): TableJoin
 
   /** Bytes one stored code takes beside the raw vector (driver-cache sizing). */
-  private[index] def codeBytes(meta: IndexMeta): Long
+  protected def codeBytes(meta: IndexMeta): Long
 
   /** The full-precision vectors stored beside (or instead of) codes. */
   protected final def storedVectors(spark: SparkSession, meta: IndexMeta,
@@ -930,22 +997,42 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     if (ExactServe.eligible(spark, meta)) ExactServe.search(spark, meta, tomb, query, fetchK)
     else super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
 
+  /** Whether filtered search can under-fill: an IVF index probing fewer
+   *  than all of its cells. */
+  private def mayUnderFill(meta: IndexMeta): Boolean = ivf && meta.nprobe < meta.nlist
+
+  /** The nprobe under-fill rule of both filtered routes: `probed(nprobe)`
+   *  at the index's own nprobe (0), retried once at nprobe = nlist when
+   *  its hits under-fill k. */
+  private def filledTopK[A](meta: IndexMeta, k: Int)(probed: Int => Array[A]): Array[A] = {
+    val hits = probed(0)
+    if (mayUnderFill(meta) && hits.length < k) probed(meta.nlist) else hits
+  }
+
   /** The id predicate splices into the scan before the top-k, so it pushes
-   *  to parquet and code engines keep their compression. IVF under-fill
-   *  escalates once to nprobe = nlist; the check collects the ≤ k probed
-   *  rows once and returns them as a LocalRelation, so a non-escalating
-   *  query runs the scan job exactly once (FilteredJobCountSpec). */
+   *  to parquet and code engines keep their compression. Where the index
+   *  can under-fill, the check collects the ≤ k probed rows once and
+   *  returns them as a LocalRelation, so a non-escalating query runs the
+   *  scan job exactly once (FilteredJobCountSpec). */
   private[index] final def searchFiltered(spark: SparkSession, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
       searchComplexity: Int): DataFrame = {
     def probedTopK(nprobe: Int): DataFrame =
       topK(spark, meta, query, k, tomb, Some(filter.column), nprobe)
-    val probed = probedTopK(0)
-    if (ivf && meta.nprobe < meta.nlist) {
-      val rows = probed.collect()
-      if (rows.length < k) probedTopK(meta.nlist) else localHitRows(spark, rows)
-    } else probed
+    if (!mayUnderFill(meta)) probedTopK(0)
+    else localHitRows(spark, filledTopK(meta, k)(probedTopK(_).collect()))
   }
+
+  /** Small indexes filter inside the [[ExactServe]] scan, beside the
+   *  tombstone check, and answer as a LocalRelation. */
+  override private[index] def searchFilteredHits(spark: SparkSession, meta: IndexMeta,
+      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
+      searchComplexity: Int): DataFrame =
+    if (!ExactServe.eligible(spark, meta))
+      searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
+    else localHitRows(spark, filledTopK(meta, k)(nprobe =>
+      ExactServe.search(spark, meta, tomb, query, k, filter.fn, nprobe))
+      .map(h => Row(h._1, h._2)))
 
   /** (centroids, radii) when range search can prune clusters exactly: an
    *  IVF index under L2 whose build stored radii.bin. */
@@ -1260,6 +1347,12 @@ object TableEngine {
   /** Target file size of a vacuumed / compacted index table. */
   private[index] val CompactTargetBytes = 128L << 20
 
+  /** The table family of `meta`'s engine, if it is one. */
+  private[index] def of(meta: IndexMeta): Option[TableEngine] = AnnEngine.of(meta) match {
+    case e: TableEngine => Some(e)
+    case _ => None
+  }
+
   /** TABLE-path query column: PCA-mapped through the frozen transform, then
    *  cosine-normalized — transform FIRST, normalize AFTER, prepQuery's
    *  float order (OPQ-chain ivfpq indexes store their rotation as pca.bin
@@ -1361,6 +1454,14 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
       .select(col("id").as("row_id"), metricDistanceCol(meta.metricObj, col("vec"), query).as("__dd"))
   }
 
+  /** The sequential double fold of the Catalyst distance expressions. */
+  protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
+      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+    val vecs = stored.map(_.asInstanceOf[scala.collection.Seq[Float]].toArray)
+    val l2 = meta.metricObj eq Metric.L2
+    (query, _) => i => Ann.doubleFoldDist(vecs(i), query, l2)
+  }
+
   protected def rangeDist(spark: SparkSession, meta: IndexMeta, t: DataFrame,
       q: Column): Column =
     AnnEngine.metricDist(meta.metricObj, t("vec"), q)
@@ -1375,7 +1476,7 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
         t.numbered, None)
   }
 
-  private[index] def codeBytes(meta: IndexMeta): Long = 0L
+  protected def codeBytes(meta: IndexMeta): Long = 0L
 
   /** Stored vectors (normalized when the metric is cosine — reconstruction
    *  is of what the index SEARCHES, FAISS's contract for preprocessed adds). */
@@ -1427,7 +1528,7 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
  */
 sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEngine(name) {
   override def ivf: Boolean = ivfLayout
-  override def adcCodes: Boolean = true
+  override def storesCodes: Boolean = true
 
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
@@ -1475,12 +1576,7 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
       PqCodec.write(s"$dir/pq.bin", cb)
       meta0.copy(opq = params.opq)
     } else {
-      def residual(c: Array[Float], v: Array[Float]): Array[Float] = {
-        val r = new Array[Float](dim)
-        var i = 0
-        while (i < dim) { r(i) = v(i) - c(i); i += 1 }
-        r
-      }
+      def residual(c: Array[Float], v: Array[Float]): Array[Float] = PqCodec.residual(v, c)
       // IMI2x<b>,PQ<m>: the coarse quantizer is the same product-centroid
       // construction as the ivfflat IMI build — the STORED centroid table
       // is the cross product [c1_i ; c2_j], so probe enumeration, residual
@@ -1544,13 +1640,8 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
     if (ivf) {
       val centsB = spark.sparkContext.broadcast(
         IndexCatalog.readCentroids(s"$dir/centroids.bin"))
-      val encodeUdf = udf((v: Array[Float], cluster: Int) => {
-        val c = centsB.value(cluster)
-        val r = new Array[Float](v.length)
-        var i = 0
-        while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
-        PqCodec.encode(cbB.value, r)
-      })
+      val encodeUdf = udf((v: Array[Float], cluster: Int) =>
+        PqCodec.encode(cbB.value, PqCodec.residual(v, centsB.value(cluster))))
       data.withColumn("cluster", AnnEngine.assignUdf(spark, centsB, meta.imiB)(col("vec")))
         .select(Seq(col("id"), encodeUdf(col("vec"), col("cluster")).as("code")) ++
           refineCols(meta) :+ col("cluster"): _*)
@@ -1566,45 +1657,49 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
     }
   }
 
-  /** ADC top-k. ivfpq: per probed cluster the lookup table is built from
-   *  (q − centroid) for L2, or from q with a −dot(q, centroid) offset for
-   *  IP/cosine; partition pruning keeps unprobed files unread. pq (OPQ):
-   *  the ADC query rotates once; the RFlat re-rank keeps the unrotated one. */
+  /** The family's ADC kernel for a prepped query ([[AdcQuery]]): ivfpq
+   *  takes one residual table per probed cell (`probes`, null = every
+   *  cell of `cents`); pq (OPQ) rotates the ADC query once — the RFlat
+   *  re-rank keeps the unrotated one. Artifacts load once per call. */
+  private def adcQuery(spark: SparkSession, meta: IndexMeta,
+      cents: Array[Array[Float]]): (Array[Float], Array[Int]) => AdcQuery = {
+    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
+    val rot = if (meta.opq) readRotation(spark, meta) else null
+    val l2 = meta.metricObj eq Metric.L2
+    (query, probes) =>
+      if (!ivf) AdcQuery.flat(cb, if (rot == null) query else OpqCodec.rotate(rot, query), l2, 8)
+      else AdcQuery.residual(cb, query, cents,
+        if (probes == null) cents.indices.toArray else probes, l2)
+  }
+
+  /** ADC top-k; partition pruning keeps unprobed ivfpq files unread. */
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame = {
-    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
-    val l2 = meta.metricObj eq Metric.L2
-    val k = cb.k
     val (scan, score) = if (ivf) {
       val (cents, ps) = probes(spark, meta, query, nprobe)
-      // the IP/cosine LUT depends only on the query — build it once and vary
-      // only the per-probe -dot(q, centroid) offset; L2 needs a per-probe
-      // residual table
-      val ipLut = if (l2) null else PqCodec.lut(cb, query, l2 = false)
-      val perProbe: Map[Int, (Array[Float], Float)] = ps.map { p =>
-        val c = cents(p)
-        if (l2) {
-          val qr = new Array[Float](query.length)
-          var i = 0
-          while (i < query.length) { qr(i) = query(i) - c(i); i += 1 }
-          p -> (PqCodec.lut(cb, qr, l2 = true), 0.0f)
-        } else p -> (ipLut, -VectorOps.dot(query, c))
-      }.toMap
-      val lutB = spark.sparkContext.broadcast(perProbe)
-      val adcUdf = udf((cluster: Int, code: Array[Byte]) => {
-        val (t, off) = lutB.value(cluster)
-        PqCodec.adc(t, k, code) + off
-      })
+      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta, cents)(query, ps))
       (probeFilter(spark.read.parquet(meta.sourcePath), ps.toSeq, cents.length),
-        adcUdf(col("cluster").cast(IntegerType), col("code")))
+        udf((cluster: Int, code: Array[Byte]) => aB.value.score(cluster, code))
+          .apply(col("cluster").cast(IntegerType), col("code")))
     } else {
-      val tB = spark.sparkContext.broadcast(PqCodec.lut(cb, rotated(spark, meta, query), l2))
+      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta, null)(query, null))
       (spark.read.parquet(meta.sourcePath),
-        udf((code: Array[Byte]) => PqCodec.adc(tB.value, k, code)).apply(col("code")))
+        udf((code: Array[Byte]) => aB.value.score(-1, code)).apply(col("code")))
     }
     // filtered search: the id predicate splices BEFORE the ADC projection
     // and top-k, so it pushes to the parquet scan beside the probe pruning
     filter.fold(scan)(scan.where).select(col("id").as("row_id"), score.as("__dd"))
+  }
+
+  protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
+      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+    val codes = stored.map(_.asInstanceOf[Array[Byte]])
+    val adc = adcQuery(spark, meta, cents)
+    (query, probes) => {
+      val a = adc(query, probes)
+      if (clusters == null) i => a.score(-1, codes(i)).toDouble
+      else i => a.score(clusters(i), codes(i)).toDouble
+    }
   }
 
   /** ivfpq range is approximate at nprobe < nlist (residual reconstructions
@@ -1617,7 +1712,7 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
   protected def tableJoin(t: TableQueries): TableJoin =
     adcTableJoin(t, if (t.meta.opq) "__qadc" else "__q", residual = true, bits = 8)
 
-  private[index] def codeBytes(meta: IndexMeta): Long = meta.maxDegree.toLong // m bytes
+  protected def codeBytes(meta: IndexMeta): Long = meta.maxDegree.toLong // m bytes
 
   /** pq decodes subspace codes (OPQ applies Rᵀ — IndexPreTransform's
    *  reverse_transform); ivfpq returns centroid + decoded residual; RFlat
@@ -1631,13 +1726,8 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
     if (ivf) {
       val centsB = spark.sparkContext.broadcast(
         IndexCatalog.readCentroids(s"$dir/centroids.bin"))
-      val dec = udf((code: Array[Byte], cluster: Int) => {
-        val r = PqCodec.decode(cbB.value, code)
-        val c = centsB.value(cluster)
-        var i = 0
-        while (i < r.length) { r(i) = c(i) + r(i); i += 1 }
-        r
-      })
+      val dec = udf((code: Array[Byte], cluster: Int) =>
+        PqCodec.decodeResidual(cbB.value, code, centsB.value(cluster)))
       rows.select(col("id").as("row_id"),
         dec(col("code"), col("cluster").cast(IntegerType)).as("vector"))
     } else {
@@ -1667,15 +1757,16 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
  * codebook with m = dim, dsub = 1, k = 2^bits whose "centroids" are the
  * dequantization levels per dimension (`min_d + (b/(2^bits−1))·scale_d` —
  * bit-identical to [[Sq8Data.dequantize]] at 8 bits), so `PqCodec.lut/adc`,
- * the codegen'd [[PqAdcScore]] path, the RFlat refine stage and ExactServe
- * all work unchanged; only encode/extract branch on sub-byte packing.
+ * the codegen'd [[PqAdcScore]] path, the [[AdcQuery]] kernel and the RFlat
+ * refine stage all work unchanged; only encode/extract branch on sub-byte
+ * packing.
  * Encoding does NOT go through codebook argmin (an exact-midpoint value
  * would round down by argmin's lowest-index tiebreak but UP by the SQ round
  * rule the oracle replays) — it uses [[Sq8Codec.encodeRow]].
  */
 sealed abstract class SqEngine extends TableEngine("ivfsq") {
   override def ivf: Boolean = true
-  override def adcCodes: Boolean = true
+  override def storesCodes: Boolean = true
 
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
@@ -1776,22 +1867,32 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
       spark.sparkContext.broadcast(IndexCatalog.readCentroids(s"$dir/centroids.bin")),
       spark.sparkContext.broadcast(PqCodec.read(s"$dir/pq.bin")), meta.nlist, meta.quantBits))
 
-  /** Probe-pruned scan ranked by the per-dim dequantization LUT (packed
-   *  sub-byte rows extract level indices inline). */
+  /** The family's ADC kernel for a prepped query: one per-dim
+   *  dequantization table serves every probe (packed sub-byte rows extract
+   *  level indices inline). The codebook loads once per call. */
+  private def adcQuery(spark: SparkSession, meta: IndexMeta): Array[Float] => AdcQuery = {
+    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
+    val l2 = meta.metricObj eq Metric.L2
+    query => AdcQuery.flat(cb, query, l2, meta.quantBits)
+  }
+
+  /** Probe-pruned scan ranked by [[adcQuery]]. */
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame = {
-    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
-    val lutB = spark.sparkContext.broadcast(
-      PqCodec.lut(cb, query, meta.metricObj eq Metric.L2))
-    val k = cb.k
-    val bits = meta.quantBits
-    val dim = meta.dim
-    val adcUdf =
-      if (bits == 8) udf((code: Array[Byte]) => PqCodec.adc(lutB.value, k, code))
-      else udf((code: Array[Byte]) => SqPackedCodec.adc(lutB.value, bits, dim, code))
+    val aB = spark.sparkContext.broadcast(adcQuery(spark, meta)(query))
     val scan = probedScan(spark, meta, query, nprobe)
-    filter.fold(scan)(scan.where)
-      .select(col("id").as("row_id"), adcUdf(col("code")).as("__dd"))
+    filter.fold(scan)(scan.where).select(col("id").as("row_id"),
+      udf((code: Array[Byte]) => aB.value.score(-1, code)).apply(col("code")).as("__dd"))
+  }
+
+  protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
+      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+    val codes = stored.map(_.asInstanceOf[Array[Byte]])
+    val adc = adcQuery(spark, meta)
+    (query, _) => {
+      val a = adc(query)
+      i => a.score(-1, codes(i)).toDouble
+    }
   }
 
   protected def rangeDist(spark: SparkSession, meta: IndexMeta, t: DataFrame,
@@ -1801,7 +1902,7 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
   protected def tableJoin(t: TableQueries): TableJoin =
     adcTableJoin(t, "__q", residual = false, bits = t.meta.quantBits)
 
-  private[index] def codeBytes(meta: IndexMeta): Long =
+  protected def codeBytes(meta: IndexMeta): Long =
     (meta.dim.toLong * meta.quantBits + 7) / 8
 
   /** The per-dim dequantization levels (SQ8 or packed SQ4/SQ6); RFlat
@@ -1828,6 +1929,7 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
  * are not, so they train on the stored (normalized) representation.
  */
 sealed abstract class LshEngine extends TableEngine("lsh") {
+  override def storesCodes: Boolean = true
 
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
@@ -1897,16 +1999,43 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
     data.select(Seq(col("id"), encodeUdf(col("vec")).as("code")) ++ refineCols(meta): _*)
   }
 
+  /** The query's code in the stored layout; artifacts load once per call. */
+  private def queryCode(spark: SparkSession, meta: IndexMeta): Array[Float] => Array[Long] = {
+    val hyps = IndexCatalog.readCentroids(
+      s"${IndexCatalog.indexDir(root(spark), meta.name)}/hyperplanes.bin")
+    val thr = Ann.lshThresholdsOf(spark, meta)
+    Ann.lshQueryCode(meta, hyps, _, thr)
+  }
+
   /** Hamming ranking with no UDF and no vector column read; under RFlat
    *  only the candidates' vectors are fetched back for the exact re-rank. */
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame = {
-    val hyps = IndexCatalog.readCentroids(
-      s"${IndexCatalog.indexDir(root(spark), meta.name)}/hyperplanes.bin")
-    val qcode = Ann.lshQueryCode(meta, hyps, query, Ann.lshThresholdsOf(spark, meta))
+    val qcode = queryCode(spark, meta)(query)
     val scan = spark.read.parquet(meta.sourcePath)
     filter.fold(scan)(scan.where)
-      .select(col("id").as("row_id"), Ann.hammingCol(col("code"), qcode).as("__dd"))
+      .select(col("id").as("row_id"),
+        Ann.hammingCol(col("code"), qcode.length, w => lit(qcode(w))).as("__dd"))
+  }
+
+  /** Integer Hamming distances, so parity with the codegen'd
+   *  bit_count(XOR) is exact; wide codes sum per-word popcounts, as the
+   *  scan sums its per-word columns. Row i's words sit at [i·w, (i+1)·w). */
+  protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
+      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+    val code = queryCode(spark, meta)
+    val w = LshCodec.words(meta.nlist)
+    val words = if (w == 1) stored.map(_.asInstanceOf[Long])
+      else stored.flatMap(_.asInstanceOf[scala.collection.Seq[Long]])
+    (query, _) => {
+      val q = code(query)
+      i => {
+        var h = 0
+        var j = 0
+        while (j < w) { h += java.lang.Long.bitCount(words(i * w + j) ^ q(j)); j += 1 }
+        h.toDouble
+      }
+    }
   }
 
   /** Hamming codes carry no metric-space distance: single-query range
@@ -1939,18 +2068,12 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
       if (wide) udf((v: Array[Float]) => LshCodec.encodeWords(hypsB.value, v, thrB.value))
       else udf((v: Array[Float]) => LshCodec.encode(hypsB.value, v, thrB.value))
     val frozen = t.frozen("__q")._1.withColumn("__qcode", qcodeUdf(col("__q")))
-    val code = t.base("code")
-    // wide codes: per-word XOR popcounts summed — the word count is a
-    // plan-time constant, so the score stays builtin expressions
-    val score =
-      if (wide) (0 until LshCodec.words(meta.nlist)).map(w =>
-          bit_count(element_at(code, w + 1).bitwiseXOR(element_at(col("__qcode"), w + 1))))
-        .reduce(_ + _).cast(DoubleType)
-      else bit_count(code.bitwiseXOR(col("__qcode"))).cast(DoubleType)
+    val score = Ann.hammingCol(t.base("code"), LshCodec.words(meta.nlist),
+      w => if (wide) element_at(col("__qcode"), w + 1) else col("__qcode")).cast(DoubleType)
     TableJoin(t.base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
   }
 
-  private[index] def codeBytes(meta: IndexMeta): Long = ((meta.nlist + 63) / 64).toLong * 8
+  protected def codeBytes(meta: IndexMeta): Long = ((meta.nlist + 63) / 64).toLong * 8
 
   /** Sign codes are not reconstructible (FAISS IndexLSH has no reconstruct
    *  either); LSH,RFlat keeps raw vectors and reconstructs them exactly. */

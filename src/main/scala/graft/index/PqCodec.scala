@@ -103,6 +103,24 @@ object PqCodec {
     t
   }
 
+  /** ADC table and additive offset for residual (IVF-PQ) codes of the cell
+   *  with centroid `c` — the one per-probe table every ADC route builds.
+   *  L2 takes the table of the residual q − c with offset 0; IP/cosine split
+   *  ⟨q, c + r⟩, so the query's own table `qLut` (= `lut(cb, q, l2 = false)`,
+   *  shared by every cell) serves with offset −dot(q, c). */
+  def residualLut(cb: Codebook, q: Array[Float], c: Array[Float], l2: Boolean,
+      qLut: => Array[Float]): (Array[Float], Float) =
+    if (l2) (lut(cb, residual(q, c), l2 = true), 0.0f)
+    else (qLut, -VectorOps.dot(q, c))
+
+  /** v − c: the residual an IVF-PQ code quantizes against its centroid. */
+  def residual(v: Array[Float], c: Array[Float]): Array[Float] = {
+    val r = new Array[Float](v.length)
+    var i = 0
+    while (i < r.length) { r(i) = v(i) - c(i); i += 1 }
+    r
+  }
+
   /** ADC distance of one code against a query's lookup table. */
   def adc(table: Array[Float], k: Int, code: Array[Byte]): Float = {
     var d = 0.0f
@@ -123,6 +141,14 @@ object PqCodec {
       s += 1
     }
     out
+  }
+
+  /** An IVF-PQ row's reconstruction: decoded residual + its centroid `c`. */
+  def decodeResidual(cb: Codebook, code: Array[Byte], c: Array[Float]): Array[Float] = {
+    val r = decode(cb, code)
+    var i = 0
+    while (i < r.length) { r(i) += c(i); i += 1 }
+    r
   }
 
   // ---- codebook file: [m u32][dsub u32][k u32][f32 × m·k·dsub] LE ----

@@ -87,12 +87,35 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tombstones(name: String): Unit =
     Ann.delete(spark, name, (0L until N.toLong by 97L) ++ queries.indices.map(i => i * 997L + 3))
 
-  test("exact serve: flat, ivfflat, pq and ivfpq with tombstones") {
+  /** One index per storage shape the driver-local scorers branch on: raw
+   *  vectors, per-probe and flat ADC, OPQ rotation, byte and packed SQ,
+   *  RFlat re-rank, narrow / thresholded / wide Hamming, a coarse graph,
+   *  IMI cells, and the non-L2 metrics. */
+  private def factoryShapes: Seq[(String, Ann.BuildParams)] = {
+    val base = Ann.BuildParams(nprobe = 4)
+    Seq(
+      "rp_ivfsq8" -> "IVF16,SQ8",
+      "rp_ivfsq4" -> "IVF16,SQ4",
+      "rp_ivfsq8_rf" -> "IVF16,SQ8,RFlat",
+      "rp_pq_rf" -> "PQ4,RFlat",
+      "rp_opq" -> "OPQ4,PQ4",
+      "rp_lsh32t" -> "LSH32t",
+      "rp_lsh256" -> "LSH256",
+      "rp_lsh32_rf" -> "LSH32,RFlat",
+      "rp_ivfhnsw" -> "IVF16_HNSW8,Flat",
+      "rp_imipq" -> "IMI2x2,PQ4"
+    ).map { case (name, f) => name -> Ann.parseFactory(f, base) } ++ Seq(
+      "rp_ivfpq_ip" -> Ann.parseFactory("IVF16,PQ4", base.copy(metric = "ip")),
+      "rp_pq_cos" -> Ann.parseFactory("PQ4", base.copy(metric = "cosine")))
+  }
+
+  test("exact serve: every table-engine storage shape with tombstones") {
     for ((name, p) <- Seq(
         "rp_flat" -> Ann.BuildParams(engine = "flat"),
         "rp_ivf" -> Ann.BuildParams(engine = "ivfflat", nlist = 16, nprobe = 4),
         "rp_pq" -> Ann.BuildParams(engine = "pq", pqM = 4),
-        "rp_ivfpq" -> Ann.BuildParams(engine = "ivfpq", pqM = 4, nlist = 16, nprobe = 4))) {
+        "rp_ivfpq" -> Ann.BuildParams(engine = "ivfpq", pqM = 4, nlist = 16, nprobe = 4)) ++
+        factoryShapes) {
       Ann.buildIndex(emb, "embedding", "vec_id", name, p)
       tombstones(name)
       val got = parity("ann.exact")(hits(name))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the job-free filtered serving route (Ann.searchFilteredHits →
- *  ExactServe.searchFiltered): bit-parity with the distributed
+ *  TableEngine.searchFilteredHits): bit-parity with the distributed
  *  searchFiltered on every eligible engine, including the ivf nprobe
  *  saturation retry, tombstones under a filter, and the LocalRelation
  *  (job-free) plan shape. */
@@ -35,7 +35,9 @@ class FilteredServeSpec extends AnyFunSuite {
       "fs_ivf" -> Ann.BuildParams(engine = "ivfflat", nlist = 8, nprobe = 8),
       "fs_pq" -> Ann.BuildParams(engine = "pq", pqM = 8),
       "fs_ivfpq" -> Ann.BuildParams(engine = "ivfpq", nlist = 4, nprobe = 4,
-        pqM = 8, refine = true, refineK = 4))
+        pqM = 8, refine = true, refineK = 4),
+      "fs_ivfsq" -> Ann.BuildParams(engine = "ivfsq", nlist = 4, nprobe = 2),
+      "fs_lsh" -> Ann.BuildParams(engine = "lsh"))
     val filt = Ann.IdFilter.modEq(3, 1)
     configs.foreach { case (name, p) =>
       Ann.buildIndex(emb, "embedding", "vec_id", name, p)
