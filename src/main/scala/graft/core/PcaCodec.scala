@@ -178,19 +178,25 @@ object PcaCodec {
     Pca(rot, mean)
   }
 
-  /** Process-wide cache keyed by (path, mtime, size) — a PCA is frozen at
+  /** path → ((mtime, size), transform), process-wide — a PCA is frozen at
    *  build time (vacuum rewrites parquet, never the transform), but a
    *  same-name rebuild in the same JVM rewrites pca.bin at the same path;
    *  fingerprinting the file keeps serving from transforming queries with a
    *  stale rotation/mean after such a rebuild (same guard class as
-   *  ExactServe's content fingerprint). Serving must not re-read 16 KB per
-   *  query, so the hit path is one stat, not one read. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Pca]()
+   *  ExactServe's content fingerprint), and the new read REPLACES the old
+   *  entry, so repeated rebuilds hold one transform per path (the
+   *  coarse-graph caches' rule, Ann.coarseGraphCache). Serving must not
+   *  re-read 16 KB per query, so the hit path is one stat, not one read. */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Pca)]()
   def cached(path: String): Pca = {
     val p = java.nio.file.Paths.get(path)
-    val key = (path, java.nio.file.Files.getLastModifiedTime(p).toMillis, java.nio.file.Files.size(p))
-    cache.computeIfAbsent(key, k => read(k._1))
+    val fp = (java.nio.file.Files.getLastModifiedTime(p).toMillis, java.nio.file.Files.size(p))
+    cache.compute(path, (_, old) =>
+      if (old != null && old._1 == fp) old else (fp, read(path)))._2
   }
+
+  /** Number of cached transforms (one per index path). */
+  private[graft] def cachedCount: Int = cache.size
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix. Returns
    *  (eigenvalues, eigenvector matrix with vectors as COLUMNS). */

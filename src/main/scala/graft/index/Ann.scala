@@ -1043,24 +1043,32 @@ object Ann {
    * ordered by distance, ≤ k·oversample rows (reference src/ann_search.cpp:55-195).
    */
   def search(df: DataFrame, idColumn: String, name: String, query: Array[Float],
-      k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame = {
-    val spark = df.sparkSession
-    val hits = collectHits(spark, name, query, k, searchComplexity, oversample)
-    val ids = hits.map(_._1)
-    val distDf = spark.createDataFrame(hits.toSeq.zipWithIndex.map { case (h, i) =>
-        Row(h._1, h._2, i) }.asJava,
+      k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame =
+    fetchHits(df, idColumn,
+      collectHits(df.sparkSession, name, query, k, searchComplexity, oversample))
+
+  /** The rows of `df` whose [[idKey]] is a hit, plus the hit's `_distance`,
+   *  in `hits` order — the one fetch-back of a collected hit list (the
+   *  reference fetches by row id, src/ann_optimizer.cpp:114-118). Up to
+   *  [[TombInlineMax]] hits the id set also reaches the parquet scan
+   *  (PushedFilters: In(id, ...) for integral ids, [[idIn]]); past it (a
+   *  wide radius) its plan string costs more than the pushdown saves and
+   *  the broadcast join alone selects. Output order is the ENGINE's
+   *  ranking, not a re-sort by the f32-cast `_distance` then id: the
+   *  engine ranks near-ties by the full double distance (refine re-rank,
+   *  ExactServe's double fold) and exact ties by the LONG key, where a
+   *  float re-sort would flip pairs whose doubles differ below f32
+   *  precision and an id re-sort would put STRING id "10" before "9". */
+  private[graft] def fetchHits(df: DataFrame, idColumn: String,
+      hits: Array[(Long, Float)]): DataFrame = {
+    val distDf = df.sparkSession.createDataFrame(hits.toSeq.zipWithIndex.map {
+        case (h, i) => Row(h._1, h._2, i) }.asJava,
       StructType(Seq(StructField("__ann_id", LongType),
         StructField("_distance", FloatType), StructField("__ann_rank", IntegerType))))
-    // the id set reaches the parquet scan (PushedFilters: In(id, ...)) for
-    // integral ids (idInSet) — the scale-safe analog of rowid fetch; then a
-    // broadcast join attaches the distance. Output order preserves the
-    // ENGINE's ranking (carried as __ann_rank) rather than re-sorting by the
-    // f32-cast `_distance`: the engine ranks near-ties by the full double
-    // distance (refine re-rank, ExactServe's double fold), and a float
-    // re-sort would flip any pair whose doubles differ only below f32
-    // precision.
-    df.where(idIn(df, idColumn, ids))
-      .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
+    val idType = df.select(col(idColumn)).schema.head.dataType
+    val key = GraftShim.column(idKey(GraftShim.expression(col(idColumn)), idType))
+    (if (hits.length > TombInlineMax) df else df.where(idIn(df, idColumn, hits.map(_._1))))
+      .join(broadcast(distDf), key === col("__ann_id"))
       .drop("__ann_id")
       .orderBy(col("__ann_rank"))
       .drop("__ann_rank")

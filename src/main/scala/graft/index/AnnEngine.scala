@@ -123,19 +123,7 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
       k *= 4
       hits = Ann.collectHits(spark, meta.name, query, k, searchComplexity, 1)
     }
-    val within = hits.filter(_._2 <= radius)
-    val distDf = spark.createDataFrame(
-      java.util.Arrays.asList(within.map(h => Row(h._1, h._2)): _*),
-      StructType(Seq(StructField("__ann_id", LongType),
-        StructField("_distance", FloatType))))
-    // the inner join below already restricts to the hit ids; the id set only
-    // PUSHES that filter into the base scan (Ann.idInSet). Past TombInlineMax
-    // hits (a wide radius) its plan string costs more than the pushdown saves
-    (if (within.length > Ann.TombInlineMax) df
-      else df.where(Ann.idIn(df, idColumn, within.map(_._1))))
-      .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
-      .drop("__ann_id")
-      .orderBy(col("_distance"), col(idColumn))
+    Ann.fetchHits(df, idColumn, hits.filter(_._2 <= radius))
   }
 
   /** TABLE-search hit schema: query columns + row_id + _distance. */

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
-import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -68,8 +67,11 @@ case object KeepMarker extends LeafExpression with Unevaluable {
  *
  * and rewrites the relation to `Filter(id INSET <hit ids>, relation)`,
  * keeping the original Project/Filter/Sort/Limit on top:
- *   - the index search runs eagerly (driver-local over cached shards for
- *     small indexes — the serving path; shard-fan-out job otherwise);
+ *   - the index search runs while the optimizer plans the query
+ *     (driver-local over cached shards for small indexes — the serving
+ *     path; shard-fan-out job otherwise), so EXPLAIN of a rewritten top-k
+ *     searches too; [[AnnTopKRule.cachedHits]] keeps the explain → count →
+ *     collect of one plan to one search;
  *   - the base rows are fetched by id on one of two routes (op
  *     `ann.fetch`, [[graft.core.Route]]). Below the gate the rows come
  *     from the [[BaseRows]] driver cache, the way the reference fetches
@@ -91,11 +93,13 @@ case object KeepMarker extends LeafExpression with Unevaluable {
  * Cost gates mirror the reference (src/ann_optimizer.cpp:459-472): skip
  * tables < 50 rows, skip k > 10% of rows (30% for graph indexes). A Filter
  * between projection and scan does not bail (the reference gives up,
- * :479-481): we over-fetch `k·mult + 100` (README.md:164, multiplier from
- * `spark.graft.ann.overfetchMultiplier`, default 3) and let the retained
- * Filter re-filter.
+ * :479-481): we over-fetch `k·3 + 100` (README.md:164) and let the
+ * retained Filter re-filter.
  */
 object AnnTopKRule {
+  /** Over-fetch factor under a retained Filter (reference README.md:164). */
+  val OverfetchMultiplier = 3
+
   /** Planning-time search results, cached per (index path, catalog content
    *  hash, metadata searched, query, k) so repeated optimizations of one
    *  plan (explain → count → collect, AQE re-planning) don't re-run the ANN
@@ -107,17 +111,17 @@ object AnnTopKRule {
    *  before hashing, so a writer committing in between leaves an entry no
    *  later read matches. Bounded LRU. */
   private val MaxCached = 128
-  private type Key = (String, Long, IndexMeta, Seq[Float], Int, Int)
+  private type Key = (String, Long, IndexMeta, Seq[Float], Int)
   private val hitsCache =
     new java.util.LinkedHashMap[Key, Array[(Long, Float)]](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[Key, Array[(Long, Float)]]) =
         size() > MaxCached
     }
 
-  private[plans] def cachedHits(metaPath: String, contentHash: Long, meta: IndexMeta,
-      query: Array[Float], fetchK: Int, searchComplexity: Int = 0)(
+  private def cachedHits(metaPath: String, contentHash: Long, meta: IndexMeta,
+      query: Array[Float], fetchK: Int)(
       compute: => Array[(Long, Float)]): Array[(Long, Float)] = {
-    val key = (metaPath, contentHash, meta, query.toSeq, fetchK, searchComplexity)
+    val key = (metaPath, contentHash, meta, query.toSeq, fetchK)
     hitsCache.synchronized {
       val hit = hitsCache.get(key)
       if (hit != null) return hit
@@ -130,7 +134,7 @@ object AnnTopKRule {
   /** 64-bit content hash of metadata.json (CRC32 + Arrays.hashCode) — a
    *  32-bit key alone leaves a realistic aliasing window for rapid index
    *  mutations. Unreadable file → unique value, i.e. no caching. */
-  private[plans] def metaHashOf(metaPath: String): Long =
+  private def metaHashOf(metaPath: String): Long =
     try {
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(metaPath))
       val crc = new java.util.zip.CRC32
@@ -143,21 +147,8 @@ object AnnTopKRule {
 
 case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def overfetchMultiplier: Int =
-    spark.conf.getOption("spark.graft.ann.overfetchMultiplier").map(_.toInt).getOrElse(3)
-
   private def enabled: Boolean =
     spark.conf.getOption("spark.graft.ann.rewriteEnabled").forall(_.toBoolean)
-
-  /** "eager" (default): search at planning time, then answer from the
-   *  driver row cache below the `ann.fetch` gate, else push the hit ids into
-   *  the scan as one `InSet` (keeps parquet row-group skipping — the 100 TB
-   *  priority — and one compiled plan for every query).
-   *  "lazy": graft a LeftSemi join against [[AnnHitsNode]]; the search runs
-   *  at execution, so EXPLAIN / cached plans / AQE never trigger index I/O,
-   *  at the cost of the static scan pushdown. */
-  private def rewriteMode: String =
-    spark.conf.getOption("spark.graft.ann.rewriteMode").getOrElse("eager")
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
@@ -182,7 +173,6 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def alreadyRewritten(plan: LogicalPlan): Boolean =
     plan.exists {
       case f: Filter => f.condition.exists(_.isInstanceOf[AnnRewrittenMarker])
-      case _: AnnHitsNode => true
       case _ => false
     }
 
@@ -279,22 +269,8 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     // fetch size: plain k, or k·mult + 100 when a filter must re-filter
     // (README.md:164)
-    val fetchK = if (hasFilter) k * overfetchMultiplier + 100 else k
+    val fetchK = if (hasFilter) k * AnnTopKRule.OverfetchMultiplier + 100 else k
     val idAttr = lr.output.find(_.name == meta.idColumn).getOrElse(return None)
-
-    if (rewriteMode == "lazy") {
-      // defer the search to execution: LeftSemi against the lazy hits node
-      // (broadcast — its stats report ~fetchK rows)
-      val hitAttr = AttributeReference("__ann_hit_id", LongType, nullable = false)()
-      val hitsNode = AnnHitsNode(meta.name, query.toSeq, fetchK, Seq(hitAttr))
-      val idKey = Ann.idKey(idAttr, idAttr.dataType)
-      def injectJoin(p: LogicalPlan): LogicalPlan = p match {
-        case rel: LogicalRelation if rel eq lr =>
-          Join(rel, hitsNode, LeftSemi, Some(EqualTo(idKey, hitAttr)), JoinHint.NONE)
-        case other => other.withNewChildren(other.children.map(injectJoin))
-      }
-      return Some(top(injectJoin(child)))
-    }
 
     val metaPath = s"${IndexCatalog.indexDir(rootDir, meta.name)}/metadata.json"
     val metaHash = AnnTopKRule.metaHashOf(metaPath)

@@ -3,10 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, NamedArgumentExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project, Sort}
-import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, EqualTo, SortOrder}
-import org.apache.spark.sql.types.{FloatType, LongType}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 import graft.index.{Ann, IndexCatalog}
@@ -78,9 +75,8 @@ import graft.search.Hybrid
  * [[CommandTvfNode]] whose effect runs at EXECUTION time, so EXPLAIN over
  * them never mutates the catalog (the reference's bind/first-scan split,
  * src/ann_search.cpp:55-149). Read-only search functions build their plan
- * eagerly during analysis — `ann_search` additionally honors
- * `spark.graft.ann.rewriteMode=lazy` (an [[AnnHitsNode]] join plan) when
- * even the search collect must wait for execution.
+ * eagerly during analysis: `ann_search` and `ann_search_filtered` run
+ * their index search then, so EXPLAIN over them searches too.
  */
 object TableFunctions {
 
@@ -184,27 +180,6 @@ object TableFunctions {
 
   private def plan(df: DataFrame): LogicalPlan = df.queryExecution.logical
 
-  /** Lazy `ann_search` plan (`spark.graft.ann.rewriteMode=lazy`): the same
-   *  join shape the eager path builds, but against an [[AnnHitsNode]] whose
-   *  search runs at EXECUTION time — EXPLAIN over the SQL statement
-   *  launches no index I/O, matching the lazy transparent rewrite. */
-  private def lazySearchPlan(fn: String, table: String, idCol: String,
-      index: String, query: Array[Float], fetchK: Int,
-      searchComplexity: Int): LogicalPlan = {
-    val basePlan = spark.table(table).queryExecution.analyzed
-    val idAttr = basePlan.output.find(_.name == idCol).getOrElse(
-      err(fn, s"table $table has no column $idCol (the index id column)"))
-    val hitId = AttributeReference("__ann_id", LongType, nullable = false)()
-    val hitDist = AttributeReference("_distance", FloatType, nullable = false)()
-    val hits = AnnHitsNode(index, query.toSeq, fetchK, Seq(hitId, hitDist),
-      searchComplexity)
-    val joined = Join(basePlan, hits, Inner,
-      Some(EqualTo(idAttr, hitId)), JoinHint.NONE)
-    val projected = Project(basePlan.output :+ hitDist, joined)
-    Sort(Seq(SortOrder(hitDist, Ascending), SortOrder(idAttr, Ascending)),
-      global = true, projected)
-  }
-
   private def spark: SparkSession = SparkSession.active
 
   /**
@@ -236,12 +211,8 @@ object TableFunctions {
       val sc = a.get("search_complexity").map(int(fn, _)).getOrElse(0)
       val over = a.get("oversample").map(int(fn, _)).getOrElse(1)
       val idCol = IndexCatalog.load(Ann.root(spark), index).idColumn
-      val table = str(fn, a("table")); val q = vec(fn, a("query_vec"))
-      val k = int(fn, a("k"))
-      if (spark.conf.getOption("spark.graft.ann.rewriteMode").contains("lazy"))
-        lazySearchPlan(fn, table, idCol, index, q, k * math.max(1, over), sc)
-      else
-        plan(Ann.search(spark.table(table), idCol, index, q, k, sc, over))
+      plan(Ann.search(spark.table(str(fn, a("table"))), idCol, index,
+        vec(fn, a("query_vec")), int(fn, a("k")), sc, over))
     },
     // attribute-filtered search: allow_pred is a SQL predicate over the
     // literal column name `id` — one parse feeds both the pushed-down scan
@@ -256,13 +227,9 @@ object TableFunctions {
       val sc = a.get("search_complexity").map(int(fn, _)).getOrElse(0)
       val idCol = IndexCatalog.load(Ann.root(spark), index).idColumn
       val filt = Ann.idFilterFromSql(spark, str(fn, a("allow_pred")))
-      val hits = Ann.searchFiltered(spark, index, vec(fn, a("query_vec")),
-        int(fn, a("k")), filt, sc)
-      val base = spark.table(str(fn, a("table")))
-      import org.apache.spark.sql.functions.{broadcast, col}
-      plan(base.join(broadcast(hits), base(idCol) === hits("row_id"))
-        .drop("row_id")
-        .orderBy(col("_distance"), col(idCol)))
+      val hits = Ann.searchFilteredHits(spark, index, vec(fn, a("query_vec")),
+        int(fn, a("k")), filt, sc).collect().map(r => (r.getLong(0), r.getFloat(1)))
+      plan(Ann.fetchHits(spark.table(str(fn, a("table"))), idCol, hits))
     },
     "ann_range_search" -> { args =>
       val fn = "ann_range_search"

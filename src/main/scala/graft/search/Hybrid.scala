@@ -2,7 +2,6 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.text.TextOps
 import graft.functions.{toFloatVec, floatVec, array_distance_sq}
@@ -23,8 +22,8 @@ import graft.index.Ann
  *
  * Scale shape: the term-frequency projection is codegen over the token
  * array; doc-frequencies for the (few) query terms are one small aggregate;
- * ranking is a single top-N; fusion joins two ≤N-row sides — nothing
- * materializes on the driver except |queryTerms| doc-frequency counts.
+ * ranking is a single top-N; the driver holds only |queryTerms|
+ * doc-frequency counts and the two ≤N-row rank lists it fuses.
  */
 object Hybrid {
 
@@ -44,7 +43,7 @@ object Hybrid {
   def bm25Ranks(df: DataFrame, textCol: String, idCol: String,
       terms: Seq[String], topN: Int): DataFrame = {
     val spark = df.sparkSession
-    if (terms.isEmpty) // empty LOCAL relation, so rrfFuse's local path applies
+    if (terms.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(Seq(StructField("id", LongType), StructField("_bm25_rank", IntegerType))))
     val toks = TextOps.tokens(col(textCol))
@@ -90,10 +89,8 @@ object Hybrid {
    *  rdd.zipWithIndex spelling executed the whole TakeOrdered scan TWICE
    *  per downstream action (zipWithIndex runs an eager partition-count job
    *  at construction, and the ExistingRDD re-runs the scan lineage when the
-   *  fused result executes) and left the fusion join as a SortMergeJoin of
-   *  two RDD-backed 100-row tables behind two exchanges; a LocalRelation
-   *  evaluates the scan once and lets rrfFuse's local path skip the fusion
-   *  join entirely. (An unpartitioned Window would log
+   *  fused result executes); a LocalRelation evaluates the scan once and
+   *  rrfFuse collects it with no job. (An unpartitioned Window would log
    *  WindowExec's move-all-data warning on every serving query, and the
    *  optimizer folds away constant partition keys, so there is no quiet
    *  window spelling.) */
@@ -131,63 +128,32 @@ object Hybrid {
       .toDF("id", "_vector_rank")
   }
 
-  /** (id, rank) pairs when `df` is a bounded, already-materialized LOCAL
-   *  relation (the shape every rank-table builder above returns); None for
-   *  plan-backed inputs. collect() of a LocalRelation launches no job. */
-  private def localRanks(df: DataFrame): Option[Array[(Long, Int)]] =
-    // optimizedPlan, not analyzed: a rank table built via toDF carries a
-    // column-renaming Project that ConvertToLocalRelation folds away
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(df.collect().map(r => (r.getLong(0), r.getInt(1))))
-      case _ => None
-    }
-
   /** RRF fusion of two rank tables → (id, _bm25_rank, _vector_rank,
    *  _rrf_score) desc, top-k. Missing ranks surface as 0 and contribute
-   *  nothing (reference :1091-1106). */
+   *  nothing (reference :1091-1106). Both tables are collected (every rank
+   *  builder above returns a LocalRelation bounded by the candidate budget,
+   *  whose collect launches no job) and the ≤ 2·budget rows fuse on the
+   *  driver into a LocalRelation: a single LocalTableScan instead of a
+   *  full-outer SortMergeJoin behind two exchanges. The score adds the two
+   *  doubles in the oracle's order, so it is bit-identical to it. */
   def rrfFuse(bm25: DataFrame, vector: DataFrame, k: Int,
       bm25Weight: Double = DefaultBm25Weight,
       vectorWeight: Double = DefaultVectorWeight): DataFrame = {
-    // both rank tables local (the production shape: every builder above
-    // returns a ≤candidate-budget LocalRelation) → fuse the ≤2·budget rows
-    // at the driver and return a LocalRelation: the fused plan is a single
-    // LocalTableScan, versus a full-outer SortMergeJoin of two ~100-row
-    // tables behind TWO exchanges + a final TakeOrdered. Same double
-    // arithmetic in the same order as the Column formulation below, so the
-    // scores (and the oracle hash) are bit-identical.
-    (localRanks(bm25), localRanks(vector)) match {
-      case (Some(b), Some(v)) =>
-        val bm = b.toMap; val vm = v.toMap
-        val ids = (b.map(_._1) ++ v.map(_._1)).distinct
-        val fused = ids.map { id =>
-          val br = bm.get(id); val vr = vm.get(id)
-          val s = br.map(r => bm25Weight / (RrfK.toDouble + r)).getOrElse(0.0) +
-            vr.map(r => vectorWeight / (RrfK.toDouble + r)).getOrElse(0.0)
-          (id, br.getOrElse(0).toLong, vr.getOrElse(0).toLong, s)
-        }.sortBy { case (id, _, _, s) => (-s, id) }.take(k)
-        val rows = java.util.Arrays.asList(fused.map(t =>
-          Row(t._1, t._2, t._3, t._4)): _*)
-        return bm25.sparkSession.createDataFrame(rows, StructType(Seq(
-          StructField("id", LongType, nullable = true),
-          StructField("_bm25_rank", LongType, nullable = false),
-          StructField("_vector_rank", LongType, nullable = false),
-          StructField("_rrf_score", DoubleType, nullable = false))))
-      case _ => // at least one side is a distributed plan: fuse in-plan
-    }
-    val joined = bm25.join(vector, Seq("id"), "full_outer")
-    val rrf =
-      when(col("_bm25_rank").isNotNull,
-        lit(bm25Weight) / (lit(RrfK).cast(DoubleType) + col("_bm25_rank")))
-        .otherwise(lit(0.0)) +
-      when(col("_vector_rank").isNotNull,
-        lit(vectorWeight) / (lit(RrfK).cast(DoubleType) + col("_vector_rank")))
-        .otherwise(lit(0.0))
-    joined.withColumn("_rrf_score", rrf)
-      .withColumn("_bm25_rank", coalesce(col("_bm25_rank"), lit(0)).cast(LongType))
-      .withColumn("_vector_rank", coalesce(col("_vector_rank"), lit(0)).cast(LongType))
-      .orderBy(col("_rrf_score").desc, col("id"))
-      .limit(k)
+    def ranks(df: DataFrame): Array[(Long, Int)] =
+      df.collect().map(r => (r.getLong(0), r.getInt(1)))
+    val b = ranks(bm25); val v = ranks(vector)
+    val bm = b.toMap; val vm = v.toMap
+    val fused = (b.map(_._1) ++ v.map(_._1)).distinct.map { id =>
+      val br = bm.get(id); val vr = vm.get(id)
+      val s = br.map(r => bm25Weight / (RrfK.toDouble + r)).getOrElse(0.0) +
+        vr.map(r => vectorWeight / (RrfK.toDouble + r)).getOrElse(0.0)
+      Row(id, br.getOrElse(0).toLong, vr.getOrElse(0).toLong, s)
+    }.sortBy(r => (-r.getDouble(3), r.getLong(0))).take(k)
+    bm25.sparkSession.createDataFrame(java.util.Arrays.asList(fused: _*), StructType(Seq(
+      StructField("id", LongType, nullable = true),
+      StructField("_bm25_rank", LongType, nullable = false),
+      StructField("_vector_rank", LongType, nullable = false),
+      StructField("_rrf_score", DoubleType, nullable = false))))
   }
 
   /** Full hybrid search over a table carrying both a text and a vector

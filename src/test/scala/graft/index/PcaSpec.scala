@@ -181,6 +181,17 @@ class PcaSpec extends AnyFunSuite {
       s"self-query after same-name rebuild: ${top.toSeq} (stale PCA cache?)")
   }
 
+  test("same-name rebuilds keep one cached transform per index path") {
+    // each rebuild rewrites pca.bin at the same path with a new mtime; a
+    // cache keyed by (path, mtime, size) would pin one transform per rebuild
+    val before = PcaCodec.cachedCount
+    for (_ <- 1 to 4) {
+      Ann.buildIndexFactory(emb, "embedding", "vec_id", "pca_rebuilt", "PCA16,Flat")
+      assert(Ann.searchHits(spark, "pca_rebuilt", q0, 1).collect().length == 1)
+    }
+    assert(PcaCodec.cachedCount == before + 1)
+  }
+
   test("grammar and semantic errors") {
     val e1 = intercept[IllegalArgumentException] {
       Ann.buildIndexFactory(emb, "embedding", "vec_id", "pca_e1", "PCA32")

@@ -74,35 +74,6 @@ class AnnTopKRuleSpec extends AnyFunSuite {
       s"expected pushed In filter, got:\n$physical")
   }
 
-  test("lazy mode: EXPLAIN launches no search; execution still returns top-k") {
-    builtOnce
-    spark.conf.set("spark.graft.ann.rewriteMode", "lazy")
-    AnnTopKRule.clearCache()
-    try {
-      // distinct query vector so no prior cache entry can mask a search
-      val lq = q.map(_ + 0.125f)
-      val topk = emb.orderBy(array_distance(toFloatVec(col("embedding")),
-        floatVec(lq.toSeq))).limit(10)
-      val before = Ann.searchCount.get()
-      // full planning: logical rewrite + physical plan (what EXPLAIN shows)
-      val physical = topk.queryExecution.executedPlan.toString
-      assert(Ann.searchCount.get() == before,
-        "planning/EXPLAIN must not launch the ANN search in lazy mode")
-      assert(topk.queryExecution.optimizedPlan.exists(_.isInstanceOf[AnnHitsNode]),
-        s"expected AnnHitsNode in lazy plan:\n${topk.queryExecution.optimizedPlan}")
-      // execution runs the search exactly once and matches brute force
-      val got = topk.collect().map(_.getLong(0))
-      assert(Ann.searchCount.get() == before + 1,
-        "execution must run the deferred search")
-      spark.conf.set("spark.graft.ann.rewriteEnabled", "false")
-      val brute = emb.orderBy(array_distance(toFloatVec(col("embedding")),
-        floatVec(lq.toSeq))).limit(10).collect().map(_.getLong(0))
-      spark.conf.set("spark.graft.ann.rewriteEnabled", "true")
-      assert(got.length == 10)
-      assert(got.count(brute.toSet) >= 9, s"lazy recall ${got.count(brute.toSet)}/10")
-    } finally spark.conf.unset("spark.graft.ann.rewriteMode")
-  }
-
   test("eager mode (default) searches at planning and pushes literal In") {
     builtOnce
     AnnTopKRule.clearCache()

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{GraftRouteEvent, Route, RouteParity}
 import graft.index.{Ann, BaseRows, IndexCatalog}
 
-/** The eager rewrite's `ann.fetch` route: below the gate a rewritten top-k
+/** The rewrite's `ann.fetch` route: below the gate a rewritten top-k
  *  takes its base rows from [[BaseRows]] and folds to a LocalRelation, with
  *  the same answer as the parquet-scan route (`spark.graft.localMaxBytes=0`)
  *  and no Spark job. */

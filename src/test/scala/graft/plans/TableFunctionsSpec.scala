@@ -126,37 +126,17 @@ class TableFunctionsSpec extends AnyFunSuite {
     val over = spark.sql(
       s"SELECT * FROM ann_search('emb', 'sql_idx', $q0Sql, 2, oversample => 3)").collect()
     assert(over.length == 6) // k * oversample
+    // search_complexity reaches the search; a flat index ignores it
+    def top5(named: String) = spark.sql(
+      s"SELECT vec_id, _distance FROM ann_search('emb', 'sql_idx', $q0Sql, 5$named)")
+      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    assert(top5(", search_complexity => 200") == top5(""))
     val named = spark.sql(
       s"SELECT * FROM vector_distances('emb', $q0Sql, metric => 'ip')").collect()
     assert(named.length == 500)
     val e = intercept[Exception](spark.sql(
       s"SELECT * FROM ann_search('emb', 'sql_idx', $q0Sql, 2, nope => 1)").collect())
     assert(e.getMessage.contains("unknown argument name"))
-  }
-
-  test("lazy mode: EXPLAIN over ann_search launches no search; results match eager") {
-    import graft.index.Ann
-    val eager = spark.sql(
-      s"SELECT vec_id, _distance FROM ann_search('emb', 'sql_idx', $q0Sql, 5)")
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    spark.conf.set("spark.graft.ann.rewriteMode", "lazy")
-    try {
-      val before = Ann.searchCount.get()
-      spark.sql(s"EXPLAIN SELECT * FROM ann_search('emb', 'sql_idx', $q0Sql, 5)")
-        .collect()
-      assert(Ann.searchCount.get() == before, "EXPLAIN must not launch a search")
-      val rows = spark.sql(
-        s"SELECT vec_id, _distance FROM ann_search('emb', 'sql_idx', $q0Sql, 5)")
-        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(Ann.searchCount.get() > before, "executing the query must search")
-      assert(rows == eager, "lazy plan must return the eager path's rows")
-      // search_complexity must reach the deferred search (distinct cache key)
-      val withSc = spark.sql(
-        s"SELECT vec_id, _distance FROM ann_search('emb', 'sql_idx', $q0Sql, 5, " +
-        "search_complexity => 200)")
-        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(withSc == eager, "flat index: sc changes nothing, rows must match")
-    } finally spark.conf.unset("spark.graft.ann.rewriteMode")
   }
 
   test("ann_drop removes the index from the catalog") {
