@@ -4,17 +4,22 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation,
+  PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
+import graft.core.Route
 
 /**
- * Driver cache of a parquet table's decoded rows by id: the reference's
+ * Driver cache of a parquet table's decoded rows: the reference's
  * `DataTable::Fetch` by row id (src/ann_optimizer.cpp:114-118) for the eager
  * top-k rewrite, which then attaches a read's base columns without a scan
- * job.
+ * job, and the whole corpus for driver-local BM25.
  *
  * Entries are per file, keyed by path + length + mtime (the fingerprint rule
  * of [[ExactServe]]) plus the read schema, options and id column, so an
@@ -22,17 +27,28 @@ import org.apache.spark.sql.types.StructType
  * Each file is decoded once through Spark's own `ParquetFileFormat` reader
  * with the relation's options, so values are bit-identical to a scan's, and
  * indexed by the [[Ann.idKey]] LONG value of its id column: duplicated ids
- * all match, NULL keys never do. Resident bytes stay under the caller's
- * budget, evicting the least recently used file first.
+ * all match, NULL keys never do. Whole-listing reads ([[scan]]) see every
+ * row, NULL ids included, with per-file values derived from the rows (the
+ * BM25 postings) held beside them. Resident bytes stay under the gate,
+ * evicting the least recently used file first.
  */
 private[graft] object BaseRows {
+
+  /** A read the driver may answer: its one parquet leaf, that leaf's
+   *  relation and its fresh file listing. */
+  final case class Listed(lr: LogicalRelation, fs: HadoopFsRelation, files: Seq[FileStatus])
 
   private final case class Key(path: String, length: Long, mtime: Long,
       schema: StructType, options: Map[String, String], idColumn: String)
 
-  /** One file's rows sorted by id key; `keys(i)` is `rows(i)`'s key. */
-  private final class FileRows(val keys: Array[Long], val rows: Array[InternalRow],
-      val bytes: Long)
+  /** One file's rows in file order; `keys` are the non-NULL id keys sorted,
+   *  `at(i)` the position of the row keyed `keys(i)`. `derived` holds values
+   *  computed from the rows by tag; their bytes count in `bytes`. */
+  private final class FileRows(val rows: Array[InternalRow], val keys: Array[Long],
+      val at: Array[Int], var bytes: Long) {
+    val derived = new java.util.HashMap[Any, AnyRef]
+    var cached = false
+  }
 
   private val cache = new java.util.LinkedHashMap[Key, FileRows](16, 0.75f, true)
   private var resident = 0L
@@ -40,9 +56,71 @@ private[graft] object BaseRows {
   /** Files decoded since start (test hook: an append decodes only its files). */
   private[graft] val decodedFiles = new AtomicLong(0)
 
+  /** `plan`'s parquet leaf and its fresh listing when the driver may answer
+   *  `plan` (route op `op`): one plain parquet leaf (no partitions, buckets,
+   *  streaming or `_metadata` columns) that `fits`, under nodes [[foldable]]
+   *  evaluates, with listed bytes within the gate and every listed file
+   *  unchanged on disk. Posts the op's one route event either way; the
+   *  estimate is the listed bytes (the plan's size estimate when its leaf is
+   *  not a file relation). */
+  def local(spark: SparkSession, op: String, plan: LogicalPlan,
+      fits: LogicalRelation => Boolean = _ => true): Option[Listed] = {
+    val leaf = plan.collectLeaves() match {
+      case Seq(lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) => Some((lr, fs))
+      case _ => None
+    }
+    val bytes = leaf.fold(plan.stats.sizeInBytes.min(Long.MaxValue).toLong)(
+      _._2.location.sizeInBytes)
+    val plain = leaf.exists { case (lr, fs) =>
+      fs.fileFormat.isInstanceOf[ParquetFileFormat] && fs.partitionSchema.isEmpty &&
+        fs.bucketSpec.isEmpty && !lr.isStreaming &&
+        lr.output.map(_.name) == fs.dataSchema.map(_.name) && foldable(plan, lr) && fits(lr)
+    }
+    // each listed file is stat'ed, so only when the table is within the gate
+    val files = if (plain && bytes <= Route.maxBytes(spark)) listing(leaf.get._2) else None
+    if (files.isEmpty) {
+      Route.post(spark, op, Route.Distributed, bytes, Route.maxBytes(spark))
+      None
+    } else if (!Route.local(spark, op, bytes)) None
+    else Some(Listed(leaf.get._1, leaf.get._2, files.get))
+  }
+
+  /** True when `plan` is only limits, projections, filters and sorts of
+   *  deterministic, evaluable expressions over `lr`. */
+  private def foldable(plan: LogicalPlan, lr: LogicalRelation): Boolean = plan match {
+    case rel: LogicalRelation => rel eq lr
+    case _: GlobalLimit | _: LocalLimit | _: Project | _: Filter | _: Sort =>
+      plan.expressions.forall(_.find {
+        case _: AttributeReference | _: SortOrder => false
+        case e => !e.deterministic || e.isInstanceOf[Unevaluable] ||
+          e.isInstanceOf[SubqueryExpression]
+      }.isEmpty) && foldable(plan.children.head, lr)
+    case _ => false
+  }
+
+  /** `plan` evaluated on the driver over its LocalRelation leaf, when that
+   *  folds completely: Spark's own `ConvertToLocalRelation` to a fixpoint,
+   *  plus a stable sort of a LocalRelation by the interpreted ordering. */
+  def foldLocal(plan: LogicalPlan): Option[LocalRelation] = {
+    var prev: LogicalPlan = null
+    var cur = plan
+    while (!(cur fastEquals prev)) {
+      prev = cur
+      cur = ConvertToLocalRelation(cur).transformUp {
+        case Sort(order, true, LocalRelation(output, data, false, None), _) =>
+          val ordering = new InterpretedOrdering(order, output)
+          LocalRelation(output, data.sortWith(ordering.lt))
+      }
+    }
+    cur match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
+  }
+
   /** The files `fs` lists, when each is still on disk with the listed length
    *  and mtime; None for a stale listing. */
-  def listing(fs: HadoopFsRelation): Option[Seq[FileStatus]] = {
+  private def listing(fs: HadoopFsRelation): Option[Seq[FileStatus]] = {
     val files = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
     val conf = fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
     val fresh = files.forall { f =>
@@ -54,55 +132,99 @@ private[graft] object BaseRows {
     if (fresh) Some(files) else None
   }
 
-  /** Rows of `files` (decoded as `fs` reads them, in `output`'s layout)
-   *  whose id key is one of `ids`, in file order then key order. */
-  def fetch(fs: HadoopFsRelation, files: Seq[FileStatus], output: Seq[Attribute],
-      idAttr: Attribute, ids: Array[Long], budget: Long): Seq[InternalRow] = {
-    val keyOf = (f: FileStatus) => Key(f.getPath.toString, f.getLen, f.getModificationTime,
-      fs.dataSchema, fs.options, idAttr.name)
-    val have = cache.synchronized(files.map(f => f -> cache.get(keyOf(f))))
-    val missing = have.collect { case (f, null) => f }
-    val decoded = if (missing.isEmpty) Map.empty[FileStatus, FileRows]
-      else decode(fs, missing, output, idAttr).toMap
+  /** Rows of `l`'s files (in `l.lr.output`'s layout) whose id key is one of
+   *  `ids`, in file order then key order. */
+  def fetch(l: Listed, idAttr: Attribute, ids: Array[Long]): Seq[InternalRow] = {
     val sorted = ids.distinct.sorted
     val out = Seq.newBuilder[InternalRow]
-    have.foreach { case (f, cached) =>
-      val fr = if (cached != null) cached else decoded(f)
+    entries(l, idAttr).foreach { fr =>
       sorted.foreach { id =>
         var i = lowerBound(fr.keys, id)
-        while (i < fr.keys.length && fr.keys(i) == id) { out += fr.rows(i); i += 1 }
+        while (i < fr.keys.length && fr.keys(i) == id) { out += fr.rows(fr.at(i)); i += 1 }
       }
-    }
-    cache.synchronized {
-      decoded.foreach { case (f, fr) =>
-        val old = cache.put(keyOf(f), fr)
-        resident += fr.bytes - (if (old == null) 0L else old.bytes)
-      }
-      val it = cache.values.iterator
-      while (resident > budget && it.hasNext) { resident -= it.next().bytes; it.remove() }
     }
     out.result()
   }
 
-  private[graft] def clear(): Unit = cache.synchronized { cache.clear(); resident = 0L }
+  /** Every row of `l`'s files, NULL ids included: one array per file in file
+   *  order, each with `derive` of its rows. `derive` runs once per cached
+   *  file and `tag`; the value it returns is held with the file's rows and
+   *  its byte size (the second value) counts against the gate. */
+  def scan[A <: AnyRef](l: Listed, idAttr: Attribute, tag: Any)(
+      derive: Array[InternalRow] => (A, Long)): Seq[(Array[InternalRow], A)] =
+    entries(l, idAttr).map { fr =>
+      val a = fr.synchronized {
+        Option(fr.derived.get(tag)).getOrElse {
+          val (a, bytes) = derive(fr.rows)
+          fr.derived.put(tag, a)
+          cache.synchronized {
+            fr.bytes += bytes
+            if (fr.cached) resident += bytes
+            evict(Route.maxBytes(l.fs.sparkSession))
+          }
+          a
+        }
+      }
+      (fr.rows, a.asInstanceOf[A])
+    }
 
-  private def decode(fs: HadoopFsRelation, files: Seq[FileStatus], output: Seq[Attribute],
+  private[graft] def clear(): Unit = cache.synchronized {
+    cache.values.forEach(_.cached = false)
+    cache.clear()
+    resident = 0L
+  }
+
+  /** The cache entries of `l`'s files, decoding the missing ones. */
+  private def entries(l: Listed, idAttr: Attribute): Seq[FileRows] = {
+    val keyOf = (f: FileStatus) => Key(f.getPath.toString, f.getLen, f.getModificationTime,
+      l.fs.dataSchema, l.fs.options, idAttr.name)
+    val have = cache.synchronized(l.files.map(f => f -> cache.get(keyOf(f))))
+    val missing = have.collect { case (f, null) => f }
+    val decoded = if (missing.isEmpty) Map.empty[FileStatus, FileRows]
+      else decode(l, missing, idAttr).toMap
+    cache.synchronized {
+      decoded.foreach { case (f, fr) =>
+        val old = cache.put(keyOf(f), fr)
+        if (old != null) { old.cached = false; resident -= old.bytes }
+        fr.cached = true
+        resident += fr.bytes
+      }
+      evict(Route.maxBytes(l.fs.sparkSession))
+    }
+    have.map { case (f, cached) => if (cached != null) cached else decoded(f) }
+  }
+
+  /** Drops least recently used files until the resident bytes fit `budget`;
+   *  the caller holds the cache lock. */
+  private def evict(budget: Long): Unit = {
+    val it = cache.values.iterator
+    while (resident > budget && it.hasNext) {
+      val fr = it.next()
+      fr.cached = false
+      resident -= fr.bytes
+      it.remove()
+    }
+  }
+
+  private def decode(l: Listed, files: Seq[FileStatus],
       idAttr: Attribute): Seq[(FileStatus, FileRows)] = {
+    val fs = l.fs
     val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
       fs.sparkSession, fs.dataSchema, new StructType(), fs.dataSchema, Nil,
       fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
       fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options))
     val toUnsafe = UnsafeProjection.create(fs.dataSchema)
-    val key = BindReferences.bindReference(Ann.idKey(idAttr, idAttr.dataType), output)
+    val key = BindReferences.bindReference(Ann.idKey(idAttr, idAttr.dataType), l.lr.output)
     files.map { f =>
       val rows = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), 0,
         f.getLen, Array.empty, f.getModificationTime, f.getLen))
-        .map(r => toUnsafe(r).copy())
-        .flatMap(r => Option(key.eval(r)).map(k => (k.asInstanceOf[Long], r)))
-        .toArray.sortBy(_._1)
+        .map(r => toUnsafe(r).copy()).toArray
+      val keyed = rows.indices
+        .flatMap(i => Option(key.eval(rows(i))).map(k => (k.asInstanceOf[Long], i)))
+        .sortBy(_._1)
       decodedFiles.incrementAndGet()
-      f -> new FileRows(rows.map(_._1), rows.map(_._2: InternalRow),
-        rows.iterator.map(_._2.getSizeInBytes.toLong + 32).sum)
+      f -> new FileRows(rows.map(r => r: InternalRow), keyed.map(_._1).toArray,
+        keyed.map(_._2).toArray, rows.iterator.map(_.getSizeInBytes.toLong + 32).sum)
     }
   }
 

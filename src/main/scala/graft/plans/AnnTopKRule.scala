@@ -1,18 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import graft.expressions._
-import graft.core.Route
 import graft.index.{Ann, AnnEngine, BaseRows, IndexCatalog, IndexMeta}
 
 /**
@@ -286,66 +282,15 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case rel: LogicalRelation if rel eq lr => filter
       case other => other.withNewChildren(other.children.map(inject(_, filter)))
     }
-    // driver-local: the same filter over the fetched base rows, folded with
-    // everything above it; the marker (which would stop the fold) goes on top
-    val local = localRows(lr, idAttr, ids, top(child)).flatMap { rows =>
-      foldLocal(top(inject(child, Filter(inSet, LocalRelation(lr.output, rows)))))
+    // driver-local (op `ann.fetch`): the same filter over every base row
+    // whose id key is a hit, folded with everything above it; the marker
+    // (which would stop the fold) goes on top
+    val local = BaseRows.local(spark, "ann.fetch", top(child)).flatMap { l =>
+      val rows = BaseRows.fetch(l, idAttr, ids)
+      BaseRows.foldLocal(top(inject(child, Filter(inSet, LocalRelation(lr.output, rows)))))
         .map(Filter(marker, _))
     }
     Some(local.getOrElse(top(inject(child, Filter(And(inSet, marker), lr)))))
-  }
-
-  /** The base rows a driver-local answer needs (every row whose id key is a
-   *  hit), when the read may take that route (op `ann.fetch`): a plain,
-   *  fresh parquet listing within the gate, read without `_metadata`
-   *  columns, under a top-k subtree [[foldLocal]] evaluates whole. */
-  private def localRows(lr: LogicalRelation, idAttr: Attribute, ids: Array[Long],
-      subtree: LogicalPlan): Option[Seq[InternalRow]] = {
-    val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-    val plain = fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
-      fs.partitionSchema.isEmpty && fs.bucketSpec.isEmpty && !lr.isStreaming &&
-      lr.output.map(_.name) == fs.dataSchema.map(_.name) && foldable(subtree, lr)
-    val bytes = fs.location.sizeInBytes
-    // each listed file is stat'ed, so only when the table is within the gate
-    val files = if (plain && bytes <= Route.maxBytes(spark)) BaseRows.listing(fs) else None
-    if (files.isEmpty) {
-      Route.post(spark, "ann.fetch", Route.Distributed, bytes, Route.maxBytes(spark))
-      None
-    } else if (!Route.local(spark, "ann.fetch", bytes)) None
-    else Some(BaseRows.fetch(fs, files.get, lr.output, idAttr, ids, Route.maxBytes(spark)))
-  }
-
-  /** True when `plan` is only limits, projections, filters and sorts of
-   *  deterministic, evaluable expressions over `lr`. */
-  private def foldable(plan: LogicalPlan, lr: LogicalRelation): Boolean = plan match {
-    case rel: LogicalRelation => rel eq lr
-    case _: GlobalLimit | _: LocalLimit | _: Project | _: Filter | _: Sort =>
-      plan.expressions.forall(_.find {
-        case _: AttributeReference | _: SortOrder => false
-        case e => !e.deterministic || e.isInstanceOf[Unevaluable] ||
-          e.isInstanceOf[SubqueryExpression]
-      }.isEmpty) && foldable(plan.children.head, lr)
-    case _ => false
-  }
-
-  /** `plan` evaluated on the driver over its LocalRelation leaf, when that
-   *  folds completely: Spark's own `ConvertToLocalRelation` to a fixpoint,
-   *  plus a stable sort of a LocalRelation by the interpreted ordering. */
-  private def foldLocal(plan: LogicalPlan): Option[LocalRelation] = {
-    var prev: LogicalPlan = null
-    var cur = plan
-    while (!(cur fastEquals prev)) {
-      prev = cur
-      cur = ConvertToLocalRelation(cur).transformUp {
-        case Sort(order, true, LocalRelation(output, data, false, None), _) =>
-          val ordering = new InterpretedOrdering(order, output)
-          LocalRelation(output, data.sortWith(ordering.lt))
-      }
-    }
-    cur match {
-      case l: LocalRelation => Some(l)
-      case _ => None
-    }
   }
 
   /** Evaluate a foldable array expression to f32 (any numeric element type —

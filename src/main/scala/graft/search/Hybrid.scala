@@ -11,7 +11,7 @@ import graft.index.Ann
  * Hybrid BM25 + vector search with Reciprocal-Rank-Fusion — the Spark
  * re-expression of the reference's `hybrid_search`
  * (src/ann_search.cpp:903-1163): BM25 candidates (the reference shells out
- * to DuckDB's FTS extension; here a native DataFrame Okapi-BM25 pipeline),
+ * to DuckDB's FTS extension; here a native Okapi-BM25 over the input),
  * vector candidates from the ANN index (or exact scan), then
  * `Σ wᵢ·1/(60+rankᵢ)` fusion (RRF_K=60, :1026), sort desc, top-k.
  *
@@ -20,10 +20,15 @@ import graft.index.Ann
  * results are engine-exact; only near-tied BM25 scores (double ln/idf) could
  * reorder, and ties break by id.
  *
- * Scale shape: the term-frequency projection is codegen over the token
- * array; doc-frequencies for the (few) query terms are one small aggregate;
- * ranking is a single top-N; the driver holds only |queryTerms|
- * doc-frequency counts and the two ≤N-row rank lists it fuses.
+ * Scale shape: below the one gate (route op `search.bm25`) BM25 runs on the
+ * driver from per-file postings cached beside the [[graft.index.BaseRows]]
+ * rows, built once per file (an append tokenizes only its files), so a
+ * warm search launches no Spark job and holds the input's decoded rows and
+ * postings on the driver. Above it the term-frequency projection is
+ * codegen over the token array, doc-frequencies for the (few) query terms
+ * are one small aggregate, ranking is a single top-N, and the driver holds
+ * only |queryTerms| doc-frequency counts. Either way the driver fuses the
+ * two ≤N-row rank lists.
  */
 object Hybrid {
 
@@ -39,16 +44,33 @@ object Hybrid {
     "[a-z0-9]+".r.findAllIn(qText.toLowerCase).toSeq.distinct
 
   /** BM25-ranked top-N doc ids for a bag of query terms:
-   *  (id, _bm25_rank 1..N). Okapi BM25, idf = ln((N-df+0.5)/(df+0.5)+1). */
+   *  (id, _bm25_rank 1..N). Okapi BM25, idf = ln((N-df+0.5)/(df+0.5)+1).
+   *  N counts every input row; avgdl and df count the rows with tokens (a
+   *  NULL text has none and never scores). Rows with a NULL id count in the
+   *  statistics but take no rank.
+   *
+   *  Two routes, one answer (route op `search.bm25`, estimate = the listed
+   *  bytes of the input's parquet files, limit = the gate): a plain parquet
+   *  input under deterministic filters and projections scores on the driver
+   *  from cached per-file postings ([[Bm25Corpus]]) with no Spark job; any
+   *  other input runs one statistics aggregate and one top-N scan. */
   def bm25Ranks(df: DataFrame, textCol: String, idCol: String,
       terms: Seq[String], topN: Int): DataFrame = {
-    val spark = df.sparkSession
-    if (terms.isEmpty)
-      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField("id", LongType), StructField("_bm25_rank", IntegerType))))
     val toks = TextOps.tokens(col(textCol))
-    val base = df.select(col(idCol).cast(LongType).as("id"), toks.as("toks"))
-      .withColumn("dl", size(col("toks")))
+    val docs = df.select(col(idCol).cast(LongType).as("id"), toks.as("toks"),
+      array_size(toks).as("dl"))
+    val corpus = Bm25Corpus(df, docs)
+    val ids = if (terms.isEmpty) Nil else corpus match {
+      case Some(c) =>
+        val stats = c.stats(terms)
+        if (stats.anyScore) c.top(terms, stats, topN) else Nil
+      case None => distributedTop(docs, terms, topN)
+    }
+    ranked(df.sparkSession, ids, "_bm25_rank")
+  }
+
+  /** The distributed route of [[bm25Ranks]] over its `docs` columns. */
+  private def distributedTop(docs: DataFrame, terms: Seq[String], topN: Int): Seq[Long] = {
     // corpus statistics — ONE aggregate pass: count, avgdl, and every
     // term's doc frequency together (per-term count() jobs would re-scan
     // and re-tokenize the corpus once per term)
@@ -56,30 +78,42 @@ object Hybrid {
       terms.zipWithIndex.map { case (t, i) =>
         sum(array_contains(col("toks"), t).cast(LongType)).as(s"__df$i")
       }
-    val statRow = base.agg(statAggs.head, statAggs.tail: _*).head()
-    val nDocs = statRow.getLong(0)
-    if (nDocs == 0)
-      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField("id", LongType), StructField("_bm25_rank", IntegerType))))
-    val avgdl = statRow.getDouble(1)
-    val dfCounts: Map[String, Long] =
-      terms.zipWithIndex.map { case (t, i) => t -> statRow.getLong(2 + i) }.toMap
-    val score: Column = terms.map { t =>
-      val dft = dfCounts(t).toDouble
-      val idf = math.log((nDocs - dft + 0.5) / (dft + 0.5) + 1.0)
-      val tf = size(filter(col("toks"), x => x === t)).cast(DoubleType)
-      (tf * lit(K1 + 1)) /
-        (tf + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl").cast(DoubleType) / lit(avgdl))) *
-        lit(idf)
+    val row = docs.agg(statAggs.head, statAggs.tail: _*).head()
+    val stats = Stats(row.getLong(0), if (row.isNullAt(1)) 0.0 else row.getDouble(1),
+      terms.indices.map(i => if (row.isNullAt(2 + i)) 0L else row.getLong(2 + i)))
+    if (!stats.anyScore) return Nil
+    // termScore's operations, in its order
+    val dl = col("dl").cast(DoubleType)
+    val score: Column = terms.zipWithIndex.map { case (t, i) =>
+      val tf = array_size(filter(col("toks"), x => x === t)).cast(DoubleType)
+      (tf * lit(K1 + 1)) / (tf + lit(K1) * (lit(1.0 - B) + lit(B) * dl / lit(stats.avgdl))) *
+        lit(stats.idf(i))
     }.reduce(_ + _)
-    // distributed top-N first (TakeOrderedAndProject — no global sort), then
-    // rank the ≤topN ordered survivors by partition-local row index
-    val top = base.withColumn("__score", score)
-      .where(col("__score") > 0)
+    // distributed top-N first (TakeOrderedAndProject — no global sort)
+    orderedIds(docs.withColumn("__score", score)
+      .where(col("__score") > 0 && col("id").isNotNull)
       .orderBy(col("__score").desc, col("id"))
-      .limit(topN)
-    rankOrdered(top, "_bm25_rank", topN)
+      .limit(topN), topN)
   }
+
+  /** BM25 corpus statistics: the row count, the mean token count of the
+   *  rows with tokens (0 when none has) and each query term's document
+   *  frequency. */
+  private[search] final case class Stats(n: Long, avgdl: Double, dfs: Seq[Long]) {
+    /** False when no row can score above 0: an empty input, or no query term
+     *  in any row (then every score is 0 or NULL). */
+    def anyScore: Boolean = n > 0 && dfs.exists(_ > 0)
+    def idf(i: Int): Double = {
+      val dft = dfs(i).toDouble
+      math.log((n - dft + 0.5) / (dft + 0.5) + 1.0)
+    }
+  }
+
+  /** One term's Okapi BM25 score for a row of `dl` tokens holding it `tf`
+   *  times; the distributed route's score column spells the same operations
+   *  in the same order, so both routes give bit-identical doubles. */
+  private[search] def termScore(tf: Double, dl: Double, avgdl: Double, idf: Double): Double =
+    (tf * (K1 + 1)) / (tf + K1 * ((1.0 - B) + B * dl / avgdl)) * idf
 
   /** Rank an ordered (orderBy.limit(topN)) result by global row position:
    *  collect the ≤ topN id rows (collect of a sorted plan preserves global
@@ -94,19 +128,23 @@ object Hybrid {
    *  WindowExec's move-all-data warning on every serving query, and the
    *  optimizer folds away constant partition keys, so there is no quiet
    *  window spelling.) */
-  private def rankOrdered(top: DataFrame, rankName: String, topN: Int): DataFrame = {
-    val spark = top.sparkSession
+  private def rankOrdered(top: DataFrame, rankName: String, topN: Int): DataFrame =
+    ranked(top.sparkSession, orderedIds(top, topN), rankName)
+
+  /** The ids of an ordered (orderBy.limit(topN)) result, in order. */
+  private def orderedIds(top: DataFrame, topN: Int): Seq[Long] =
     // defensive re-limit: correctness of the collect below relies on the
     // caller passing an orderBy.limit(topN) plan — a second limit over an
     // already-limited plan is a no-op, and it bounds the collect even if a
     // future caller forgets (the invariant was previously only documented)
-    val rows = top.limit(topN).select(col("id")).collect()
-    val ranked = java.util.Arrays.asList(rows.zipWithIndex.map {
-      case (r, i) => Row(r.getLong(0), (i + 1).toInt) }: _*)
-    spark.createDataFrame(ranked, StructType(Seq(
+    top.limit(topN).select(col("id")).collect().map(_.getLong(0)).toSeq
+
+  /** `ids` in order as a local relation of (id, rank 1..). */
+  private def ranked(spark: SparkSession, ids: Seq[Long], rankName: String): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(ids.zipWithIndex.map {
+      case (id, i) => Row(id, i + 1) }: _*), StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField(rankName, IntegerType, nullable = false))))
-  }
 
   /** Exact vector ranks (squared-L2 over an embedding column):
    *  (id, _vector_rank 1..N). */

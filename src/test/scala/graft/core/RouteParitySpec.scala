@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{Ann, IndexCatalog}
+import graft.search.Hybrid
 import graft.text.TextOps
 
 /** Every size-routed operator gives the same answer on its driver-local and
@@ -156,6 +157,67 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("packSequences: serial and segmented") {
     assert(parity("text.pack")(
       rows(TextOps.packSequences(docs, "text", "id", "g", budget = 64))).length == N)
+  }
+
+  /** N + 200 documents of 8 words from a 500-word vocabulary. Every tenth
+   *  repeats its predecessor exactly (tied scores), every 500th has NULL
+   *  text, every 250th no token, and the last 200 (ids N..N+199) repeat
+   *  earlier texts; every 997th id is NULL. Ids as LONG, INT and zero-padded
+   *  STRING. */
+  private def bm25Docs(idType: String): DataFrame = {
+    val path = s"$work/bm25_$idType"
+    if (!new java.io.File(path).exists) {
+      val s = spark
+      import s.implicits._
+      val r = new scala.util.Random(23)
+      val texts = new Array[String](N + 200)
+      for (i <- texts.indices) texts(i) =
+        if (i >= N) texts(i - N)
+        else if (i % 500 == 499) null
+        else if (i % 250 == 7) "-- !!"
+        else if (i % 10 == 1) texts(i - 1)
+        else Seq.fill(8)(s"W${r.nextInt(500)}").mkString(" ")
+      val ids = texts.indices.map(i => if (i % 997 == 996) None else Some(i.toLong))
+      val df = ids.zip(texts).toDF("id", "text")
+      (idType match {
+        case "string" =>
+          df.withColumn("id", when(col("id").isNotNull, format_string("%06d", col("id"))))
+        case t => df.withColumn("id", col("id").cast(t))
+      }).repartition(6).write.parquet(path)
+    }
+    spark.read.parquet(path)
+  }
+
+  test("bm25Ranks and the fused hybrid: ties, empty and unseen terms, NULL text and ids") {
+    val vec = Hybrid.exactVectorRanks(emb, "embedding", "vec_id", queries.head, 100)
+    val texts = bm25Docs("long").where(col("id").isin(20L, 21L, 3000L))
+      .orderBy("id").collect().map(_.getString(1))
+    val asked = Seq(texts(0), texts(0) + " w7 zzzunseen", texts(2), "", "zzzunseen qqq",
+      "w1 w2 w3 w4 w5")
+    for (idType <- Seq("long", "int", "string")) {
+      val docs = bm25Docs(idType)
+      val dead = (0 until 3000 by 7).map(i => idType match {
+        case "string" => f"$i%06d"
+        case "int" => i
+        case _ => i.toLong
+      })
+      val live = docs.where(!col("id").isin(dead: _*))
+      val got = parity("search.bm25") {
+        for (input <- Seq(docs, live); q <- asked) yield {
+          val bm25 = Hybrid.bm25Ranks(input, "text", "id", Hybrid.queryTerms(q), 100)
+          (bm25.collect().toSeq, Hybrid.rrfFuse(bm25, vec, 10).collect().toSeq)
+        }
+      }
+      val (tie, _) = got.head
+      // docs 20 and 21 share a text: the tie breaks by id
+      assert(tie.take(2) == Seq(Row(20L, 1), Row(21L, 2)), tie)
+      assert(got.forall(_._1.length <= 100) && got.exists(_._1.length == 100))
+      for (Seq((empty, _), (unseen, _)) <- got.grouped(asked.length).map(_.slice(3, 5)))
+        assert(empty.isEmpty && unseen.isEmpty)
+      // the filtered input's ranks hold no deleted id
+      assert(got.drop(asked.length).forall(_._1.forall(r => r.getLong(0) >= 3000 ||
+        r.getLong(0) % 7 != 0)))
+    }
   }
 
   test("connectedComponents: stars and small components, 12k edges") {

@@ -2,12 +2,15 @@ package graft.text
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{GraftRouteEvent, Route, RouteParity}
 import graft.index.{Ann, IndexCatalog}
+import graft.search.Hybrid
 
 /** Every routed call posts exactly one [[GraftRouteEvent]] naming its op,
  *  the route it took, its estimate and the limit it was held to. (In the
@@ -133,6 +136,25 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fetches(topk()) == Seq(GraftRouteEvent("ann.fetch", Route.Local, bytes, Default)))
     assert(withGate("0")(fetches(topk())) ==
       Seq(GraftRouteEvent("ann.fetch", Route.Distributed, bytes, 0)))
+  }
+
+  test("search.bm25: one event per bm25Ranks call, estimate = the listed file bytes") {
+    val bytes = docs.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    def bm25(df: DataFrame, terms: Seq[String]): Unit =
+      Hybrid.bm25Ranks(df, "text", "doc_id", terms, 10).collect()
+    // an empty term set and an unseen term decide the route too
+    for (terms <- Seq(Seq("w1", "w2"), Nil, Seq("zzz")); input <- Seq(docs,
+        docs.where(col("lang") =!= "l1")))
+      assert(events(bm25(input, terms)) ==
+        Seq(GraftRouteEvent("search.bm25", Route.Local, bytes, Default)))
+    assert(withGate("0")(events(bm25(docs, Seq("w1")))) ==
+      Seq(GraftRouteEvent("search.bm25", Route.Distributed, bytes, 0)))
+    // not a parquet relation: an in-memory copy, and a join
+    val copy = spark.createDataFrame(docs.collect().toSeq.asJava, docs.schema)
+    for (input <- Seq(copy, docs.join(docs.select(col("doc_id")), "doc_id"))) {
+      val Seq(e) = events(bm25(input, Seq("w1")))
+      assert(e.op == "search.bm25" && e.route == Route.Distributed && e.limit == Default, e)
+    }
   }
 
   test("text ops: one event each, estimate = the scan-bounded projection size") {
