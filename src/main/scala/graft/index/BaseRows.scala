@@ -30,7 +30,9 @@ import graft.core.Route
  * all match, NULL keys never do. Whole-listing reads ([[scan]]) see every
  * row, NULL ids included, with per-file values derived from the rows (the
  * BM25 postings) held beside them. Resident bytes stay under the gate,
- * evicting the least recently used file first.
+ * evicting the least recently used file first; each file's resident bytes
+ * are remembered past its eviction, so a route held to them ([[held]]) sees
+ * what a listing costs once decoded, not its compressed parquet bytes.
  */
 private[graft] object BaseRows {
 
@@ -53,18 +55,34 @@ private[graft] object BaseRows {
   private val cache = new java.util.LinkedHashMap[Key, FileRows](16, 0.75f, true)
   private var resident = 0L
 
+  private val KnownMax = 1 << 14
+
+  /** The last resident bytes (rows plus derived values) of up to `KnownMax`
+   *  files seen, by path, length and mtime, least recently seen dropped
+   *  first. */
+  private val known = new java.util.LinkedHashMap[(String, Long, Long), java.lang.Long](
+      16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long),
+        java.lang.Long]): Boolean = size > KnownMax
+  }
+
+  private def fileId(f: FileStatus) = (f.getPath.toString, f.getLen, f.getModificationTime)
+
   /** Files decoded since start (test hook: an append decodes only its files). */
   private[graft] val decodedFiles = new AtomicLong(0)
 
   /** `plan`'s parquet leaf and its fresh listing when the driver may answer
    *  `plan` (route op `op`): one plain parquet leaf (no partitions, buckets,
    *  streaming or `_metadata` columns) that `fits`, under nodes [[foldable]]
-   *  evaluates, with listed bytes within the gate and every listed file
-   *  unchanged on disk. Posts the op's one route event either way; the
-   *  estimate is the listed bytes (the plan's size estimate when its leaf is
-   *  not a file relation). */
+   *  evaluates, with listed bytes within the gate, every listed file
+   *  unchanged on disk and `cost` of the listing (by default its listed
+   *  bytes) within the gate. Posts the op's one route event either way; the
+   *  estimate is that cost, or the listed bytes when no fresh listing was
+   *  taken (the plan's size estimate when its leaf is not a file
+   *  relation). */
   def local(spark: SparkSession, op: String, plan: LogicalPlan,
-      fits: LogicalRelation => Boolean = _ => true): Option[Listed] = {
+      fits: LogicalRelation => Boolean = _ => true,
+      cost: Seq[FileStatus] => Long = _.map(_.getLen).sum): Option[Listed] = {
     val leaf = plan.collectLeaves() match {
       case Seq(lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) => Some((lr, fs))
       case _ => None
@@ -81,8 +99,15 @@ private[graft] object BaseRows {
     if (files.isEmpty) {
       Route.post(spark, op, Route.Distributed, bytes, Route.maxBytes(spark))
       None
-    } else if (!Route.local(spark, op, bytes)) None
+    } else if (!Route.local(spark, op, cost(files.get))) None
     else Some(Listed(leaf.get._1, leaf.get._2, files.get))
+  }
+
+  /** The bytes `files` held when last resident (rows and derived values),
+   *  a file never decoded counting its listed length: a lower bound until a
+   *  fill has measured it. */
+  def held(files: Seq[FileStatus]): Long = cache.synchronized {
+    files.iterator.map(f => Option(known.get(fileId(f))).fold(f.getLen)(_.longValue)).sum
   }
 
   /** True when `plan` is only limits, projections, filters and sorts of
@@ -152,13 +177,14 @@ private[graft] object BaseRows {
    *  its byte size (the second value) counts against the gate. */
   def scan[A <: AnyRef](l: Listed, idAttr: Attribute, tag: Any)(
       derive: Array[InternalRow] => (A, Long)): Seq[(Array[InternalRow], A)] =
-    entries(l, idAttr).map { fr =>
+    l.files.zip(entries(l, idAttr)).map { case (f, fr) =>
       val a = fr.synchronized {
         Option(fr.derived.get(tag)).getOrElse {
           val (a, bytes) = derive(fr.rows)
           fr.derived.put(tag, a)
           cache.synchronized {
             fr.bytes += bytes
+            known.put(fileId(f), fr.bytes)
             if (fr.cached) resident += bytes
             evict(Route.maxBytes(l.fs.sparkSession))
           }
@@ -171,6 +197,7 @@ private[graft] object BaseRows {
   private[graft] def clear(): Unit = cache.synchronized {
     cache.values.forEach(_.cached = false)
     cache.clear()
+    known.clear()
     resident = 0L
   }
 
@@ -188,6 +215,7 @@ private[graft] object BaseRows {
         if (old != null) { old.cached = false; resident -= old.bytes }
         fr.cached = true
         resident += fr.bytes
+        known.putIfAbsent(fileId(f), fr.bytes)
       }
       evict(Route.maxBytes(l.fs.sparkSession))
     }

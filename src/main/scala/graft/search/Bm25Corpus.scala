@@ -7,9 +7,10 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.types.LongType
 import graft.index.BaseRows
 
 /**
@@ -22,7 +23,8 @@ import graft.index.BaseRows
  * holding it with their term frequencies) are built once per cached file,
  * by evaluating the distributed route's own bound id/tokens/length
  * expressions, so lower-casing, regex and NULL semantics are the scan's.
- * Each query then evaluates the input's filters over the cached rows,
+ * Each query then folds the input's filters over the cached rows on the
+ * driver ([[BaseRows.foldLocal]], as the `ann.fetch` rewrite does),
  * takes N, avgdl and the terms' document frequencies over the rows they
  * keep, and scores only the kept rows holding a query term (no other row
  * can score above 0) with [[Hybrid.termScore]].
@@ -94,10 +96,10 @@ private[search] object Bm25Corpus {
 
   /** The corpus of `df` when BM25 over it may run on the driver: `df`'s
    *  optimized plan is deterministic filters and projections over one
-   *  plain, fresh parquet relation within the gate, and `docs` (the
-   *  distributed route's id, tokens and length columns, selected from `df`)
-   *  reads only that relation's columns. Posts the one `search.bm25` route
-   *  event. */
+   *  plain, fresh parquet relation whose files' [[BaseRows.held]] bytes
+   *  fit the gate, and `docs` (the distributed route's id, tokens and
+   *  length columns, selected from `df`) reads only that relation's
+   *  columns. Posts the one `search.bm25` route event. */
   def apply(df: DataFrame, docs: DataFrame): Option[Bm25Corpus] = {
     val plan = df.queryExecution.optimizedPlan
     // the analyzed columns, with runtime-replaceable functions (array_size)
@@ -112,11 +114,14 @@ private[search] object Bm25Corpus {
       !plan.exists(p => !(p eq lr) && !p.isInstanceOf[Filter] && !p.isInstanceOf[Project]) &&
       cols.head.references.nonEmpty &&
       cols.flatMap(_.references).forall(a => lr.output.exists(_.exprId == a.exprId))
-    BaseRows.local(df.sparkSession, "search.bm25", plan, fits).map { l =>
+    BaseRows.local(df.sparkSession, "search.bm25", plan, fits, BaseRows.held).map { l =>
       val Seq(id, toks, dl) = cols.map(BindReferences.bindReference(_, l.lr.output))
       val idAttr = l.lr.output.find(a => cols.head.references.contains(a)).get
-      new Bm25Corpus(BaseRows.scan(l, idAttr, ("bm25", toks, dl))(postings(_, toks, dl)).map {
-        case (rows, p) => new File(rows, p, kept(plan, l.lr, rows)) }, id)
+      new Bm25Corpus({
+        val scanned = BaseRows.scan(l, idAttr, ("bm25", toks, dl))(postings(_, toks, dl))
+        scanned.zip(kept(plan, l.lr, scanned.map(_._1))).map {
+          case ((rows, p), keep) => new File(rows, p, keep) }
+      }, id)
     }
   }
 
@@ -142,30 +147,31 @@ private[search] object Bm25Corpus {
       4L * lens.length + terms.iterator.map { case (t, p) => 4L * p.length + 2L * t.length + 80 }.sum)
   }
 
-  /** Which of `rows` (in `lr`'s layout) the filters and projections of
-   *  `plan` keep, evaluated interpreted. */
+  /** Which rows of each of `files` (in `lr`'s layout) `plan` keeps: its
+   *  filters and inner projections folded by [[BaseRows.foldLocal]] over the
+   *  rows, each carrying its (file, row) position through every projection.
+   *  Projections above every filter keep all rows and are not evaluated. */
   private def kept(plan: LogicalPlan, lr: LogicalRelation,
-      rows: Array[InternalRow]): Array[Boolean] = {
-    // (positions, rows in `p`'s output layout) of the rows `p` keeps
-    def eval(p: LogicalPlan): (Array[Int], Array[InternalRow]) = p match {
-      case Filter(cond, c) =>
-        val (at, in) = eval(c)
-        val pred = Predicate.createInterpreted(BindReferences.bindReference(cond, c.output))
-        val keep = in.indices.filter(i => pred.eval(in(i))).toArray
-        (keep.map(at), keep.map(in))
-      case Project(list, c) =>
-        val (at, in) = eval(c)
-        val bound = list.map(BindReferences.bindReference(_: Expression, c.output))
-        (at, in.map(r => InternalRow.fromSeq(bound.map(_.eval(r)))))
-      case _ => (rows.indices.toArray, rows)
+      files: Seq[Array[InternalRow]]): Seq[Array[Boolean]] = {
+    val pos = AttributeReference("__bm25_pos", LongType, nullable = false)()
+    def numbered(p: LogicalPlan): LogicalPlan = p match {
+      case Filter(cond, c) => Filter(cond, numbered(c))
+      case Project(list, c) => Project(list :+ pos, numbered(c))
+      case _ => LocalRelation(lr.output :+ pos, files.zipWithIndex.flatMap { case (rows, f) =>
+        rows.indices.map(i => new JoinedRow(rows(i), InternalRow((f.toLong << 32) | i)))
+      })
     }
-    // projections above every filter keep all rows
     def filters(p: LogicalPlan): LogicalPlan = p match {
       case Project(_, c) => filters(c)
       case other => other
     }
-    val keep = new Array[Boolean](rows.length)
-    eval(filters(plan))._1.foreach(keep(_) = true)
+    val keep = files.map(rows => new Array[Boolean](rows.length))
+    val out = BaseRows.foldLocal(numbered(filters(plan))).get
+    val at = out.output.indexWhere(_.exprId == pos.exprId)
+    out.data.foreach { r =>
+      val p = r.getLong(at)
+      keep((p >>> 32).toInt)(p.toInt) = true
+    }
     keep
   }
 }

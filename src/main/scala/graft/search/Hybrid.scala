@@ -20,11 +20,14 @@ import graft.index.Ann
  * results are engine-exact; only near-tied BM25 scores (double ln/idf) could
  * reorder, and ties break by id.
  *
- * Scale shape: below the one gate (route op `search.bm25`) BM25 runs on the
- * driver from per-file postings cached beside the [[graft.index.BaseRows]]
- * rows, built once per file (an append tokenizes only its files), so a
- * warm search launches no Spark job and holds the input's decoded rows and
- * postings on the driver. Above it the term-frequency projection is
+ * Scale shape: while the input's decoded rows and postings fit the one
+ * gate (route op `search.bm25`) BM25 runs on the driver from per-file
+ * postings cached beside the [[graft.index.BaseRows]] rows, built once per
+ * file (an append tokenizes only its files). The gain rests on those rows
+ * and postings staying resident between searches: a warm search launches
+ * no Spark job, while a fill decodes and tokenizes on one driver thread,
+ * about as slow as one distributed search. Above the gate the
+ * term-frequency projection is
  * codegen over the token array, doc-frequencies for the (few) query terms
  * are one small aggregate, ranking is a single top-N, and the driver holds
  * only |queryTerms| doc-frequency counts. Either way the driver fuses the
@@ -49,8 +52,9 @@ object Hybrid {
    *  NULL text has none and never scores). Rows with a NULL id count in the
    *  statistics but take no rank.
    *
-   *  Two routes, one answer (route op `search.bm25`, estimate = the listed
-   *  bytes of the input's parquet files, limit = the gate): a plain parquet
+   *  Two routes, one answer (route op `search.bm25`, estimate = the bytes
+   *  the input's files hold on the driver once decoded and tokenized,
+   *  [[graft.index.BaseRows.held]], limit = the gate): a plain parquet
    *  input under deterministic filters and projections scores on the driver
    *  from cached per-file postings ([[Bm25Corpus]]) with no Spark job; any
    *  other input runs one statistics aggregate and one top-N scan. */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{Route, RouteParity}
+import graft.core.{GraftRouteEvent, Route, RouteParity}
 import graft.index.{BaseRows, IndexCatalog}
 import graft.plans.Graft
 
@@ -86,6 +86,31 @@ class Bm25RouteSpec extends AnyFunSuite with BeforeAndAfterAll {
     new File(victim.getParent, s".${victim.getName}.crc").delete()
     victim.setLastModified(victim.lastModified() + 5000)
     assert(counts(run()) == (1, 1))
+  }
+
+  test("a listing whose rows and postings outgrow the gate routes distributed after one fill") {
+    val path = s"$work/outgrown"
+    write(path, 0, 2000, 4, seed = 6)
+    val docs = spark.read.parquet(path)
+    val listed = docs.inputFiles.map(f => new File(new java.net.URI(f)).length).sum
+    def run(): (Seq[Row], (Long, Long), GraftRouteEvent) = {
+      var got = Seq.empty[Row]
+      val (n, routes) = RouteParity.routed(spark)(counts { got = ranks(docs, "t1 t2 t3") })
+      val Seq(e) = routes.filter(_.op == "search.bm25")
+      (got, n, e)
+    }
+    BaseRows.clear()
+    spark.conf.set("spark.graft.localMaxBytes", listed.toString)
+    try {
+      // the first fill decodes and tokenizes every file, measuring them
+      val (first, n, e) = run()
+      assert(e.route == Route.Local && e.estimate == listed && n == (4, 4), e)
+      for (_ <- 0 until 2) {
+        val (again, n, e) = run()
+        assert(e.route == Route.Distributed && e.estimate > listed && n == (0, 0), e)
+        assert(again == first)
+      }
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   test("rows with a NULL id count in N, avgdl and df but take no rank") {

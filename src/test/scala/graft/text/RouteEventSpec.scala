@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{GraftRouteEvent, Route, RouteParity}
-import graft.index.{Ann, IndexCatalog}
+import graft.index.{Ann, BaseRows, IndexCatalog}
 import graft.search.Hybrid
 
 /** Every routed call posts exactly one [[GraftRouteEvent]] naming its op,
@@ -138,15 +138,23 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(GraftRouteEvent("ann.fetch", Route.Distributed, bytes, 0)))
   }
 
-  test("search.bm25: one event per bm25Ranks call, estimate = the listed file bytes") {
+  test("search.bm25: one event per bm25Ranks call, estimate = the listing's held bytes") {
     val bytes = docs.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
     def bm25(df: DataFrame, terms: Seq[String]): Unit =
       Hybrid.bm25Ranks(df, "text", "doc_id", terms, 10).collect()
+    BaseRows.clear()
+    // before the first fill a file counts its listed bytes (an empty term
+    // set decodes nothing); after it, its decoded rows and postings
+    assert(events(bm25(docs, Nil)) ==
+      Seq(GraftRouteEvent("search.bm25", Route.Local, bytes, Default)))
+    bm25(docs, Seq("w1"))
+    val held = events(bm25(docs, Seq("w1"))).head.estimate
+    assert(held > bytes)
     // an empty term set and an unseen term decide the route too
     for (terms <- Seq(Seq("w1", "w2"), Nil, Seq("zzz")); input <- Seq(docs,
         docs.where(col("lang") =!= "l1")))
       assert(events(bm25(input, terms)) ==
-        Seq(GraftRouteEvent("search.bm25", Route.Local, bytes, Default)))
+        Seq(GraftRouteEvent("search.bm25", Route.Local, held, Default)))
     assert(withGate("0")(events(bm25(docs, Seq("w1")))) ==
       Seq(GraftRouteEvent("search.bm25", Route.Distributed, bytes, 0)))
     // not a parquet relation: an in-memory copy, and a join
