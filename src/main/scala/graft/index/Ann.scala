@@ -868,6 +868,10 @@ object Ann {
     if (dataType == LongType) idExpr
     else Cast(idExpr, LongType, Some(SQLConf.get.sessionLocalTimeZone), EvalMode.TRY)
 
+  /** The [[idKey]] of `df`'s column `idColumn`. */
+  private[graft] def idKeyCol(df: DataFrame, idColumn: String): Column = GraftShim.column(
+    idKey(GraftShim.expression(col(idColumn)), df.select(col(idColumn)).schema.head.dataType))
+
   /** Inclusion predicate for a per-query id list (hit fetch-back, refine
    *  candidates, reconstruct, id filters): one `InSet` at any size, matching
    *  the [[idKey]] of an id column of `dataType`. Byte/Short/Int ids get the
@@ -1065,8 +1069,7 @@ object Ann {
         case (h, i) => Row(h._1, h._2, i) }.asJava,
       StructType(Seq(StructField("__ann_id", LongType),
         StructField("_distance", FloatType), StructField("__ann_rank", IntegerType))))
-    val idType = df.select(col(idColumn)).schema.head.dataType
-    val key = GraftShim.column(idKey(GraftShim.expression(col(idColumn)), idType))
+    val key = idKeyCol(df, idColumn)
     (if (hits.length > TombInlineMax) df else df.where(idIn(df, idColumn, hits.map(_._1))))
       .join(broadcast(distDf), key === col("__ann_id"))
       .drop("__ann_id")
@@ -1789,13 +1792,20 @@ object Ann {
     IndexCatalog.save(r, meta.copy(numDeleted = tomb.size.toLong))
   }
 
-  /** Append new rows: graph engines get parallel delta shards (reference
-   *  Append, diskann_index.cpp:316-357); exact/quantized engines append to
+  /** Append new rows: graph engines get delta shards, built on the driver
+   *  below the gate (reference Append, diskann_index.cpp:316-357, route op
+   *  `ann.write`); exact/quantized engines append to
    *  their parquet table (encoded with the EXISTING codebooks/centroids —
    *  FAISS add() semantics: the quantizer never retrains on add). */
-  def append(df: DataFrame, column: String, idColumn: String, name: String): IndexMeta = {
+  def append(df: DataFrame, column: String, idColumn: String, name: String): IndexMeta =
+    append(df, column, idColumn, name, BuildParams().targetShardSize)
+
+  /** [[append]] with `splitRows` rows per delta shard of a graph batch that
+   *  runs distributed. */
+  private[graft] def append(df: DataFrame, column: String, idColumn: String, name: String,
+      splitRows: Long): IndexMeta = {
     val meta = IndexCatalog.load(root(df.sparkSession), name)
-    AnnEngine.of(meta).append(df, column, idColumn, meta)
+    AnnEngine.of(meta).append(df, column, idColumn, meta, splitRows)
   }
 
   /** Serve-time probe width, matching FAISS's MUTABLE `index.nprobe` field

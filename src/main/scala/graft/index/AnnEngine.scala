@@ -3,7 +3,9 @@ package graft.index
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{DiskannFormat, GraphIndex, HnswFormat, HnswIndex, LshCodec, Metric,
@@ -93,9 +95,10 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
   private[index] def reconstruct(spark: SparkSession, meta: IndexMeta, pred: Column,
       keep: Long => Boolean): DataFrame
 
-  /** Add rows with the index's frozen quantizer (FAISS add()). */
+  /** Add rows with the index's frozen quantizer (FAISS add()); a graph
+   *  batch that runs distributed splits into delta shards of `splitRows`. */
   private[index] def append(df: DataFrame, column: String, idColumn: String,
-      meta: IndexMeta): IndexMeta
+      meta: IndexMeta, splitRows: Long): IndexMeta
 
   /** Rewrite the live rows into a new generation, publish it, then delete
    *  the superseded files and the tombstones. */
@@ -252,6 +255,137 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     ShardMeta(f, s"$base.ids", ids.length.toLong)
   }
 
+  /** (degree, complexity) of a graph build: Vamana's (R, L), or HNSW's (m,
+   *  efConstruction), which hnsw keeps in the same metadata slots so
+   *  metadata.json stays schema-stable across engines. */
+  private def shape(p: BuildParams): (Int, Int) =
+    if (hnsw) (p.hnswM, p.efConstruction) else (p.maxDegree, p.buildComplexity)
+
+  private def quantBits(p: BuildParams): Int =
+    if (p.quantization.isEmpty) 0 else p.quantization.stripPrefix("sq").toInt
+
+  /** The parameters `meta`'s shards were built with: what its appends and
+   *  compactions build with. */
+  private[graft] def paramsOf(meta: IndexMeta): BuildParams = BuildParams(engine = name,
+    metric = meta.metric, maxDegree = meta.maxDegree, buildComplexity = meta.buildComplexity,
+    alpha = meta.alpha, quantization = if (meta.quantized) s"sq${meta.quantBits}" else "",
+    hnswM = meta.maxDegree, efConstruction = meta.buildComplexity)
+
+  /** Shard `base` over `input` in arrival order, None when it is empty: the
+   *  one per-shard build of every graph write ([[build]]'s tasks, [[append]]
+   *  and compaction on either route), so the same rows in the same order
+   *  give byte-identical files. */
+  private def buildShard(input: Iterator[(Long, Array[Float])], dim: Int, m: Metric,
+      params: BuildParams, base: String): Option[ShardMeta] = {
+    val (degree, complexity) = shape(params)
+    val buildThreads = params.buildThreads
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val ix = newGraph(dim, m, degree, complexity, params.alpha)
+    val normalize = m eq Metric.Cosine
+    var bad = -1L
+    if (hnsw && buildThreads > 1) {
+      // deterministic batch-parallel bulk build (HnswIndex.addAll — the
+      // same kernel the coarse-quantizer build uses): labels follow
+      // arrival order exactly like the serial insert loop, so the
+      // id↔label mapping stays a pure function of (shard rows, level
+      // seed) at any core count. OPT-IN via buildThreads, the vamana
+      // convention (idle task cores; cluster equivalent:
+      // spark.task.cpus = buildThreads) — running addAll UNGATED inside
+      // every shard task measured 182 s vs 62 s serial at 1.5M/32
+      // shards on 32 cores: with the shard axis already saturating the
+      // host, the common-pool fan-out oversubscribes and refineLayer0's
+      // extra re-search pass has no idle cores to pay for it. A scoped
+      // pool bounds each task to its declared cpus; determinism means
+      // the pool size cannot change the result, only the speed.
+      val vs = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
+      input.foreach { case (id, v) =>
+        if (v.length != dim) bad = id
+        else {
+          vs += (if (normalize) VectorOps.normalize(v.clone()) else v)
+          ids += id
+        }
+      }
+      if (bad < 0) {
+        val pool = new java.util.concurrent.ForkJoinPool(buildThreads)
+        try pool.submit(new Runnable {
+          def run(): Unit =
+            ix.asInstanceOf[HnswIndex].addAll(vs.toArray[Array[Float]])
+        }).get()
+        finally pool.shutdown()
+      }
+    } else if (hnsw) {
+      // hnsw default: serial insertion — at full shard-axis parallelism
+      // there are no idle cores for a per-shard pool to use
+      input.foreach { case (id, v) =>
+        if (v.length != dim) bad = id
+        else {
+          ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
+          ids += id
+        }
+      }
+    } else {
+      // vamana: two-pass pilot seeding per shard (the reference's
+      // streaming build trains a pilot graph from a max(√N, 1000)-point
+      // sample, then stream-inserts the rest,
+      // rust_lib/src/streaming_build.rs:46-122 — early inserts see a
+      // well-spread graph instead of whatever arrived first, improving
+      // edge quality at equal cost). Buffers the partition's rows
+      // (references only; the index copies on add) — shard sizing already
+      // assumes the shard's vectors fit the task.
+      val rows = input.toArray
+      rows.foreach { case (id, v) => if (v.length != dim) bad = id }
+      if (bad < 0 && rows.nonEmpty) {
+        val nRows = rows.length
+        val pilot = math.min(nRows.toLong,
+          math.max(math.sqrt(nRows.toDouble).toLong, 1000L)).toInt
+        val stride = math.max(1, nRows / pilot)
+        val isPilot = new Array[Boolean](nRows)
+        var p = 0
+        var taken = 0
+        while (p < nRows && taken < pilot) {
+          isPilot(p) = true; taken += 1; p += stride
+        }
+        def prep(i: Int): Array[Float] = {
+          val v = rows(i)._2
+          if (normalize) VectorOps.normalize(v.clone()) else v
+        }
+        // ids follow label order: pilot block first, then the tail — the
+        // id↔label mapping is identical on the serial and parallel routes
+        var i = 0
+        while (i < nRows) { if (isPilot(i)) ids += rows(i)._1; i += 1 }
+        i = 0
+        while (i < nRows) { if (!isPilot(i)) ids += rows(i)._1; i += 1 }
+        val vx = ix.asInstanceOf[VamanaIndex]
+        i = 0
+        while (i < nRows) { if (isPilot(i)) vx.add(prep(i)); i += 1 }
+        if (buildThreads > 1) {
+          // tail inserted by a per-shard worker pool (idle task cores;
+          // cluster equivalent: spark.task.cpus = buildThreads)
+          val tail = Array.newBuilder[Array[Float]]
+          tail.sizeHint(nRows - taken)
+          i = 0
+          while (i < nRows) { if (!isPilot(i)) tail += prep(i); i += 1 }
+          vx.addAllParallel(tail.result(), buildThreads)
+        } else {
+          i = 0
+          while (i < nRows) { if (!isPilot(i)) vx.add(prep(i)); i += 1 }
+        }
+      }
+    }
+    if (bad >= 0) throw new IllegalArgumentException(
+      s"vector for id $bad does not have expected dimension $dim")
+    if (ix.size == 0) None else Some(writeShard(ix, quantBits(params), base, ids.toArray))
+  }
+
+  /** The metadata of a fresh build of `shards`. */
+  private def builtMeta(index: String, dim: Int, metric: Metric, params: BuildParams,
+      shards: List[ShardMeta]): IndexMeta = {
+    val (degree, complexity) = shape(params)
+    IndexMeta(index, name, "vec", "id", dim, metric.name, degree, complexity, params.alpha,
+      params.quantization.nonEmpty, shards.map(_.count).sum, 0L, shards,
+      quantBits = if (quantBits(params) == 0) 8 else quantBits(params))
+  }
+
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
     val spark = data.sparkSession
@@ -266,128 +400,23 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     val n = data.count()
     val nShards = if (params.numShards > 0) params.numShards
       else math.max(1, math.ceil(n.toDouble / params.targetShardSize).toInt)
-
     val ds = data.as[(Long, Array[Float])]
     val repart = if (nShards == 1) ds.coalesce(1) else ds.repartition(nShards)
-    // hnsw reuses the (maxDegree, buildComplexity) metadata slots for (m,
-    // efConstruction) — keeps metadata.json schema-stable across engines
-    val (degree, complexity) =
-      if (hnsw) (params.hnswM, params.efConstruction)
-      else (params.maxDegree, params.buildComplexity)
-    val alpha = params.alpha
-    val quantBits =
-      if (params.quantization.isEmpty) 0 else params.quantization.stripPrefix("sq").toInt
-    val metricName = metric.name
-    val isHnsw = hnsw
-    val buildThreads = params.buildThreads
-    val shardMetas = repart.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val ix = newGraph(dim, m, degree, complexity, alpha)
-      val normalize = m eq Metric.Cosine
-      var bad = -1L
-      if (isHnsw && buildThreads > 1) {
-        // deterministic batch-parallel bulk build (HnswIndex.addAll — the
-        // same kernel the coarse-quantizer build uses): labels follow
-        // arrival order exactly like the serial insert loop, so the
-        // id↔label mapping stays a pure function of (shard rows, level
-        // seed) at any core count. OPT-IN via buildThreads, the vamana
-        // convention (idle task cores; cluster equivalent:
-        // spark.task.cpus = buildThreads) — running addAll UNGATED inside
-        // every shard task measured 182 s vs 62 s serial at 1.5M/32
-        // shards on 32 cores: with the shard axis already saturating the
-        // host, the common-pool fan-out oversubscribes and refineLayer0's
-        // extra re-search pass has no idle cores to pay for it. A scoped
-        // pool bounds each task to its declared cpus; determinism means
-        // the pool size cannot change the result, only the speed.
-        val vs = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-        it.foreach { case (id, v) =>
-          if (v.length != dim) bad = id
-          else {
-            vs += (if (normalize) VectorOps.normalize(v.clone()) else v)
-            ids += id
-          }
-        }
-        if (bad < 0) {
-          val pool = new java.util.concurrent.ForkJoinPool(buildThreads)
-          try pool.submit(new Runnable {
-            def run(): Unit =
-              ix.asInstanceOf[HnswIndex].addAll(vs.toArray[Array[Float]])
-          }).get()
-          finally pool.shutdown()
-        }
-      } else if (isHnsw) {
-        // hnsw default: serial insertion — at full shard-axis parallelism
-        // there are no idle cores for a per-shard pool to use
-        it.foreach { case (id, v) =>
-          if (v.length != dim) bad = id
-          else {
-            ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
-            ids += id
-          }
-        }
-      } else {
-        // vamana: two-pass pilot seeding per shard (the reference's
-        // streaming build trains a pilot graph from a max(√N, 1000)-point
-        // sample, then stream-inserts the rest,
-        // rust_lib/src/streaming_build.rs:46-122 — early inserts see a
-        // well-spread graph instead of whatever arrived first, improving
-        // edge quality at equal cost). Buffers the partition's rows
-        // (references only; the index copies on add) — shard sizing already
-        // assumes the shard's vectors fit the task.
-        val rows = it.toArray
-        rows.foreach { case (id, v) => if (v.length != dim) bad = id }
-        if (bad < 0 && rows.nonEmpty) {
-          val nRows = rows.length
-          val pilot = math.min(nRows.toLong,
-            math.max(math.sqrt(nRows.toDouble).toLong, 1000L)).toInt
-          val stride = math.max(1, nRows / pilot)
-          val isPilot = new Array[Boolean](nRows)
-          var p = 0
-          var taken = 0
-          while (p < nRows && taken < pilot) {
-            isPilot(p) = true; taken += 1; p += stride
-          }
-          def prep(i: Int): Array[Float] = {
-            val v = rows(i)._2
-            if (normalize) VectorOps.normalize(v.clone()) else v
-          }
-          // ids follow label order: pilot block first, then the tail — the
-          // id↔label mapping is identical on the serial and parallel routes
-          var i = 0
-          while (i < nRows) { if (isPilot(i)) ids += rows(i)._1; i += 1 }
-          i = 0
-          while (i < nRows) { if (!isPilot(i)) ids += rows(i)._1; i += 1 }
-          val vx = ix.asInstanceOf[VamanaIndex]
-          i = 0
-          while (i < nRows) { if (isPilot(i)) vx.add(prep(i)); i += 1 }
-          if (buildThreads > 1) {
-            // tail inserted by a per-shard worker pool (idle task cores;
-            // cluster equivalent: spark.task.cpus = buildThreads)
-            val tail = Array.newBuilder[Array[Float]]
-            tail.sizeHint(nRows - taken)
-            i = 0
-            while (i < nRows) { if (!isPilot(i)) tail += prep(i); i += 1 }
-            vx.addAllParallel(tail.result(), buildThreads)
-          } else {
-            i = 0
-            while (i < nRows) { if (!isPilot(i)) vx.add(prep(i)); i += 1 }
-          }
-        }
-      }
-      if (bad >= 0) throw new IllegalArgumentException(
-        s"vector for id $bad does not have expected dimension $dim")
-      if (ix.size == 0) Iterator.empty
-      else Iterator.single(writeShard(ix, quantBits, f"$dir/shard-$pid%05d", ids.toArray))
-    }.collect().toList.sortBy(_.file)
-
-    val meta = IndexMeta(index, name, "vec", "id", dim, metric.name,
-      degree, complexity, params.alpha,
-      params.quantization.nonEmpty, shardMetas.map(_.count).sum, 0L, shardMetas,
-      quantBits = if (quantBits == 0) 8 else quantBits)
+    val shards = repart.mapPartitions(it => buildShard(it, dim, metric, params,
+      f"$dir/shard-${TaskContext.getPartitionId()}%05d").iterator).collect().toList.sortBy(_.file)
+    val meta = builtMeta(index, dim, metric, params, shards)
     IndexCatalog.save(root(spark), meta)
     meta
+  }
+
+  /** A one-shard [[build]] of `rows` on the driver, written as shard `base`;
+   *  returns the metadata `build` records, unpublished. */
+  private[graft] def buildLocal(rows: Iterator[(Long, Array[Float])], index: String, dim: Int,
+      params: BuildParams, base: String): IndexMeta = {
+    val metric = Metric.fromName(params.metric)
+    val shard = buildShard(rows, dim, metric, params, base)
+    require(shard.nonEmpty, "cannot build an index over an empty input")
+    builtMeta(index, dim, metric, params, shard.toList)
   }
 
   private[index] def scan(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
@@ -643,48 +672,40 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
       }.toDF("row_id", "vector")
   }
 
-  /** Parallel delta shards (reference Append, diskann_index.cpp:316-357). */
+  /** Delta shards (reference Append, diskann_index.cpp:316-357) built by
+   *  [[buildShard]]. Route op `ann.write`, estimate = the Catalyst size of
+   *  the projected batch: below the gate the batch's rows, read straight
+   *  from a LocalRelation or else in one collect, become one delta shard on
+   *  the driver with no Spark job; above it the batch splits into
+   *  ceil(n / splitRows) delta shards built in parallel tasks. */
   private[index] def append(df: DataFrame, column: String, idColumn: String,
-      meta: IndexMeta): IndexMeta = {
+      meta: IndexMeta, splitRows: Long): IndexMeta = {
     val spark = df.sparkSession
     import spark.implicits._
     val r = root(spark)
-    val dir = IndexCatalog.indexDir(r, meta.name)
-    val dim = meta.dim
+    val base = s"${IndexCatalog.indexDir(r, meta.name)}/shard-delta-${meta.shards.size}"
+    val (dim, metric, params) = (meta.dim, meta.metricObj, paramsOf(meta))
     val data = df.select(col(idColumn).cast(LongType), toFloatVec(col(column)))
-      .as[(Long, Array[Float])]
-    val metricName = meta.metric
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quantBits = if (meta.quantized) meta.quantBits else 0
-    // Parallel delta build: a big batch splits into ceil(n/targetShardSize)
-    // delta shards built concurrently — a single coalesce(1) task was the
-    // streaming-ingest throughput ceiling (one thread serializing every
-    // micro-batch). Small batches still produce exactly one delta shard.
-    val targetShardSize = spark.conf.getOption("spark.graft.ann.append.targetShardSize")
-      .map(_.toLong).getOrElse(BuildParams().targetShardSize)
-    // cache the batch: sizing (count) and shard building both evaluate it,
-    // and micro-batch appends are latency-sensitive
-    data.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = data.count()
-    val nDelta = math.max(1, math.ceil(n.toDouble / targetShardSize).toInt)
-    val deltaTag = s"delta-${meta.shards.size}"
-    val repart = if (nDelta == 1) data.coalesce(1) else data.repartition(nDelta)
-    val newShards = repart.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
-      val ix = newGraph(dim, m, maxDeg, bc, alpha)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val normalize = m eq Metric.Cosine
-      it.foreach { case (id, v) =>
-        require(v.length == dim, s"vector for id $id has dimension ${v.length}, expected $dim")
-        ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
-        ids += id
+    val plan = data.queryExecution.optimizedPlan
+    val newShards = if (Route.local(spark, "ann.write", plan.stats.sizeInBytes)) {
+      val rows = plan match {
+        case l: LocalRelation => l.data
+        case _ => GraftShim.collectInternal(data).toSeq
       }
-      if (ix.size == 0) Iterator.empty
-      else Iterator.single(
-        writeShard(ix, quantBits, f"$dir/shard-$deltaTag-$pid%05d", ids.toArray))
-    }.collect().toList.sortBy(_.file)
-    data.unpersist()
+      buildShard(rows.iterator.map { row =>
+        require(!row.isNullAt(0) && !row.isNullAt(1), "an appended row has a NULL id or vector")
+        (row.getLong(0), row.getArray(1).toFloatArray())
+      }, dim, metric, params, f"$base-00000").toList
+    } else {
+      val ds = data.as[(Long, Array[Float])]
+      // cached: sizing (count) and shard building both evaluate the batch
+      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val nDelta = math.max(1, math.ceil(ds.count().toDouble / splitRows).toInt)
+      val repart = if (nDelta == 1) ds.coalesce(1) else ds.repartition(nDelta)
+      try repart.mapPartitions(it => buildShard(it, dim, metric, params,
+        f"$base-${TaskContext.getPartitionId()}%05d").iterator).collect().toList.sortBy(_.file)
+      finally ds.unpersist()
+    }
     val updated = meta.copy(shards = meta.shards ++ newShards,
       numVectors = meta.numVectors + newShards.map(_.count).sum)
     IndexCatalog.save(r, updated)
@@ -1275,7 +1296,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
    *  order: the two orders differ by an ulp in float, enough to flip an
    *  appended row's cluster/code at a cell boundary). */
   private[index] final def append(df: DataFrame, column: String, idColumn: String,
-      meta: IndexMeta): IndexMeta = {
+      meta: IndexMeta, splitRows: Long): IndexMeta = {
     val spark = df.sparkSession
     val dim = if (meta.inputDim > 0) meta.inputDim else meta.dim
     val checkUdf = udf((v: Array[Float]) => {

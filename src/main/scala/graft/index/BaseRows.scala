@@ -75,14 +75,12 @@ private[graft] object BaseRows {
    *  `plan` (route op `op`): one plain parquet leaf (no partitions, buckets,
    *  streaming or `_metadata` columns) that `fits`, under nodes [[foldable]]
    *  evaluates, with listed bytes within the gate, every listed file
-   *  unchanged on disk and `cost` of the listing (by default its listed
-   *  bytes) within the gate. Posts the op's one route event either way; the
-   *  estimate is that cost, or the listed bytes when no fresh listing was
-   *  taken (the plan's size estimate when its leaf is not a file
-   *  relation). */
+   *  unchanged on disk and the listing's [[held]] bytes within the gate.
+   *  Posts the op's one route event either way; the estimate is the held
+   *  bytes, or the listed bytes when no fresh listing was taken (the plan's
+   *  size estimate when its leaf is not a file relation). */
   def local(spark: SparkSession, op: String, plan: LogicalPlan,
-      fits: LogicalRelation => Boolean = _ => true,
-      cost: Seq[FileStatus] => Long = _.map(_.getLen).sum): Option[Listed] = {
+      fits: LogicalRelation => Boolean = _ => true): Option[Listed] = {
     val leaf = plan.collectLeaves() match {
       case Seq(lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) => Some((lr, fs))
       case _ => None
@@ -99,7 +97,7 @@ private[graft] object BaseRows {
     if (files.isEmpty) {
       Route.post(spark, op, Route.Distributed, bytes, Route.maxBytes(spark))
       None
-    } else if (!Route.local(spark, op, cost(files.get))) None
+    } else if (!Route.local(spark, op, held(files.get))) None
     else Some(Listed(leaf.get._1, leaf.get._2, files.get))
   }
 

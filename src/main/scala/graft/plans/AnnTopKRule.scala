@@ -69,7 +69,9 @@ case object KeepMarker extends LeafExpression with Unevaluable {
  *     searches too; [[AnnTopKRule.cachedHits]] keeps the explain → count →
  *     collect of one plan to one search;
  *   - the base rows are fetched by id on one of two routes (op
- *     `ann.fetch`, [[graft.core.Route]]). Below the gate the rows come
+ *     `ann.fetch`, [[graft.core.Route]], estimate = the bytes the base
+ *     table's decoded rows hold on the driver, [[BaseRows.held]]). Below
+ *     the gate the rows come
  *     from the [[BaseRows]] driver cache, the way the reference fetches
  *     by row id (src/ann_optimizer.cpp:114-118), and the whole top-k folds
  *     to `Filter(marker, LocalRelation)`: no scan and no Spark job. Above

@@ -114,7 +114,7 @@ private[search] object Bm25Corpus {
       !plan.exists(p => !(p eq lr) && !p.isInstanceOf[Filter] && !p.isInstanceOf[Project]) &&
       cols.head.references.nonEmpty &&
       cols.flatMap(_.references).forall(a => lr.output.exists(_.exprId == a.exprId))
-    BaseRows.local(df.sparkSession, "search.bm25", plan, fits, BaseRows.held).map { l =>
+    BaseRows.local(df.sparkSession, "search.bm25", plan, fits).map { l =>
       val Seq(id, toks, dl) = cols.map(BindReferences.bindReference(_, l.lr.output))
       val idAttr = l.lr.output.find(a => cols.head.references.contains(a)).get
       new Bm25Corpus({

@@ -49,8 +49,9 @@ object Hybrid {
   /** BM25-ranked top-N doc ids for a bag of query terms:
    *  (id, _bm25_rank 1..N). Okapi BM25, idf = ln((N-df+0.5)/(df+0.5)+1).
    *  N counts every input row; avgdl and df count the rows with tokens (a
-   *  NULL text has none and never scores). Rows with a NULL id count in the
-   *  statistics but take no rank.
+   *  NULL text has none and never scores). Ids key as the index keys them
+   *  ([[Ann.idKey]]); rows whose key is NULL (a NULL id, or a STRING id that
+   *  is not a number) count in the statistics but take no rank.
    *
    *  Two routes, one answer (route op `search.bm25`, estimate = the bytes
    *  the input's files hold on the driver once decoded and tokenized,
@@ -61,7 +62,7 @@ object Hybrid {
   def bm25Ranks(df: DataFrame, textCol: String, idCol: String,
       terms: Seq[String], topN: Int): DataFrame = {
     val toks = TextOps.tokens(col(textCol))
-    val docs = df.select(col(idCol).cast(LongType).as("id"), toks.as("toks"),
+    val docs = df.select(Ann.idKeyCol(df, idCol).as("id"), toks.as("toks"),
       array_size(toks).as("dl"))
     val corpus = Bm25Corpus(df, docs)
     val ids = if (terms.isEmpty) Nil else corpus match {
@@ -151,11 +152,12 @@ object Hybrid {
       StructField(rankName, IntegerType, nullable = false))))
 
   /** Exact vector ranks (squared-L2 over an embedding column):
-   *  (id, _vector_rank 1..N). */
+   *  (id, _vector_rank 1..N), ids keyed as in [[bm25Ranks]]. */
   def exactVectorRanks(df: DataFrame, vecCol: String, idCol: String,
       qVec: Array[Float], topN: Int): DataFrame = {
     val dd = array_distance_sq(toFloatVec(col(vecCol)), floatVec(qVec.toSeq))
-    val top = df.select(col(idCol).cast(LongType).as("id"), dd.as("__dd"))
+    val top = df.select(Ann.idKeyCol(df, idCol).as("id"), dd.as("__dd"))
+      .where(col("id").isNotNull)
       .orderBy(col("__dd"), col("id"))
       .limit(topN)
     rankOrdered(top, "_vector_rank", topN)

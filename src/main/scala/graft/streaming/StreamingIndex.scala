@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.index.{Ann, AnnEngine, IndexCatalog, ShardCache, ShardMeta}
+import graft.core.Route
+import graft.index.{Ann, AnnEngine, GraphEngine, IndexCatalog, ShardCache, ShardMeta}
 
 /**
  * Structured-Streaming incremental ANN index maintenance — the Spark
@@ -14,8 +15,10 @@ import graft.index.{Ann, AnnEngine, IndexCatalog, ShardCache, ShardMeta}
  *
  * At scale this is the "index the firehose" shape: `readStream` →
  * `maintain(...)` → queries against the index see data as of the last
- * completed batch. Compaction is a shard-parallel Spark job (vectors never
- * visit the driver).
+ * completed batch. Appends and compactions of a small index run on the
+ * driver with no Spark job (route op `ann.write`); above the gate an append
+ * is a shard-parallel job, and a compaction too, whose vectors never visit
+ * the driver.
  */
 object StreamingIndex {
 
@@ -39,55 +42,49 @@ object StreamingIndex {
   /** One micro-batch step (also directly callable for foreachBatch reuse). */
   def appendBatch(batch: DataFrame, column: String, idColumn: String, name: String,
       params: Ann.BuildParams, compactAt: Int): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val r = Ann.root(spark)
-    if (!IndexCatalog.exists(r, name)) {
-      Ann.buildIndex(batch, column, idColumn, name, params)
-    } else {
-      Ann.append(batch, column, idColumn, name)
-      val meta = IndexCatalog.load(r, name)
-      if (meta.shards.size > compactAt)
-        compact(spark, name, math.max(params.numShards, 1))
-    }
+    if (!IndexCatalog.exists(Ann.root(spark), name)) {
+      if (!batch.isEmpty) Ann.buildIndex(batch, column, idColumn, name, params)
+    } else if (Ann.append(batch, column, idColumn, name).shards.size > compactAt)
+      compact(spark, name, math.max(params.numShards, 1))
+  }
+
+  /** `sh`'s rows not in `tomb`, in label order, as the shard stores them. */
+  private def live(sh: ShardMeta, cosine: Boolean,
+      tomb: Set[Long]): Iterator[(Long, Array[Float])] = {
+    val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
+    loaded.ids.indices.iterator.filter(l => !tomb.contains(loaded.ids(l)))
+      .map(l => (loaded.ids(l), loaded.index.vector(l)))
   }
 
   /**
-   * Compact an index to `targetShards` shards: re-shard all live vectors
-   * through a distributed rebuild (tombstones drop out, like the
-   * reference's Vacuum, src/diskann_index.cpp:701-741). The rebuilt index
-   * keeps the original binding (column/id/source files).
+   * Compact an index to `targetShards` shards: rebuild all live vectors
+   * (tombstones drop out, like the reference's Vacuum,
+   * src/diskann_index.cpp:701-741). The rebuilt index keeps the original
+   * binding (column/id/source files). Route op `ann.write`, estimate = the
+   * on-disk bytes of the shards it rewrites: below the gate a compaction to
+   * one shard reads the live rows through [[ShardCache]] in shard and label
+   * order and rebuilds them on the driver, with no Spark job, through the
+   * same per-shard build as the one task of the distributed rebuild, so both
+   * routes write the same files. Otherwise one task per shard extracts its
+   * live rows and [[Ann.buildIndex]] rebuilds them.
    */
   def compact(spark: SparkSession, name: String, targetShards: Int): Unit = {
     import spark.implicits._
     val r = Ann.root(spark)
     val meta = IndexCatalog.load(r, name)
-    require(AnnEngine.of(meta).isGraph, "compact supports graph engines")
+    val graph = AnnEngine.of(meta) match {
+      case g: GraphEngine => g
+      case _ => throw new IllegalArgumentException("compact supports graph engines")
+    }
     val tomb = IndexCatalog.readTombstones(r, name)
-    val tombB = spark.sparkContext.broadcast(tomb)
     val cosine = meta.metricObj eq graft.core.Metric.Cosine
-    // distributed extraction: one task per shard emits its live (id, vector)
-    val vecsDf = spark.sparkContext
-      .parallelize(meta.shards, math.max(meta.shards.size, 1))
-      .flatMap { sh =>
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        loaded.ids.indices.iterator
-          .filter(l => !t.contains(loaded.ids(l)))
-          .map(l => (loaded.ids(l), loaded.index.vector(l)))
-      }.toDF("id", "vec")
-    val tmpName = s"${name}__compacting"
-    val params = Ann.BuildParams(engine = meta.engine, metric = meta.metric,
-      maxDegree = meta.maxDegree, buildComplexity = meta.buildComplexity,
-      alpha = meta.alpha,
-      quantization = if (meta.quantized) s"sq${meta.quantBits}" else "",
-      numShards = targetShards,
-      hnswM = meta.maxDegree, efConstruction = meta.buildComplexity)
     // NOTE: cosine vectors in shards are already normalized; re-normalizing
     // is a no-op, so the rebuild is safe for every metric.
-    val rebuilt = Ann.buildIndex(vecsDf, "vec", "id", tmpName, params)
+    val params = graph.paramsOf(meta).copy(numShards = targetShards)
+    val tmpName = s"${name}__compacting"
     // Crash-safe swap: the old metadata.json stays authoritative until the
-    // new one atomically replaces it. Rebuilt shards move in FIRST under
+    // new one atomically replaces it. Rebuilt shards land FIRST under
     // version-suffixed names (no collision with the live shards), then
     // IndexCatalog.save atomically publishes the new metadata, and only
     // then are the superseded shard files / tombstones / tmp dir deleted.
@@ -96,22 +93,37 @@ object StreamingIndex {
     val ver = meta.version + 1
     val dstDir = new java.io.File(IndexCatalog.indexDir(r, name))
     dstDir.mkdirs()
-    val moved = rebuilt.shards.zipWithIndex.map { case (sh, i) =>
-      val ext = sh.file.substring(sh.file.lastIndexOf('.') + 1)
-      def mv(p: String, suffix: String): String = {
-        val dst = new java.io.File(dstDir, f"compact-$i%05d-v$ver.$suffix")
-        java.nio.file.Files.move(java.nio.file.Paths.get(p), dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.getAbsolutePath
-      }
-      ShardMeta(mv(sh.file, ext), mv(sh.idsFile, "ids"), sh.count)
+    val onDisk = meta.shards.map(sh => new java.io.File(sh.file).length +
+      new java.io.File(sh.idsFile).length).sum
+    // only a one-shard rebuild has a driver-local version
+    val local = if (targetShards == 1) Route.local(spark, "ann.write", onDisk) else {
+      Route.post(spark, "ann.write", Route.Distributed, onDisk, Route.maxBytes(spark))
+      false
     }
-    val oldShards = meta.shards
+    val rebuilt = if (local)
+      graph.buildLocal(meta.shards.iterator.flatMap(live(_, cosine, tomb)), name, meta.dim,
+        params, new java.io.File(dstDir, s"compact-00000-v$ver").getAbsolutePath)
+    else {
+      val tombB = spark.sparkContext.broadcast(tomb)
+      val vecsDf = spark.sparkContext
+        .parallelize(meta.shards, math.max(meta.shards.size, 1))
+        .flatMap(live(_, cosine, tombB.value)).toDF("id", "vec")
+      val built = Ann.buildIndex(vecsDf, "vec", "id", tmpName, params)
+      built.copy(shards = built.shards.zipWithIndex.map { case (sh, i) =>
+        val ext = sh.file.substring(sh.file.lastIndexOf('.') + 1)
+        def mv(p: String, suffix: String): String = {
+          val dst = new java.io.File(dstDir, f"compact-$i%05d-v$ver.$suffix")
+          java.nio.file.Files.move(java.nio.file.Paths.get(p), dst.toPath,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          dst.getAbsolutePath
+        }
+        ShardMeta(mv(sh.file, ext), mv(sh.idsFile, "ids"), sh.count)
+      })
+    }
     IndexCatalog.save(r, rebuilt.copy(name = name, column = meta.column,
-      idColumn = meta.idColumn, sourceFiles = meta.sourceFiles,
-      version = ver, shards = moved))
+      idColumn = meta.idColumn, sourceFiles = meta.sourceFiles, version = ver))
     // new metadata is live — clean up the superseded generation
-    oldShards.foreach { sh =>
+    meta.shards.foreach { sh =>
       new java.io.File(sh.file).delete(); new java.io.File(sh.idsFile).delete()
     }
     new java.io.File(IndexCatalog.tombstonePath(r, name)).delete()

@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{Ann, IndexCatalog}
 import graft.search.Hybrid
+import graft.streaming.StreamingIndex
 import graft.text.TextOps
 
 /** Every size-routed operator gives the same answer on its driver-local and
@@ -133,6 +134,64 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = parity("ann.graph")(hits(name))
       assert(got.forall(_.length == 10), engine)
     }
+  }
+
+  /** SHA-256 of every file in index `name`'s directory, by file name. */
+  private def indexFiles(name: String): Map[String, String] =
+    new java.io.File(IndexCatalog.indexDir(Ann.root(spark), name)).listFiles()
+      .filter(_.isFile).map { f =>
+        f.getName -> java.security.MessageDigest.getInstance("SHA-256")
+          .digest(Files.readAllBytes(f.toPath)).map(b => f"$b%02x").mkString
+      }.toMap
+
+  test("ann.write: append and compaction write the same files on both routes") {
+    val s = spark
+    import s.implicits._
+    val base = emb.where(col("vec_id") < 1500)
+    // a LocalRelation batch under the pilot-seeding threshold, then a
+    // 1,100-row parquet batch above it
+    val small = vectors.slice(1500, 1564).toSeq.map { case (id, v) => (id, v.toSeq) }
+      .toDF("vec_id", "embedding")
+    val large = emb.where(col("vec_id") >= 1564 && col("vec_id") < 2664)
+    for ((engine, quant) <- Seq("diskann" -> "", "diskann" -> "sq8", "hnsw" -> "");
+         metric <- Seq("l2", "cosine"); deletes <- Seq(false, true)) {
+      val name = s"rp_write_$engine${quant}_${metric}_$deletes"
+      val files = parity("ann.write") {
+        Ann.buildIndex(base, "embedding", "vec_id", name, Ann.BuildParams(engine = engine,
+          metric = metric, quantization = quant, numShards = 1, maxDegree = 16,
+          buildComplexity = 32, hnswM = 8, efConstruction = 32))
+        val appended = Seq(small, large).map { batch =>
+          Ann.append(batch, "embedding", "vec_id", name)
+          indexFiles(name)
+        }
+        if (deletes) Ann.delete(spark, name, (0L until 2664L by 13L))
+        StreamingIndex.compact(spark, name, 1)
+        appended :+ indexFiles(name)
+      }
+      assert(files.head.keySet.count(_.startsWith("shard-delta-1-00000.")) == 2, files.head)
+      assert(files.last.keySet == Set("metadata.json", s"compact-00000-v2.${engine}",
+        "compact-00000-v2.ids"), files.last)
+      val meta = IndexCatalog.load(Ann.root(spark), name)
+      assert(meta.numVectors == (if (deletes) 2664 - 205 else 2664), name)
+    }
+  }
+
+  test("bm25 and exact vector ranks: a non-numeric STRING id takes no rank on either route") {
+    val s = spark
+    import s.implicits._
+    val path = s"$work/bm25_words"
+    // zero-padded ids, every 50th replaced by a word
+    (0 until 600).map(i => (if (i % 50 == 7) s"doc$i" else f"$i%06d",
+      s"w${i % 13} w${i % 7} common", vectors(i)._2.toSeq))
+      .toDF("id", "text", "vec").repartition(3).write.parquet(path)
+    val docs = spark.read.parquet(path)
+    val (bm25, vec, fused) = parity("search.bm25") {
+      val b = Hybrid.bm25Ranks(docs, "text", "id", Seq("w7", "common"), 100)
+      val v = Hybrid.exactVectorRanks(docs, "vec", "id", vectors(7)._2, 50)
+      (b.collect().toSeq, v.collect().toSeq, Hybrid.rrfFuse(b, v, 10).collect().toSeq)
+    }
+    assert(bm25.length == 100 && vec.length == 50 && fused.length == 10)
+    for (ranks <- Seq(bm25, vec, fused)) assert(!ranks.exists(_.getLong(0) % 50 == 7), ranks)
   }
 
   test("rareTerms") {

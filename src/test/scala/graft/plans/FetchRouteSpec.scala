@@ -214,6 +214,32 @@ class FetchRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(decodes(parity(sql)) == 1)
   }
 
+  test("a base table whose decoded rows outgrow the gate routes distributed after one fill") {
+    val path = indexedTable("fr_outgrown", baseRows(12))
+    val listed = new File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(_.length).sum
+    val sql = reads("fr_outgrown", freshQuery()).head
+    def run(): (Seq[Row], GraftRouteEvent, Long) = {
+      val before = BaseRows.decodedFiles.get
+      val (rows, routes) = RouteParity.routed(spark)(spark.sql(sql).collect().toSeq)
+      val Seq(e) = routes.filter(_.op == "ann.fetch")
+      (rows, e, BaseRows.decodedFiles.get - before)
+    }
+    BaseRows.clear()
+    spark.conf.set("spark.graft.localMaxBytes", listed.toString)
+    try {
+      // the one fill decodes every file, measuring its rows
+      val (first, e, decoded) = run()
+      assert(e.route == Route.Local && e.estimate == listed && decoded == 4, e)
+      assert(first.length == 10)
+      for (_ <- 0 until 2) {
+        val (again, e, decoded) = run()
+        assert(e.route == Route.Distributed && e.estimate > listed && decoded == 0, e)
+        assert(again == first)
+      }
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
+  }
+
   test("a listing older than the files on disk falls back to the scan") {
     // the view holds the relation, and with it the listing, taken now
     val path = indexedTable("fr_stale", baseRows(8))

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.RouteParity
 import graft.index.{Ann, IndexCatalog}
 
 class StreamingIndexSpec extends AnyFunSuite {
@@ -77,15 +81,16 @@ class StreamingIndexSpec extends AnyFunSuite {
     Ann.buildIndex(base, "vec", "id", name,
       Ann.BuildParams(engine = "diskann", numShards = 1, maxDegree = 16,
         buildComplexity = 32))
-    // force tiny delta shards so the 40-row batch splits into >1
-    spark.conf.set("spark.graft.ann.append.targetShardSize", "16")
+    // the distributed route with tiny delta shards, so the 40-row batch
+    // splits into >1
+    spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
       val batch = (30L until 70L).map(i => (i, vec(i))).toDF("id", "vec")
-      Ann.append(batch, "vec", "id", name)
+      Ann.append(batch, "vec", "id", name, splitRows = 16)
       val m = IndexCatalog.load(Ann.root(spark), name)
       assert(m.numVectors == 70)
       assert(m.shards.size > 2,
-        s"40-row batch at targetShardSize=16 should emit >1 delta shard " +
+        s"40-row batch at splitRows=16 should emit >1 delta shard " +
         s"(got ${m.shards.size - 1})")
       // every appended row is searchable regardless of which delta holds it
       val all = (0L until 70L).map(i => (i, vec(i))).toDF("id", "vec")
@@ -94,6 +99,43 @@ class StreamingIndexSpec extends AnyFunSuite {
           .collect()
         assert(hit.head.getLong(0) == probe, s"probe $probe not found")
       }
-    } finally spark.conf.unset("spark.graft.ann.append.targetShardSize")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
+  }
+
+  test("below the gate a LocalRelation append and a compaction start no Spark job") {
+    import spark.implicits._
+    val name = "job_free_ix"
+    val params = Ann.BuildParams(engine = "diskann", numShards = 1, maxDegree = 16,
+      buildComplexity = 32)
+    Ann.buildIndex((0L until 200L).map(i => (i, vec(i))).toDF("id", "vec"), "vec", "id",
+      name, params)
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.write.test") != null)
+          jobs.incrementAndGet()
+    }
+    /** Jobs started by two 16-row appends, the second of which compacts. */
+    def jobsOf(from: Long): Int = {
+      val batches = Seq(from, from + 16).map(f => (f until f + 16).map(i => (i, vec(i)))
+        .toDF("id", "vec"))
+      Ann.delete(spark, name, Seq(from - 1))
+      jobs.set(0)
+      sc.setLocalProperty("graft.write.test", "1")
+      try batches.foreach(StreamingIndex.appendBatch(_, "vec", "id", name, params, compactAt = 2))
+      finally sc.setLocalProperty("graft.write.test", null)
+      RouteParity.routed(spark)(()) // drains the listener bus
+      val m = IndexCatalog.load(Ann.root(spark), name)
+      assert(m.shards.size == 1 && m.numVectors == from + 32 - 1 - (from - 200) / 32, m)
+      jobs.get
+    }
+    sc.addSparkListener(counter)
+    try {
+      assert(jobsOf(200) == 0, "driver-local appends and compaction launched Spark jobs")
+      spark.conf.set("spark.graft.localMaxBytes", "0")
+      try assert(jobsOf(232) > 0, "distributed appends and compaction launched no job")
+      finally spark.conf.unset("spark.graft.localMaxBytes")
+    } finally sc.removeSparkListener(counter)
   }
 }

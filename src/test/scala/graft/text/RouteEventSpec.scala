@@ -122,7 +122,7 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(searchEvents(topk()).isEmpty)
   }
 
-  test("ann.fetch: one event per rewrite, estimate = the listed file bytes") {
+  test("ann.fetch: one event per rewrite, estimate = the table's held bytes") {
     import graft.functions.{array_distance, floatVec, toFloatVec}
     Ann.buildIndex(emb, "embedding", "vec_id", "re_fetch", Ann.BuildParams(engine = "flat"))
     val rule = graft.plans.AnnTopKRule(spark)
@@ -131,11 +131,44 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
     def topk(): Unit = rule(emb.orderBy(array_distance(toFloatVec(col("embedding")),
       floatVec(q.toSeq))).limit(5).queryExecution.analyzed)
     def fetches(body: => Unit) = events(body).filter(_.op == "ann.fetch")
+    BaseRows.clear()
+    // before the first fill the files count their listed bytes; after it,
+    // their decoded rows
+    assert(fetches(topk()) == Seq(GraftRouteEvent("ann.fetch", Route.Local, bytes, Default)))
+    val Seq(e) = fetches(topk())
+    assert(e.route == Route.Local && e.estimate > bytes && e.limit == Default, e)
     // a cached rewrite (no search) still decides its fetch route
-    for (_ <- 0 until 2)
-      assert(fetches(topk()) == Seq(GraftRouteEvent("ann.fetch", Route.Local, bytes, Default)))
+    assert(fetches(topk()) == Seq(e))
     assert(withGate("0")(fetches(topk())) ==
       Seq(GraftRouteEvent("ann.fetch", Route.Distributed, bytes, 0)))
+  }
+
+  test("ann.write: one event per append and per compaction") {
+    val s = spark
+    import s.implicits._
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_write",
+      Ann.BuildParams(engine = "diskann", numShards = 1, maxDegree = 16, buildComplexity = 32))
+    val r = new scala.util.Random(4)
+    def batch(from: Int): DataFrame = (from until from + 16)
+      .map(i => (i.toLong, Seq.fill(Dim)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    def size(b: DataFrame): Long = b.select(col("vec_id").cast("long"),
+      col("embedding").cast("array<float>")).queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    def onDisk: Long = IndexCatalog.load(Ann.root(spark), "re_write").shards
+      .map(sh => new java.io.File(sh.file).length + new java.io.File(sh.idsFile).length).sum
+    for ((from, gate) <- Seq(500 -> None, 516 -> Some("0"))) {
+      val b = batch(from)
+      val (route, limit) = gate.fold((Route.Local, Default))(g => (Route.Distributed, g.toLong))
+      def write(body: => Unit) = gate.fold(events(body))(withGate(_)(events(body)))
+      assert(write(Ann.append(b, "embedding", "vec_id", "re_write")) ==
+        Seq(GraftRouteEvent("ann.write", route, size(b), limit)))
+      val bytes = onDisk
+      assert(write(graft.streaming.StreamingIndex.compact(spark, "re_write", 1)) ==
+        Seq(GraftRouteEvent("ann.write", route, bytes, limit)))
+    }
+    // a compaction to more than one shard has no driver-local version
+    val bytes = onDisk
+    assert(events(graft.streaming.StreamingIndex.compact(spark, "re_write", 2)) ==
+      Seq(GraftRouteEvent("ann.write", Route.Distributed, bytes, Default)))
   }
 
   test("search.bm25: one event per bm25Ranks call, estimate = the listing's held bytes") {
