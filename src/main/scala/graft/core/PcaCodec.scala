@@ -182,8 +182,8 @@ object PcaCodec {
    *  build time (vacuum rewrites parquet, never the transform), but a
    *  same-name rebuild in the same JVM rewrites pca.bin at the same path;
    *  fingerprinting the file keeps serving from transforming queries with a
-   *  stale rotation/mean after such a rebuild (same guard class as
-   *  ExactServe's content fingerprint), and the new read REPLACES the old
+   *  stale rotation/mean after such a rebuild (the path + length + mtime
+   *  guard of the driver's `BaseRows` cache), and the new read REPLACES the old
    *  entry, so repeated rebuilds hold one transform per path (the
    *  coarse-graph caches' rule, Ann.coarseGraphCache). Serving must not
    *  re-read 16 KB per query, so the hit path is one stat, not one read. */

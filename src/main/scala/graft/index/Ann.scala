@@ -591,7 +591,7 @@ object Ann {
   /** path → (generation fingerprint, decoded coarse graph), process-wide
    *  and GENERATION-EVICTING: a rebuild changes the (mtime, length)
    *  fingerprint and the new decode REPLACES the old graph under the same
-   *  path key (the ExactServe per-name replacement pattern), so repeated
+   *  path key (as a [[BaseRows]] index table is replaced), so repeated
    *  rebuilds — e.g. a streaming maintain loop — hold at most one decoded
    *  graph (tens of MB at nlist ≈ 10⁵–10⁶) per index, not one per
    *  generation for the JVM lifetime. */
@@ -1108,8 +1108,8 @@ object Ann {
 
   /**
    * Job-free FILTERED serving surface — [[searchHits]]'s analog for
-   * [[searchFiltered]]: for ExactServe-eligible indexes (small table
-   * engines) the filter closure is applied in the driver-local scan beside
+   * [[searchFiltered]]: for small table indexes on the driver route
+   * ([[ExactServe]]) the filter closure is applied in the driver-local scan beside
    * the tombstone check (same candidate order, same nprobe-saturation
    * retry as the distributed route — FilteredServeSpec pins parity) and the
    * hits materialize as a LocalRelation, so a serving caller pays no Spark
@@ -1866,12 +1866,6 @@ object Ann {
       s"compactExact applies to exact/quantized engines (got ${meta.engine}); " +
       "graph indexes compact via StreamingIndex.compact")
     engine.vacuum(spark, meta, IndexCatalog.readTombstones(r, name))
-  }
-
-  private[index] def dirBytes(f: java.io.File): Long = {
-    val kids = f.listFiles()
-    if (kids == null) 0L
-    else kids.map(c => if (c.isDirectory) dirBytes(c) else c.length()).sum
   }
 
   /** Merge `source` into `target` (engines of one family, same dim and

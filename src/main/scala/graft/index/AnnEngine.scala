@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.graftshim.GraftShim
@@ -26,7 +28,7 @@ import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
  * encode-on-add, top-k / filtered / range scans, TABLE scoring,
  * reconstruction, vacuum and merge. Each family also owns its driver-local
  * search: graph engines search their cached shards, and each table family
- * brings the one scorer the [[ExactServe]] cache serves through
+ * brings the one scorer the [[ExactServe]] driver route serves through
  * ([[TableEngine.localScorer]]). The [[Ann]] surface resolves the family
  * once per call and delegates.
  *
@@ -673,8 +675,9 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
   }
 
   /** Delta shards (reference Append, diskann_index.cpp:316-357) built by
-   *  [[buildShard]]. Route op `ann.write`, estimate = the Catalyst size of
-   *  the projected batch: below the gate the batch's rows, read straight
+   *  [[buildShard]]. Route op `ann.write`, estimate = rows × (16 + 4·dim)
+   *  for a LocalRelation batch (Catalyst sizes one element per array), else
+   *  its Catalyst size. Below the gate the batch's rows, read straight
    *  from a LocalRelation or else in one collect, become one delta shard on
    *  the driver with no Spark job; above it the batch splits into
    *  ceil(n / splitRows) delta shards built in parallel tasks. */
@@ -687,7 +690,11 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     val (dim, metric, params) = (meta.dim, meta.metricObj, paramsOf(meta))
     val data = df.select(col(idColumn).cast(LongType), toFloatVec(col(column)))
     val plan = data.queryExecution.optimizedPlan
-    val newShards = if (Route.local(spark, "ann.write", plan.stats.sizeInBytes)) {
+    val estimate = plan match {
+      case l: LocalRelation => BigInt(l.data.size) * (16 + 4L * dim)
+      case _ => plan.stats.sizeInBytes
+    }
+    val newShards = if (Route.local(spark, "ann.write", estimate)) {
       val rows = plan match {
         case l: LocalRelation => l.data
         case _ => GraftShim.collectInternal(data).toSeq
@@ -851,12 +858,13 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
   }
 }
 
-/** A table index's rows on the driver, one [[ExactServe]] cache fill: the
- *  ids, each row's IVF cell and the centroid table (null without cells),
- *  the raw vectors an RFlat index re-ranks against (null without RFlat),
- *  and the family's scorer ([[TableEngine.localScorer]]). */
+/** A table index's rows on the driver, one [[ExactServe]] fill: the ids,
+ *  each row's IVF cell and the centroid table (null without cells), the raw
+ *  vectors an RFlat index re-ranks against (null without RFlat), the
+ *  family's scorer ([[TableEngine.localScorer]]) and the bytes it holds. */
 private[index] final case class LocalTable(ids: Array[Long], clusters: Array[Int],
-    cents: Array[Array[Float]], refineVecs: Array[Array[Float]], scorer: LocalScorer)
+    cents: Array[Array[Float]], refineVecs: Array[Array[Float]], scorer: LocalScorer,
+    bytes: Long)
 
 /** A family's driver-local scorer. `apply(query, probes)` prepares one
  *  prepped query for the probed cells (null: every cell); the returned
@@ -882,44 +890,30 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       filter: Option[Column], nprobe: Int): DataFrame
 
   /** The family's driver-local scorer over its stored column (`stored`, in
-   *  row order: `vec` or `code`), with the rows' IVF cells and the centroid
-   *  table (null without cells). Loads the family's artifacts once per
-   *  [[ExactServe]] cache fill; per query, its scores equal [[scored]]'s
-   *  `__dd` bit for bit. */
+   *  row order: `vec` or `code` as Catalyst values), with the rows' IVF
+   *  cells and the centroid table (null without cells). Loads the family's
+   *  artifacts once per [[ExactServe]] fill; per query, its scores equal
+   *  [[scored]]'s `__dd` bit for bit. */
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
       clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer
 
-  /** The stored rows collected to the driver, with the family's scorer. */
+  /** The stored rows collected to the driver, measured as [[BaseRows]]
+   *  measures decoded rows, with the family's scorer. */
   private[index] final def localTable(spark: SparkSession, meta: IndexMeta): LocalTable = {
     // refined code engines: the raw vecs ride along for the exact re-rank
     val cols = Seq(col("id").cast(LongType), col(if (storesCodes) "code" else "vec")) ++
       refineCols(meta) ++ (if (ivf) Seq(col("cluster").cast(IntegerType)) else Nil)
-    val rows = spark.read.parquet(meta.sourcePath).select(cols: _*).collect()
+    val df = spark.read.parquet(meta.sourcePath).select(cols: _*)
+    val rows = GraftShim.collectInternal(df)
     val clusters = if (ivf) rows.map(_.getInt(cols.length - 1)) else null
     val cents = if (ivf) IndexCatalog.readCentroids(
       s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin") else null
+    val bytes = rows.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes + 32L).sum +
+      (if (cents == null) 0L else cents.iterator.map(16L + 4L * _.length).sum)
     LocalTable(rows.map(_.getLong(0)), clusters, cents,
-      if (meta.refine) rows.map(_.getSeq[Float](2).toArray) else null,
-      localScorer(spark, meta, rows.map(_.get(1)), clusters, cents))
-  }
-
-  /** Driver bytes of [[localTable]], the `ann.exact` route's estimate. */
-  private[index] final def localBytes(meta: IndexMeta): Long = {
-    // REFINED code engines cache codes PLUS the raw vec column for the
-    // exact re-rank: add the per-row code bytes (~dim·5 bytes/row for
-    // refined ivfsq), or the cache could exceed the gate by ~25%
-    val refineBytes: Long = if (meta.refine) codeBytes(meta) else 0L
-    // side artifacts the cache also holds: the centroid table for IVF
-    // engines, twice when an IVF_HNSW coarse graph rides along (graph
-    // vectors ≈ another centroid-table copy; links are a small multiple
-    // of m·nlist ints, absorbed by the ×2)
-    val sideBytes: Long =
-      meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
-    // vec-based estimate: exact for flat/ivf, conservative (over) for
-    // unrefined code engines — pq stores m bytes/row, lsh 8; erring high
-    // only keeps a servable index on the distributed route, never the
-    // reverse
-    meta.numVectors * (meta.dim.toLong * 4 + 16 + refineBytes) + sideBytes
+      if (meta.refine) rows.map(_.getArray(2).toFloatArray()) else null,
+      localScorer(spark, meta, rows.map(_.get(1, df.schema(1).dataType)), clusters, cents),
+      bytes)
   }
 
   /** Stored table rows for prepped `(id, vec)` input, encoded against the
@@ -939,9 +933,6 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
 
   /** The TABLE join for this family. */
   protected def tableJoin(t: TableQueries): TableJoin
-
-  /** Bytes one stored code takes beside the raw vector (driver-cache sizing). */
-  protected def codeBytes(meta: IndexMeta): Long
 
   /** The full-precision vectors stored beside (or instead of) codes. */
   protected final def storedVectors(spark: SparkSession, meta: IndexMeta,
@@ -999,12 +990,14 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       fetchK: Int, tomb: Set[Long], searchComplexity: Int): DataFrame =
     topK(spark, meta, query, fetchK, tomb, None, 0)
 
-  /** Small indexes serve from the driver-local [[ExactServe]] cache. */
+  /** Small indexes serve from their [[ExactServe]] table on the driver. */
   override private[index] def collectHits(spark: SparkSession, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], fetchK: Int,
       searchComplexity: Int): Array[(Long, Float)] =
-    if (ExactServe.eligible(spark, meta)) ExactServe.search(spark, meta, tomb, query, fetchK)
-    else super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
+    ExactServe.table(spark, meta) match {
+      case Some(t) => ExactServe.search(spark, meta, t, tomb, query, fetchK)
+      case None => super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
+    }
 
   /** Whether filtered search can under-fill: an IVF index probing fewer
    *  than all of its cells. */
@@ -1037,11 +1030,12 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
   override private[index] def searchFilteredHits(spark: SparkSession, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
       searchComplexity: Int): DataFrame =
-    if (!ExactServe.eligible(spark, meta))
-      searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
-    else localHitRows(spark, filledTopK(meta, k)(nprobe =>
-      ExactServe.search(spark, meta, tomb, query, k, filter.fn, nprobe))
-      .map(h => Row(h._1, h._2)))
+    ExactServe.table(spark, meta) match {
+      case Some(t) => localHitRows(spark, filledTopK(meta, k)(nprobe =>
+        ExactServe.search(spark, meta, t, tomb, query, k, filter.fn, nprobe))
+        .map(h => Row(h._1, h._2)))
+      case None => searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
+    }
 
   /** (centroids, radii) when range search can prune clusters exactly: an
    *  IVF index under L2 whose build stored radii.bin. */
@@ -1334,7 +1328,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val newPath = s"$dir/data-v$ver"
     val df0 = spark.read.parquet(meta.sourcePath)
     val live = if (tomb.isEmpty) df0 else df0.where(notTombstoned(col("id"), tomb))
-    val estBytes = Ann.dirBytes(new java.io.File(meta.sourcePath))
+    val estBytes = BaseRows.tableFiles(new java.io.File(meta.sourcePath)).map(_._2).sum
     val nFiles = math.max(1,
       math.ceil(estBytes.toDouble / TableEngine.CompactTargetBytes).toInt)
     // ivf: drop the read-back bucket partition column; writeClustered
@@ -1466,7 +1460,7 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
   /** The sequential double fold of the Catalyst distance expressions. */
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
       clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
-    val vecs = stored.map(_.asInstanceOf[scala.collection.Seq[Float]].toArray)
+    val vecs = stored.map(_.asInstanceOf[ArrayData].toFloatArray())
     val l2 = meta.metricObj eq Metric.L2
     (query, _) => i => Ann.doubleFoldDist(vecs(i), query, l2)
   }
@@ -1484,8 +1478,6 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
       TableJoin(t.base.crossJoin(broadcast(t.numbered)), distTo(t.base("vec")),
         t.numbered, None)
   }
-
-  protected def codeBytes(meta: IndexMeta): Long = 0L
 
   /** Stored vectors (normalized when the metric is cosine — reconstruction
    *  is of what the index SEARCHES, FAISS's contract for preprocessed adds). */
@@ -1721,8 +1713,6 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
   protected def tableJoin(t: TableQueries): TableJoin =
     adcTableJoin(t, if (t.meta.opq) "__qadc" else "__q", residual = true, bits = 8)
 
-  protected def codeBytes(meta: IndexMeta): Long = meta.maxDegree.toLong // m bytes
-
   /** pq decodes subspace codes (OPQ applies Rᵀ — IndexPreTransform's
    *  reverse_transform); ivfpq returns centroid + decoded residual; RFlat
    *  indexes return the refine storage's raw vectors. */
@@ -1911,9 +1901,6 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
   protected def tableJoin(t: TableQueries): TableJoin =
     adcTableJoin(t, "__q", residual = false, bits = t.meta.quantBits)
 
-  protected def codeBytes(meta: IndexMeta): Long =
-    (meta.dim.toLong * meta.quantBits + 7) / 8
-
   /** The per-dim dequantization levels (SQ8 or packed SQ4/SQ6); RFlat
    *  indexes return the refine storage's raw vectors. */
   private[index] def reconstruct(spark: SparkSession, meta: IndexMeta, pred: Column,
@@ -2035,7 +2022,7 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
     val code = queryCode(spark, meta)
     val w = LshCodec.words(meta.nlist)
     val words = if (w == 1) stored.map(_.asInstanceOf[Long])
-      else stored.flatMap(_.asInstanceOf[scala.collection.Seq[Long]])
+      else stored.flatMap(_.asInstanceOf[ArrayData].toLongArray())
     (query, _) => {
       val q = code(query)
       i => {
@@ -2081,8 +2068,6 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
       w => if (wide) element_at(col("__qcode"), w + 1) else col("__qcode")).cast(DoubleType)
     TableJoin(t.base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
   }
-
-  protected def codeBytes(meta: IndexMeta): Long = ((meta.nlist + 63) / 64).toLong * 8
 
   /** Sign codes are not reconstructible (FAISS IndexLSH has no reconstruct
    *  either); LSH,RFlat keeps raw vectors and reconstructs them exactly. */

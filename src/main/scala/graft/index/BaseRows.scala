@@ -1,5 +1,6 @@
 package graft.index
 
+import java.io.File
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.FileStatus
@@ -16,23 +17,26 @@ import org.apache.spark.sql.types.StructType
 import graft.core.Route
 
 /**
- * Driver cache of a parquet table's decoded rows: the reference's
- * `DataTable::Fetch` by row id (src/ann_optimizer.cpp:114-118) for the eager
- * top-k rewrite, which then attaches a read's base columns without a scan
- * job, and the whole corpus for driver-local BM25.
+ * The one driver residency cache, as the reference's one process holds an
+ * index and its table under one budget (src/faiss_index.cpp:519-702,
+ * `DataTable::Fetch` by row id, src/ann_optimizer.cpp:114-118): a parquet
+ * table's decoded rows per file, for the eager top-k rewrite's base columns
+ * and driver-local BM25; values derived from a file's rows (BM25 postings);
+ * and small table indexes ([[ExactServe]]'s [[LocalTable]]), one per table.
  *
- * Entries are per file, keyed by path + length + mtime (the fingerprint rule
- * of [[ExactServe]]) plus the read schema, options and id column, so an
- * append decodes only its new files and a file rewritten in place misses.
- * Each file is decoded once through Spark's own `ParquetFileFormat` reader
- * with the relation's options, so values are bit-identical to a scan's, and
- * indexed by the [[Ann.idKey]] LONG value of its id column: duplicated ids
- * all match, NULL keys never do. Whole-listing reads ([[scan]]) see every
- * row, NULL ids included, with per-file values derived from the rows (the
- * BM25 postings) held beside them. Resident bytes stay under the gate,
- * evicting the least recently used file first; each file's resident bytes
- * are remembered past its eviction, so a route held to them ([[held]]) sees
- * what a listing costs once decoded, not its compressed parquet bytes.
+ * Files are keyed by path + length + mtime plus the read schema, options
+ * and id column, so an append decodes only its new files and a file
+ * rewritten in place misses. Each file is decoded once through Spark's own
+ * `ParquetFileFormat` reader with the relation's options, so values are
+ * bit-identical to a scan's, and indexed by the [[Ann.idKey]] LONG value of
+ * its id column: duplicated ids all match, NULL keys never do. Whole-listing
+ * reads ([[scan]]) see every row, NULL ids included. An index table is kept
+ * by directory while its data files' paths, lengths and mtimes hold
+ * ([[table]]). Resident bytes stay under the gate, evicting the least
+ * recently used entry first; each file's bytes (an index table's shared
+ * among its files) are remembered past its eviction, so a route held to them
+ * ([[held]]) sees what the data costs on the driver, not its compressed
+ * parquet bytes.
  */
 private[graft] object BaseRows {
 
@@ -43,30 +47,41 @@ private[graft] object BaseRows {
   private final case class Key(path: String, length: Long, mtime: Long,
       schema: StructType, options: Map[String, String], idColumn: String)
 
+  /** A cached value and the bytes it holds on the driver. */
+  private sealed abstract class Entry(var bytes: Long) { var cached = false }
+
   /** One file's rows in file order; `keys` are the non-NULL id keys sorted,
    *  `at(i)` the position of the row keyed `keys(i)`. `derived` holds values
    *  computed from the rows by tag; their bytes count in `bytes`. */
   private final class FileRows(val rows: Array[InternalRow], val keys: Array[Long],
-      val at: Array[Int], var bytes: Long) {
+      val at: Array[Int], size: Long) extends Entry(size) {
     val derived = new java.util.HashMap[Any, AnyRef]
-    var cached = false
   }
 
-  private val cache = new java.util.LinkedHashMap[Key, FileRows](16, 0.75f, true)
+  /** An index table's value, filled from `files`; keyed by its directory. */
+  private final class Table(val files: Seq[FileId], val value: AnyRef, size: Long)
+      extends Entry(size)
+
+  /** A lock per index table directory, held while that table fills, so
+   *  concurrent misses fill it once and other tables' fills do not wait. */
+  private val filling = new java.util.concurrent.ConcurrentHashMap[String, Object]
+
+  private val cache = new java.util.LinkedHashMap[Any, Entry](16, 0.75f, true)
   private var resident = 0L
 
   private val KnownMax = 1 << 14
 
-  /** The last resident bytes (rows plus derived values) of up to `KnownMax`
-   *  files seen, by path, length and mtime, least recently seen dropped
-   *  first. */
-  private val known = new java.util.LinkedHashMap[(String, Long, Long), java.lang.Long](
-      16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long),
-        java.lang.Long]): Boolean = size > KnownMax
+  private type FileId = (String, Long, Long)
+
+  /** The last resident bytes of up to `KnownMax` files seen, by path, length
+   *  and mtime, least recently seen dropped first: a base table file's rows
+   *  plus derived values, or an index table file's share of its table. */
+  private val known = new java.util.LinkedHashMap[FileId, java.lang.Long](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[FileId, java.lang.Long]): Boolean =
+      size > KnownMax
   }
 
-  private def fileId(f: FileStatus) = (f.getPath.toString, f.getLen, f.getModificationTime)
+  private def fileId(f: FileStatus): FileId = (f.getPath.toString, f.getLen, f.getModificationTime)
 
   /** Files decoded since start (test hook: an append decodes only its files). */
   private[graft] val decodedFiles = new AtomicLong(0)
@@ -105,8 +120,61 @@ private[graft] object BaseRows {
    *  a file never decoded counting its listed length: a lower bound until a
    *  fill has measured it. */
   def held(files: Seq[FileStatus]): Long = cache.synchronized {
-    files.iterator.map(f => Option(known.get(fileId(f))).fold(f.getLen)(_.longValue)).sum
+    files.iterator.map(f => heldBytes(fileId(f))).sum
   }
+
+  /** The bytes file `id` last held, or its listed length; the caller holds
+   *  the cache lock. */
+  private def heldBytes(id: FileId): Long = Option(known.get(id)).fold(id._2)(_.longValue)
+
+  /** The value of the index table under `dir` when the driver may answer
+   *  from it (route op `op`, one event, estimate the [[held]] bytes of its
+   *  data files; the walk stops once they exceed the gate). A fill's bytes
+   *  are held by its files in proportion to their listed lengths, so an
+   *  append adds its new files' listed bytes and a rebuild counts only its
+   *  own files. On a miss (a data file changed) `fill` builds the value and
+   *  its bytes, one fill per table at a time; a value above the gate
+   *  answers this one search and is not kept. */
+  def table[A <: AnyRef](spark: SparkSession, op: String, dir: String)(
+      fill: => (A, Long)): Option[A] = {
+    val gate = Route.maxBytes(spark)
+    var estimate = 0L
+    val files = tableFiles(new File(dir)).takeWhile { f =>
+      estimate += cache.synchronized(heldBytes(f))
+      estimate <= gate
+    }.toVector
+    if (!Route.local(spark, op, estimate)) return None
+    def hit = cache.synchronized(cache.get(dir) match {
+      case t: Table if t.files == files => Some(t.value)
+      case _ => None
+    })
+    Some(hit.getOrElse(filling.computeIfAbsent(dir, _ => new Object).synchronized(
+      hit.getOrElse {
+        val (a, bytes) = fill
+        val total = files.iterator.map(_._2).sum.max(1L)
+        def upTo(len: Long) = (BigInt(bytes) * len / total).toLong
+        cache.synchronized {
+          files.foldLeft(0L) { (before, f) =>
+            known.put(f, upTo(before + f._2) - upTo(before))
+            before + f._2
+          }
+          put(dir, new Table(files, a, bytes))
+          if (bytes > gate) drop(dir) else evict(gate)
+        }
+        a
+      })).asInstanceOf[A])
+  }
+
+  /** The data files under `dir` (path, length, mtime) in name order,
+   *  recursively and lazily; `_` and `.` files (markers, checksums) are not
+   *  data. */
+  private[index] def tableFiles(dir: File): Iterator[FileId] =
+    Option(dir.listFiles()).fold(Iterator.empty[FileId])(_.sortBy(_.getName).iterator.flatMap {
+      f =>
+        if (f.isDirectory) tableFiles(f)
+        else if (f.getName.startsWith("_") || f.getName.startsWith(".")) Iterator.empty
+        else Iterator.single((f.getPath, f.length, f.lastModified))
+    })
 
   /** True when `plan` is only limits, projections, filters and sorts of
    *  deterministic, evaluable expressions over `lr`. */
@@ -192,6 +260,9 @@ private[graft] object BaseRows {
       (fr.rows, a.asInstanceOf[A])
     }
 
+  /** The bytes resident now (test hook). */
+  private[graft] def residentBytes: Long = cache.synchronized(resident)
+
   private[graft] def clear(): Unit = cache.synchronized {
     cache.values.forEach(_.cached = false)
     cache.clear()
@@ -209,18 +280,28 @@ private[graft] object BaseRows {
       else decode(l, missing, idAttr).toMap
     cache.synchronized {
       decoded.foreach { case (f, fr) =>
-        val old = cache.put(keyOf(f), fr)
-        if (old != null) { old.cached = false; resident -= old.bytes }
-        fr.cached = true
-        resident += fr.bytes
+        put(keyOf(f), fr)
         known.putIfAbsent(fileId(f), fr.bytes)
       }
       evict(Route.maxBytes(l.fs.sparkSession))
     }
-    have.map { case (f, cached) => if (cached != null) cached else decoded(f) }
+    have.map { case (f, e) => if (e != null) e.asInstanceOf[FileRows] else decoded(f) }
   }
 
-  /** Drops least recently used files until the resident bytes fit `budget`;
+  /** Caches `e` under `key`, replacing the entry there; the caller holds the
+   *  cache lock. */
+  private def put(key: Any, e: Entry): Unit = {
+    drop(key)
+    cache.put(key, e)
+    e.cached = true
+    resident += e.bytes
+  }
+
+  /** Drops the entry under `key`, if any; the caller holds the cache lock. */
+  private def drop(key: Any): Unit =
+    Option(cache.remove(key)).foreach { e => e.cached = false; resident -= e.bytes }
+
+  /** Drops least recently used entries until the resident bytes fit `budget`;
    *  the caller holds the cache lock. */
   private def evict(budget: Long): Unit = {
     val it = cache.values.iterator

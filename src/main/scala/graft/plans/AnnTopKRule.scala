@@ -98,47 +98,30 @@ object AnnTopKRule {
   /** Over-fetch factor under a retained Filter (reference README.md:164). */
   val OverfetchMultiplier = 3
 
-  /** Planning-time search results, cached per (index path, catalog content
-   *  hash, metadata searched, query, k) so repeated optimizations of one
-   *  plan (explain → count → collect, AQE re-planning) don't re-run the ANN
-   *  search. Every index mutation (build, append, delete, vacuum, merge)
-   *  rewrites metadata.json — keying on its CONTENT hash (not mtime, whose
-   *  granularity can alias rapid mutations) plus the full path (two roots
-   *  may hold same-named indexes) keeps cached hits consistent. The parsed
-   *  `meta` the search runs over is in the key too: the caller parses it
-   *  before hashing, so a writer committing in between leaves an entry no
-   *  later read matches. Bounded LRU. */
+  /** Planning-time search results, cached per (index path, metadata
+   *  searched, query, k) so repeated optimizations of one plan (explain →
+   *  count → collect, AQE re-planning) don't re-run the ANN search. Every
+   *  index mutation (build, append, delete, vacuum, merge) rewrites
+   *  metadata.json, and equal metas parse from equal JSON, so the parsed
+   *  `meta` the search runs over tells catalog states apart; the full path
+   *  tells apart two roots holding same-named indexes. Bounded LRU. */
   private val MaxCached = 128
-  private type Key = (String, Long, IndexMeta, Seq[Float], Int)
+  private type Key = (String, IndexMeta, Seq[Float], Int)
   private val hitsCache =
     new java.util.LinkedHashMap[Key, Array[(Long, Float)]](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[Key, Array[(Long, Float)]]) =
         size() > MaxCached
     }
 
-  private def cachedHits(metaPath: String, contentHash: Long, meta: IndexMeta,
-      query: Array[Float], fetchK: Int)(
-      compute: => Array[(Long, Float)]): Array[(Long, Float)] = {
-    val key = (metaPath, contentHash, meta, query.toSeq, fetchK)
-    hitsCache.synchronized {
-      val hit = hitsCache.get(key)
-      if (hit != null) return hit
+  private def cachedHits(metaPath: String, meta: IndexMeta, query: Array[Float],
+      fetchK: Int)(compute: => Array[(Long, Float)]): Array[(Long, Float)] = {
+    val key = (metaPath, meta, query.toSeq, fetchK)
+    Option(hitsCache.synchronized(hitsCache.get(key))).getOrElse {
+      val computed = compute
+      hitsCache.synchronized(hitsCache.put(key, computed))
+      computed
     }
-    val computed = compute
-    hitsCache.synchronized { hitsCache.put(key, computed) }
-    computed
   }
-
-  /** 64-bit content hash of metadata.json (CRC32 + Arrays.hashCode) — a
-   *  32-bit key alone leaves a realistic aliasing window for rapid index
-   *  mutations. Unreadable file → unique value, i.e. no caching. */
-  private def metaHashOf(metaPath: String): Long =
-    try {
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(metaPath))
-      val crc = new java.util.zip.CRC32
-      crc.update(bytes)
-      (crc.getValue << 32) ^ (java.util.Arrays.hashCode(bytes).toLong & 0xffffffffL)
-    } catch { case _: java.io.IOException => System.nanoTime() }
 
   private[graft] def clearCache(): Unit = hitsCache.synchronized(hitsCache.clear())
 }
@@ -271,8 +254,7 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val idAttr = lr.output.find(_.name == meta.idColumn).getOrElse(return None)
 
     val metaPath = s"${IndexCatalog.indexDir(rootDir, meta.name)}/metadata.json"
-    val metaHash = AnnTopKRule.metaHashOf(metaPath)
-    val hits = AnnTopKRule.cachedHits(metaPath, metaHash, meta, query, fetchK) {
+    val hits = AnnTopKRule.cachedHits(metaPath, meta, query, fetchK) {
       Ann.collectHits(spark, meta, IndexCatalog.readTombstones(rootDir, meta.name), query,
         fetchK, searchComplexity = 0, oversample = 1)
     }

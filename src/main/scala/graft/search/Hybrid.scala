@@ -31,7 +31,7 @@ import graft.index.Ann
  * codegen over the token array, doc-frequencies for the (few) query terms
  * are one small aggregate, ranking is a single top-N, and the driver holds
  * only |queryTerms| doc-frequency counts. Either way the driver fuses the
- * two ≤N-row rank lists.
+ * two ≤N-id rank lists and builds the one result relation.
  */
 object Hybrid {
 
@@ -60,18 +60,22 @@ object Hybrid {
    *  from cached per-file postings ([[Bm25Corpus]]) with no Spark job; any
    *  other input runs one statistics aggregate and one top-N scan. */
   def bm25Ranks(df: DataFrame, textCol: String, idCol: String,
-      terms: Seq[String], topN: Int): DataFrame = {
+      terms: Seq[String], topN: Int): DataFrame =
+    ranked(df.sparkSession, bm25Ids(df, textCol, idCol, terms, topN), "_bm25_rank")
+
+  /** [[bm25Ranks]]' ids, best first. */
+  private def bm25Ids(df: DataFrame, textCol: String, idCol: String,
+      terms: Seq[String], topN: Int): Seq[Long] = {
     val toks = TextOps.tokens(col(textCol))
     val docs = df.select(Ann.idKeyCol(df, idCol).as("id"), toks.as("toks"),
       array_size(toks).as("dl"))
     val corpus = Bm25Corpus(df, docs)
-    val ids = if (terms.isEmpty) Nil else corpus match {
+    if (terms.isEmpty) Nil else corpus match {
       case Some(c) =>
         val stats = c.stats(terms)
         if (stats.anyScore) c.top(terms, stats, topN) else Nil
       case None => distributedTop(docs, terms, topN)
     }
-    ranked(df.sparkSession, ids, "_bm25_rank")
   }
 
   /** The distributed route of [[bm25Ranks]] over its `docs` columns. */
@@ -120,72 +124,67 @@ object Hybrid {
   private[search] def termScore(tf: Double, dl: Double, avgdl: Double, idf: Double): Double =
     (tf * (K1 + 1)) / (tf + K1 * ((1.0 - B) + B * dl / avgdl)) * idf
 
-  /** Rank an ordered (orderBy.limit(topN)) result by global row position:
-   *  collect the ≤ topN id rows (collect of a sorted plan preserves global
-   *  order) and return a LOCAL relation of (id, rank). Bounded by the
-   *  candidate budget (topN ≤ a few hundred) — the same boundedness as the
-   *  ANN route's collectHits, never corpus-sized. The earlier
-   *  rdd.zipWithIndex spelling executed the whole TakeOrdered scan TWICE
-   *  per downstream action (zipWithIndex runs an eager partition-count job
-   *  at construction, and the ExistingRDD re-runs the scan lineage when the
-   *  fused result executes); a LocalRelation evaluates the scan once and
-   *  rrfFuse collects it with no job. (An unpartitioned Window would log
-   *  WindowExec's move-all-data warning on every serving query, and the
-   *  optimizer folds away constant partition keys, so there is no quiet
-   *  window spelling.) */
-  private def rankOrdered(top: DataFrame, rankName: String, topN: Int): DataFrame =
-    ranked(top.sparkSession, orderedIds(top, topN), rankName)
-
-  /** The ids of an ordered (orderBy.limit(topN)) result, in order. */
+  /** The ids of an ordered (orderBy.limit(topN)) result, in order: ≤ topN
+   *  rows collected (a sorted plan collects in global order), bounded by the
+   *  candidate budget, never corpus-sized; the re-limit keeps that bound for
+   *  any caller. Ranks are positions in this list: an unpartitioned Window
+   *  warns on every query, and rdd.zipWithIndex runs an eager job. */
   private def orderedIds(top: DataFrame, topN: Int): Seq[Long] =
-    // defensive re-limit: correctness of the collect below relies on the
-    // caller passing an orderBy.limit(topN) plan — a second limit over an
-    // already-limited plan is a no-op, and it bounds the collect even if a
-    // future caller forgets (the invariant was previously only documented)
     top.limit(topN).select(col("id")).collect().map(_.getLong(0)).toSeq
+
+  /** `ids` in order with their ranks 1.. . */
+  private def ranks(ids: Seq[Long]): Seq[(Long, Int)] =
+    ids.zipWithIndex.map { case (id, i) => (id, i + 1) }
 
   /** `ids` in order as a local relation of (id, rank 1..). */
   private def ranked(spark: SparkSession, ids: Seq[Long], rankName: String): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(ids.zipWithIndex.map {
-      case (id, i) => Row(id, i + 1) }: _*), StructType(Seq(
+    spark.createDataFrame(java.util.Arrays.asList(ranks(ids).map {
+      case (id, r) => Row(id, r) }: _*), StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField(rankName, IntegerType, nullable = false))))
 
   /** Exact vector ranks (squared-L2 over an embedding column):
    *  (id, _vector_rank 1..N), ids keyed as in [[bm25Ranks]]. */
   def exactVectorRanks(df: DataFrame, vecCol: String, idCol: String,
-      qVec: Array[Float], topN: Int): DataFrame = {
+      qVec: Array[Float], topN: Int): DataFrame =
+    ranked(df.sparkSession, exactVectorIds(df, vecCol, idCol, qVec, topN), "_vector_rank")
+
+  private def exactVectorIds(df: DataFrame, vecCol: String, idCol: String,
+      qVec: Array[Float], topN: Int): Seq[Long] = {
     val dd = array_distance_sq(toFloatVec(col(vecCol)), floatVec(qVec.toSeq))
-    val top = df.select(Ann.idKeyCol(df, idCol).as("id"), dd.as("__dd"))
+    orderedIds(df.select(Ann.idKeyCol(df, idCol).as("id"), dd.as("__dd"))
       .where(col("id").isNotNull)
       .orderBy(col("__dd"), col("id"))
-      .limit(topN)
-    rankOrdered(top, "_vector_rank", topN)
+      .limit(topN), topN)
   }
 
   /** ANN vector ranks via a named index. */
   def annVectorRanks(spark: SparkSession, indexName: String, qVec: Array[Float],
-      topN: Int, searchComplexity: Int = 0): DataFrame = {
-    import spark.implicits._
-    Ann.collectHits(spark, indexName, qVec, topN, searchComplexity, 1)
-      .toSeq.zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
-      .toDF("id", "_vector_rank")
-  }
+      topN: Int, searchComplexity: Int = 0): DataFrame =
+    ranked(spark, annVectorIds(spark, indexName, qVec, topN, searchComplexity), "_vector_rank")
+
+  private def annVectorIds(spark: SparkSession, indexName: String, qVec: Array[Float],
+      topN: Int, searchComplexity: Int): Seq[Long] =
+    Ann.collectHits(spark, indexName, qVec, topN, searchComplexity, 1).map(_._1).toSeq
 
   /** RRF fusion of two rank tables → (id, _bm25_rank, _vector_rank,
-   *  _rrf_score) desc, top-k. Missing ranks surface as 0 and contribute
-   *  nothing (reference :1091-1106). Both tables are collected (every rank
-   *  builder above returns a LocalRelation bounded by the candidate budget,
-   *  whose collect launches no job) and the ≤ 2·budget rows fuse on the
-   *  driver into a LocalRelation: a single LocalTableScan instead of a
-   *  full-outer SortMergeJoin behind two exchanges. The score adds the two
-   *  doubles in the oracle's order, so it is bit-identical to it. */
+   *  _rrf_score) desc, top-k: both tables collected (bounded by the
+   *  candidate budget) and fused by [[fuse]]. */
   def rrfFuse(bm25: DataFrame, vector: DataFrame, k: Int,
       bm25Weight: Double = DefaultBm25Weight,
       vectorWeight: Double = DefaultVectorWeight): DataFrame = {
-    def ranks(df: DataFrame): Array[(Long, Int)] =
-      df.collect().map(r => (r.getLong(0), r.getInt(1)))
-    val b = ranks(bm25); val v = ranks(vector)
+    def collected(df: DataFrame): Seq[(Long, Int)] =
+      df.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    fuse(bm25.sparkSession, collected(bm25), collected(vector), k, bm25Weight, vectorWeight)
+  }
+
+  /** RRF fusion of two (id, rank) lists on the driver into a LocalRelation:
+   *  a single LocalTableScan instead of a full-outer SortMergeJoin behind
+   *  two exchanges. Missing ranks surface as 0 and contribute nothing
+   *  (reference :1091-1106). The score adds the two doubles in the oracle's
+   *  order, so it is bit-identical to it. */
+  private def fuse(spark: SparkSession, b: Seq[(Long, Int)], v: Seq[(Long, Int)], k: Int,
+      bm25Weight: Double, vectorWeight: Double): DataFrame = {
     val bm = b.toMap; val vm = v.toMap
     val fused = (b.map(_._1) ++ v.map(_._1)).distinct.map { id =>
       val br = bm.get(id); val vr = vm.get(id)
@@ -193,7 +192,7 @@ object Hybrid {
         vr.map(r => vectorWeight / (RrfK.toDouble + r)).getOrElse(0.0)
       Row(id, br.getOrElse(0).toLong, vr.getOrElse(0).toLong, s)
     }.sortBy(r => (-r.getDouble(3), r.getLong(0))).take(k)
-    bm25.sparkSession.createDataFrame(java.util.Arrays.asList(fused: _*), StructType(Seq(
+    spark.createDataFrame(java.util.Arrays.asList(fused: _*), StructType(Seq(
       StructField("id", LongType, nullable = true),
       StructField("_bm25_rank", LongType, nullable = false),
       StructField("_vector_rank", LongType, nullable = false),
@@ -208,13 +207,12 @@ object Hybrid {
       bm25Weight: Double = DefaultBm25Weight, vectorWeight: Double = DefaultVectorWeight,
       bm25Candidates: Int = 100, vectorCandidates: Int = 100,
       indexName: String = "", searchComplexity: Int = 0): DataFrame = {
-    val terms = queryTerms(qText)
-    val bm25 = bm25Ranks(df, textCol, idCol, terms, bm25Candidates)
+    val bm25 = bm25Ids(df, textCol, idCol, queryTerms(qText), bm25Candidates)
     val vec =
       if (indexName.nonEmpty)
-        annVectorRanks(df.sparkSession, indexName, qVec, vectorCandidates, searchComplexity)
-      else exactVectorRanks(df, vecCol, idCol, qVec, vectorCandidates)
-    rrfFuse(bm25, vec, k, bm25Weight, vectorWeight)
+        annVectorIds(df.sparkSession, indexName, qVec, vectorCandidates, searchComplexity)
+      else exactVectorIds(df, vecCol, idCol, qVec, vectorCandidates)
+    fuse(df.sparkSession, ranks(bm25), ranks(vec), k, bm25Weight, vectorWeight)
   }
 
   // --------------------------------------------------------- oracle SQL

@@ -129,7 +129,7 @@ class ImiSpec extends AnyFunSuite {
     assert(got.length == 10)
     assert(got.map(_._2).sliding(2).forall(a => a.length < 2 || a(0) <= a(1)))
     // distributed scan and the job-free local serve rank identically
-    val local = ExactServe.search(spark, meta,
+    val local = ExactServe.search(spark, meta, ExactServe.table(spark, meta).get,
       Set.empty, q0, 10).toSeq
     assert(local.map(_._1).toSeq == got.map(_._1).toSeq,
       s"ExactServe order differs: $local vs ${got.toSeq}")

@@ -106,7 +106,8 @@ class IvfSqSpec extends AnyFunSuite {
         .select("vec_id", "_distance").collect()
         .map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(got == want, s"$factory scan: $got != $want")
-      val local = ExactServe.search(spark, meta, Set.empty, q0, 10).toSeq
+      val local = ExactServe.search(spark, meta, ExactServe.table(spark, meta).get,
+        Set.empty, q0, 10).toSeq
       assert(local == want, s"$factory ExactServe: $local != $want")
       // batch/table surface rides the same packed extraction (PqAdcScore)
       val batch = Ann.searchBatch(emb, "vec_id", name, Seq(q0), 10)
@@ -161,7 +162,8 @@ class IvfSqSpec extends AnyFunSuite {
       .select("vec_id", "_distance").collect()
       .map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got == want, s"scan: $got != $want")
-    val local = ExactServe.search(spark, meta, Set.empty, q0, 10).toSeq
+    val local = ExactServe.search(spark, meta, ExactServe.table(spark, meta).get,
+      Set.empty, q0, 10).toSeq
     assert(local == want, s"ExactServe: $local != $want")
     // storage is codes-only: 1 byte per dim, no vec column
     val schema = spark.read.parquet(meta.sourcePath).schema.fieldNames.toSet

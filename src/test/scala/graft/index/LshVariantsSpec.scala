@@ -100,7 +100,8 @@ class LshVariantsSpec extends AnyFunSuite {
       .sortBy(t => (t._2, t._1))
     assert(batch == want, s"batch: $batch != $want")
 
-    val local = ExactServe.search(spark, meta, Set.empty, q0, 10)
+    val local = ExactServe.search(spark, meta, ExactServe.table(spark, meta).get,
+      Set.empty, q0, 10)
       .map { case (id, d) => (id, d) }.toSeq
     assert(local == want, s"ExactServe: $local != $want")
   }

@@ -190,6 +190,40 @@ class AnnTopKRuleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.graft.ann.root", oldRoot)
   }
 
+  test("cached hits follow the catalog: read, append, read, delete, read") {
+    val s = spark
+    import s.implicits._
+    val dir = s"/tmp/graft-rule-fresh-${System.nanoTime()}"
+    val r = new scala.util.Random(5)
+    (0 until 200).map(i => (i.toLong, Seq.fill(8)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(dir)
+    Ann.buildIndex(spark.read.parquet(dir), "embedding", "vec_id", "rule_fresh",
+      Ann.BuildParams(engine = "flat"))
+    val v = Seq.fill(8)(3.0f)
+    def read(): Seq[(Long, Double)] = {
+      val d = spark.read.parquet(dir).select(col("vec_id"),
+          array_distance(toFloatVec(col("embedding")), floatVec(v)).as("d"))
+        .orderBy("d").limit(5)
+      assert(isRewritten(d))
+      d.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    try {
+      val first = read()
+      assert(first.length == 5 && !first.exists(_._1 == 1000L), first)
+      // the appended row lands in the table and in the index
+      val extra = Seq((1000L, v)).toDF("vec_id", "embedding")
+      extra.write.mode("append").parquet(dir)
+      Ann.append(extra, "embedding", "vec_id", "rule_fresh")
+      val second = read()
+      assert(second.head == ((1000L, 0.0)), second)
+      Ann.delete(spark, "rule_fresh", Seq(1000L))
+      assert(read() == first)
+    } finally {
+      Ann.drop(spark, "rule_fresh")
+      graft.index.IndexCatalog.deleteTree(dir)
+    }
+  }
+
   test("index selection prefers the exact engine when several cover the scan") {
     builtOnce
     Ann.buildIndex(emb, "embedding", "vec_id", "a_flat_first",

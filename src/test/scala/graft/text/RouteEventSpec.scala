@@ -84,12 +84,24 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ann.exact: one event per search, estimate = the driver cache's size") {
-    Ann.buildIndex(emb, "embedding", "vec_id", "re_flat", Ann.BuildParams(engine = "flat"))
-    val est = 500L * (Dim * 4 + 16)
-    assert(events(Ann.searchHits(spark, "re_flat", q, 5)) ==
-      Seq(GraftRouteEvent("ann.exact", Route.Local, est, Default)))
-    assert(withGate((est - 1).toString)(events(Ann.searchHits(spark, "re_flat", q, 5))) ==
-      Seq(GraftRouteEvent("ann.exact", Route.Distributed, est, est - 1)))
+    val meta = Ann.buildIndex(emb, "embedding", "vec_id", "re_flat",
+      Ann.BuildParams(engine = "flat"))
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
+      else Seq(f)
+    val listed = files(new java.io.File(meta.sourcePath)).map(_.length).sum
+    // a collected (id, 16-d vector) row: 8 B null bits, two 8 B slots, a
+    // 16 B array header and the floats, plus 32 B per row
+    val held = 500L * (8 + 16 + 16 + Dim * 4 + 32)
+    def search() = events(Ann.searchHits(spark, "re_flat", q, 5))
+    BaseRows.clear()
+    // before the first fill the table counts its listed bytes; after it, the
+    // bytes it held
+    assert(search() == Seq(GraftRouteEvent("ann.exact", Route.Local, listed, Default)))
+    assert(search() == Seq(GraftRouteEvent("ann.exact", Route.Local, held, Default)))
+    assert(withGate((held - 1).toString)(search()) ==
+      Seq(GraftRouteEvent("ann.exact", Route.Distributed, held, held - 1)))
   }
 
   test("ann.graph: one event per search, estimate in shards") {
@@ -151,8 +163,9 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = new scala.util.Random(4)
     def batch(from: Int): DataFrame = (from until from + 16)
       .map(i => (i.toLong, Seq.fill(Dim)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    def size(b: DataFrame): Long = b.select(col("vec_id").cast("long"),
-      col("embedding").cast("array<float>")).queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    // an in-memory batch: rows × (16 + 4·dim), not Catalyst's one element
+    // per array
+    val size = 16L * (16 + 4 * Dim)
     def onDisk: Long = IndexCatalog.load(Ann.root(spark), "re_write").shards
       .map(sh => new java.io.File(sh.file).length + new java.io.File(sh.idsFile).length).sum
     for ((from, gate) <- Seq(500 -> None, 516 -> Some("0"))) {
@@ -160,7 +173,7 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (route, limit) = gate.fold((Route.Local, Default))(g => (Route.Distributed, g.toLong))
       def write(body: => Unit) = gate.fold(events(body))(withGate(_)(events(body)))
       assert(write(Ann.append(b, "embedding", "vec_id", "re_write")) ==
-        Seq(GraftRouteEvent("ann.write", route, size(b), limit)))
+        Seq(GraftRouteEvent("ann.write", route, size, limit)))
       val bytes = onDisk
       assert(write(graft.streaming.StreamingIndex.compact(spark, "re_write", 1)) ==
         Seq(GraftRouteEvent("ann.write", route, bytes, limit)))
@@ -169,6 +182,13 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bytes = onDisk
     assert(events(graft.streaming.StreamingIndex.compact(spark, "re_write", 2)) ==
       Seq(GraftRouteEvent("ann.write", Route.Distributed, bytes, Default)))
+    // a batch whose rows outgrow a small gate is built distributed, and its
+    // vectors are searchable
+    val b = batch(532)
+    assert(withGate((size - 1).toString)(events(Ann.append(b, "embedding", "vec_id",
+      "re_write"))) == Seq(GraftRouteEvent("ann.write", Route.Distributed, size, size - 1)))
+    val v = b.where(col("vec_id") === 540).head().getSeq[Float](1).toArray
+    assert(Ann.collectHits(spark, "re_write", v, 1, 64, 1).toSeq == Seq((540L, 0.0f)))
   }
 
   test("search.bm25: one event per bm25Ranks call, estimate = the listing's held bytes") {
