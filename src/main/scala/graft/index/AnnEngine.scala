@@ -228,8 +228,11 @@ object AnnEngine {
 
 /**
  * Graph engines: one `.diskann` (Vamana) or `.hnsw` shard per input
- * partition plus an id sidecar, searched through [[ShardCache]]. hnsw reuses
- * the diskann shard lifecycle; its IndexMeta stores m in `maxDegree` and
+ * partition plus an id sidecar, searched through [[ShardCache]]. Every shard
+ * file comes from one per-shard build, [[GraphEngine.buildShard]]: the build's
+ * tasks, an append's delta shards, and [[GraphEngine.compact]], the one
+ * rewrite behind both vacuum and `StreamingIndex.compact`. hnsw reuses the
+ * diskann shard lifecycle; its IndexMeta stores m in `maxDegree` and
  * efConstruction in `buildComplexity`.
  */
 sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine(name) {
@@ -275,7 +278,7 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
 
   /** Shard `base` over `input` in arrival order, None when it is empty: the
    *  one per-shard build of every graph write ([[build]]'s tasks, [[append]]
-   *  and compaction on either route), so the same rows in the same order
+   *  and [[compact]] on either route), so the same rows in the same order
    *  give byte-identical files. */
   private def buildShard(input: Iterator[(Long, Array[Float])], dim: Int, m: Metric,
       params: BuildParams, base: String): Option[ShardMeta] = {
@@ -379,6 +382,63 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     if (ix.size == 0) None else Some(writeShard(ix, quantBits(params), base, ids.toArray))
   }
 
+  /** `sh`'s rows at labels [from, until) not in `tomb`, in label order. */
+  private def live(sh: ShardMeta, from: Int, until: Int, cosine: Boolean,
+      tomb: Set[Long]): Iterator[(Long, Array[Float])] = {
+    val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
+    (from until until).iterator.filterNot(l => tomb.contains(loaded.ids(l)))
+      .map(l => (loaded.ids(l), loaded.index.vector(l)))
+  }
+
+  /** Rewrite `meta` without the rows in `tomb` as `n` shards: the one graph
+   *  rewrite of vacuum and compaction (reference Vacuum,
+   *  src/diskann_index.cpp:701-741). The shards in order are cut into `n`
+   *  contiguous slices of (shard, label range) with near-equal row counts;
+   *  each slice's live rows become shard `compact-<i>-v<version>` through
+   *  [[buildShard]] (none when empty). Route op `ann.write`, estimate = the
+   *  shards' on-disk bytes: one output shard within the gate builds on the
+   *  driver with no Spark job, anything else one task per slice in one job.
+   *  The new generation is published before the superseded shards and
+   *  tombstones are deleted, so a failure at any step leaves a consistent
+   *  index. */
+  private[graft] def compact(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      n: Int): IndexMeta = {
+    val r = root(spark)
+    val dir = new java.io.File(IndexCatalog.indexDir(r, meta.name)).getAbsolutePath
+    val ver = meta.version + 1
+    val (dim, metric, params) = (meta.dim, meta.metricObj, paramsOf(meta))
+    val starts = meta.shards.scanLeft(0L)(_ + _.count)
+    val slices = Seq.tabulate(n) { i =>
+      def at(row: Long, s: Long, sh: ShardMeta) = (row - s).max(0L).min(sh.count).toInt
+      val (lo, hi) = (starts.last * i / n, starts.last * (i + 1) / n)
+      meta.shards.zip(starts).map { case (sh, s) => (sh, at(lo, s, sh), at(hi, s, sh)) }
+        .filter { case (_, from, until) => from < until }
+    }
+    def rebuild(i: Int, t: Set[Long]): Option[ShardMeta] = buildShard(slices(i).iterator
+      .flatMap { case (sh, from, until) => live(sh, from, until, metric eq Metric.Cosine, t) },
+      dim, metric, params, f"$dir/compact-$i%05d-v$ver")
+    val onDisk = meta.shards.map(sh => new java.io.File(sh.file).length +
+      new java.io.File(sh.idsFile).length).sum
+    val local = if (n == 1) Route.local(spark, "ann.write", onDisk) else {
+      Route.post(spark, "ann.write", Route.Distributed, onDisk, Route.maxBytes(spark))
+      false
+    }
+    val shards = if (local) (0 until n).flatMap(rebuild(_, tomb)).toList else {
+      val tombB = spark.sparkContext.broadcast(tomb)
+      spark.sparkContext.parallelize(0 until n, n).flatMap(rebuild(_, tombB.value))
+        .collect().toList
+    }
+    val updated = meta.copy(shards = shards, version = ver,
+      numVectors = shards.map(_.count).sum, numDeleted = 0L)
+    IndexCatalog.save(r, updated)
+    meta.shards.foreach { sh =>
+      new java.io.File(sh.file).delete(); new java.io.File(sh.idsFile).delete()
+    }
+    ShardCache.forget(meta.shards.map(_.file).toSet)
+    new java.io.File(IndexCatalog.tombstonePath(r, meta.name)).delete()
+    updated
+  }
+
   /** The metadata of a fresh build of `shards`. */
   private def builtMeta(index: String, dim: Int, metric: Metric, params: BuildParams,
       shards: List[ShardMeta]): IndexMeta = {
@@ -409,16 +469,6 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     val meta = builtMeta(index, dim, metric, params, shards)
     IndexCatalog.save(root(spark), meta)
     meta
-  }
-
-  /** A one-shard [[build]] of `rows` on the driver, written as shard `base`;
-   *  returns the metadata `build` records, unpublished. */
-  private[graft] def buildLocal(rows: Iterator[(Long, Array[Float])], index: String, dim: Int,
-      params: BuildParams, base: String): IndexMeta = {
-    val metric = Metric.fromName(params.metric)
-    val shard = buildShard(rows, dim, metric, params, base)
-    require(shard.nonEmpty, "cannot build an index over an empty input")
-    builtMeta(index, dim, metric, params, shard.toList)
   }
 
   private[index] def scan(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
@@ -719,42 +769,10 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     updated
   }
 
-  /** Rebuild each shard without its tombstoned rows under version-suffixed
-   *  names (reference Vacuum, src/diskann_index.cpp:701-741). */
+  /** Rebuild every shard without its tombstoned rows, one shard per shard
+   *  (reference Vacuum, src/diskann_index.cpp:701-741): [[compact]]. */
   private[index] def vacuum(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long]): IndexMeta = {
-    val r = root(spark)
-    val dir = IndexCatalog.indexDir(r, meta.name)
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val ver = meta.version + 1
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quantBits = if (meta.quantized) meta.quantBits else 0
-    val newShards = spark.sparkContext
-      .parallelize(meta.shards.zipWithIndex, math.max(meta.shards.size, 1))
-      .flatMap { case (sh, i) =>
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val keep = loaded.ids.indices.filter(l => !t.contains(loaded.ids(l)))
-        if (keep.isEmpty) Iterator.empty
-        else {
-          val ix = newGraph(loaded.index.dim, loaded.index.metric, maxDeg, bc, alpha)
-          keep.foreach(l => ix.add(loaded.index.vector(l)))
-          Iterator.single(writeShard(ix, quantBits, f"$dir/shard-$i%05d-v$ver",
-            keep.map(loaded.ids(_)).toArray))
-        }
-      }.collect().toList
-    // publish first, delete after: until save succeeds the old metadata,
-    // its shards and the tombstones stay intact and consistent
-    val updated = meta.copy(shards = newShards, version = ver,
-      numVectors = newShards.map(_.count).sum, numDeleted = 0L)
-    IndexCatalog.save(r, updated)
-    meta.shards.foreach { sh =>
-      new java.io.File(sh.file).delete(); new java.io.File(sh.idsFile).delete()
-    }
-    new java.io.File(IndexCatalog.tombstonePath(r, meta.name)).delete()
-    updated
-  }
+      tomb: Set[Long]): IndexMeta = compact(spark, meta, tomb, meta.shards.size max 1)
 
   /** Adopt the source's live shards + tombstones (reference MergeIndexes
    *  re-inserts vectors, src/diskann_index.cpp:655-699; the shard model

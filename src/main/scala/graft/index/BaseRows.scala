@@ -260,6 +260,10 @@ private[graft] object BaseRows {
       (fr.rows, a.asInstanceOf[A])
     }
 
+  /** Drops the index tables kept under a directory `deleted` holds. */
+  def forget(deleted: String => Boolean): Unit = cache.synchronized(
+    cache.keySet.toArray.foreach { case k: String if deleted(k) => drop(k); case _ => })
+
   /** The bytes resident now (test hook). */
   private[graft] def residentBytes: Long = cache.synchronized(resident)
 
@@ -270,7 +274,9 @@ private[graft] object BaseRows {
     resident = 0L
   }
 
-  /** The cache entries of `l`'s files, decoding the missing ones. */
+  /** The cache entries of `l`'s files, decoding the missing ones; missing
+   *  files that decode above the gate together answer this read and are not
+   *  kept. */
   private def entries(l: Listed, idAttr: Attribute): Seq[FileRows] = {
     val keyOf = (f: FileStatus) => Key(f.getPath.toString, f.getLen, f.getModificationTime,
       l.fs.dataSchema, l.fs.options, idAttr.name)
@@ -278,12 +284,14 @@ private[graft] object BaseRows {
     val missing = have.collect { case (f, null) => f }
     val decoded = if (missing.isEmpty) Map.empty[FileStatus, FileRows]
       else decode(l, missing, idAttr).toMap
+    val gate = Route.maxBytes(l.fs.sparkSession)
+    val keep = decoded.valuesIterator.map(_.bytes).sum <= gate
     cache.synchronized {
       decoded.foreach { case (f, fr) =>
-        put(keyOf(f), fr)
+        if (keep) put(keyOf(f), fr)
         known.putIfAbsent(fileId(f), fr.bytes)
       }
-      evict(Route.maxBytes(l.fs.sparkSession))
+      evict(gate)
     }
     have.map { case (f, e) => if (e != null) e.asInstanceOf[FileRows] else decoded(f) }
   }

@@ -124,9 +124,18 @@ object IndexCatalog {
     val dir = new File(indexDir(root, name))
     if (!dir.isDirectory) false
     else {
+      forget(dir)
       dir.listFiles().foreach(deleteRecursive)
       dir.delete()
     }
+  }
+
+  /** Forgets the cached shards and index tables under `dir`. */
+  private def forget(dir: File): Unit = {
+    val root = dir.getAbsoluteFile.toPath
+    val under = (p: String) => new File(p).getAbsoluteFile.toPath.startsWith(root)
+    ShardCache.forget(under)
+    BaseRows.forget(under)
   }
 
   private def deleteRecursive(f: File): Unit = {
@@ -134,10 +143,11 @@ object IndexCatalog {
     f.delete()
   }
 
-  /** Recursively delete a path (superseded data directories). */
+  /** Recursively delete a path (superseded data directories), forgetting
+   *  what the caches held of it. */
   def deleteTree(path: String): Unit = {
     val f = new File(path)
-    if (f.exists()) deleteRecursive(f)
+    if (f.exists()) { forget(f); deleteRecursive(f) }
   }
 
   // ---- tombstones: flat little-endian i64 file beside metadata ----

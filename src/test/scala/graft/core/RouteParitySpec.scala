@@ -176,6 +176,24 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("ann.write: a vacuum of a one-shard index writes the same files on both routes") {
+    for ((engine, quant) <- Seq("diskann" -> "", "diskann" -> "sq8", "hnsw" -> "");
+         metric <- Seq("l2", "cosine")) {
+      val name = s"rp_vacuum_$engine${quant}_$metric"
+      val files = parity("ann.write") {
+        Ann.buildIndex(emb.where(col("vec_id") < 1500), "embedding", "vec_id", name,
+          Ann.BuildParams(engine = engine, metric = metric, quantization = quant,
+            numShards = 1, maxDegree = 16, buildComplexity = 32, hnswM = 8, efConstruction = 32))
+        Ann.delete(spark, name, (0L until 1500L by 13L))
+        Ann.vacuum(spark, name)
+        indexFiles(name)
+      }
+      assert(files.keySet == Set("metadata.json", s"compact-00000-v2.${engine}",
+        "compact-00000-v2.ids"), files)
+      assert(IndexCatalog.load(Ann.root(spark), name).numVectors == 1500 - 116, name)
+    }
+  }
+
   test("bm25 and exact vector ranks: a non-numeric STRING id takes no rank on either route") {
     val s = spark
     import s.implicits._

@@ -2,12 +2,15 @@ package graft.index
 
 import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{Route, RouteParity}
+import graft.streaming.StreamingIndex
 
 /** Pins the engine abstraction's contracts: unknown engines fail at the
- *  factory, graph vacuum publishes before it deletes, the distributed graph
- *  route answers like the driver-local one, and IMI appends assign cells
- *  exactly like the build. */
+ *  factory, graph vacuum and compaction publish before they delete on both
+ *  routes, the distributed graph route answers like the driver-local one,
+ *  and IMI appends assign cells exactly like the build. */
 class AnnEngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -48,28 +51,72 @@ class AnnEngineSpec extends AnyFunSuite {
       Ann.append(emb.limit(3), "embedding", "vec_id", "e_bogus")))
   }
 
+  /** `body` with the gate at `gate` (None: the default). */
+  private def gated[A](gate: Option[String])(body: => A): A = {
+    gate.foreach(spark.conf.set("spark.graft.localMaxBytes", _))
+    try body finally spark.conf.unset("spark.graft.localMaxBytes")
+  }
+
+  /** The graph rewrites: vacuum, and a compaction to one shard. */
+  private lazy val rewrites: Seq[(String, String => Unit)] = Seq(
+    "vacuum" -> (name => Ann.vacuum(spark, name)),
+    "compact" -> (name => StreamingIndex.compact(spark, name, 1)))
+
   test("graph vacuum publishes the new generation before deleting the old") {
-    Ann.buildIndex(emb, "embedding", "vec_id", "e_vac",
-      Ann.BuildParams(engine = "diskann", numShards = 2))
-    val deleted = all.take(20).map(_._1).toSeq
-    Ann.delete(spark, "e_vac", deleted)
-    val r = Ann.root(spark)
-    // a directory where save() writes its temp file makes the publish fail
-    val blocker = new File(s"${IndexCatalog.indexDir(r, "e_vac")}/metadata.json.tmp")
-    assert(blocker.mkdirs())
-    intercept[Exception](Ann.vacuum(spark, "e_vac"))
-    val meta = IndexCatalog.load(r, "e_vac")
-    meta.shards.foreach { sh =>
-      assert(new File(sh.file).isFile && new File(sh.idsFile).isFile, sh)
+    // vacuum and compaction to one shard, each on the driver route (one
+    // shard within the gate) and forced distributed (two shards, gate 0)
+    for ((op, rewrite) <- rewrites; (gate, shards) <- Seq(None -> 1, Some("0") -> 2)) {
+      val name = s"e_vac_${op}_$shards"
+      val at = s"$op over $shards shard(s), gate ${gate.getOrElse("default")}"
+      Ann.buildIndex(emb, "embedding", "vec_id", name,
+        Ann.BuildParams(engine = "diskann", numShards = shards))
+      val deleted = all.take(20).map(_._1).toSeq
+      Ann.delete(spark, name, deleted)
+      val r = Ann.root(spark)
+      val before = IndexCatalog.load(r, name)
+      assert(before.shards.size == shards, at)
+      // a directory where save() writes its temp file makes the publish fail
+      val blocker = new File(s"${IndexCatalog.indexDir(r, name)}/metadata.json.tmp")
+      assert(blocker.mkdirs())
+      val (_, routes) = RouteParity.routed(spark)(
+        intercept[Exception](gated(gate)(rewrite(name))))
+      assert(routes.filter(_.op == "ann.write").map(_.route) ==
+        Seq(if (gate.isEmpty) Route.Local else Route.Distributed), s"$at: $routes")
+      assert(IndexCatalog.load(r, name) == before, at)
+      before.shards.foreach { sh =>
+        assert(new File(sh.file).isFile && new File(sh.idsFile).isFile, s"$at: $sh")
+      }
+      assert(IndexCatalog.readTombstones(r, name) == deleted.toSet, at)
+      def found = gated(gate)(all.take(20).flatMap { case (_, v) => hits(name, v, 10) }).map(_._1)
+      assert(found.nonEmpty && !found.exists(deleted.contains), at)
+      assert(blocker.delete())
+      gated(gate)(rewrite(name))
+      val done = IndexCatalog.load(r, name)
+      assert(done.numDeleted == 0 && done.numVectors == all.length - deleted.size, at)
+      assert(IndexCatalog.readTombstones(r, name).isEmpty, at)
+      before.shards.foreach(sh => assert(!new File(sh.file).exists, s"$at: $sh"))
+      assert(found.nonEmpty && !found.exists(deleted.contains), at)
     }
-    val got = all.take(20).flatMap { case (_, v) => hits("e_vac", v, 10).map(_._1) }
-    assert(got.nonEmpty && !got.exists(deleted.contains))
-    assert(blocker.delete())
-    val vac = Ann.vacuum(spark, "e_vac")
-    assert(vac.numDeleted == 0 && vac.numVectors == all.length - deleted.size)
-    assert(IndexCatalog.readTombstones(r, "e_vac").isEmpty)
-    val after = all.take(20).flatMap { case (_, v) => hits("e_vac", v, 10).map(_._1) }
-    assert(after.nonEmpty && !after.exists(deleted.contains))
+  }
+
+  test("a rewrite of an index whose every row is deleted leaves zero shards") {
+    import spark.implicits._
+    val rows = all.take(40)
+    for ((op, rewrite) <- rewrites; gate <- Seq(None, Some("0"))) {
+      val name = s"e_empty_${op}_${gate.isDefined}"
+      val at = s"$op, gate ${gate.getOrElse("default")}"
+      Ann.buildIndex(emb.where(col("vec_id") < rows.length), "embedding", "vec_id", name,
+        Ann.BuildParams(engine = "diskann", numShards = 1))
+      Ann.delete(spark, name, rows.map(_._1).toSeq)
+      gated(gate)(rewrite(name))
+      val meta = IndexCatalog.load(Ann.root(spark), name)
+      assert(meta.shards.isEmpty && meta.numVectors == 0 && meta.numDeleted == 0, s"$at: $meta")
+      assert(gated(gate)(hits(name, rows(0)._2, 5)).isEmpty, at)
+      // and it takes a later append
+      gated(gate)(Ann.append(rows.take(3).toSeq.map { case (id, v) => (id, v.toSeq) }
+        .toDF("vec_id", "embedding"), "embedding", "vec_id", name))
+      assert(gated(gate)(hits(name, rows(1)._2, 1)) == Seq((1L, 0f)), at)
+    }
   }
 
   test("localMaxBytes=0 (distributed graph job) == driver-local search") {

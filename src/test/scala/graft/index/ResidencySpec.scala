@@ -189,4 +189,61 @@ class ResidencySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(BaseRows.residentBytes == resident)
     }
   }
+
+  test("a vacuum forgets the resident table it deletes") {
+    flat("res_vac", table("res_vac", 17))
+    Ann.delete(spark, "res_vac", Seq(1L, 2L, 3L))
+    BaseRows.clear()
+    assert(search("res_vac")._2.route == Route.Local)
+    assert(BaseRows.residentBytes > 0)
+    Ann.vacuum(spark, "res_vac")
+    assert(BaseRows.residentBytes == 0, "the vacuumed table's old directory stayed resident")
+    val (hits, e) = search("res_vac")
+    assert(e.route == Route.Local && hits == scanned("res_vac"), e)
+  }
+
+  test("a base table that decodes above the gate answers once and evicts nothing") {
+    val s = spark
+    import s.implicits._
+    // one distinct coordinate per row, the rest from three values: the
+    // parquet file stays far smaller than its decoded rows
+    (0 until 3000).map(i => (i.toLong, (i * 1e-3f) +: Seq.fill(Dim - 1)((i % 3).toFloat)))
+      .toDF("vec_id", "embedding").repartition(1).write.parquet(s"$work/res_dense")
+    val base = spark.read.parquet(s"$work/res_dense")
+    Ann.buildIndex(base, "embedding", "vec_id", "res_dense",
+      Ann.BuildParams(engine = "diskann", numShards = 1))
+    flat("res_small", table("res_small", 18, 100))
+    def read(): (Seq[(Long, Double)], GraftRouteEvent) = {
+      val (rows, routes) = RouteParity.routed(spark) {
+        spark.read.parquet(s"$work/res_dense").select(col("vec_id"),
+            array_distance(toFloatVec(col("embedding")), floatVec(q.toSeq)).as("d"))
+          .orderBy("d").limit(10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      }
+      val Seq(e) = routes.filter(_.op == "ann.fetch")
+      (rows, e)
+    }
+    val files = base.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    BaseRows.clear()
+    read()
+    val decoded = read()._2.estimate
+    val gate = math.max(files, held("res_small"))
+    assert(decoded > gate, s"decoded rows ($decoded B) should outgrow the gate ($gate B)")
+    val want = withGate(0)(read()._1)
+    BaseRows.clear()
+    withGate(gate) {
+      assert(search("res_small")._2.route == Route.Local)
+      val resident = BaseRows.residentBytes
+      // before its decode the file counts its listed bytes, within the gate
+      val (got, e) = read()
+      assert(e.route == Route.Local && e.estimate == files, e)
+      assert(got == want)
+      assert(BaseRows.residentBytes == resident, "an oversized decode displaced resident entries")
+      // after it, the bytes it decoded to, above the gate
+      val (again, next) = read()
+      assert(next.route == Route.Distributed && next.estimate > gate, next)
+      assert(again == want)
+      assert(search("res_small")._2.route == Route.Local)
+      assert(BaseRows.residentBytes == resident)
+    }
+  }
 }

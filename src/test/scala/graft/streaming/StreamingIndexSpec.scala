@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.RouteParity
-import graft.index.{Ann, IndexCatalog}
+import graft.index.{Ann, IndexCatalog, ShardCache}
 
 class StreamingIndexSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -137,5 +137,30 @@ class StreamingIndexSpec extends AnyFunSuite {
       try assert(jobsOf(232) > 0, "distributed appends and compaction launched no job")
       finally spark.conf.unset("spark.graft.localMaxBytes")
     } finally sc.removeSparkListener(counter)
+  }
+
+  test("compactions and a drop forget the cache entries of the shards they delete") {
+    import spark.implicits._
+    val name = "cache_ix"
+    Ann.buildIndex((0L until 60L).map(i => (i, vec(i))).toDF("id", "vec"), "vec", "id", name,
+      Ann.BuildParams(engine = "diskann", numShards = 1, maxDegree = 16, buildComplexity = 32))
+    val r = Ann.root(spark)
+    val under = IndexCatalog.indexDir(r, name) + "/"
+    def cached: Set[String] = ShardCache.cachedPaths.filter(_.startsWith(under))
+    def live: Set[String] = IndexCatalog.load(r, name).shards.map(_.file).toSet
+    def search(): Unit = Ann.collectHits(spark, name, vec(1), 1, 64, 1)
+    for (round <- 0 until 3) {
+      val from = 60L + 10 * round
+      Ann.append((from until from + 10).map(i => (i, vec(i))).toDF("id", "vec"), "vec",
+        "id", name)
+      Ann.delete(spark, name, Seq(from - 1))
+      search()
+      assert(cached == live && live.size == 2, s"round $round before compaction")
+      StreamingIndex.compact(spark, name, 1)
+      search()
+      assert(cached == live && live.size == 1, s"round $round after compaction")
+    }
+    Ann.drop(spark, name)
+    assert(cached.isEmpty)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -189,6 +190,54 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
       "re_write"))) == Seq(GraftRouteEvent("ann.write", Route.Distributed, size, size - 1)))
     val v = b.where(col("vec_id") === 540).head().getSeq[Float](1).toArray
     assert(Ann.collectHits(spark, "re_write", v, 1, 64, 1).toSeq == Seq((540L, 0.0f)))
+  }
+
+  /** `body`'s route events and the stage count of each Spark job it started. */
+  private def jobs(body: => Unit): (Seq[GraftRouteEvent], Seq[Int]) = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.rewrite.test") != null)
+          stages.add(e.stageInfos.size)
+    }
+    sc.addSparkListener(counter)
+    try {
+      val posted = events {
+        sc.setLocalProperty("graft.rewrite.test", "1")
+        try body finally sc.setLocalProperty("graft.rewrite.test", null)
+      }
+      (posted, stages.asScala.map(_.intValue).toSeq)
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("ann.write: one event per vacuum; a distributed rewrite is one job with no shuffle") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_rewrite",
+      Ann.BuildParams(engine = "diskann", numShards = 3, maxDegree = 16, buildComplexity = 32))
+    def onDisk: Long = IndexCatalog.load(Ann.root(spark), "re_rewrite").shards
+      .map(sh => new java.io.File(sh.file).length + new java.io.File(sh.idsFile).length).sum
+    var deleted = 0L
+    /** Deletes one more row, then asserts `body`'s one event and its jobs. */
+    def rewrite(route: String, limit: Long)(body: => Unit): Unit = {
+      val bytes = onDisk
+      Ann.delete(spark, "re_rewrite", Seq(deleted))
+      deleted += 1
+      val (posted, stages) = jobs(body)
+      assert(posted == Seq(GraftRouteEvent("ann.write", route, bytes, limit)))
+      // one single-stage job per distributed rewrite, none on the driver
+      assert(stages == (if (route == Route.Local) Nil else Seq(1)), stages)
+    }
+    // a vacuum of three shards rewrites three slices
+    rewrite(Route.Distributed, Default)(Ann.vacuum(spark, "re_rewrite"))
+    assert(IndexCatalog.load(Ann.root(spark), "re_rewrite").shards.size == 3)
+    withGate("0") {
+      for (n <- Seq(2, 1)) rewrite(Route.Distributed, 0)(
+        graft.streaming.StreamingIndex.compact(spark, "re_rewrite", n))
+    }
+    // a vacuum of one shard within the gate runs on the driver
+    rewrite(Route.Local, Default)(Ann.vacuum(spark, "re_rewrite"))
+    val meta = IndexCatalog.load(Ann.root(spark), "re_rewrite")
+    assert(meta.shards.size == 1 && meta.numDeleted == 0 && meta.numVectors == 500 - 4, meta)
   }
 
   test("search.bm25: one event per bm25Ranks call, estimate = the listing's held bytes") {
