@@ -1472,7 +1472,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       Ann.buildIndex(emb, "embedding", "vec_id", "v_scan",
         Ann.BuildParams(engine = "flat"))
-      Ann.indexScan(s, "v_scan", q64Arr, 10)
+      Ann.searchHits(s, "v_scan", q64Arr, 10)
         .orderBy("_distance", "row_id")
     }),
 
@@ -1582,7 +1582,7 @@ object SparkEntry {
     // before the top-k (Catalyst pushes it to parquet), so the result is
     // the exact filtered top-k — double-ordered, rank-oracled like
     // ann_ivf_exact
-    // job-free filtered serving (searchFilteredHits -> ExactServe with the
+    // job-free filtered serving (searchFiltered -> ExactServe with the
     // filter closure applied in the driver-local scan): same oracle as the
     // distributed route — FilteredServeSpec pins bit-parity per engine
     "ann_serve_filtered" -> ((s, dir) => {
@@ -1590,7 +1590,7 @@ object SparkEntry {
       Ann.buildIndex(emb, "embedding", "vec_id", "v_servf",
         Ann.BuildParams(engine = "flat"))
       import s.implicits._
-      Ann.searchFilteredHits(s, "v_servf", q64Arr, 10, Ann.IdFilter.modEq(7, 3))
+      Ann.searchFiltered(s, "v_servf", q64Arr, 10, Ann.IdFilter.modEq(7, 3))
         .join(emb, col("row_id") === col("vec_id"))
         .select(col("vec_id"),
           array_distance(toFloatVec(col("embedding")), floatVec(Q64)).as("__dd"))

@@ -672,15 +672,6 @@ object Ann {
     else if (coarse != null && nprobe < cents.length) coarse.select(query, nprobe)
     else KMeansLite.nearestP(cents, query, nprobe)
 
-  /** Low-level index scan → DataFrame(row_id LONG, _distance FLOAT), sorted,
-   *  ≤ k·oversample rows (reference diskann_index_scan / faiss_index_scan). */
-  def indexScan(spark: SparkSession, name: String, query: Array[Float], k: Int,
-      searchComplexity: Int = 0, oversample: Int = 1): DataFrame = {
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
-    AnnEngine.of(meta).scan(spark, meta, query, k * math.max(1, oversample), tomb,
-      searchComplexity)
-  }
   /** Trained per-bit thresholds for an lsh index built with the `t` suffix
    *  (null otherwise) — every encode site, build or serve, must pass these
    *  so database codes and query codes share the cut points. */
@@ -743,56 +734,14 @@ object Ann {
    *  it, not driver memory (shards are mmap-served or soft-cached). */
   val LocalSearchMaxShards = 64
 
-  /** Driver-local diskann search across shards → (id, distance) sorted,
-   *  ≤ fetchK. Shards are searched concurrently on a bounded pool (the
-   *  serving-path analog of the executor-side shard fan-out); graph search
-   *  is read-only and per-call-scratch, so shared cached shards are safe. */
-  private[graft] def searchShardsLocal(meta: IndexMeta, tomb: Set[Long],
-      query0: Array[Float], fetchK: Int, searchComplexity: Int): Array[(Long, Float)] = {
-    val query = prepQuery(meta, query0)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val perShardK = fetchK + tomb.size
-    val shards = meta.shards.toArray
-    def searchOne(sh: ShardMeta): Array[(Long, Float)] = {
-      val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-      val (labels, dists) =
-        loaded.index.searchSaturationChecked(query, perShardK, searchComplexity)
-      labels.indices.iterator
-        .map(i => (loaded.ids(labels(i)), dists(i)))
-        .filterNot { case (id, _) => tomb.contains(id) }
-        .toArray
-    }
-    val results: Array[Array[(Long, Float)]] =
-      if (shards.length <= 1) shards.map(searchOne)
-      else shards.map(sh => localSearchPool.submit(
-          new java.util.concurrent.Callable[Array[(Long, Float)]] {
-            def call(): Array[(Long, Float)] = searchOne(sh)
-          })).map(_.get())
-    results.flatten.sortBy { case (id, d) => (d, id) }.take(fetchK)
-  }
-
-  /** Shared daemon pool for driver-local shard fan-out (per-call pools would
-   *  pay thread creation on every serving query). */
-  private lazy val localSearchPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      Runtime.getRuntime.availableProcessors(),
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger()
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-local-search-${n.incrementAndGet()}")
-          t.setDaemon(true)
-          t
-        }
-      })
-
   /** Count of ANN search executions (laziness assertions in specs;
    *  cheap enough to leave on as telemetry). */
   private[graft] val searchCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Collected (id, distance) hits for k·oversample results over the
-   *  engine's cheapest route: driver-local for small graph indexes
-   *  ([[LocalSearchMaxShards]]) and small table indexes ([[ExactServe]]),
-   *  else a Spark job. */
+  /** Collected (id, distance) hits for k·oversample results: the engine's
+   *  driver search ([[AnnEngine.driverHits]]: small graph indexes up to
+   *  [[LocalSearchMaxShards]] shards, small table indexes through
+   *  [[ExactServe]]), else its distributed plan, collected. */
   private[graft] def collectHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, searchComplexity: Int, oversample: Int): Array[(Long, Float)] =
     collectHits(spark, IndexCatalog.load(root(spark), name),
@@ -800,13 +749,32 @@ object Ann {
 
   /** [[collectHits]] over an index whose metadata and tombstones the caller
    *  has already read (the top-k rewrite selects the index from the parsed
-   *  catalog listing). */
+   *  catalog listing; a range search keeps one generation across its
+   *  expansions), of the ids `filter` allows (None: every id). */
   private[graft] def collectHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
-      query: Array[Float], k: Int, searchComplexity: Int,
-      oversample: Int): Array[(Long, Float)] = {
+      query: Array[Float], k: Int, searchComplexity: Int, oversample: Int,
+      filter: Option[IdFilter] = None): Array[(Long, Float)] =
+    routedSearch(spark, meta, tomb, query, k, searchComplexity, oversample, filter)
+      .fold(identity, _.collect().map(r => (r.getLong(0), r.getFloat(1))))
+
+  /** The top k·oversample `(row_id, _distance)` of index `name` as a
+   *  DataFrame: a LocalRelation of the driver search's hits, else the
+   *  engine's lazy distributed plan. */
+  private def hitsFrame(spark: SparkSession, name: String, query: Array[Float], k: Int,
+      searchComplexity: Int, oversample: Int, filter: Option[IdFilter]): DataFrame =
+    routedSearch(spark, IndexCatalog.load(root(spark), name),
+      IndexCatalog.readTombstones(root(spark), name), query, k, searchComplexity, oversample,
+      filter).fold(localHitRows(spark, _), identity)
+
+  /** The engine's driver hits (Left), or its distributed plan (Right) when
+   *  the route says distributed. */
+  private def routedSearch(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], k: Int, searchComplexity: Int, oversample: Int,
+      filter: Option[IdFilter]): Either[Array[(Long, Float)], DataFrame] = {
+    val (engine, fetchK) = (AnnEngine.of(meta), k * math.max(1, oversample))
     searchCount.incrementAndGet()
-    AnnEngine.of(meta).collectHits(spark, meta, tomb, query,
-      k * math.max(1, oversample), searchComplexity)
+    engine.driverHits(spark, meta, tomb, query, fetchK, searchComplexity, filter)
+      .toLeft(engine.hitsPlan(spark, meta, tomb, query, fetchK, searchComplexity, filter))
   }
 
   /** Range search promises a metric-space ball: `radius` compares against
@@ -1077,52 +1045,31 @@ object Ann {
       .drop("__ann_rank")
   }
 
-  /** (row_id, _distance) LocalRelation over already-collected hit rows —
-   *  consumption is job-free, so a scan whose result was materialized for
-   *  an under-fill check is never re-executed. */
-  private[index] def localHitRows(spark: SparkSession, rows: Array[Row]): DataFrame =
-    spark.createDataFrame(rows.toSeq.asJava,
+  /** (row_id, _distance) LocalRelation over already-collected hits —
+   *  consumption is job-free, so a scan whose result was materialized (a
+   *  driver search, or an under-fill check) is never re-executed. */
+  private[index] def localHitRows(spark: SparkSession, hits: Array[(Long, Float)]): DataFrame =
+    spark.createDataFrame(hits.toSeq.map(h => Row(h._1, h._2)).asJava,
       StructType(Seq(StructField("row_id", LongType, nullable = false),
         StructField("_distance", FloatType, nullable = false))))
 
   /**
-   * Single-query serving surface: top k·oversample `(row_id, _distance)` as
-   * a LOCAL relation — no Spark job anywhere on the path. The search itself
-   * already runs driver-local for eligible indexes (graph engines under
-   * [[LocalSearchMaxShards]] serve from the mmap shard cache; small exact/
-   * quantized engines from [[ExactServe]]); what made [[search]]'s e2e p50
-   * ~70× the in-process search cost was the base-row fetch-back JOB, which
-   * exists only to attach base-table columns. A serving caller that needs
-   * ids + distances (the reference's `ann_search` row shape,
-   * src/ann_search.cpp:55-195) skips it entirely: the collected hits
-   * materialize as a `LocalRelation`, so `.collect()` is job-free and
-   * end-to-end latency ≈ the index search itself. Bit-parity with
-   * [[search]]'s `(id, _distance)` projection is pinned by AnnServeLocalSpec.
-   * Falls back to a distributed scan + collect transparently for indexes
-   * too large for the local routes.
+   * Single-query serving surface: top k·oversample `(row_id, _distance)`,
+   * ordered by (distance, row_id) — the reference's `ann_search` row shape
+   * (src/ann_search.cpp:55-195) without the base-row fetch-back, which only
+   * attaches base-table columns. Where the engine's driver search serves the
+   * index (graph indexes up to [[LocalSearchMaxShards]] shards from the
+   * mmap shard cache, small table indexes from [[ExactServe]]) the hits
+   * materialize as a `LocalRelation`, so no Spark job runs anywhere on the
+   * path and end-to-end latency ≈ the index search itself. Otherwise the
+   * answer is the engine's lazy distributed plan (the reference's
+   * diskann_index_scan / faiss_index_scan). Bit-parity with [[search]]'s
+   * `(id, _distance)` projection is pinned by AnnServeLocalSpec, and of the
+   * two routes by RouteParitySpec.
    */
   def searchHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame =
-    localHitRows(spark, collectHits(spark, name, query, k, searchComplexity, oversample)
-      .map(h => Row(h._1, h._2)))
-
-  /**
-   * Job-free FILTERED serving surface — [[searchHits]]'s analog for
-   * [[searchFiltered]]: for small table indexes on the driver route
-   * ([[ExactServe]]) the filter closure is applied in the driver-local scan beside
-   * the tombstone check (same candidate order, same nprobe-saturation
-   * retry as the distributed route — FilteredServeSpec pins parity) and the
-   * hits materialize as a LocalRelation, so a serving caller pays no Spark
-   * job. Graph engines and over-budget indexes fall back to
-   * [[searchFiltered]] transparently.
-   */
-  def searchFilteredHits(spark: SparkSession, name: String, query: Array[Float],
-      k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame = {
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
-    AnnEngine.of(meta).searchFilteredHits(spark, meta, tomb, query, k, filter,
-      searchComplexity)
-  }
+    hitsFrame(spark, name, query, k, searchComplexity, oversample, None)
 
   /** Row-id selector for filtered search: `column` is the predicate over
    *  the index scan's `id` column (exact engines — Catalyst pushes it to
@@ -1242,8 +1189,8 @@ object Ann {
    *    scan escalates once to nprobe = nlist, making the answer exact for
    *    any selectivity at full-scan cost — the IVF analog of the graph
    *    route's saturation.
-   *  - **graph engine** (diskann): per-shard beam search with escalating
-   *    over-fetch — start at `k·FilteredOverfetch` (4×), drop
+   *  - **graph engines** (diskann, hnsw): per-shard beam search with
+   *    escalating over-fetch — start at `k·FilteredOverfetch` (4×), drop
    *    disallowed hits, and double the fetch until the shard yields k
    *    allowed hits or the beam reaches the shard's node count, at which
    *    point every node REACHABLE from the entry points has been visited
@@ -1260,14 +1207,14 @@ object Ann {
    *    independent, so a selective filter costs extra hops only on shards
    *    that actually lack allowed neighbors.
    *
-   * Returns `(row_id, _distance)` ordered, ≤ k rows.
+   * Routed as [[searchHits]] is, through the same engine search: a
+   * LocalRelation of the driver search's hits (the filter applied beside the
+   * tombstone check, with the same nprobe retry), else the lazy distributed
+   * plan. Returns `(row_id, _distance)` ordered, ≤ k rows.
    */
   def searchFiltered(spark: SparkSession, name: String, query: Array[Float],
-      k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame = {
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
-    AnnEngine.of(meta).searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
-  }
+      k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame =
+    hitsFrame(spark, name, query, k, searchComplexity, 1, Some(filter))
 
   /**
    * `ann_range_search`: every row within `radius` of `query` under the

@@ -25,12 +25,12 @@ import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
  * `FaissIndex` wrapping every FAISS type behind one `faiss::Index`,
  * src/include/faiss_index.hpp:119). Each family owns the operations whose
  * behaviour depends on how the index stores its vectors: build and
- * encode-on-add, top-k / filtered / range scans, TABLE scoring,
- * reconstruction, vacuum and merge. Each family also owns its driver-local
- * search: graph engines search their cached shards, and each table family
- * brings the one scorer the [[ExactServe]] driver route serves through
- * ([[TableEngine.localScorer]]). The [[Ann]] surface resolves the family
- * once per call and delegates.
+ * encode-on-add, single-query top-k (one driver search and one distributed
+ * plan, filtered or not), range scans, TABLE scoring, reconstruction, vacuum
+ * and merge. Graph engines search their cached shards on the driver, and
+ * each table family brings the one scorer the [[ExactServe]] driver route
+ * serves through ([[TableEngine.localScorer]]). The [[Ann]] surface
+ * resolves the family once per call and delegates.
  *
  * `metadata.json` keeps the engine as a string; [[AnnEngine.apply]] is the
  * only place that string is read.
@@ -52,32 +52,25 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta
 
-  /** Top-fetchK `(row_id, _distance)`, ordered by (distance, row_id). */
-  private[index] def scan(spark: SparkSession, meta: IndexMeta, query: Array[Float],
-      fetchK: Int, tomb: Set[Long], searchComplexity: Int): DataFrame
+  /** The driver search of single-query top-k: the top-fetchK live `(id,
+   *  distance)` that `filter` allows (None: every id), ordered by (distance,
+   *  id), with no Spark job; None when this index's route says distributed.
+   *  Filtered contract in [[Ann.searchFiltered]]. */
+  private[index] def driverHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): Option[Array[(Long, Float)]]
 
-  /** Collected top-fetchK hits over the cheapest route for this index. */
-  private[index] def collectHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
-      query: Array[Float], fetchK: Int, searchComplexity: Int): Array[(Long, Float)] =
-    scan(spark, meta, query, fetchK, tomb, searchComplexity)
-      .collect().map(r => (r.getLong(0), r.getFloat(1)))
-
-  /** Top-k of the rows `filter` allows (see [[Ann.searchFiltered]]). */
-  private[index] def searchFiltered(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
-      searchComplexity: Int): DataFrame
-
-  /** [[searchFiltered]] over the cheapest route (see [[Ann.searchFilteredHits]]). */
-  private[index] def searchFilteredHits(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
-      searchComplexity: Int): DataFrame =
-    searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
+  /** The distributed plan of the same answer: `(row_id, _distance)`, at most
+   *  fetchK rows ordered by (distance, row_id). */
+  private[index] def hitsPlan(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): DataFrame
 
   /** Base rows of `df` within `radius` plus `_distance` (see [[Ann.rangeSearch]]). */
   private[index] def rangeSearch(df: DataFrame, idColumn: String, meta: IndexMeta,
       tomb: Set[Long], query: Array[Float], radius: Float,
       searchComplexity: Int): DataFrame =
-    expandingRange(df, idColumn, meta, query, radius, searchComplexity)
+    expandingRange(df, idColumn, meta, tomb, query, radius, searchComplexity)
 
   /** In-radius (query, row) pairs: query columns + `row_id` + `_distance`. */
   private[index] def rangeSearchTable(queriesDf: DataFrame, vecCol: String,
@@ -116,17 +109,19 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
    * Range search through the serving path with geometrically expanding k
    * (64, 256, 1024, …) until the tail clears the radius or the index is
    * exhausted — the route for engines without a metric-space table filter
-   * (graph engines, lsh). Contract in [[Ann.rangeSearch]].
+   * (graph engines, lsh). Every expansion searches the one generation
+   * `meta`/`tomb` name. Contract in [[Ann.rangeSearch]].
    */
   protected final def expandingRange(df: DataFrame, idColumn: String, meta: IndexMeta,
-      query: Array[Float], radius: Float, searchComplexity: Int): DataFrame = {
+      tomb: Set[Long], query: Array[Float], radius: Float,
+      searchComplexity: Int): DataFrame = {
     val spark = df.sparkSession
     var k = 64
-    var hits = Ann.collectHits(spark, meta.name, query, k, searchComplexity, 1)
+    var hits = Ann.collectHits(spark, meta, tomb, query, k, searchComplexity, 1)
     // grow until the tail clears the radius or the index is exhausted
     while (hits.length >= k && hits.last._2 <= radius) {
       k *= 4
-      hits = Ann.collectHits(spark, meta.name, query, k, searchComplexity, 1)
+      hits = Ann.collectHits(spark, meta, tomb, query, k, searchComplexity, 1)
     }
     Ann.fetchHits(df, idColumn, hits.filter(_._2 <= radius))
   }
@@ -471,75 +466,43 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
     meta
   }
 
-  private[index] def scan(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long], searchComplexity: Int): DataFrame = {
+  /** Driver-local search (no Spark job) while the shard count is at most
+   *  [[Ann.LocalSearchMaxShards]]: shards are searched concurrently on a
+   *  bounded pool (one shard on the calling thread); graph search is
+   *  read-only with per-call scratch, so shared cached shards are safe. */
+  private[index] def driverHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query0: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): Option[Array[(Long, Float)]] =
+    if (!Route.local(spark, "ann.graph", meta.shards.size, Ann.LocalSearchMaxShards)) None
+    else {
+      val query = prepQuery(meta, query0)
+      val (cosine, allow) = (meta.metricObj eq Metric.Cosine, filter.map(_.fn).orNull)
+      def one(sh: ShardMeta): Array[(Long, Float)] =
+        GraphEngine.shardHits(sh, cosine, query, fetchK, searchComplexity, tomb, allow)
+      val shards = meta.shards.toArray
+      val results =
+        if (shards.length <= 1) shards.map(one)
+        else shards.map(sh => GraphEngine.pool.submit(
+          new java.util.concurrent.Callable[Array[(Long, Float)]] {
+            def call(): Array[(Long, Float)] = one(sh)
+          })).map(_.get())
+      Some(results.flatten.sortBy { case (id, d) => (d, id) }.take(fetchK))
+    }
+
+  /** One task per shard, each running the driver route's per-shard search,
+   *  then the global (distance, row_id) cut. */
+  private[index] def hitsPlan(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query0: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): DataFrame = {
     import spark.implicits._
     val query = prepQuery(meta, query0)
-    // over-request k + |tombstones| like the reference (diskann_index.cpp:558-561)
-    val perShardK = fetchK + tomb.size
-    val shards = meta.shards
-    val cosine = meta.metricObj eq Metric.Cosine
+    val (cosine, allow) = (meta.metricObj eq Metric.Cosine, filter.map(_.fn).orNull)
     val tombB = spark.sparkContext.broadcast(tomb)
     val sc = searchComplexity
-    val rdd = spark.sparkContext.parallelize(shards, math.max(shards.size, 1)).flatMap { sh =>
-      val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-      val (labels, dists) = loaded.index.searchSaturationChecked(query, perShardK, sc)
-      val t = tombB.value
-      labels.indices.iterator
-        .map(i => (loaded.ids(labels(i)), dists(i)))
-        .filterNot { case (id, _) => t.contains(id) }
-    }
-    rdd.toDF("row_id", "_distance")
+    spark.sparkContext.parallelize(meta.shards, math.max(meta.shards.size, 1))
+      .flatMap(GraphEngine.shardHits(_, cosine, query, fetchK, sc, tombB.value, allow))
+      .toDF("row_id", "_distance")
       .orderBy(col("_distance"), col("row_id")).limit(fetchK)
-  }
-
-  /** Driver-local search (no Spark job) while the shard count is at most
-   *  [[Ann.LocalSearchMaxShards]]; a shard-parallel job above it. */
-  override private[index] def collectHits(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], fetchK: Int,
-      searchComplexity: Int): Array[(Long, Float)] =
-    if (Route.local(spark, "ann.graph", meta.shards.size, Ann.LocalSearchMaxShards))
-      Ann.searchShardsLocal(meta, tomb, query, fetchK, searchComplexity)
-    else super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
-
-  /** Per-shard beam search with escalating over-fetch until the shard
-   *  yields k allowed hits or the beam saturates the shard (contract in
-   *  [[Ann.searchFiltered]]). */
-  private[index] def searchFiltered(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query0: Array[Float], k: Int, filter: IdFilter,
-      searchComplexity: Int): DataFrame = {
-    import spark.implicits._
-    val query = prepQuery(meta, query0)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val allow = filter.fn
-    val sc0 = searchComplexity
-    val startFetch = k * Ann.FilteredOverfetch + tomb.size
-    val shards = meta.shards
-    val rdd = spark.sparkContext.parallelize(shards, math.max(shards.size, 1))
-      .flatMap { sh =>
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val n = loaded.ids.length
-        var fetch = math.min(math.max(startFetch, 1), math.max(n, 1))
-        var out: Seq[(Long, Float)] = Seq.empty
-        var done = n == 0
-        while (!done) {
-          val (labels, dists) = loaded.index.searchSaturationChecked(query, fetch,
-            math.max(sc0, fetch))
-          // labels arrive distance-ordered; the first k allowed are the
-          // shard's filtered top-k at this beam width
-          out = labels.indices.iterator
-            .map(i => (loaded.ids(labels(i)), dists(i)))
-            .filter { case (id, _) => allow(id) && !t.contains(id) }
-            .take(k).toSeq
-          if (out.length >= k || fetch >= n) done = true
-          else fetch = math.min(n, fetch * 2)
-        }
-        out.iterator
-      }
-    rdd.toDF("row_id", "_distance")
-      .orderBy(col("_distance"), col("row_id")).limit(k)
   }
 
   /** Round-robin (shard × query-block) task grid over a query table: every
@@ -799,6 +762,52 @@ sealed abstract class GraphEngine(name: String, hnsw: Boolean) extends AnnEngine
   }
 }
 
+private[index] object GraphEngine {
+
+  /** Shard `sh`'s first k hits in (distance, id) order that are not in `tomb`
+   *  and that `allow` keeps (null: every id): the one per-shard body of both
+   *  graph routes. Unfiltered, one search at k + |tomb| with beam `sc` — the
+   *  reference's over-request (src/diskann_index.cpp:558-561). Filtered, the
+   *  search starts at k·[[Ann.FilteredOverfetch]] + |tomb| with beam max(sc,
+   *  fetch) and doubles the fetch while the shard is short of k, until the
+   *  fetch covers the shard (contract in [[Ann.searchFiltered]]). */
+  def shardHits(sh: ShardMeta, cosine: Boolean, query: Array[Float], k: Int, sc: Int,
+      tomb: Set[Long], allow: Long => Boolean): Array[(Long, Float)] = {
+    val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
+    def hits(fetch: Int, beam: Int): Array[(Long, Float)] = {
+      val (labels, dists) = loaded.index.searchSaturationChecked(query, fetch, beam)
+      labels.indices.iterator.map(i => (loaded.ids(labels(i)), dists(i)))
+        .filter { case (id, _) => !tomb.contains(id) && (allow == null || allow(id)) }
+        .toArray.sortBy { case (id, d) => (d, id) }.take(k)
+    }
+    if (allow == null) hits(k + tomb.size, sc)
+    else {
+      val n = loaded.ids.length
+      var fetch = math.min(math.max(k * Ann.FilteredOverfetch + tomb.size, 1), math.max(n, 1))
+      var out = hits(fetch, math.max(sc, fetch))
+      while (out.length < k && fetch < n) {
+        fetch = math.min(n, fetch * 2)
+        out = hits(fetch, math.max(sc, fetch))
+      }
+      out
+    }
+  }
+
+  /** Shared daemon pool for the driver route's shard fan-out (a per-call
+   *  pool would pay thread creation on every query). */
+  lazy val pool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(
+      Runtime.getRuntime.availableProcessors(),
+      new java.util.concurrent.ThreadFactory {
+        private val n = new java.util.concurrent.atomic.AtomicInteger()
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-local-search-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
+}
+
 /** Join of a TABLE query block against an index table: the joined plan, its
  *  ranking score, the query side the output columns come from, and — for
  *  the engines that freeze the query block on the driver — that frozen
@@ -1004,56 +1013,43 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
   }
 
-  private[index] final def scan(spark: SparkSession, meta: IndexMeta, query: Array[Float],
-      fetchK: Int, tomb: Set[Long], searchComplexity: Int): DataFrame =
-    topK(spark, meta, query, fetchK, tomb, None, 0)
+  /** Whether a filtered search can come back short: an IVF index probing
+   *  fewer than all of its cells. */
+  private def mayUnderFill(meta: IndexMeta, filter: Option[IdFilter]): Boolean =
+    filter.nonEmpty && ivf && meta.nprobe < meta.nlist
 
-  /** Small indexes serve from their [[ExactServe]] table on the driver. */
-  override private[index] def collectHits(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], fetchK: Int,
-      searchComplexity: Int): Array[(Long, Float)] =
-    ExactServe.table(spark, meta) match {
-      case Some(t) => ExactServe.search(spark, meta, t, tomb, query, fetchK)
-      case None => super.collectHits(spark, meta, tomb, query, fetchK, searchComplexity)
-    }
-
-  /** Whether filtered search can under-fill: an IVF index probing fewer
-   *  than all of its cells. */
-  private def mayUnderFill(meta: IndexMeta): Boolean = ivf && meta.nprobe < meta.nlist
-
-  /** The nprobe under-fill rule of both filtered routes: `probed(nprobe)`
-   *  at the index's own nprobe (0), retried once at nprobe = nlist when
-   *  its hits under-fill k. */
-  private def filledTopK[A](meta: IndexMeta, k: Int)(probed: Int => Array[A]): Array[A] = {
+  /** The nprobe under-fill rule of both routes: `probed(nprobe)` at the
+   *  index's own nprobe (0), retried once at nprobe = nlist when a filtered
+   *  answer under-fills fetchK. */
+  private def filled(meta: IndexMeta, filter: Option[IdFilter], fetchK: Int)(
+      probed: Int => Array[(Long, Float)]): Array[(Long, Float)] = {
     val hits = probed(0)
-    if (mayUnderFill(meta) && hits.length < k) probed(meta.nlist) else hits
+    if (mayUnderFill(meta, filter) && hits.length < fetchK) probed(meta.nlist) else hits
   }
 
-  /** The id predicate splices into the scan before the top-k, so it pushes
-   *  to parquet and code engines keep their compression. Where the index
-   *  can under-fill, the check collects the ≤ k probed rows once and
-   *  returns them as a LocalRelation, so a non-escalating query runs the
-   *  scan job exactly once (FilteredJobCountSpec). */
-  private[index] final def searchFiltered(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
-      searchComplexity: Int): DataFrame = {
-    def probedTopK(nprobe: Int): DataFrame =
-      topK(spark, meta, query, k, tomb, Some(filter.column), nprobe)
-    if (!mayUnderFill(meta)) probedTopK(0)
-    else localHitRows(spark, filledTopK(meta, k)(probedTopK(_).collect()))
-  }
+  /** Small indexes serve from their [[ExactServe]] table on the driver; the
+   *  filter applies beside the tombstone check. */
+  private[index] final def driverHits(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): Option[Array[(Long, Float)]] =
+    ExactServe.table(spark, meta).map(t => filled(meta, filter, fetchK)(nprobe =>
+      ExactServe.search(spark, meta, t, tomb, query, fetchK, filter.map(_.fn).orNull, nprobe)))
 
-  /** Small indexes filter inside the [[ExactServe]] scan, beside the
-   *  tombstone check, and answer as a LocalRelation. */
-  override private[index] def searchFilteredHits(spark: SparkSession, meta: IndexMeta,
-      tomb: Set[Long], query: Array[Float], k: Int, filter: IdFilter,
-      searchComplexity: Int): DataFrame =
-    ExactServe.table(spark, meta) match {
-      case Some(t) => localHitRows(spark, filledTopK(meta, k)(nprobe =>
-        ExactServe.search(spark, meta, t, tomb, query, k, filter.fn, nprobe))
-        .map(h => Row(h._1, h._2)))
-      case None => searchFiltered(spark, meta, tomb, query, k, filter, searchComplexity)
-    }
+  /** [[topK]] with the filter's id predicate spliced into the scan before
+   *  the top-k, so it pushes to parquet and code engines keep their
+   *  compression. Where a filtered answer can under-fill, the check collects
+   *  the ≤ fetchK probed rows once and returns them as a LocalRelation, so a
+   *  non-escalating query runs the scan job exactly once
+   *  (FilteredJobCountSpec). */
+  private[index] final def hitsPlan(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
+      query: Array[Float], fetchK: Int, searchComplexity: Int,
+      filter: Option[IdFilter]): DataFrame = {
+    def probed(nprobe: Int): DataFrame =
+      topK(spark, meta, query, fetchK, tomb, filter.map(_.column), nprobe)
+    if (!mayUnderFill(meta, filter)) probed(0)
+    else localHitRows(spark, filled(meta, filter, fetchK)(probed(_).collect()
+      .map(r => (r.getLong(0), r.getFloat(1)))))
+  }
 
   /** (centroids, radii) when range search can prune clusters exactly: an
    *  IVF index under L2 whose build stored radii.bin. */
@@ -2057,7 +2053,7 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
   override private[index] def rangeSearch(df: DataFrame, idColumn: String,
       meta: IndexMeta, tomb: Set[Long], query: Array[Float], radius: Float,
       searchComplexity: Int): DataFrame =
-    expandingRange(df, idColumn, meta, query, radius, searchComplexity)
+    expandingRange(df, idColumn, meta, tomb, query, radius, searchComplexity)
 
   protected def rangeDist(spark: SparkSession, meta: IndexMeta, t: DataFrame,
       q: Column): Column =

@@ -225,11 +225,11 @@ object TableFunctions {
           "search_complexity"), 5)
       val index = str(fn, a("index"))
       val sc = a.get("search_complexity").map(int(fn, _)).getOrElse(0)
-      val idCol = IndexCatalog.load(Ann.root(spark), index).idColumn
+      val meta = IndexCatalog.load(Ann.root(spark), index)
       val filt = Ann.idFilterFromSql(spark, str(fn, a("allow_pred")))
-      val hits = Ann.searchFilteredHits(spark, index, vec(fn, a("query_vec")),
-        int(fn, a("k")), filt, sc).collect().map(r => (r.getLong(0), r.getFloat(1)))
-      plan(Ann.fetchHits(spark.table(str(fn, a("table"))), idCol, hits))
+      val hits = Ann.collectHits(spark, meta, IndexCatalog.readTombstones(Ann.root(spark), index),
+        vec(fn, a("query_vec")), int(fn, a("k")), sc, 1, Some(filt))
+      plan(Ann.fetchHits(spark.table(str(fn, a("table"))), meta.idColumn, hits))
     },
     "ann_range_search" -> { args =>
       val fn = "ann_range_search"

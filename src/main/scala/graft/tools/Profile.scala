@@ -8,8 +8,9 @@ import graft.SparkEntry
  * environment contract (`SPARK_GRAFT_CPUS` cores, `local[cpus]`, shuffle
  * partitions = cpus, memoized index builds). Each entry runs once untimed,
  * then once timed under [[StageStats]], and prints one JSON line:
- * `{"entry", "wall_s", "stages": [...], "routes": [...]}` with the fields
- * of [[StageStats.Stage]] and the timed run's route decisions.
+ * `{"entry", "wall_s", "jobs", "stages": [...], "routes": [...]}` with the
+ * timed run's job count, the fields of [[StageStats.Stage]] and the timed
+ * run's route decisions.
  *
  * Usage: runMain graft.tools.Profile <sfDir> <entry>...
  */
@@ -52,7 +53,8 @@ object Profile {
     fn(spark, sfDir).count()
     val sec = (System.nanoTime() - t0) / 1e9
     stats.drain(spark.sparkContext)
-    s"""{"entry":"$name","wall_s":$sec,"stages":[${stats.stages.map(_.json).mkString(",")}],""" +
+    s"""{"entry":"$name","wall_s":$sec,"jobs":${stats.jobs},""" +
+      s""""stages":[${stats.stages.map(_.json).mkString(",")}],""" +
       s""""routes":[${stats.routes.map(_.json).mkString(",")}]}"""
   }
 }

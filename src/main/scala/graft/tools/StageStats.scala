@@ -8,9 +8,9 @@ import graft.core.GraftRouteEvent
 
 /**
  * Per-stage task statistics from the listener bus, shared by `Profile` and
- * the scale smokes: successful tasks per stage, stage wall time, summed
- * executor run time, scheduler delay, shuffle read/write bytes, spill bytes
- * and GC time, plus the task-skew pair the smokes report and the
+ * the scale smokes: jobs started, successful tasks per stage, stage wall
+ * time, summed executor run time, scheduler delay, shuffle read/write bytes,
+ * spill bytes and GC time, plus the task-skew pair the smokes report and the
  * [[graft.core.GraftRouteEvent]]s posted in the window. `clear()` starts
  * a new window; `drain()` waits until the events of work already run have
  * arrived. `SPARK_GRAFT_STAGE_DETAIL=1` prints every skew-qualifying stage
@@ -24,11 +24,14 @@ final class StageStats extends SparkListener {
   private val markerStages = ConcurrentHashMap.newKeySet[Int]()
   private val markerJobs = new ConcurrentHashMap[Int, java.lang.Long]()
   @volatile private var markerSeen = -1L
+  private val jobCount = new java.util.concurrent.atomic.AtomicInteger()
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
-    Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey))).foreach { id =>
-      markerJobs.put(e.jobId, id.toLong)
-      e.stageIds.foreach(markerStages.add)
+    Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey))) match {
+      case Some(id) =>
+        markerJobs.put(e.jobId, id.toLong)
+        e.stageIds.foreach(markerStages.add)
+      case None => jobCount.incrementAndGet()
     }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -49,7 +52,10 @@ final class StageStats extends SparkListener {
     case _ =>
   }
 
-  def clear(): Unit = { ends.clear(); wallMs.clear(); routeEvents.clear() }
+  def clear(): Unit = { ends.clear(); wallMs.clear(); routeEvents.clear(); jobCount.set(0) }
+
+  /** Jobs started in this window. */
+  def jobs: Int = jobCount.get
 
   /** This window's route decisions, in posting order. */
   def routes: Seq[GraftRouteEvent] = routeEvents.asScala.toSeq

@@ -20,6 +20,16 @@ object RouteParity {
     } finally prev.fold(spark.conf.unset(Gate))(spark.conf.set(Gate, _))
   }
 
+  /** `body` with the gate at 0 (every distributed version); the session's
+   *  previous setting is restored. */
+  def distributed[A](spark: SparkSession)(body: => A): A = {
+    val prev = spark.conf.getOption(Gate)
+    try {
+      spark.conf.set(Gate, "0")
+      body
+    } finally prev.fold(spark.conf.unset(Gate))(spark.conf.set(Gate, _))
+  }
+
   /** `body`'s answer and the route events it posted, in order. */
   def routed[A](spark: SparkSession)(body: => A): (A, Seq[GraftRouteEvent]) = {
     val sc = spark.sparkContext

@@ -133,6 +133,16 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       tombstones(name)
       val got = parity("ann.graph")(hits(name))
       assert(got.forall(_.length == 10), engine)
+      // a permissive filter, a selective one that escalates, and one whose
+      // 10 live ids leave every shard short of k, so each shard saturates
+      for (m <- Seq(3L, 50L, 1000L)) {
+        val filt = Ann.IdFilter.modEq(m, 1)
+        val filtered = parity("ann.graph")(queries.map(q =>
+          Ann.searchFiltered(spark, name, q, 10, filt).collect()
+            .map(r => (r.getLong(0), r.getFloat(1))).toSeq))
+        assert(filtered.forall(hs => hs.length == 10 && hs.forall(h => filt.fn(h._1))),
+          s"$engine mod $m: $filtered")
+      }
     }
   }
 

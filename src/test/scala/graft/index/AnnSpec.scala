@@ -466,7 +466,7 @@ class AnnSpec extends AnyFunSuite {
       val truth = all.zipWithIndex
         .map { case (v, i) => (VectorOps.l2Sq(v, all(7)), i.toLong) }
         .sortBy(x => (x._1, x._2)).take(5).map(_._2).toSet
-      val hits = Ann.indexScan(spark, "t_stream", all(7), 5, searchComplexity = 100)
+      val hits = Ann.searchHits(spark, "t_stream", all(7), 5, searchComplexity = 100)
         .collect().map(_.getLong(0))
       assert(hits.count(truth) >= 4)
     } finally tmp.delete()
@@ -476,8 +476,8 @@ class AnnSpec extends AnyFunSuite {
 
   test("error cases: missing index, dimension mismatch") {
     intercept[IllegalArgumentException](
-      Ann.indexScan(spark, "no_such_index", q0, 5))
+      Ann.searchHits(spark, "no_such_index", q0, 5))
     intercept[IllegalArgumentException](
-      Ann.indexScan(spark, "t_disk", Array(1.0f), 5))
+      Ann.searchHits(spark, "t_disk", Array(1.0f), 5))
   }
 }

@@ -43,8 +43,8 @@ class BucketedLayoutSpec extends AnyFunSuite {
     // as a pushed data filter over the sorted row groups
     val q = emb.orderBy("vec_id").limit(1)
       .select("embedding").collect()(0).getSeq[Float](0).toArray
-    val plan = Ann.indexScan(spark, "bk_imi", q, 5)
-      .queryExecution.executedPlan.toString
+    val plan = graft.core.RouteParity.distributed(spark)(Ann.searchHits(spark, "bk_imi", q, 5)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("bucket"), plan.take(3000))
     assert(plan.contains("PushedFilters") && plan.contains("In(cluster"),
       plan.take(3000))

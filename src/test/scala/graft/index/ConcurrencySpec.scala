@@ -30,13 +30,13 @@ class ConcurrencySpec extends AnyFunSuite {
       val queries = (0 until 8).map(qi =>
         (0 until 64).map(d => ((qi * 7 + d) % 13) / 13.0f).toArray)
       val expected = queries.map(q =>
-        Ann.searchShardsLocal(meta, Set.empty, q, 10, 64).toSeq)
+        Ann.collectHits(spark, meta, Set.empty, q, 10, 64, 1).toSeq)
       implicit val ec: ExecutionContext = ExecutionContext.global
       // one shared mmap per shard, many cursors: races would corrupt results
       val futures = (0 until 64).map { i =>
         Future {
           val q = queries(i % queries.length)
-          i % queries.length -> Ann.searchShardsLocal(meta, Set.empty, q, 10, 64).toSeq
+          i % queries.length -> Ann.collectHits(spark, meta, Set.empty, q, 10, 64, 1).toSeq
         }
       }
       val results = Await.result(Future.sequence(futures), 120.seconds)
@@ -59,12 +59,12 @@ class ConcurrencySpec extends AnyFunSuite {
         (0 until 64).map(d => ((qi * 13 + d) % 11) / 11.0f).toArray)
       // reference answers, computed single-threaded
       val expected = queries.map(q =>
-        Ann.searchShardsLocal(meta, Set.empty, q, 10, 64).toSeq)
+        Ann.collectHits(spark, meta, Set.empty, q, 10, 64, 1).toSeq)
       implicit val ec: ExecutionContext = ExecutionContext.global
       val futures = (0 until 64).map { i =>
         Future {
           val q = queries(i % queries.length)
-          i % queries.length -> Ann.searchShardsLocal(meta, Set.empty, q, 10, 64).toSeq
+          i % queries.length -> Ann.collectHits(spark, meta, Set.empty, q, 10, 64, 1).toSeq
         }
       }
       val results = Await.result(Future.sequence(futures), 120.seconds)

@@ -95,8 +95,9 @@ class EdgeCasesSpec extends AnyFunSuite {
       .toDF("id", "v")
     Ann.buildIndex(df, "v", "id", "e_ivf_prune",
       Ann.BuildParams(engine = "ivfflat", nlist = 5, nprobe = 2))
-    val scan = Ann.indexScan(spark, "e_ivf_prune", Array(1f, 1f), 5)
-    val p = scan.queryExecution.executedPlan.toString
+    // the distributed plan: below the gate the search runs on the driver
+    val p = graft.core.RouteParity.distributed(spark)(
+      Ann.searchHits(spark, "e_ivf_prune", Array(1f, 1f), 5).queryExecution.executedPlan.toString)
     assert(p.contains("PartitionFilters") && p.contains("cluster"),
       s"expected cluster partition filters:\n$p")
   }

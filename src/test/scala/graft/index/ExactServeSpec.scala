@@ -1,10 +1,9 @@
 package graft.index
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{GraftRouteEvent, Route}
+import graft.core.Route
 
 /** Driver-local serving for small exact/quantized indexes must be
  *  bit-identical to the distributed scan, job-free once warm, and
@@ -47,23 +46,19 @@ class ExactServeSpec extends AnyFunSuite {
 
   test("warm cache serves with no Spark job") {
     hits("t_srv_flat", 5) // warm
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val routes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case r: GraftRouteEvent => routes.add(r.route)
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    val stats = new graft.tools.StageStats
+    sc.addSparkListener(stats)
     try {
+      // the listener bus is async: drain the warm search's events first
+      stats.drain(sc)
+      stats.clear()
       val r = hits("t_srv_flat", 5)
+      stats.drain(sc)
       assert(r.length == 5)
-      Thread.sleep(500) // listener bus is async
-      assert(routes.toArray.toSeq == Seq(Route.Local), "must use the local route")
-      assert(jobs.get() == 0, s"warm local serving launched ${jobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(stats.routes.map(_.route) == Seq(Route.Local), "must use the local route")
+      assert(stats.jobs == 0, s"warm local serving launched ${stats.jobs} Spark job(s)")
+    } finally sc.removeSparkListener(stats)
   }
 
   test("delete is visible immediately; append invalidates the cache") {

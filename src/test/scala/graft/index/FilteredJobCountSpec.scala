@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the single-execution contract of Ann.searchFiltered's probed
- *  routes: when an ivfflat/ivfpq index with nprobe < nlist answers without
+/** Pins the single-execution contract of Ann.searchFiltered's distributed
+ *  probed route (the gate at 0; below it the driver search runs no job):
+ *  when an ivfflat/ivfpq index with nprobe < nlist answers without
  *  escalating, the ≤ k probed rows were ALREADY collected for the
  *  under-fill check, so consuming the returned DataFrame must launch ZERO
  *  further Spark jobs (the round-13 advisory: count()-then-return executed
@@ -50,7 +51,8 @@ class FilteredJobCountSpec extends AnyFunSuite {
     // permissive filter: the 2 probed clusters hold >= k allowed rows, so
     // the probed answer fills k and no escalation happens
     val filt = Ann.IdFilter.modEq(2, 0)
-    val df = Ann.searchFiltered(spark, "fjc_ivf", q0, 10, filt)
+    val df = graft.core.RouteParity.distributed(spark)(
+      Ann.searchFiltered(spark, "fjc_ivf", q0, 10, filt))
     val (jobs, out) = consumeJobs(df)
     assert(out.length == 10, s"probed answer short: ${out.length}")
     assert(out.forall(_.getLong(0) % 2 == 0))
@@ -63,7 +65,8 @@ class FilteredJobCountSpec extends AnyFunSuite {
     Ann.buildIndex(emb, "embedding", "vec_id", "fjc_ivfpq",
       Ann.BuildParams(engine = "ivfpq", nlist = 4, nprobe = 2, pqM = 8))
     val filt = Ann.IdFilter.modEq(2, 1)
-    val df = Ann.searchFiltered(spark, "fjc_ivfpq", q0, 10, filt)
+    val df = graft.core.RouteParity.distributed(spark)(
+      Ann.searchFiltered(spark, "fjc_ivfpq", q0, 10, filt))
     val (jobs, out) = consumeJobs(df)
     assert(out.length == 10, s"probed answer short: ${out.length}")
     assert(out.forall(_.getLong(0) % 2 == 1))
@@ -75,8 +78,8 @@ class FilteredJobCountSpec extends AnyFunSuite {
   test("collected rows keep the (distance, id) order of the scan plan") {
     Ann.buildIndex(emb, "embedding", "vec_id", "fjc_order",
       Ann.BuildParams(engine = "ivfflat", nlist = 8, nprobe = 2))
-    val out = Ann.searchFiltered(spark, "fjc_order", q0, 10,
-      Ann.IdFilter.modEq(2, 0)).collect()
+    val out = graft.core.RouteParity.distributed(spark)(Ann.searchFiltered(spark,
+      "fjc_order", q0, 10, Ann.IdFilter.modEq(2, 0)).collect())
       .map(r => (r.getFloat(1), r.getLong(0)))
     assert(out.sortBy(identity).toSeq == out.toSeq,
       s"LocalRelation rows lost the scan ordering: ${out.toSeq}")

@@ -50,11 +50,11 @@ class FilteredSearchSpec extends AnyFunSuite {
   test("exact route pushes the predicate into the scan, not a post-filter") {
     Ann.buildIndex(emb, "embedding", "vec_id", "f_flat_plan",
       Ann.BuildParams(engine = "flat"))
-    val df = Ann.searchFiltered(spark, "f_flat_plan", q0, 10,
-      Ann.IdFilter.modEq(7, 3))
+    // the distributed plan: below the gate the search runs on the driver
+    val plan = graft.core.RouteParity.distributed(spark)(Ann.searchFiltered(spark,
+      "f_flat_plan", q0, 10, Ann.IdFilter.modEq(7, 3)).queryExecution.optimizedPlan)
     // the predicate must sit below the top-k sort in the optimized plan:
     // find a Filter whose condition mentions the id column
-    val plan = df.queryExecution.optimizedPlan
     val hasIdFilter = plan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter
         if f.condition.references.exists(_.name == "id") => f
@@ -119,7 +119,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     // with every list probed, the filtered answer must equal the unfiltered
     // ADC ranking restricted to allowed ids (the ADC-route contract: the
     // filter changes WHICH codes rank, never HOW they rank)
-    val unfiltered = Ann.indexScan(spark, "f_ivfpq", q0, 500)
+    val unfiltered = Ann.searchHits(spark, "f_ivfpq", q0, 500)
       .collect().map(r => (r.getLong(0), r.getFloat(1)))
       .filter { case (id, _) => id % 5 == 2 }
       .sortBy { case (id, d) => (d, id) }
@@ -142,9 +142,9 @@ class FilteredSearchSpec extends AnyFunSuite {
   test("ivfpq filtered plan: the id predicate sits below the ADC top-k") {
     Ann.buildIndex(emb, "embedding", "vec_id", "f_ivfpq_plan",
       Ann.BuildParams(engine = "ivfpq", nlist = 4, nprobe = 4, pqM = 8))
-    val df = Ann.searchFiltered(spark, "f_ivfpq_plan", q0, 10,
-      Ann.IdFilter.modEq(7, 3))
-    val plan = df.queryExecution.optimizedPlan
+    // the distributed plan: below the gate the search runs on the driver
+    val plan = graft.core.RouteParity.distributed(spark)(Ann.searchFiltered(spark,
+      "f_ivfpq_plan", q0, 10, Ann.IdFilter.modEq(7, 3)).queryExecution.optimizedPlan)
     val hasIdFilter = plan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter
         if f.condition.references.exists(_.name == "id") => f

@@ -3,12 +3,13 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.RouteParity
 
-/** Pins the job-free filtered serving route (Ann.searchFilteredHits →
- *  TableEngine.searchFilteredHits): bit-parity with the distributed
- *  searchFiltered on every eligible engine, including the ivf nprobe
- *  saturation retry, tombstones under a filter, and the LocalRelation
- *  (job-free) plan shape. */
+/** Pins the routing of filtered search (Ann.searchFiltered): the driver
+ *  search and the distributed plan return the same (id, distance) list on
+ *  every engine family ([[RouteParity.both]]), including the ivf nprobe
+ *  saturation retry and tombstones under a filter, and the driver route
+ *  plans as a LocalRelation (job-free). */
 class FilteredServeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -29,6 +30,15 @@ class FilteredServeSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[(Long, Float)] =
     df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
+  /** `searchFiltered` on both routes: asserts they agree and returns the
+   *  answer. */
+  private def parity(name: String, k: Int, filt: Ann.IdFilter): Seq[(Long, Float)] = {
+    val (local, dist) =
+      RouteParity.both(spark)(rows(Ann.searchFiltered(spark, name, q0, k, filt)))
+    assert(local == dist, s"$name: local $local != distributed $dist")
+    local
+  }
+
   test("local filtered route == distributed, every eligible engine") {
     val configs = Seq(
       "fs_flat" -> Ann.BuildParams(engine = "flat"),
@@ -41,10 +51,7 @@ class FilteredServeSpec extends AnyFunSuite {
     val filt = Ann.IdFilter.modEq(3, 1)
     configs.foreach { case (name, p) =>
       Ann.buildIndex(emb, "embedding", "vec_id", name, p)
-      val dist = rows(Ann.searchFiltered(spark, name, q0, 10, filt))
-      val local = rows(Ann.searchFilteredHits(spark, name, q0, 10, filt))
-      assert(local == dist, s"$name: local $local != distributed $dist")
-      assert(local.forall(_._1 % 3 == 1))
+      assert(parity(name, 10, filt).forall(_._1 % 3 == 1), name)
     }
   }
 
@@ -52,41 +59,41 @@ class FilteredServeSpec extends AnyFunSuite {
     // nprobe=1 with a ~1/50 filter under-fills k=10 from one cluster
     Ann.buildIndex(emb, "embedding", "vec_id", "fs_ivf_esc",
       Ann.BuildParams(engine = "ivfflat", nlist = 8, nprobe = 1))
-    val filt = Ann.IdFilter.modEq(50, 1)
-    val dist = rows(Ann.searchFiltered(spark, "fs_ivf_esc", q0, 10, filt))
-    val local = rows(Ann.searchFilteredHits(spark, "fs_ivf_esc", q0, 10, filt))
-    assert(local == dist && local.length == 10)
+    assert(parity("fs_ivf_esc", 10, Ann.IdFilter.modEq(50, 1)).length == 10)
   }
 
   test("tombstones excluded under a filter on the local route") {
     Ann.buildIndex(emb, "embedding", "vec_id", "fs_tomb",
       Ann.BuildParams(engine = "flat"))
     val filt = Ann.IdFilter.modEq(2, 0)
-    val before = rows(Ann.searchFilteredHits(spark, "fs_tomb", q0, 5, filt))
+    val before = parity("fs_tomb", 5, filt)
     Ann.delete(spark, "fs_tomb", Seq(before.head._1))
-    val after = rows(Ann.searchFilteredHits(spark, "fs_tomb", q0, 5, filt))
+    val after = parity("fs_tomb", 5, filt)
     assert(!after.exists(_._1 == before.head._1))
-    assert(after == rows(Ann.searchFiltered(spark, "fs_tomb", q0, 5, filt)))
+    assert(after.length == 5)
   }
 
   test("job-free: the local route plans as a LocalRelation") {
-    Ann.buildIndex(emb, "embedding", "vec_id", "fs_plan",
-      Ann.BuildParams(engine = "flat"))
-    val df = Ann.searchFilteredHits(spark, "fs_plan", q0, 5,
-      Ann.IdFilter.modEq(2, 0))
-    val isLocal = df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
+    for ((name, engine) <- Seq("fs_plan" -> "flat", "fs_plan_graph" -> "diskann")) {
+      Ann.buildIndex(emb, "embedding", "vec_id", name, Ann.BuildParams(engine = engine))
+      val df = Ann.searchFiltered(spark, name, q0, 5, Ann.IdFilter.modEq(2, 0))
+      val isLocal = df.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+        case _ => false
+      }
+      assert(isLocal, df.queryExecution.optimizedPlan.treeString)
     }
-    assert(isLocal, df.queryExecution.optimizedPlan.treeString)
   }
 
-  test("graph engines fall back to the distributed filtered route") {
-    Ann.buildIndex(emb, "embedding", "vec_id", "fs_graph",
-      Ann.BuildParams(engine = "diskann", numShards = 2))
-    val filt = Ann.IdFilter.modEq(3, 1)
-    val dist = rows(Ann.searchFiltered(spark, "fs_graph", q0, 10, filt))
-    val local = rows(Ann.searchFilteredHits(spark, "fs_graph", q0, 10, filt))
-    assert(local == dist)
+  test("graph engines: filtered search on both routes, diskann and hnsw") {
+    for (engine <- Seq("diskann", "hnsw")) {
+      val name = s"fs_$engine"
+      Ann.buildIndex(emb, "embedding", "vec_id", name,
+        Ann.BuildParams(engine = engine, numShards = 2))
+      for (filt <- Seq(Ann.IdFilter.modEq(3, 1), Ann.IdFilter.modEq(50, 1))) {
+        val got = parity(name, 10, filt)
+        assert(got.length == 10 && got.forall(h => filt.fn(h._1)), s"$engine: $got")
+      }
+    }
   }
 }

@@ -207,7 +207,7 @@ class LshSpec extends AnyFunSuite {
   test("plan shape: Hamming scan reads only (id, code), codegen'd, no UDF") {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "lsh_p", "LSH32")
     val df = withServeBudget(0L) { // force the distributed scan plan
-      Ann.indexScan(spark, "lsh_p", q0, 10)
+      Ann.searchHits(spark, "lsh_p", q0, 10)
     }
     val p = df.queryExecution.executedPlan.toString
     // column pruning: the parquet scan must read the two-column code

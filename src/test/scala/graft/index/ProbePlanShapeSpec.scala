@@ -43,34 +43,40 @@ class ProbePlanShapeSpec extends AnyFunSuite {
     df.queryExecution.analyzed.collect { case f: Filter => f.condition }
 
   test("saturating probes plant no cluster/bucket filter at all") {
-    assert(metaName == "pps_imi")
-    Ann.setNprobe(spark, "pps_imi", 16384)
-    val df = Ann.indexScan(spark, "pps_imi", q, 10)
-    val conds = filterConds(df)
-    val probeRefs = conds.filter(_.references.exists(a =>
-      a.name == "cluster" || a.name == "bucket"))
-    assert(probeRefs.isEmpty,
-      s"saturating plan still filters on cluster/bucket: ${probeRefs.take(2)}")
-    // and the no-op skip is exact: identical to the flat exact top-k
-    val got = df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val want = Ann.indexScan(spark, "pps_flat", q, 10)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    assert(got == want)
+    // the distributed plan: below the gate the search runs on the driver
+    graft.core.RouteParity.distributed(spark) {
+      assert(metaName == "pps_imi")
+      Ann.setNprobe(spark, "pps_imi", 16384)
+      val df = Ann.searchHits(spark, "pps_imi", q, 10)
+      val conds = filterConds(df)
+      val probeRefs = conds.filter(_.references.exists(a =>
+        a.name == "cluster" || a.name == "bucket"))
+      assert(probeRefs.isEmpty,
+        s"saturating plan still filters on cluster/bucket: ${probeRefs.take(2)}")
+      // and the no-op skip is exact: identical to the flat exact top-k
+      val got = df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      val want = Ann.searchHits(spark, "pps_flat", q, 10)
+        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(got == want)
+    }
   }
 
   test("large partial probe sets ride InSet, never a multi-thousand-literal In") {
-    assert(metaName == "pps_imi")
-    Ann.setNprobe(spark, "pps_imi", 2000)
-    val df = Ann.indexScan(spark, "pps_imi", q, 10)
-    val conds = filterConds(df)
-    val bigIns = conds.flatMap(_.collect {
-      case i: In if i.list.size > Ann.TombInlineMax => i
-    })
-    assert(bigIns.isEmpty,
-      s"plan carries a literal In with ${bigIns.headOption.map(_.list.size)} elements")
-    val inSets = conds.flatMap(_.collect { case s: InSet => s })
-    assert(inSets.nonEmpty, s"expected an InSet probe predicate, got: ${conds.take(2)}")
-    assert(inSets.exists(_.hset.size > Ann.TombInlineMax))
+    // the distributed plan: below the gate the search runs on the driver
+    graft.core.RouteParity.distributed(spark) {
+      assert(metaName == "pps_imi")
+      Ann.setNprobe(spark, "pps_imi", 2000)
+      val df = Ann.searchHits(spark, "pps_imi", q, 10)
+      val conds = filterConds(df)
+      val bigIns = conds.flatMap(_.collect {
+        case i: In if i.list.size > Ann.TombInlineMax => i
+      })
+      assert(bigIns.isEmpty,
+        s"plan carries a literal In with ${bigIns.headOption.map(_.list.size)} elements")
+      val inSets = conds.flatMap(_.collect { case s: InSet => s })
+      assert(inSets.nonEmpty, s"expected an InSet probe predicate, got: ${conds.take(2)}")
+      assert(inSets.exists(_.hset.size > Ann.TombInlineMax))
+    }
   }
 
   test("clusterIn is bit-identical across the In/InSet threshold") {

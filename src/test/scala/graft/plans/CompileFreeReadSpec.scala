@@ -206,7 +206,7 @@ class CompileFreeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val radius = hits(4).getFloat(1)
     assert(ids(Ann.rangeSearch(tied, "id", "cf_string_tied", q, radius).collect()) ==
       hits.toSeq.filter(_.getFloat(1) <= radius).map(_.getLong(0)))
-    val filtered = Ann.searchFilteredHits(spark, "cf_string_tied", q, 10,
+    val filtered = Ann.searchFiltered(spark, "cf_string_tied", q, 10,
       Ann.idFilterFromSql(spark, "id < 100")).collect().toSeq.map(_.getLong(0))
     assert(filtered.take(2) == Seq(9L, 10L), s"filtered engine order $filtered")
     assert(ids(spark.sql("SELECT * FROM ann_search_filtered('cf_string_tied', " +

@@ -29,7 +29,7 @@ class IvfSqPlanSpec extends AnyFunSuite {
     // force the distributed scan (ExactServe would hide the plan)
     spark.conf.set("spark.graft.localMaxBytes", "0")
     try {
-      val df = Ann.indexScan(spark, "isq_plan", q0, 5)
+      val df = Ann.searchHits(spark, "isq_plan", q0, 5)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") &&
         plan.matches("(?s).*PartitionFilters: \\[.*cluster.*IN.*\\].*"),

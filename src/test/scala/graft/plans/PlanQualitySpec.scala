@@ -112,9 +112,9 @@ class PlanQualitySpec extends AnyFunSuite {
       graft.index.Ann.buildIndex(df, "vec", "id", "plan_ivfpq",
         graft.index.Ann.BuildParams(engine = "ivfpq", pqM = 4, nlist = 8,
           nprobe = 2, trainSample = 400))
-      val scan = graft.index.Ann.indexScan(spark, "plan_ivfpq",
-        rows.head._2, 10)
-      val p = plan(scan)
+      // the distributed plan: below the gate the search runs on the driver
+      val p = graft.core.RouteParity.distributed(spark)(plan(
+        graft.index.Ann.searchHits(spark, "plan_ivfpq", rows.head._2, 10)))
       // nprobe=2 of nlist=8: the cluster partition filter must reach the scan
       assert(p.contains("PartitionFilters") && p.contains("cluster"),
         s"expected cluster partition pruning:\n$p")

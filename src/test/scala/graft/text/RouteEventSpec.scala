@@ -115,6 +115,24 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(GraftRouteEvent("ann.graph", Route.Distributed, 2, limit)))
   }
 
+  test("filtered search: one event per search; a graph search within the gate runs no job") {
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_filt_disk",
+      Ann.BuildParams(engine = "diskann", numShards = 2))
+    Ann.buildIndex(emb, "embedding", "vec_id", "re_filt_flat", Ann.BuildParams(engine = "flat"))
+    val filt = Ann.IdFilter.modEq(3, 1)
+    val limit = Ann.LocalSearchMaxShards.toLong
+    def search(name: String): Unit =
+      assert(Ann.searchFiltered(spark, name, q, 5, filt).collect().length == 5)
+    assert(jobs(search("re_filt_disk")) ==
+      (Seq(GraftRouteEvent("ann.graph", Route.Local, 2, limit)), Nil))
+    assert(withGate("0")(events(search("re_filt_disk"))) ==
+      Seq(GraftRouteEvent("ann.graph", Route.Distributed, 2, limit)))
+    val Seq(local) = events(search("re_filt_flat"))
+    val Seq(dist) = withGate("0")(events(search("re_filt_flat")))
+    assert(Seq(local, dist).map(e => (e.op, e.route)) ==
+      Seq("ann.exact" -> Route.Local, "ann.exact" -> Route.Distributed), Seq(local, dist))
+  }
+
   test("top-k rewrite: the search posts one event, a cached rewrite none") {
     import graft.functions.{array_distance, floatVec, toFloatVec}
     Ann.buildIndex(emb, "embedding", "vec_id", "re_rule",
