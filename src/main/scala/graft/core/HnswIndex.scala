@@ -746,14 +746,9 @@ object HnswFormat {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def readFile(path: String): HnswIndex =
-    readBytes(java.nio.file.Files.readAllBytes(new File(path).toPath))
-
-  /** Decode a `.hnsw` image already in memory — the broadcast coarse
-   *  quantizer (IVF_HNSW probe selection) deserializes executor-side from
-   *  bytes without touching the filesystem. */
-  def readBytes(bytes: Array[Byte]): HnswIndex = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+  def readFile(path: String): HnswIndex = {
+    val bb = ByteBuffer.wrap(java.nio.file.Files.readAllBytes(new File(path).toPath))
+      .order(ByteOrder.LITTLE_ENDIAN)
     require(bb.getInt() == Magic, "not a .hnsw image")
     val ver = bb.getInt(); require(ver == 1, s"unsupported .hnsw version $ver")
     val dim = bb.getInt()

@@ -168,6 +168,8 @@ object PcaCodec {
     java.nio.file.Files.write(java.nio.file.Paths.get(path), bb.array())
   }
 
+  /** Decodes pca.bin; serving reads it through `graft.index.ShardCache.pca`,
+   *  once per file generation. */
   def read(path: String): Pca = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -177,26 +179,6 @@ object PcaCodec {
     val rot = Array.fill(outDim)(Array.fill(inputDim)(bb.getFloat))
     Pca(rot, mean)
   }
-
-  /** path → ((mtime, size), transform), process-wide — a PCA is frozen at
-   *  build time (vacuum rewrites parquet, never the transform), but a
-   *  same-name rebuild in the same JVM rewrites pca.bin at the same path;
-   *  fingerprinting the file keeps serving from transforming queries with a
-   *  stale rotation/mean after such a rebuild (the path + length + mtime
-   *  guard of the driver's `BaseRows` cache), and the new read REPLACES the old
-   *  entry, so repeated rebuilds hold one transform per path (the
-   *  coarse-graph caches' rule, Ann.coarseGraphCache). Serving must not
-   *  re-read 16 KB per query, so the hit path is one stat, not one read. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Pca)]()
-  def cached(path: String): Pca = {
-    val p = java.nio.file.Paths.get(path)
-    val fp = (java.nio.file.Files.getLastModifiedTime(p).toMillis, java.nio.file.Files.size(p))
-    cache.compute(path, (_, old) =>
-      if (old != null && old._1 == fp) old else (fp, read(path)))._2
-  }
-
-  /** Number of cached transforms (one per index path). */
-  private[graft] def cachedCount: Int = cache.size
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix. Returns
    *  (eigenvalues, eigenvector matrix with vectors as COLUMNS). */

@@ -383,22 +383,17 @@ object Ann {
     // index, and hand the ENGINE the transformed vectors — from here down
     // the index neither knows nor cares a transform exists; queries map
     // through the same file in prepQuery.
-    val (data, origDim, pcaPath, chainVariant) = if (params.pcaDim > 0) {
+    val chain: Option[(graft.core.PcaCodec.Pca, String)] = if (params.pcaDim > 0) {
       require(engine == AnnEngine.Flat || engine == AnnEngine.IvfFlat ||
         engine == AnnEngine.IvfPq,
         s"PCA pre-transform supports flat/ivfflat/ivfpq terminals (got ${params.engine})")
       require(metric eq Metric.L2,
         "PCA pre-transform supports the l2 metric (centering shifts IP/cosine values)")
       import spark.implicits._
-      val inDim = inferDim(data0)
       val sample = data0.orderBy("id").limit(params.trainSample)
         .select("vec").as[Array[Float]].collect()
-      val pca = graft.core.PcaCodec.fit(sample, params.pcaDim, params.pcaVariant)
-      val path = s"$dir/pca.bin"
-      graft.core.PcaCodec.write(path, pca)
-      val pcaB = spark.sparkContext.broadcast(pca)
-      val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-      (data0.withColumn("vec", tUdf(col("vec"))), inDim, path, params.pcaVariant)
+      Some((graft.core.PcaCodec.fit(sample, params.pcaDim, params.pcaVariant),
+        params.pcaVariant))
     } else if (params.opqChain) {
       // OPQ chain over the ivfpq terminal (`OPQ<m>,IVF<n>,PQ<m>`): the
       // rotation is fitted PQ-aware on the sample (OpqCodec.train — FAISS
@@ -424,13 +419,15 @@ object Ann {
             sample.map(v => VectorOps.normalize(v.clone())) else sample
           OpqCodec.train(prepped, params.pqM).rotation
         }
-      val pca = graft.core.PcaCodec.Pca(rot, new Array[Float](inDim))
-      val path = s"$dir/pca.bin"
-      graft.core.PcaCodec.write(path, pca)
-      val pcaB = spark.sparkContext.broadcast(pca)
-      val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-      (data0.withColumn("vec", tUdf(col("vec"))), inDim, path, "q")
-    } else (data0, 0, "", "")
+      Some((graft.core.PcaCodec.Pca(rot, new Array[Float](inDim)), "q"))
+    } else None
+    val (data, origDim, pcaPath, chainVariant) = chain match {
+      case Some((pca, variant)) =>
+        val path = s"$dir/pca.bin"
+        graft.core.PcaCodec.write(path, pca)
+        (data0.withColumn("vec", pcaCol(spark, path, col("vec"))), pca.inputDim, path, variant)
+      case None => (data0, 0, "", "")
+    }
 
     val srcFiles = sourceRootPaths(df)
     val built = engine.build(data, name, dir, metric, params)
@@ -568,19 +565,17 @@ object Ann {
 
   // ----------------------------------------------------------------- search
 
-  /** Serializable HNSW probe-selection accelerator (`IVF<n>_HNSW<m>`): the
-   *  `coarse.hnsw` image travels as bytes (broadcast- and closure-safe) and
-   *  deserializes through a process-wide cache keyed by the file
-   *  fingerprint — one graph decode per JVM no matter how many tasks
-   *  deserialize the closure (the graph at nlist ≈ 10⁵–10⁶ is tens of MB;
-   *  a per-task decode would cost more than the O(nlist) scan it
-   *  replaces). L2 graph search is read-only with per-call scratch, so the
-   *  shared instance serves all task threads. The graph beam width is
-   *  max([[CoarseEfSearch]], 2·nprobe) (FAISS quantizer efSearch analog). */
-  private[graft] final class CoarseProbe(bytes: Array[Byte],
-      path: String, fingerprint: String) extends Serializable {
-    @transient private lazy val graph: HnswIndex =
-      cachedCoarseGraph(path, fingerprint, bytes)
+  /** Serializable HNSW probe-selection accelerator (`IVF<n>_HNSW<m>`): it
+   *  carries the `coarse.hnsw` path, so a task closure ships only the path,
+   *  and resolves the graph through [[ShardCache]] once per instance — one
+   *  decode per JVM and file generation, however many tasks deserialize the
+   *  closure (the graph at nlist ≈ 10⁵–10⁶ is tens of MB; a per-task decode
+   *  would cost more than the O(nlist) scan it replaces). L2 graph search is
+   *  read-only with per-call scratch, so the shared graph serves all task
+   *  threads. The graph beam width is max([[CoarseEfSearch]], 2·nprobe)
+   *  (FAISS quantizer efSearch analog). */
+  private[graft] final class CoarseProbe(path: String) extends Serializable {
+    @transient private lazy val graph: HnswIndex = ShardCache.coarseGraph(path)
     def select(query: Array[Float], nprobe: Int): Array[Int] =
       graph.search(query, nprobe, math.max(CoarseEfSearch, 2 * nprobe))._1
   }
@@ -588,72 +583,11 @@ object Ann {
   /** Beam floor of the coarse probe-selection graph search. */
   private val CoarseEfSearch = 64
 
-  /** path → (generation fingerprint, decoded coarse graph), process-wide
-   *  and GENERATION-EVICTING: a rebuild changes the (mtime, length)
-   *  fingerprint and the new decode REPLACES the old graph under the same
-   *  path key (as a [[BaseRows]] index table is replaced), so repeated
-   *  rebuilds — e.g. a streaming maintain loop — hold at most one decoded
-   *  graph (tens of MB at nlist ≈ 10⁵–10⁶) per index, not one per
-   *  generation for the JVM lifetime. */
-  private val coarseGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, HnswIndex)]()
-  private def cachedCoarseGraph(path: String, fp: String,
-      bytes: Array[Byte]): HnswIndex =
-    coarseGraphCache.compute(path, (_, old) =>
-      if (old != null && old._1 == fp) old else (fp, HnswFormat.readBytes(bytes)))._2
-
-  /** path → (generation fingerprint, probe) — same replacement rule as
-   *  [[coarseGraphCache]], so the map holds one entry (one byte image) per
-   *  index path. */
-  private val coarseProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, CoarseProbe)]()
-
-  /** Load the probe-selection accelerator for an index, or null when the
-   *  index has none (`coarseHnswM == 0`). Cached per file generation:
-   *  single-query serves stopped paying a file read + graph decode per
-   *  query. */
+  /** The probe-selection accelerator of an index, or null when the index
+   *  has none (`coarseHnswM == 0`). */
   private[graft] def coarseProbe(spark: SparkSession, meta: IndexMeta): CoarseProbe =
     if (meta.coarseHnswM == 0) null
-    else {
-      val dir = IndexCatalog.indexDir(root(spark), meta.name)
-      val path = s"$dir/coarse.hnsw"
-      val f = new java.io.File(path)
-      val graphFp = s"$path:${f.lastModified}:${f.length}"
-      coarseProbeCache.compute(path, (_, old) =>
-        if (old != null && old._1 == graphFp) old
-        else (graphFp, new CoarseProbe(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), path, graphFp)))._2
-    }
-
-  /** path → (probe instance, its Spark broadcast): executor-side batch/ADC
-   *  probe UDFs must NOT capture the CoarseProbe in the task closure — the
-   *  full coarse.hnsw byte image (tens of MB at nlist ≈ 10⁵–10⁶) would ship
-   *  in every stage's task binary, unlike the centroid table broadcast right
-   *  next to it. Keyed on the probe INSTANCE: [[coarseProbe]] replaces its
-   *  cached instance exactly when the generation changes, so a stale
-   *  broadcast is replaced at the same moment (the old one is unreferenced
-   *  and the ContextCleaner reclaims it). */
-  private val coarseProbeBCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (CoarseProbe, org.apache.spark.broadcast.Broadcast[CoarseProbe])]()
-
-  /** [[coarseProbe]] wrapped in a cached Spark broadcast (null when the
-   *  index has no coarse graph) — the executor-UDF form. */
-  private[graft] def coarseProbeBroadcast(spark: SparkSession, meta: IndexMeta)
-      : org.apache.spark.broadcast.Broadcast[CoarseProbe] = {
-    val p = coarseProbe(spark, meta)
-    if (p == null) null
-    else {
-      val path = s"${IndexCatalog.indexDir(root(spark), meta.name)}/coarse.hnsw"
-      coarseProbeBCache.compute(path, (_, old) =>
-        if (old != null && (old._1 eq p)) old
-        else (p, spark.sparkContext.broadcast(p)))._2
-    }
-  }
-
-  /** Test hook: (decoded-graph entries, probe entries, broadcast entries) —
-   *  eviction specs assert rebuild loops hold one entry per index path. */
-  private[graft] def coarseCacheSizes: (Int, Int, Int) =
-    (coarseGraphCache.size, coarseProbeCache.size, coarseProbeBCache.size)
+    else new CoarseProbe(s"${IndexCatalog.indexDir(root(spark), meta.name)}/coarse.hnsw")
 
   /** Probe selection for IVF-family serving: plain IVF ranks the centroid
    *  table directly; IMI indexes (imiB > 0) decompose into per-half distance
@@ -665,7 +599,7 @@ object Ann {
    *  At nprobe ≥ nlist the graph is bypassed (every cell probed — trivially
    *  exact, which is what the saturation oracles pin). Static
    *  (cents, imiB, coarse) signature so executor-side UDFs capture only
-   *  broadcast/serializable values. */
+   *  broadcast/serializable values (the probe is a path). */
   private[graft] def selectProbes(cents: Array[Array[Float]], imiB: Int,
       query: Array[Float], nprobe: Int, coarse: CoarseProbe = null): Array[Int] =
     if (imiB > 0) KMeansLite.nearestPImi(cents, imiB, query, nprobe)
@@ -798,11 +732,20 @@ object Ann {
         "Use a plain PCA/PCAR full-dim, flat, or ivfflat index.")
   }
 
+  /** `c` mapped through the frozen transform at `pcaPath` (`inverse`: back
+   *  through Rᵀ·y + mean) by an executor UDF over one broadcast of it. */
+  private[index] def pcaCol(spark: SparkSession, pcaPath: String, c: Column,
+      inverse: Boolean = false): Column = {
+    val pcaB = spark.sparkContext.broadcast(ShardCache.pca(pcaPath))
+    if (inverse) udf((y: Array[Float]) => pcaB.value.inverseTransform(y)).apply(c)
+    else udf((v: Array[Float]) => pcaB.value.transform(v)).apply(c)
+  }
+
   private[index] def prepQuery(meta: IndexMeta, query0: Array[Float]): Array[Float] = {
     val query = if (meta.pcaFile.nonEmpty) {
       require(query0.length == meta.inputDim,
         s"query dimension ${query0.length} != index input dimension ${meta.inputDim}")
-      graft.core.PcaCodec.cached(meta.pcaFile).transform(query0)
+      ShardCache.pca(meta.pcaFile).transform(query0)
     } else query0
     require(query.length == meta.dim,
       s"query dimension ${query.length} != index dimension ${meta.dim}")
@@ -1721,9 +1664,7 @@ object Ann {
       require(meta.pcaVariant != "w",
         s"reconstruct: whitened PCAW index '${meta.name}' has no orthonormal " +
         "inverse (FAISS PCAMatrix reverse_transform requires is_orthonormal)")
-      val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-      val invUdf = udf((y: Array[Float]) => pcaB.value.inverseTransform(y))
-      out.withColumn("vector", invUdf(col("vector")))
+      out.withColumn("vector", pcaCol(spark, meta.pcaFile, col("vector"), inverse = true))
     }
     back.orderBy("row_id")
   }

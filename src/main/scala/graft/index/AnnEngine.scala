@@ -14,8 +14,8 @@ import graft.core.{DiskannFormat, GraphIndex, HnswFormat, HnswIndex, LshCodec, M
   Route, Sq8Codec, SqPackedCodec, VamanaIndex, VectorOps}
 import graft.functions.{array_distance_sq, array_negative_inner_product, floatVec, mkCol,
   mkExpr, toFloatVec}
-import Ann.{BuildParams, IdFilter, coarseProbe, coarseProbeBroadcast, inferDim,
-  localHitRows, metricDistanceCol, normalizeCol, normalizeVecUdf, notTombstoned,
+import Ann.{BuildParams, IdFilter, coarseProbe, inferDim,
+  localHitRows, metricDistanceCol, normalizeCol, normalizeVecUdf, notTombstoned, pcaCol,
   prepQuery, probeFilter, probeJoinCond, readRotation, refineFactor, refineStage, root,
   selectProbes, strideSample, writeClustered, writeCoarseHnsw}
 
@@ -181,15 +181,14 @@ object AnnEngine {
 
   /** Per-query probe set as an executor UDF over the broadcast centroid
    *  table — the same selection ([[Ann.selectProbes]], coarse graph and IMI
-   *  included) as the single-query scans. The coarse graph rides its own
-   *  cached broadcast, never the task closure. */
+   *  included) as the single-query scans. The closure carries the coarse
+   *  graph's path; each executor decodes it once through [[ShardCache]]. */
   private[index] def probesUdf(spark: SparkSession, meta: IndexMeta,
       centsB: Broadcast[Array[Array[Float]]]): UserDefinedFunction = {
     val np = meta.nprobe
     val imiB = meta.imiB
-    val coarseB = coarseProbeBroadcast(spark, meta)
-    udf((q: Array[Float]) =>
-      selectProbes(centsB.value, imiB, q, np, if (coarseB == null) null else coarseB.value))
+    val coarse = coarseProbe(spark, meta)
+    udf((q: Array[Float]) => selectProbes(centsB.value, imiB, q, np, coarse))
   }
 
   /** IVF cell assignment — shared by build and append, so an appended copy
@@ -1315,11 +1314,8 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       .select(col(idColumn).cast(LongType).as("id"), toFloatVec(col(column)).as("vec"))
       .where(col(idColumn).isNotNull && col(column).isNotNull)
       .withColumn("vec", checkUdf(col("vec")))
-    val transformed = if (meta.pcaFile.isEmpty) data0 else {
-      val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-      val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-      data0.withColumn("vec", tUdf(col("vec")))
-    }
+    val transformed = if (meta.pcaFile.isEmpty) data0
+      else data0.withColumn("vec", pcaCol(spark, meta.pcaFile, col("vec")))
     val data = storedInput(transformed, meta.metricObj)
     val n = data.count()
     if (n == 0) return meta
@@ -1378,9 +1374,8 @@ object TableEngine {
   private[index] def queryCol(spark: SparkSession, meta: IndexMeta, q: Column): Column = {
     val cosine = meta.metricObj eq Metric.Cosine
     if (meta.pcaFile.nonEmpty) {
-      val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-      val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-      if (cosine) toFloatVec(normalizeCol(tUdf(q))) else tUdf(q)
+      val t = pcaCol(spark, meta.pcaFile, q)
+      if (cosine) toFloatVec(normalizeCol(t)) else t
     } else if (cosine) toFloatVec(normalizeCol(q))
     else q
   }

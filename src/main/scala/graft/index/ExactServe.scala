@@ -45,9 +45,9 @@ private[graft] object ExactServe {
     val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
     // the SAME graph selection as the distributed scans — the job-free
     // route must answer identically to the cluster route at any nprobe.
-    // Resolved PER CALL (Ann.coarseProbe is cached per generation) so a
-    // rebuilt coarse graph reaches this route exactly when it reaches the
-    // distributed scans
+    // Resolved PER CALL (its graph through ShardCache, per file
+    // generation) so a rebuilt coarse graph reaches this route exactly when
+    // it reaches the distributed scans
     val probes: Array[Int] =
       if (t.cents != null && nprobe < meta.nlist)
         Ann.selectProbes(t.cents, meta.imiB, query, nprobe, Ann.coarseProbe(spark, meta))

@@ -98,20 +98,40 @@ object IndexCatalog {
   def exists(root: String, name: String): Boolean =
     new File(s"${indexDir(root, name)}/metadata.json").isFile
 
+  /** Writes `metadata.json`, with the paths of files under the index
+   *  directory stored relative to it, so the directory can move to another
+   *  root and two copies of one index write the same bytes; a path outside
+   *  it (an index sharing another's data) is stored absolute. */
   def save(root: String, meta: IndexMeta): Unit = {
     val dir = new File(indexDir(root, meta.name))
     dir.mkdirs()
+    val base = dir.getAbsoluteFile.toPath.normalize
+    val rel = (p: String) => {
+      val f = Paths.get(p).toAbsolutePath.normalize
+      if (p.isEmpty) p else if (f.startsWith(base)) base.relativize(f).toString else f.toString
+    }
     val tmp = new File(dir, "metadata.json.tmp")
-    Files.writeString(tmp.toPath, Serialization.writePretty(meta))
+    Files.writeString(tmp.toPath, Serialization.writePretty(mapPaths(meta, rel)))
     Files.move(tmp.toPath, new File(dir, "metadata.json").toPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Reads `metadata.json`, resolving relative paths under the index
+   *  directory; absolute paths and earlier builds' `<root>/...` paths load
+   *  as stored. */
   def load(root: String, name: String): IndexMeta = {
-    val f = new File(s"${indexDir(root, name)}/metadata.json")
+    val dir = indexDir(root, name)
+    val f = new File(s"$dir/metadata.json")
     require(f.isFile, s"ANN index '$name' not found under $root")
-    JsonMethods.parse(Files.readString(f.toPath)).extract[IndexMeta]
+    val resolve = (p: String) =>
+      if (p.isEmpty || new File(p).isAbsolute || p.startsWith(s"$root/")) p else s"$dir/$p"
+    mapPaths(JsonMethods.parse(Files.readString(f.toPath)).extract[IndexMeta], resolve)
   }
+
+  /** `meta` with `f` applied to each path of a file it owns. */
+  private def mapPaths(meta: IndexMeta, f: String => String): IndexMeta =
+    meta.copy(sourcePath = f(meta.sourcePath), pcaFile = f(meta.pcaFile),
+      shards = meta.shards.map(sh => sh.copy(file = f(sh.file), idsFile = f(sh.idsFile))))
 
   def list(root: String): Seq[IndexMeta] = {
     val d = new File(root)

@@ -1003,14 +1003,15 @@ object TextOps {
   }
 
   /**
-   * Exact embedding-cosine near-dup pairs, auto-routed by estimated table
-   * size (`spark.graft.neardup.broadcastMaxBytes`, default 256 MB):
+   * Exact embedding-cosine near-dup pairs, routed by estimated table size
+   * (route op `text.cosineExactPairs`, rows × (4·dim + 32) bytes, against
+   * the one gate `spark.graft.localMaxBytes`):
    *
-   *  - below: gemm-style broadcast self-join — the vector table broadcasts
+   *  - within: gemm-style broadcast self-join — the vector table broadcasts
    *    once as flat arrays, each task streams its rows against the whole
    *    broadcast side (the lock-step analog of the reference's batch
    *    distance, rust_lib/src/provider.rs:248-440);
-   *  - above: block-partitioned (i,j) tile join — rows hash into T blocks by
+   *  - beyond: block-partitioned (i,j) tile join — rows hash into T blocks by
    *    id, each of the T(T+1)/2 block-pair tiles is one task holding only
    *    its two blocks, so no executor (and no driver) ever materializes the
    *    table. Same float-prefilter + double-verify per pair → the two routes
@@ -1026,16 +1027,10 @@ object TextOps {
     import spark.implicits._
     val base = df.select(col(idCol).cast(LongType).as("id"),
       toFloatVec(col(vecCol)).as("v")).as[(Long, Array[Float])]
-    val maxBytes = spark.conf.getOption("spark.graft.neardup.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val head = base.take(1)
-    if (head.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType),
-          StructField("sim", DoubleType))))
-    val estBytes = base.count() * (head(0)._2.length * 4L + 32L)
+    val estBytes =
+      base.take(1).headOption.fold(0L)(h => base.count() * (h._2.length * 4L + 32L))
     val cut = threshold - margin
-    if (estBytes <= maxBytes) {
+    if (Route.local(spark, "text.cosineExactPairs", estBytes)) {
       val side = base.collect().sortBy(_._1)
       val bc = spark.sparkContext.broadcast(side)
       base.mapPartitions { it =>

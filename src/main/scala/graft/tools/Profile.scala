@@ -2,15 +2,17 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.index.ShardCache
 
 /**
  * Per-stage profile of named `SparkEntry.queries` entries, under Bench's
  * environment contract (`SPARK_GRAFT_CPUS` cores, `local[cpus]`, shuffle
  * partitions = cpus, memoized index builds). Each entry runs once untimed,
  * then once timed under [[StageStats]], and prints one JSON line:
- * `{"entry", "wall_s", "jobs", "stages": [...], "routes": [...]}` with the
- * timed run's job count, the fields of [[StageStats.Stage]] and the timed
- * run's route decisions.
+ * `{"entry", "wall_s", "jobs", "file_loads", "stages": [...], "routes": [...]}`
+ * with the timed run's job count, its index-file decodes (misses of
+ * `graft.index.ShardCache`), the fields of [[StageStats.Stage]] and the
+ * timed run's route decisions.
  *
  * Usage: runMain graft.tools.Profile <sfDir> <entry>...
  */
@@ -49,11 +51,13 @@ object Profile {
     spark.catalog.clearCache()
     stats.drain(spark.sparkContext)
     stats.clear()
+    val loads0 = ShardCache.loads
     val t0 = System.nanoTime()
     fn(spark, sfDir).count()
     val sec = (System.nanoTime() - t0) / 1e9
     stats.drain(spark.sparkContext)
     s"""{"entry":"$name","wall_s":$sec,"jobs":${stats.jobs},""" +
+      s""""file_loads":${ShardCache.loads - loads0},""" +
       s""""stages":[${stats.stages.map(_.json).mkString(",")}],""" +
       s""""routes":[${stats.routes.map(_.json).mkString(",")}]}"""
   }

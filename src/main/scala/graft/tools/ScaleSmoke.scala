@@ -58,7 +58,6 @@ object ScaleSmoke {
     // force every driver-local fast path OFF — this smoke tests the
     // distributed routes that a 100 TB deployment would take
     spark.conf.set("spark.graft.localMaxBytes", "0")
-    spark.conf.set("spark.graft.neardup.broadcastMaxBytes", "0")
 
     val ops = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Any]]
     // SPARK_GRAFT_SCALE_SKIP=a,b skips named ops: the 300× octave runs

@@ -120,7 +120,7 @@ class OpqChainSpec extends AnyFunSuite {
   test("trained OPQ chain: stored rotation is orthonormal, mean zero; inverse round-trips") {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "oc_train",
       "OPQ8,IVF4,PQ8", Ann.BuildParams(nprobe = 4))
-    val pca = PcaCodec.cached(s"${dirOf("oc_train")}/pca.bin")
+    val pca = PcaCodec.read(s"${dirOf("oc_train")}/pca.bin")
     assert(pca.mean.forall(_ == 0f))
     val r = pca.rotation
     for (i <- r.indices; j <- r.indices) {
@@ -136,7 +136,7 @@ class OpqChainSpec extends AnyFunSuite {
 
   test("reconstruct on the chain applies the inverse fold (centroid+residual, then R^T)") {
     val meta = IndexCatalog.load(Ann.root(spark), "oc_chain")
-    val pca = PcaCodec.cached(s"${dirOf("oc_chain")}/pca.bin")
+    val pca = PcaCodec.read(s"${dirOf("oc_chain")}/pca.bin")
     val cb = PqCodec.read(s"${dirOf("oc_chain")}/pq.bin")
     val cents = IndexCatalog.readCentroids(s"${dirOf("oc_chain")}/centroids.bin")
     val row = spark.read.parquet(meta.sourcePath)
@@ -240,9 +240,14 @@ class OpqChainSpec extends AnyFunSuite {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "oc_cp",
       "IVF16_HNSW8,Flat", Ann.BuildParams(nprobe = 4))
     val meta = IndexCatalog.load(Ann.root(spark), "oc_cp")
+    val path = s"${dirOf("oc_cp")}/coarse.hnsw"
+    ShardCache.forget(_ == path)
+    val loads0 = ShardCache.loads
     val a = Ann.coarseProbe(spark, meta)
     val b = Ann.coarseProbe(spark, meta)
-    assert(a eq b) // no per-query file read + decode
+    assert(a.select(q0, 4).toSeq == b.select(q0, 4).toSeq)
+    // two probes of one generation cost one decode: no per-query file read
+    assert(ShardCache.loads - loads0 == 1 && ShardCache.cachedPaths.contains(path))
     assert(KMeansLite.nearestPImi(
       Array.fill(4)(Array.fill(4)(0f)), 1, Array.fill(4)(0f), 0).isEmpty)
   }

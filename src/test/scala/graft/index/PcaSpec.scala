@@ -184,12 +184,16 @@ class PcaSpec extends AnyFunSuite {
   test("same-name rebuilds keep one cached transform per index path") {
     // each rebuild rewrites pca.bin at the same path with a new mtime; a
     // cache keyed by (path, mtime, size) would pin one transform per rebuild
-    val before = PcaCodec.cachedCount
-    for (_ <- 1 to 4) {
+    val path = s"${IndexCatalog.indexDir(Ann.root(spark), "pca_rebuilt")}/pca.bin"
+    for (round <- 1 to 4) {
       Ann.buildIndexFactory(emb, "embedding", "vec_id", "pca_rebuilt", "PCA16,Flat")
+      val loads0 = ShardCache.loads
       assert(Ann.searchHits(spark, "pca_rebuilt", q0, 1).collect().length == 1)
+      assert(Ann.searchHits(spark, "pca_rebuilt", q0, 1).collect().length == 1)
+      assert(ShardCache.loads == loads0, s"round $round: the build's decode serves")
+      assert(ShardCache.cachedPaths.count(_.endsWith("/pca_rebuilt/pca.bin")) == 1)
+      assert(ShardCache.cachedPaths.contains(path))
     }
-    assert(PcaCodec.cachedCount == before + 1)
   }
 
   test("grammar and semantic errors") {

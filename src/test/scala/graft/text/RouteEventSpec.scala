@@ -304,6 +304,15 @@ class RouteEventSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("text.cosineExactPairs: one event per call, estimate = rows × (4·dim + 32)") {
+    val est = 500L * (4 * Dim + 32)
+    def run() = TextOps.cosineExactPairs(emb, "embedding", "vec_id", 0.9)
+    assert(events(run()) == Seq(GraftRouteEvent("text.cosineExactPairs", Route.Local, est,
+      Default)))
+    assert(withGate("0")(events(run())) ==
+      Seq(GraftRouteEvent("text.cosineExactPairs", Route.Distributed, est, 0)))
+  }
+
   test("text.cc: estimate = 16 bytes per edge") {
     val s = spark
     import s.implicits._

@@ -135,8 +135,12 @@ class TextOpsSpec extends AnyFunSuite {
       (i, v)
     }
     val df = rows.toDF("vec_id", "embedding")
-    val fast = graft.text.TextOps.cosineExactPairs(df, "embedding", "vec_id", 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    def pairs(in: DataFrame, threshold: Double) =
+      graft.text.TextOps.cosineExactPairs(in, "embedding", "vec_id", threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // the broadcast route within the gate, the tiled (i,j)-block route at
+    // gate 0: both must emit the identical rows, bit-exact sims included
+    val (fast, tiled) = graft.core.RouteParity.both(spark)(pairs(df, 0.4))
     val e = df.select(col("vec_id"), toFloatVec(col("embedding")).as("v"))
     val ref = e.select(col("vec_id").as("id_a"), col("v").as("va"))
       .join(broadcast(e.select(col("vec_id").as("id_b"), col("v").as("vb"))),
@@ -146,29 +150,18 @@ class TextOpsSpec extends AnyFunSuite {
       .select("id_a", "id_b", "sim").orderBy("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(fast.nonEmpty, "test data should produce pairs")
-    assert(fast.toSeq == ref.toSeq,
-      s"gemm path diverged: ${fast.length} vs ${ref.length} pairs")
+    assert(fast == ref.toSeq, s"gemm path diverged: ${fast.length} vs ${ref.length} pairs")
+    assert(tiled == fast, s"tiled route diverged: ${tiled.length} vs ${fast.length} pairs")
 
-    // force the tiled (i,j)-block route (input "larger" than the broadcast
-    // threshold): must emit the identical rows, bit-exact sims included
-    spark.conf.set("spark.graft.neardup.broadcastMaxBytes", "1")
-    try {
-      val tiled = graft.text.TextOps.cosineExactPairs(df, "embedding", "vec_id", 0.4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(tiled.toSeq == fast.toSeq,
-        s"tiled route diverged: ${tiled.length} vs ${fast.length} pairs")
-
-      // regression: FEW distinct ids → most blocks empty; a tile whose
-      // partner block is empty must not re-emit the diagonal tile's pairs
-      val tiny = Seq(
-        (1L, Array.fill(dim)(1.0f).toSeq),
-        (2L, Array.fill(dim)(1.0f).toSeq),
-        (3L, Array.fill(dim)(-1.0f).toSeq)).toDF("vec_id", "embedding")
-      val tinyPairs = graft.text.TextOps.cosineExactPairs(tiny, "embedding", "vec_id", 0.9)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(tinyPairs.toSeq == Seq((1L, 2L)),
-        s"empty-partner tiles duplicated pairs: ${tinyPairs.toSeq}")
-    } finally spark.conf.unset("spark.graft.neardup.broadcastMaxBytes")
+    // regression: FEW distinct ids → most blocks empty; a tile whose
+    // partner block is empty must not re-emit the diagonal tile's pairs
+    val tiny = Seq(
+      (1L, Array.fill(dim)(1.0f).toSeq),
+      (2L, Array.fill(dim)(1.0f).toSeq),
+      (3L, Array.fill(dim)(-1.0f).toSeq)).toDF("vec_id", "embedding")
+    val tinyPairs = graft.core.RouteParity.distributed(spark)(pairs(tiny, 0.9))
+    assert(tinyPairs.map(p => (p._1, p._2)) == Seq((1L, 2L)),
+      s"empty-partner tiles duplicated pairs: $tinyPairs")
   }
 
   test("signature shapes: NumHashes minhashes, NumBands bands") {

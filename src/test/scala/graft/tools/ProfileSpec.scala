@@ -76,6 +76,7 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     val js = JsonMethods.parse(line)
     assert((js \ "entry").extract[String] == "events_agg")
     assert((js \ "wall_s").extract[Double] > 0)
+    assert((js \ "file_loads").extract[Long] == 0, line) // no index in this entry
     val stages = (js \ "stages").extract[Seq[JValue]]
     assert(stages.exists(st => (st \ "tasks").extract[Int] > 0), line)
     for (st <- stages; f <- Seq("stage", "wall_ms", "task_ms", "scheduler_delay_ms",
