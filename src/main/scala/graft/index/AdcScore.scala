@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BinaryType, DataType, FloatType, IntegerType, LongType}
 
 /**
- * Per-plan executor state for codegen'd ADC scoring: the PQ codebook,
- * centroids (IVF only), and the driver-frozen (qid → ADC query) map, all as
- * broadcasts, plus the [[Ann.AdcLutCache]] plan token. `score` is the body
+ * Per-plan executor state for codegen'd ADC scoring: the PQ codebook and
+ * the driver-frozen (qid → ADC query) map as broadcasts, the [[Coarse]]
+ * quantizer (residual ivfpq codes only), plus the [[Ann.AdcLutCache]] plan
+ * token. `score` is the body
  * the generated code calls per joined row — LUTs come from the executor
  * cache keyed (qid, probe), so per-row work is m byte-lookups.
  */
 final class AdcScoreState(
     val cbB: Broadcast[PqCodec.Codebook],
-    val centsB: Broadcast[Array[Array[Float]]], // null for plain pq
+    val coarse: Coarse, // residual codes only, else null
     val qArrB: Broadcast[Array[Array[Float]]], // indexed by driver-frozen qid
     val l2: Boolean,
     val token: Long,
@@ -34,8 +35,8 @@ final class AdcScoreState(
   def score(qid: Long, probe: Int, code: Array[Byte]): Float = {
     val q = qArrB.value(qid.toInt)
     val e = Ann.AdcLutCache.getIn(sub, qid, probe, q) {
-      if (centsB == null || probe < 0) (PqCodec.lut(cb, q, l2), 0.0f)
-      else PqCodec.residualLut(cb, q, centsB.value(probe), l2, PqCodec.lut(cb, q, l2 = false))
+      if (coarse == null || probe < 0) (PqCodec.lut(cb, q, l2), 0.0f)
+      else PqCodec.residualLut(cb, q, coarse.cents(probe), l2, PqCodec.lut(cb, q, l2 = false))
     }
     AdcQuery.adc(e.lut, cbK, bits, cb.m, code) + e.off
   }
@@ -131,12 +132,12 @@ case class PqAdcScore(qid: Expression, probe: Expression, code: Expression,
  * reconstruction's DOUBLE-fold metric distance (range compares the double
  * fold of the decoded vector against the radius — the float ADC LUT cannot
  * provide that, so range scoring gets its own kernel instead of
- * [[AdcScoreState]]). `centsB` is null except for ivfpq (residual codes);
+ * [[AdcScoreState]]). `coarse` is null except for ivfpq (residual codes);
  * `bits` < 8 marks packed ivfsq rows.
  */
 final class QuantRangeState(
     val cbB: Broadcast[PqCodec.Codebook],
-    val centsB: Broadcast[Array[Array[Float]]], // ivfpq only, else null
+    val coarse: Coarse, // ivfpq only, else null
     val l2: Boolean,
     val bits: Int = 8) extends Serializable {
 
@@ -146,8 +147,8 @@ final class QuantRangeState(
       q: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
     val vhat =
       if (bits < 8) Ann.sqDecode(cb, bits, code)
-      else if (centsB != null && cluster >= 0)
-        PqCodec.decodeResidual(cb, code, centsB.value(cluster))
+      else if (coarse != null && cluster >= 0)
+        PqCodec.decodeResidual(cb, code, coarse.cents(cluster))
       else PqCodec.decode(cb, code)
     Ann.doubleFoldDist(vhat, q.toFloatArray(), l2)
   }

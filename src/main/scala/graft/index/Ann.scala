@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, InSet, Literal, Not}
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.internal.SQLConf
-import graft.core.{Metric, VamanaIndex, HnswIndex, VectorOps, HnswFormat, LshCodec}
+import graft.core.{Metric, VamanaIndex, HnswIndex, VectorOps, LshCodec}
 import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_product,
   array_cosine_similarity}
 
@@ -56,11 +56,12 @@ object Ann {
       refine: Boolean = false,             // pq/ivfpq: RFlat exact re-rank stage
       refineK: Int = 0,                    // RFlat k_factor (0 = session conf)
       opq: Boolean = false,                // pq: learned OPQ rotation pre-transform
-      // pq/ivfpq: seed codebooks (and ivfpq coarse centroids) verbatim from
-      // the k lowest-id vectors instead of k-means training — deterministic
-      // and SQL-replayable, so the ADC ranking bit-oracles against DuckDB.
-      // 0 = train (default). ivfpq seed mode uses the nlist lowest ids as
-      // coarse centroids and the seedK lowest ids' residuals as PQ seeds.
+      // seed mode instead of k-means training — deterministic and
+      // SQL-replayable, so rankings bit-oracle against DuckDB. 0 = train
+      // (default). Every IVF family (ivfflat, ivfpq, ivfsq) seeds its
+      // coarse centroids from the nlist lowest-id vectors (IMI: the halves
+      // of the 2^b lowest); pq/ivfpq seed the PQ codebook from the seedK
+      // lowest-id vectors (ivfpq: their residuals against their cells).
       seedK: Int = 0,
       // lsh: code width in bits (FAISS `LSH<nbits>`); 0 = min(dim, 64).
       // Capped at LshCodec.MaxBits (64) so a code is one BIGINT column.
@@ -158,7 +159,7 @@ object Ann {
       // terminal (IVF trains/assigns in rotated space, PQ encodes rotated
       // residuals, prepQuery rotates queries through the stored fold)
       // the chain composes with the HNSW coarse quantizer: the graph is
-      // built over the ROTATED-space centroids (writeCoarseHnsw runs inside
+      // built over the ROTATED-space centroids (Coarse.write runs inside
       // the ivfpq terminal, after the chain transform), and prepQuery
       // rotates queries before probe selection — so the composition needs
       // no new serve logic, only this parse arm
@@ -389,9 +390,7 @@ object Ann {
         s"PCA pre-transform supports flat/ivfflat/ivfpq terminals (got ${params.engine})")
       require(metric eq Metric.L2,
         "PCA pre-transform supports the l2 metric (centering shifts IP/cosine values)")
-      import spark.implicits._
-      val sample = data0.orderBy("id").limit(params.trainSample)
-        .select("vec").as[Array[Float]].collect()
+      val sample = lowestIds(data0, params.trainSample, cosine = false)
       Some((graft.core.PcaCodec.fit(sample, params.pcaDim, params.pcaVariant),
         params.pcaVariant))
     } else if (params.opqChain) {
@@ -407,18 +406,12 @@ object Ann {
       // l2/ip/cosine (normalize∘rotate = rotate∘normalize).
       require(engine == AnnEngine.IvfPq,
         s"the OPQ chain form targets the ivfpq terminal (got ${params.engine})")
-      import spark.implicits._
       val inDim = inferDim(data0)
       val rot =
         if (params.seedK > 0)
           Array.tabulate(inDim, inDim)((i, j) => if (j == inDim - 1 - i) 1.0f else 0.0f)
-        else {
-          val sample = data0.orderBy("id").limit(params.trainSample)
-            .select("vec").as[Array[Float]].collect()
-          val prepped = if (metric eq Metric.Cosine)
-            sample.map(v => VectorOps.normalize(v.clone())) else sample
-          OpqCodec.train(prepped, params.pqM).rotation
-        }
+        else OpqCodec.train(lowestIds(data0, params.trainSample, metric eq Metric.Cosine),
+          params.pqM).rotation
       Some((graft.core.PcaCodec.Pca(rot, new Array[Float](inDim)), "q"))
     } else None
     val (data, origDim, pcaPath, chainVariant) = chain match {
@@ -485,23 +478,14 @@ object Ann {
     if (cosine) sample.map(v => VectorOps.normalize(v.clone())) else sample
   }
 
-  /** Build + persist the HNSW coarse quantizer over the centroid table
-   *  (`coarse.hnsw`, the FAISS quantizer=IndexHNSWFlat analog; L2 — the
-   *  same metric every IVF assignment/probe ranking here uses). Driver-side
-   *  by design: the centroid table is already a driver-resident artifact
-   *  (readCentroids loads it whole on every serve), so an O(nlist·log nlist)
-   *  insert loop over it adds nothing new to the scale profile — at the
-   *  nlist ≈ √N ≈ 10⁵–10⁶ a 100 TB corpus wants, the graph builds in
-   *  seconds once per index. The graph is frozen WITH the centroids:
-   *  append/vacuum/merge never move centroids, so they never invalidate it. */
-  private[index] def writeCoarseHnsw(dir: String, cents: Array[Array[Float]],
-      dim: Int, m: Int): Unit = if (m > 0) {
-    val ix = new HnswIndex(dim, Metric.L2, m)
-    // deterministic batch-parallel bulk build (HnswIndex.addAll): the
-    // sequential insert loop cost 31 s at 65,536 cells — minutes of serial
-    // driver time at the nlist ≈ 10⁶ a 100 TB corpus wants
-    ix.addAll(cents)
-    HnswFormat.writeFile(ix, s"$dir/coarse.hnsw")
+  /** The `n` lowest-id vectors, normalized when `cosine` — one collect,
+   *  no sampling pass: the deterministic, SQL-replayable training input of
+   *  seed mode, PCA, the OPQ chain and LSH thresholds. */
+  private[index] def lowestIds(data: DataFrame, n: Int, cosine: Boolean): Array[Array[Float]] = {
+    val spark = data.sparkSession
+    import spark.implicits._
+    val seeds = data.orderBy("id").limit(n).select("vec").as[Array[Float]].collect()
+    if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
   }
 
   /** Per-cluster max L2 distance to the assigned centroid, accumulated in
@@ -509,11 +493,10 @@ object Ann {
    *  upper bound on the true distance (double-accumulation error ~dim·2⁻⁵²
    *  is absorbed by the ulp round-up), so pruning with it can only
    *  over-probe, never miss. */
-  private[index] def clusterRadii(clustered: DataFrame,
-      centsB: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+  private[index] def clusterRadii(clustered: DataFrame, coarse: Coarse,
       nlist: Int): Array[Float] = {
     val distUdf = udf((v: Array[Float], cl: Int) => {
-      val c = centsB.value(cl)
+      val c = coarse.cents(cl)
       Math.nextUp(math.sqrt(VectorOps.l2SqDoubleAcc(v, c)).toFloat)
     })
     val maxes = clustered
@@ -546,14 +529,13 @@ object Ann {
    *  bound quantized range search needs (its per-row filter compares
    *  d(q, x̂), which raw-vector radii do not bound). Same double-accumulate
    *  + ulp-round-up contract, so pruning can only over-probe. */
-  private[index] def sqClusterRadii(stored: DataFrame,
-      centsB: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+  private[index] def sqClusterRadii(stored: DataFrame, coarse: Coarse,
       cbB: org.apache.spark.broadcast.Broadcast[PqCodec.Codebook],
       nlist: Int, bits: Int = 8): Array[Float] = {
     val distUdf = udf((code: Array[Byte], cl: Int) => {
       val vhat = sqDecode(cbB.value, bits, code)
       Math.nextUp(math.sqrt(
-        VectorOps.l2SqDoubleAcc(vhat, centsB.value(cl))).toFloat)
+        VectorOps.l2SqDoubleAcc(vhat, coarse.cents(cl))).toFloat)
     })
     val maxes = stored
       .select(col("cluster").cast(IntegerType).as("cluster"),
@@ -564,47 +546,6 @@ object Ann {
   }
 
   // ----------------------------------------------------------------- search
-
-  /** Serializable HNSW probe-selection accelerator (`IVF<n>_HNSW<m>`): it
-   *  carries the `coarse.hnsw` path, so a task closure ships only the path,
-   *  and resolves the graph through [[ShardCache]] once per instance — one
-   *  decode per JVM and file generation, however many tasks deserialize the
-   *  closure (the graph at nlist ≈ 10⁵–10⁶ is tens of MB; a per-task decode
-   *  would cost more than the O(nlist) scan it replaces). L2 graph search is
-   *  read-only with per-call scratch, so the shared graph serves all task
-   *  threads. The graph beam width is max([[CoarseEfSearch]], 2·nprobe)
-   *  (FAISS quantizer efSearch analog). */
-  private[graft] final class CoarseProbe(path: String) extends Serializable {
-    @transient private lazy val graph: HnswIndex = ShardCache.coarseGraph(path)
-    def select(query: Array[Float], nprobe: Int): Array[Int] =
-      graph.search(query, nprobe, math.max(CoarseEfSearch, 2 * nprobe))._1
-  }
-
-  /** Beam floor of the coarse probe-selection graph search. */
-  private val CoarseEfSearch = 64
-
-  /** The probe-selection accelerator of an index, or null when the index
-   *  has none (`coarseHnswM == 0`). */
-  private[graft] def coarseProbe(spark: SparkSession, meta: IndexMeta): CoarseProbe =
-    if (meta.coarseHnswM == 0) null
-    else new CoarseProbe(s"${IndexCatalog.indexDir(root(spark), meta.name)}/coarse.hnsw")
-
-  /** Probe selection for IVF-family serving: plain IVF ranks the centroid
-   *  table directly; IMI indexes (imiB > 0) decompose into per-half distance
-   *  lists + a heap merge over the SAME stored table
-   *  ([[KMeansLite.nearestPImi]]) — identical probe set, O(2·2^b) instead of
-   *  O(2^(2b)) distance work per query; IVF_HNSW indexes (coarse != null)
-   *  walk the centroid graph — O(ef·log nlist) instead of O(nlist) distance
-   *  work, the serve-latency lever at the nlist ≈ √N a 100 TB corpus wants.
-   *  At nprobe ≥ nlist the graph is bypassed (every cell probed — trivially
-   *  exact, which is what the saturation oracles pin). Static
-   *  (cents, imiB, coarse) signature so executor-side UDFs capture only
-   *  broadcast/serializable values (the probe is a path). */
-  private[graft] def selectProbes(cents: Array[Array[Float]], imiB: Int,
-      query: Array[Float], nprobe: Int, coarse: CoarseProbe = null): Array[Int] =
-    if (imiB > 0) KMeansLite.nearestPImi(cents, imiB, query, nprobe)
-    else if (coarse != null && nprobe < cents.length) coarse.select(query, nprobe)
-    else KMeansLite.nearestP(cents, query, nprobe)
 
   /** Trained per-bit thresholds for an lsh index built with the `t` suffix
    *  (null otherwise) — every encode site, build or serve, must pass these

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,10 +14,9 @@ import graft.core.{DiskannFormat, GraphIndex, HnswFormat, HnswIndex, LshCodec, M
   Route, Sq8Codec, SqPackedCodec, VamanaIndex, VectorOps}
 import graft.functions.{array_distance_sq, array_negative_inner_product, floatVec, mkCol,
   mkExpr, toFloatVec}
-import Ann.{BuildParams, IdFilter, coarseProbe, inferDim,
-  localHitRows, metricDistanceCol, normalizeCol, normalizeVecUdf, notTombstoned, pcaCol,
-  prepQuery, probeFilter, probeJoinCond, readRotation, refineFactor, refineStage, root,
-  selectProbes, strideSample, writeClustered, writeCoarseHnsw}
+import Ann.{BuildParams, IdFilter, inferDim, localHitRows, lowestIds, metricDistanceCol,
+  normalizeCol, normalizeVecUdf, notTombstoned, pcaCol, prepQuery, probeFilter, probeJoinCond,
+  readRotation, refineFactor, refineStage, root, strideSample, writeClustered}
 
 /**
  * One implementation per ANN index family — the analog of the reference
@@ -40,8 +39,8 @@ sealed abstract class AnnEngine(val name: String) extends Serializable {
   /** Graph shards served through [[ShardCache]] (diskann, hnsw). */
   def isGraph: Boolean = false
 
-  /** Inverted-file layout: `centroids.bin` plus a cluster-assigned table;
-   *  nprobe applies (ivfflat, ivfpq, ivfsq). */
+  /** Inverted-file layout: a [[Coarse]] quantizer plus a cluster-assigned
+   *  table; nprobe applies (ivfflat, ivfpq, ivfsq). */
   def ivf: Boolean = false
 
   /** Stores codes instead of raw vectors, so RFlat can keep the raw vectors
@@ -178,38 +177,6 @@ object AnnEngine {
       math.sqrt(VectorOps.l2SqDoubleAcc(q, cents(c))) - radii(c) <= rq + 1e-6 * (1.0 + rq)
     }.toArray
   }
-
-  /** Per-query probe set as an executor UDF over the broadcast centroid
-   *  table — the same selection ([[Ann.selectProbes]], coarse graph and IMI
-   *  included) as the single-query scans. The closure carries the coarse
-   *  graph's path; each executor decodes it once through [[ShardCache]]. */
-  private[index] def probesUdf(spark: SparkSession, meta: IndexMeta,
-      centsB: Broadcast[Array[Array[Float]]]): UserDefinedFunction = {
-    val np = meta.nprobe
-    val imiB = meta.imiB
-    val coarse = coarseProbe(spark, meta)
-    udf((q: Array[Float]) => selectProbes(centsB.value, imiB, q, np, coarse))
-  }
-
-  /** IVF cell assignment — shared by build and append, so an appended copy
-   *  of a built row lands in the same cell. Plain IVF takes the nearest
-   *  centroid; IMI (imiB > 0) decomposes the argmin over the product table
-   *  `[c1_i ; c2_j]` (cell = i·kh + j) into per-half argmins over its half
-   *  codebooks — O(2·kh) per row and the same float arithmetic the build's
-   *  residual training and the DuckDB oracle's half-argmin CTEs run. */
-  private[index] def assignUdf(spark: SparkSession,
-      centsB: Broadcast[Array[Array[Float]]], imiB: Int): UserDefinedFunction =
-    if (imiB == 0) udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
-    else {
-      val cents = centsB.value
-      val kh = math.round(math.sqrt(cents.length.toDouble)).toInt
-      val half = cents(0).length / 2
-      val cb1B = spark.sparkContext.broadcast(Array.tabulate(kh)(i => cents(i * kh).take(half)))
-      val cb2B = spark.sparkContext.broadcast(Array.tabulate(kh)(j => cents(j).drop(half)))
-      udf((v: Array[Float]) =>
-        KMeansLite.nearest(cb1B.value, v.take(half)) * cb2B.value.length +
-          KMeansLite.nearest(cb2B.value, v.drop(half)))
-    }
 
   /** Engine-semantics distance between two vector columns: squared L2, or
    *  the negated inner product (IP, and cosine over normalized vectors). */
@@ -822,7 +789,6 @@ private[index] final case class TableJoin(joined: DataFrame, score: Column,
 private[index] final class TableQueries(val spark: SparkSession, val meta: IndexMeta,
     val queriesDf: DataFrame, vecCol: String) {
   val l2: Boolean = meta.metricObj eq Metric.L2
-  private val dir = IndexCatalog.indexDir(root(spark), meta.name)
 
   val prepped: DataFrame = {
     val p = queriesDf.withColumn(vecCol, toFloatVec(col(vecCol)))
@@ -865,8 +831,8 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
   // a query table that also has id/vec/cluster columns can't capture them
   val base: DataFrame = spark.read.parquet(meta.sourcePath)
 
-  lazy val centsB: Broadcast[Array[Array[Float]]] =
-    spark.sparkContext.broadcast(IndexCatalog.readCentroids(s"$dir/centroids.bin"))
+  /** The index's coarse quantizer (IVF indexes). */
+  val coarse: Coarse = Coarse.of(spark, meta)
 
   /** Probe join of query rows `q` against the cluster column: each query
    *  explodes to its probe set. Per-task work here is sum over the task's
@@ -876,8 +842,7 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
    *  batches round-robin the scanned rows first ([[Ann.rebalanceProbedScan]]).
    *  Returns (joined, scanned side, probed query side). */
   def probeJoin(q: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val probed = q.withColumn("__probe",
-      explode(AnnEngine.probesUdf(spark, meta, centsB)(col("__q"))))
+    val probed = q.withColumn("__probe", explode(coarse.probesCol(col("__q"), meta.nprobe)))
     val stream = if (Ann.rebalanceProbedScan(queriesDf, meta.dim))
       base.repartition(spark.sessionState.conf.numShufflePartitions) else base
     (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))), stream, probed)
@@ -885,12 +850,12 @@ private[index] final class TableQueries(val spark: SparkSession, val meta: Index
 }
 
 /** A table index's rows on the driver, one [[ExactServe]] fill: the ids,
- *  each row's IVF cell and the centroid table (null without cells), the raw
- *  vectors an RFlat index re-ranks against (null without RFlat), the
- *  family's scorer ([[TableEngine.localScorer]]) and the bytes it holds. */
+ *  each row's IVF cell (null without cells), the raw vectors an RFlat index
+ *  re-ranks against (null without RFlat), the family's scorer
+ *  ([[TableEngine.localScorer]]) and the bytes it holds, the centroid
+ *  table's included. */
 private[index] final case class LocalTable(ids: Array[Long], clusters: Array[Int],
-    cents: Array[Array[Float]], refineVecs: Array[Array[Float]], scorer: LocalScorer,
-    bytes: Long)
+    refineVecs: Array[Array[Float]], scorer: LocalScorer, bytes: Long)
 
 /** A family's driver-local scorer. `apply(query, probes)` prepares one
  *  prepped query for the probed cells (null: every cell); the returned
@@ -917,11 +882,11 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
 
   /** The family's driver-local scorer over its stored column (`stored`, in
    *  row order: `vec` or `code` as Catalyst values), with the rows' IVF
-   *  cells and the centroid table (null without cells). Loads the family's
-   *  artifacts once per [[ExactServe]] fill; per query, its scores equal
-   *  [[scored]]'s `__dd` bit for bit. */
+   *  cells (null without cells). Loads the family's artifacts once per
+   *  [[ExactServe]] fill; per query, its scores equal [[scored]]'s `__dd`
+   *  bit for bit. */
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
-      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer
+      clusters: Array[Int]): LocalScorer
 
   /** The stored rows collected to the driver, measured as [[BaseRows]]
    *  measures decoded rows, with the family's scorer. */
@@ -932,14 +897,12 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val df = spark.read.parquet(meta.sourcePath).select(cols: _*)
     val rows = GraftShim.collectInternal(df)
     val clusters = if (ivf) rows.map(_.getInt(cols.length - 1)) else null
-    val cents = if (ivf) IndexCatalog.readCentroids(
-      s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin") else null
-    val bytes = rows.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes + 32L).sum +
-      (if (cents == null) 0L else cents.iterator.map(16L + 4L * _.length).sum)
-    LocalTable(rows.map(_.getLong(0)), clusters, cents,
+    val centBytes = if (!ivf) 0L
+      else Coarse.of(spark, meta).cents.iterator.map(16L + 4L * _.length).sum
+    val bytes = rows.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes + 32L).sum + centBytes
+    LocalTable(rows.map(_.getLong(0)), clusters,
       if (meta.refine) rows.map(_.getArray(2).toFloatArray()) else null,
-      localScorer(spark, meta, rows.map(_.get(1, df.schema(1).dataType)), clusters, cents),
-      bytes)
+      localScorer(spark, meta, rows.map(_.get(1, df.schema(1).dataType)), clusters), bytes)
   }
 
   /** Stored table rows for prepped `(id, vec)` input, encoded against the
@@ -972,13 +935,12 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
   protected final def refineCols(meta: IndexMeta): Seq[Column] =
     if (meta.refine) Seq(col("vec")) else Nil
 
-  /** (centroids, probe set) for an IVF query; nprobe 0 = the index's own. */
+  /** (coarse quantizer, probe set) for an IVF query; nprobe 0 = the
+   *  index's own. */
   protected final def probes(spark: SparkSession, meta: IndexMeta, query: Array[Float],
-      nprobe: Int): (Array[Array[Float]], Array[Int]) = {
-    val cents = IndexCatalog.readCentroids(
-      s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin")
-    (cents, selectProbes(cents, meta.imiB, query,
-      if (nprobe > 0) nprobe else meta.nprobe, coarseProbe(spark, meta)))
+      nprobe: Int): (Coarse, Array[Int]) = {
+    val coarse = Coarse.of(spark, meta)
+    (coarse, coarse.probes(query, if (nprobe > 0) nprobe else meta.nprobe))
   }
 
   /** `probes` as a pruned scan of the index table (the full table if not IVF). */
@@ -987,8 +949,8 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val df = spark.read.parquet(meta.sourcePath)
     if (!ivf) df
     else {
-      val (cents, ps) = probes(spark, meta, query, nprobe)
-      probeFilter(df, ps.toSeq, cents.length)
+      val (coarse, ps) = probes(spark, meta, query, nprobe)
+      probeFilter(df, ps.toSeq, coarse.nlist)
     }
   }
 
@@ -1050,15 +1012,14 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       .map(r => (r.getLong(0), r.getFloat(1)))))
   }
 
-  /** (centroids, radii) when range search can prune clusters exactly: an
-   *  IVF index under L2 whose build stored radii.bin. */
-  private def rangeRadii(spark: SparkSession,
-      meta: IndexMeta): Option[(Array[Array[Float]], Array[Float])] = {
-    val dir = IndexCatalog.indexDir(root(spark), meta.name)
-    val path = s"$dir/radii.bin"
+  /** The cluster radii when range search can prune clusters exactly: an
+   *  IVF index under L2 whose build stored radii.bin. Read per call, since
+   *  an append rewrites the file in place. */
+  private def rangeRadii(spark: SparkSession, meta: IndexMeta): Option[Array[Float]] = {
+    val path = s"${IndexCatalog.indexDir(root(spark), meta.name)}/radii.bin"
     if (ivf && (meta.metricObj eq Metric.L2) &&
         java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-      Some((IndexCatalog.readCentroids(s"$dir/centroids.bin"), IndexCatalog.readRadii(path)))
+      Some(IndexCatalog.readRadii(path))
     else None
   }
 
@@ -1072,9 +1033,10 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val spark = df.sparkSession
     val q = rotated(spark, meta, prepQuery(meta, query))
     val scan = rangeRadii(spark, meta) match {
-      case Some((cents, radii)) =>
+      case Some(radii) =>
+        val coarse = Coarse.of(spark, meta)
         probeFilter(spark.read.parquet(meta.sourcePath),
-          AnnEngine.clusterKeep(cents, radii, q, radius).toSeq, cents.length)
+          AnnEngine.clusterKeep(coarse.cents, radii, q, radius).toSeq, coarse.nlist)
       case None => probedScan(spark, meta, q, 0)
     }
     val base = scan
@@ -1101,20 +1063,17 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val prepped = queriesDf.withColumn(vecCol, toFloatVec(col(vecCol)))
       .withColumn("__q", if (meta.opq) TableEngine.rotateCol(spark, meta, q0) else q0)
     val base = spark.read.parquet(meta.sourcePath)
-    def probeJoin(probesOf: UserDefinedFunction): DataFrame = {
-      val qprobe = prepped.withColumn("__probe", explode(probesOf(col("__q"))))
+    def probeJoin(probesOf: Column): DataFrame = {
+      val qprobe = prepped.withColumn("__probe", explode(probesOf))
       base.join(broadcast(qprobe), probeJoinCond(base, qprobe("__probe")))
     }
+    val coarse = Coarse.of(spark, meta)
     val joined = rangeRadii(spark, meta) match {
-      case Some((cents, radii)) =>
-        val centsB = spark.sparkContext.broadcast(cents)
+      case Some(radii) =>
         val radiiB = spark.sparkContext.broadcast(radii)
         probeJoin(udf((q: Array[Float]) =>
-          AnnEngine.clusterKeep(centsB.value, radiiB.value, q, radius)))
-      case None if ivf =>
-        val dir = IndexCatalog.indexDir(root(spark), meta.name)
-        probeJoin(AnnEngine.probesUdf(spark, meta, spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dir/centroids.bin"))))
+          AnnEngine.clusterKeep(coarse.cents, radiiB.value, q, radius)).apply(col("__q")))
+      case None if ivf => probeJoin(coarse.probesCol(col("__q"), meta.nprobe))
       case None => base.crossJoin(broadcast(prepped))
     }
     val scored = joined
@@ -1231,7 +1190,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
       TableJoin(t.base.crossJoin(broadcast(frozen)), score(lit(-1), t.base("code"), state),
         frozen, Some(frozen))
     } else {
-      val state = new AdcScoreState(cbB, if (residual) t.centsB else null, qArrB, t.l2,
+      val state = new AdcScoreState(cbB, if (residual) t.coarse else null, qArrB, t.l2,
         token, bits)
       val (joined, stream, probed) = t.probeJoin(frozen)
       TableJoin(joined,
@@ -1253,8 +1212,7 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val l2 = meta.metricObj eq Metric.L2
     val (state, cluster) =
       if (residual)
-        (new QuantRangeState(cbB, spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dir/centroids.bin")), l2),
+        (new QuantRangeState(cbB, Coarse.of(spark, meta), l2),
           t("cluster").cast(IntegerType))
       else (new QuantRangeState(cbB, null, l2, bits), lit(-1))
     mkCol(QuantRangeDist(mkExpr(t("code")), mkExpr(cluster), mkExpr(toFloatVec(q)), state))
@@ -1291,6 +1249,17 @@ sealed abstract class TableEngine(name: String) extends AnnEngine(name) {
     val built = meta.copy(numVectors = spark.read.parquet(meta.sourcePath).count())
     IndexCatalog.save(root(spark), built)
     built
+  }
+
+  /** The IVF families' one coarse quantizer build: fit ([[Coarse.fit]] on
+   *  the build's lowest-id `seeds` or its stride `sample`, each collected
+   *  only if used), write, and record it in `meta`. */
+  protected final def withCoarse(meta: IndexMeta, dir: String, params: BuildParams,
+      seeds: => Array[Array[Float]], sample: => Array[Array[Float]]): (IndexMeta, Coarse) = {
+    val cents = Coarse.fit(params, meta.dim, seeds, sample)
+    (meta.copy(nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
+      imiB = params.imiB, coarseHnswM = params.coarseHnswM),
+      Coarse.write(dir, cents, meta.dim, params))
   }
 
   /** The build's stored representation: cosine vectors normalized once. */
@@ -1402,62 +1371,22 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
     val flat = IndexMeta(index, name, "vec", "id", dim, metric.name,
       0, 0, 0f, false, 0L, 0L, Nil, sourcePath = s"$dir/data")
     val meta = if (!ivf) flat else {
-      import spark.implicits._
       val cosine = metric eq Metric.Cosine
-      // lazy: the seeded IMI branch never samples (its codebooks come from
-      // the kh lowest-id rows), so seed-mode builds skip the corpus pass
-      lazy val prepped = strideSample(data, params, cosine)
-      // IMI2x<b>: two half-space codebooks; the STORED centroid table is the
-      // cross-product concatenation [c1_i ; c2_j] (cell = i·|cb2| + j), so
-      // every downstream serve surface — probe-pruned scans, cluster-radii
-      // range pruning, ExactServe — works UNCHANGED on centroids.bin:
-      // ||q − [c1;c2]||² = ||q₁−c1||² + ||q₂−c2||², hence cell ranking over
-      // product centroids IS the half-distance-sum ranking classic IMI
-      // computes. IMI buys both ends: the BUILD gets 2^(2b) cells from two
-      // 2^b-centroid trainings (FAISS IndexIVF over a MultiIndexQuantizer),
-      // and probe SELECTION decomposes into O(2·2^b) half distances + a heap
-      // merge (KMeansLite.nearestPImi — the FAISS multi-sequence analog,
-      // dispatched via meta.imiB) instead of a 2^(2b)·dim product-table scan,
-      // 128× less per-query distance work at the grammar's allowed b=8.
-      val cents = if (params.imiB > 0) {
-        require(dim % 2 == 0, s"IMI2x splits vectors into equal halves (dim=$dim is odd)")
-        val half = dim / 2
-        val kh = 1 << params.imiB
-        val (cb1, cb2) = if (params.seedK > 0) {
-          // seed mode: half-codebooks = halves of the kh lowest-id vectors,
-          // verbatim — SQL-replayable (the ann_imi_probe1 oracle)
-          val seeds = data.orderBy("id").limit(kh).select("vec").as[Array[Float]].collect()
-          val sp = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-          (sp.map(_.take(half)), sp.map(_.drop(half)))
-        } else
-          (KMeansLite.train(prepped.map(_.take(half)), kh),
-           KMeansLite.train(prepped.map(_.drop(half)), kh))
-        for (c1 <- cb1; c2 <- cb2) yield c1 ++ c2
-      } else KMeansLite.train(prepped, params.nlist)
-      IndexCatalog.writeCentroids(s"$dir/centroids.bin", cents, dim)
-      writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
-      flat.copy(nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
-        imiB = params.imiB, coarseHnswM = params.coarseHnswM)
+      withCoarse(flat, dir, params, lowestIds(data, Coarse.seedRows(params), cosine),
+        strideSample(data, params, cosine))._1
     }
     finishBuild(spark, meta, storedInput(data, metric))
   }
 
   protected def encode(spark: SparkSession, meta: IndexMeta, dir: String,
       data: DataFrame): DataFrame =
-    if (!ivf) data
-    else {
-      val centsB = spark.sparkContext.broadcast(
-        IndexCatalog.readCentroids(s"$dir/centroids.bin"))
-      data.withColumn("cluster", AnnEngine.assignUdf(spark, centsB, meta.imiB)(col("vec")))
-    }
+    if (!ivf) data else data.withColumn("cluster", Coarse.of(spark, meta).assignCol(col("vec")))
 
   /** Per-cluster max member↔centroid L2 radius: range queries prune
    *  clusters by the triangle inequality EXACTLY. */
   override protected def radii(spark: SparkSession, meta: IndexMeta, dir: String,
       rows: DataFrame): Option[Array[Float]] =
-    if (!ivf) None
-    else Some(Ann.clusterRadii(rows, spark.sparkContext.broadcast(
-      IndexCatalog.readCentroids(s"$dir/centroids.bin")), meta.nlist))
+    if (!ivf) None else Some(Ann.clusterRadii(rows, Coarse.of(spark, meta), meta.nlist))
 
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame = {
@@ -1468,7 +1397,7 @@ sealed abstract class ExactEngine(name: String, ivfLayout: Boolean) extends Tabl
 
   /** The sequential double fold of the Catalyst distance expressions. */
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
-      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+      clusters: Array[Int]): LocalScorer = {
     val vecs = stored.map(_.asInstanceOf[ArrayData].toFloatArray())
     val l2 = meta.metricObj eq Metric.L2
     (query, _) => i => Ann.doubleFoldDist(vecs(i), query, l2)
@@ -1543,17 +1472,16 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
     val spark = data.sparkSession
-    import spark.implicits._
     val dim = inferDim(data)
     require(params.pqM > 0 && dim % params.pqM == 0,
       s"$name requires dim % m == 0 (dim=$dim, m=${params.pqM})")
     val cosine = metric eq Metric.Cosine
-    def lowestIds(n: Int): Array[Array[Float]] = {
-      val seeds = data.orderBy("id").limit(n).select("vec").as[Array[Float]].collect()
-      if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-    }
-    // trained mode collects ONE stride sample and reuses it for every
-    // codebook (a second full-corpus sampling pass would double build IO)
+    // each training input is collected at most once and serves every
+    // codebook: seed mode's lowest-id rows (the coarse quantizer's and the
+    // seedK codebook seeds), trained mode's one stride sample (a second
+    // full-corpus sampling pass would double build IO)
+    lazy val seeds: Array[Array[Float]] = lowestIds(data,
+      if (ivf) math.max(Coarse.seedRows(params), params.seedK) else params.seedK, cosine)
     lazy val trainedSample: Array[Array[Float]] = strideSample(data, params, cosine)
     val meta0 = IndexMeta(index, name, "vec", "id", dim, metric.name,
       maxDegree = params.pqM, // pq reuses the maxDegree slot for m
@@ -1566,7 +1494,7 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
       val cb = if (params.seedK > 0) {
         // seed mode: codebook = subvectors of the seedK lowest-id vectors,
         // verbatim — no sampling job, no training; SQL-replayable by design
-        val prepped = lowestIds(params.seedK)
+        val prepped = seeds
         if (params.opq) {
           // seeded OPQ: a deterministic REVERSAL permutation as the rotation —
           // orthogonal like a trained OPQ matrix, exercises the production
@@ -1586,60 +1514,19 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
       PqCodec.write(s"$dir/pq.bin", cb)
       meta0.copy(opq = params.opq)
     } else {
-      def residual(c: Array[Float], v: Array[Float]): Array[Float] = PqCodec.residual(v, c)
-      // IMI2x<b>,PQ<m>: the coarse quantizer is the same product-centroid
-      // construction as the ivfflat IMI build — the STORED centroid table
-      // is the cross product [c1_i ; c2_j], so probe enumeration, residual
-      // encode, ADC serving and ExactServe are centroid-table-generic;
-      // only assignment decomposes (AnnEngine.assignUdf)
-      val (cents, cb) = if (params.imiB > 0) {
-        require(dim % 2 == 0, s"IMI2x splits vectors into equal halves (dim=$dim is odd)")
-        val half = dim / 2
-        val kh = 1 << params.imiB
-        val (cb1, cb2) =
-          if (params.seedK > 0) {
-            val sp = lowestIds(kh)
-            (sp.map(_.take(half)), sp.map(_.drop(half)))
-          } else
-            (KMeansLite.train(trainedSample.map(_.take(half)), kh),
-             KMeansLite.train(trainedSample.map(_.drop(half)), kh))
-        val cents = for (c1 <- cb1; c2 <- cb2) yield c1 ++ c2
-        // residuals use the DECOMPOSED per-half argmin — the same float
-        // arithmetic the stored assignment and the DuckDB oracle's
-        // half-argmin CTEs run. A full-product float scan agrees in real
-        // arithmetic but can round a near-tie differently (one 64-dim
-        // accumulation vs two 32-dim ones), which would seed the codebook
-        // against a different centroid than the row is stored under
-        def imiResidual(v: Array[Float]): Array[Float] =
-          residual(cents(KMeansLite.nearest(cb1, v.take(half)) * cb2.length +
-            KMeansLite.nearest(cb2, v.drop(half))), v)
-        // PQ codebook on residuals vs the assigned PRODUCT centroid — seeded
-        // from the seedK lowest ids (SQL-replayable) or trained on the sample
-        val cb =
-          if (params.seedK > 0) PqCodec.fromSeeds(lowestIds(params.seedK).map(imiResidual), params.pqM)
-          else PqCodec.train(trainedSample.map(imiResidual), params.pqM)
-        (cents, cb)
-      } else if (params.seedK > 0) {
-        // seed mode: coarse centroids = the nlist lowest-id vectors verbatim;
-        // PQ codebook = residuals of the seedK lowest-id vectors against their
-        // assigned coarse centroid — both SQL-replayable for the bit oracle
-        val prepped = lowestIds(math.max(params.nlist, params.seedK))
-        val cents = prepped.take(params.nlist)
-        (cents, PqCodec.fromSeeds(prepped.take(params.seedK)
-          .map(v => residual(cents(KMeansLite.nearest(cents, v)), v)), params.pqM))
-      } else {
-        // coarse quantizer (L2 assignment — the standard IVF choice for every
-        // metric; cosine inputs are normalized so L2 and cosine ranking agree);
-        // PQ trains on the sample's residuals against its assigned centroids
-        val cents = KMeansLite.train(trainedSample, params.nlist)
-        (cents, PqCodec.train(trainedSample
-          .map(v => residual(cents(KMeansLite.nearest(cents, v)), v)), params.pqM))
-      }
-      IndexCatalog.writeCentroids(s"$dir/centroids.bin", cents, dim)
+      val (withQ, coarse) = withCoarse(meta0, dir, params, seeds, trainedSample)
+      // PQ codebook on residuals against each row's assigned cell — seeded
+      // from the seedK lowest ids (SQL-replayable) or trained on the
+      // sample. Cells come from Coarse.assign, so an IMI row's residual is
+      // taken against the cell it is stored under (a full-product float
+      // scan can round a near-tie to a different cell)
+      def residual(v: Array[Float]): Array[Float] =
+        PqCodec.residual(v, coarse.cents(coarse.assign(v)))
+      val cb =
+        if (params.seedK > 0) PqCodec.fromSeeds(seeds.take(params.seedK).map(residual), params.pqM)
+        else PqCodec.train(trainedSample.map(residual), params.pqM)
       PqCodec.write(s"$dir/pq.bin", cb)
-      writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
-      meta0.copy(nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
-        imiB = params.imiB, coarseHnswM = params.coarseHnswM)
+      withQ
     }
     finishBuild(spark, meta, storedInput(data, metric))
   }
@@ -1648,11 +1535,10 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
       data: DataFrame): DataFrame = {
     val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dir/pq.bin"))
     if (ivf) {
-      val centsB = spark.sparkContext.broadcast(
-        IndexCatalog.readCentroids(s"$dir/centroids.bin"))
+      val coarse = Coarse.of(spark, meta)
       val encodeUdf = udf((v: Array[Float], cluster: Int) =>
-        PqCodec.encode(cbB.value, PqCodec.residual(v, centsB.value(cluster))))
-      data.withColumn("cluster", AnnEngine.assignUdf(spark, centsB, meta.imiB)(col("vec")))
+        PqCodec.encode(cbB.value, PqCodec.residual(v, coarse.cents(cluster))))
+      data.withColumn("cluster", coarse.assignCol(col("vec")))
         .select(Seq(col("id"), encodeUdf(col("vec"), col("cluster")).as("code")) ++
           refineCols(meta) :+ col("cluster"): _*)
     } else {
@@ -1669,30 +1555,31 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
 
   /** The family's ADC kernel for a prepped query ([[AdcQuery]]): ivfpq
    *  takes one residual table per probed cell (`probes`, null = every
-   *  cell of `cents`); pq (OPQ) rotates the ADC query once — the RFlat
-   *  re-rank keeps the unrotated one. Artifacts load once per call. */
-  private def adcQuery(spark: SparkSession, meta: IndexMeta,
-      cents: Array[Array[Float]]): (Array[Float], Array[Int]) => AdcQuery = {
+   *  cell); pq (OPQ) rotates the ADC query once — the RFlat re-rank keeps
+   *  the unrotated one. Artifacts load once per call. */
+  private def adcQuery(spark: SparkSession,
+      meta: IndexMeta): (Array[Float], Array[Int]) => AdcQuery = {
     val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
     val rot = if (meta.opq) readRotation(spark, meta) else null
+    val coarse = if (ivf) Coarse.of(spark, meta) else null
     val l2 = meta.metricObj eq Metric.L2
     (query, probes) =>
       if (!ivf) AdcQuery.flat(cb, if (rot == null) query else OpqCodec.rotate(rot, query), l2, 8)
-      else AdcQuery.residual(cb, query, cents,
-        if (probes == null) cents.indices.toArray else probes, l2)
+      else AdcQuery.residual(cb, query, coarse.cents,
+        if (probes == null) coarse.cents.indices.toArray else probes, l2)
   }
 
   /** ADC top-k; partition pruning keeps unprobed ivfpq files unread. */
   protected def scored(spark: SparkSession, meta: IndexMeta, query: Array[Float],
       filter: Option[Column], nprobe: Int): DataFrame = {
     val (scan, score) = if (ivf) {
-      val (cents, ps) = probes(spark, meta, query, nprobe)
-      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta, cents)(query, ps))
-      (probeFilter(spark.read.parquet(meta.sourcePath), ps.toSeq, cents.length),
+      val (coarse, ps) = probes(spark, meta, query, nprobe)
+      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta)(query, ps))
+      (probeFilter(spark.read.parquet(meta.sourcePath), ps.toSeq, coarse.nlist),
         udf((cluster: Int, code: Array[Byte]) => aB.value.score(cluster, code))
           .apply(col("cluster").cast(IntegerType), col("code")))
     } else {
-      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta, null)(query, null))
+      val aB = spark.sparkContext.broadcast(adcQuery(spark, meta)(query, null))
       (spark.read.parquet(meta.sourcePath),
         udf((code: Array[Byte]) => aB.value.score(-1, code)).apply(col("code")))
     }
@@ -1702,9 +1589,9 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
   }
 
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
-      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+      clusters: Array[Int]): LocalScorer = {
     val codes = stored.map(_.asInstanceOf[Array[Byte]])
-    val adc = adcQuery(spark, meta, cents)
+    val adc = adcQuery(spark, meta)
     (query, probes) => {
       val a = adc(query, probes)
       if (clusters == null) i => a.score(-1, codes(i)).toDouble
@@ -1732,10 +1619,9 @@ sealed abstract class PqEngine(name: String, ivfLayout: Boolean) extends TableEn
     val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dir/pq.bin"))
     val rows = spark.read.parquet(meta.sourcePath).where(pred)
     if (ivf) {
-      val centsB = spark.sparkContext.broadcast(
-        IndexCatalog.readCentroids(s"$dir/centroids.bin"))
+      val coarse = Coarse.of(spark, meta)
       val dec = udf((code: Array[Byte], cluster: Int) =>
-        PqCodec.decodeResidual(cbB.value, code, centsB.value(cluster)))
+        PqCodec.decodeResidual(cbB.value, code, coarse.cents(cluster)))
       rows.select(col("id").as("row_id"),
         dec(col("code"), col("cluster").cast(IntegerType)).as("vector"))
     } else {
@@ -1783,15 +1669,6 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
     val dim = inferDim(data)
     val cosine = metric eq Metric.Cosine
     val dataP = storedInput(data, metric)
-    // coarse centroids: same seeded/trained construction as ivfflat
-    val cents = if (params.seedK > 0) {
-      val seeds = data.orderBy("id").limit(math.max(params.nlist, params.seedK))
-        .select("vec").as[Array[Float]].collect()
-      val prepped = if (cosine) seeds.map(v => VectorOps.normalize(v.clone())) else seeds
-      prepped.take(params.nlist)
-    } else KMeansLite.train(strideSample(data, params, cosine), params.nlist)
-    IndexCatalog.writeCentroids(s"$dir/centroids.bin", cents, dim)
-    writeCoarseHnsw(dir, cents, dim, params.coarseHnswM)
     // per-dim min/max over the STORED representation (normalized if cosine):
     // elementwise min/max is order-independent, so the distributed agg is
     // exact and host-count-invariant
@@ -1836,12 +1713,12 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
         Array(mins(d) + (b / nLevels.toFloat) * scales(d)))
     }
     PqCodec.write(s"$dir/pq.bin", PqCodec.Codebook(dim, 1, 1 << bits, levels))
-    val meta = IndexMeta(index, name, "vec", "id", dim, metric.name,
+    val meta0 = IndexMeta(index, name, "vec", "id", dim, metric.name,
       maxDegree = 0, buildComplexity = 0, alpha = 0f, quantized = true,
       numVectors = 0L, numDeleted = 0L, shards = Nil, sourcePath = s"$dir/data",
-      nlist = cents.length, nprobe = math.min(params.nprobe, cents.length),
-      refine = params.refine, refineK = params.refineK, quantBits = bits,
-      coarseHnswM = params.coarseHnswM)
+      refine = params.refine, refineK = params.refineK, quantBits = bits)
+    val (meta, _) = withCoarse(meta0, dir, params, lowestIds(data, Coarse.seedRows(params), cosine),
+      strideSample(data, params, cosine))
     finishBuild(spark, meta, dataP)
   }
 
@@ -1850,8 +1727,6 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
    *  ScalarQuantizer. */
   protected def encode(spark: SparkSession, meta: IndexMeta, dir: String,
       data: DataFrame): DataFrame = {
-    val centsB = spark.sparkContext.broadcast(
-      IndexCatalog.readCentroids(s"$dir/centroids.bin"))
     val sq = IndexCatalog.readCentroids(s"$dir/sq.bin")
     val minsB = spark.sparkContext.broadcast(sq(0))
     val scalesB = spark.sparkContext.broadcast(sq(1))
@@ -1861,7 +1736,7 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
       else udf((v: Array[Float]) =>
         SqPackedCodec.encodeRow(v, minsB.value, scalesB.value, bits))
     data.select(Seq(col("id"), encodeUdf(col("vec")).as("code")) ++ refineCols(meta) :+
-      AnnEngine.assignUdf(spark, centsB, 0)(col("vec")).as("cluster"): _*)
+      Coarse.of(spark, meta).assignCol(col("vec")).as("cluster"): _*)
   }
 
   /** CODE-SPACE cluster radii: range search filters distances to the
@@ -1871,8 +1746,7 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
    *  pruning in code space at any nprobe. */
   override protected def radii(spark: SparkSession, meta: IndexMeta, dir: String,
       rows: DataFrame): Option[Array[Float]] =
-    Some(Ann.sqClusterRadii(rows,
-      spark.sparkContext.broadcast(IndexCatalog.readCentroids(s"$dir/centroids.bin")),
+    Some(Ann.sqClusterRadii(rows, Coarse.of(spark, meta),
       spark.sparkContext.broadcast(PqCodec.read(s"$dir/pq.bin")), meta.nlist, meta.quantBits))
 
   /** The family's ADC kernel for a prepped query: one per-dim
@@ -1894,7 +1768,7 @@ sealed abstract class SqEngine extends TableEngine("ivfsq") {
   }
 
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
-      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+      clusters: Array[Int]): LocalScorer = {
     val codes = stored.map(_.asInstanceOf[Array[Byte]])
     val adc = adcQuery(spark, meta)
     (query, _) => {
@@ -1938,8 +1812,6 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
 
   private[index] def build(data: DataFrame, index: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
-    val spark = data.sparkSession
-    import spark.implicits._
     val dim = inferDim(data)
     val nbits =
       if (params.lshNbits > 0) params.lshNbits else math.min(dim, LshCodec.MaxBits)
@@ -1959,8 +1831,7 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
       if (params.lshRotate && nbits > dim) LshCodec.paddedRotationRows(nbits, dim)
       else {
         val hyps0: Array[Array[Float]] =
-          if (params.seedK > 0)
-            data.orderBy("id").limit(nbits).select("vec").as[Array[Float]].collect()
+          if (params.seedK > 0) lowestIds(data, nbits, cosine = false)
           else LshCodec.randomHyperplanes(nbits, dim)
         require(hyps0.length == nbits,
           s"lsh seed mode needs >= $nbits rows (got ${hyps0.length})")
@@ -1973,14 +1844,9 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
     // `t` suffix (IndexLSH train_thresholds): per-bit cut point = mean
     // projection over the trainSample LOWEST-ID vectors (id order, double) —
     // deterministic and replayable
-    if (params.lshThresholds) {
-      val sample0 = data.orderBy("id").limit(params.trainSample)
-        .select("vec").as[Array[Float]].collect()
-      val sample = if (metric eq Metric.Cosine)
-        sample0.map(v => VectorOps.normalize(v.clone())) else sample0
-      IndexCatalog.writeThresholds(s"$dir/thresholds.bin",
-        LshCodec.trainThresholds(hyps, sample))
-    }
+    if (params.lshThresholds)
+      IndexCatalog.writeThresholds(s"$dir/thresholds.bin", LshCodec.trainThresholds(hyps,
+        lowestIds(data, params.trainSample, metric eq Metric.Cosine)))
     // nlist carries nbits (the hnsw precedent: IndexMeta reuses maxDegree
     // for m); quantized marks the code-only storage
     val meta = IndexMeta(index, name, "vec", "id", dim, metric.name,
@@ -1989,7 +1855,7 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
       nlist = nbits, refine = params.refine, refineK = params.refineK,
       lshVariant = (if (params.lshRotate) "r" else "") +
         (if (params.lshThresholds) "t" else ""))
-    finishBuild(spark, meta, storedInput(data, metric))
+    finishBuild(data.sparkSession, meta, storedInput(data, metric))
   }
 
   protected def encode(spark: SparkSession, meta: IndexMeta, dir: String,
@@ -2027,7 +1893,7 @@ sealed abstract class LshEngine extends TableEngine("lsh") {
    *  bit_count(XOR) is exact; wide codes sum per-word popcounts, as the
    *  scan sums its per-word columns. Row i's words sit at [i·w, (i+1)·w). */
   protected def localScorer(spark: SparkSession, meta: IndexMeta, stored: Array[Any],
-      clusters: Array[Int], cents: Array[Array[Float]]): LocalScorer = {
+      clusters: Array[Int]): LocalScorer = {
     val code = queryCode(spark, meta)
     val w = LshCodec.words(meta.nlist)
     val words = if (w == 1) stored.map(_.asInstanceOf[Long])

@@ -43,17 +43,15 @@ private[graft] object ExactServe {
       nprobeOverride: Int = 0): Array[(Long, Float)] = {
     val query = Ann.prepQuery(meta, query0)
     val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
-    // the SAME graph selection as the distributed scans — the job-free
+    // the SAME probe selection as the distributed scans — the job-free
     // route must answer identically to the cluster route at any nprobe.
-    // Resolved PER CALL (its graph through ShardCache, per file
-    // generation) so a rebuilt coarse graph reaches this route exactly when
-    // it reaches the distributed scans
-    val probes: Array[Int] =
-      if (t.cents != null && nprobe < meta.nlist)
-        Ann.selectProbes(t.cents, meta.imiB, query, nprobe, Ann.coarseProbe(spark, meta))
-      else null
+    // Resolved PER CALL (through ShardCache, per file generation) so a
+    // rebuilt quantizer reaches this route exactly when it reaches the
+    // distributed scans
+    val coarse = if (t.clusters != null && nprobe < meta.nlist) Coarse.of(spark, meta) else null
+    val probes: Array[Int] = if (coarse == null) null else coarse.probes(query, nprobe)
     val probed: Array[Boolean] = if (probes == null) null else {
-      val p = new Array[Boolean](math.max(meta.nlist, t.cents.length))
+      val p = new Array[Boolean](math.max(meta.nlist, coarse.nlist))
       probes.foreach(p(_) = true)
       p
     }

@@ -68,15 +68,14 @@ case class IndexMeta(
     // IMI coarse quantizer (factory `IMI2x<b>[,Flat|,PQ<m>]`): bits per
     // half-space codebook. The stored centroid table is the 2^(2b)-cell
     // cross product (every serve surface stays centroid-table-generic);
-    // this field lets probe SELECTION decompose into per-half distance
-    // lists + a heap merge (KMeansLite.nearestPImi) instead of scanning
-    // the product table. 0 = plain IVF (default keeps old metadata.json
-    // readable).
+    // this field lets [[Coarse]] decompose assignment and probe SELECTION
+    // into per-half argmins instead of scanning the product table. 0 =
+    // plain IVF (default keeps old metadata.json readable).
     imiB: Int = 0,
     // HNSW coarse quantizer (factory `IVF<n>_HNSW<m>[,Flat|,PQ<m>|,SQ8…]`,
     // the FAISS IndexHNSWFlat-as-quantizer analog): HNSW graph degree of
-    // `coarse.hnsw`, a navigable graph over the SAME centroids.bin used
-    // for QUERY-TIME probe selection — O(ef·log nlist) half of the serve
+    // the [[Coarse]] probe graph, a navigable graph over the SAME centroid
+    // table used for QUERY-TIME probe selection — O(ef·log nlist) half of the serve
     // latency that plain IVF spends ranking all nlist centroids per query.
     // Build/append assignment stays the exact distributed scan (a Spark
     // cluster has the parallelism where FAISS's single process does not),

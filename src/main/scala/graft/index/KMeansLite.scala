@@ -10,7 +10,7 @@ import graft.core.VectorOps
  *
  * Runs on a driver-side sample only — at 100 TB the sample stays bounded
  * (FAISS trains IVF the same way); assignment of the full dataset to
- * centroids is the distributed part (AnnEngine.assignUdf).
+ * centroids is the distributed part ([[Coarse.assign]]).
  */
 object KMeansLite {
 
@@ -238,14 +238,14 @@ object KMeansLite {
    * the grammar's allowed b=8, where the product table holds 65,536 cells).
    *
    * The stored product table is untouched: cents(i·2^b + j) = cb1(i) ++
-   * cb2(j) by construction (the IMI builds in AnnEngine), so cb1(i) is the
+   * cb2(j) by construction ([[Coarse.fit]]), so cb1(i) is the
    * first half of row i·2^b and cb2(j) the second half of row j — the
    * half-codebooks reconstruct from the table with zero extra files.
    *
    * Ordering convention (pinned by the `ann_imi_probe1` oracle): cells rank
    * by fl(d1(i) + d2(j)) — each half distance the SAME float kernel and
    * element order as the stored assignment's per-half argmin
-   * (AnnEngine.assignUdf), the sum one float add — ties by cell id. Float addition is
+   * ([[Coarse.assign]]), the sum one float add — ties by cell id. Float addition is
    * monotone in each argument, so the sorted-half frontier bound holds in
    * float exactly as in real arithmetic; the merge keeps popping while the
    * boundary sum persists and cuts with a final (sum, cell) sort, making

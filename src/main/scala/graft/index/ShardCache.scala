@@ -4,14 +4,15 @@ import java.io.File
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import graft.core.{GraphIndex, DiskannFormat, DiskannMmapIndex, HnswFormat, HnswIndex, PcaCodec}
+import graft.core.{GraphIndex, DiskannFormat, DiskannMmapIndex, HnswFormat, PcaCodec}
 
 /** A loaded shard: the graph plus its label→external-id mapping. */
 final case class LoadedShard(index: GraphIndex, ids: Array[Long])
 
 /**
- * Executor-JVM-wide cache of decoded index files — graph shards, `coarse.hnsw`
- * probe graphs and `pca.bin` transforms — one entry per file path, valid
+ * Executor-JVM-wide cache of decoded index files — graph shards, the IVF
+ * coarse quantizer's centroid table and probe graph ([[Coarse]]) and
+ * `pca.bin` transforms — one entry per file path, valid
  * while the file's length and mtime and the load key (a shard's `cosine`, a
  * file kind otherwise) hold; a rewritten file replaces its entry. The
  * reference mmaps `.diskann` files once per process
@@ -42,7 +43,7 @@ object ShardCache {
   /** The value of `path` decoded under `key`: the cached one while its
    *  entry holds (two stats and one lookup), else `decode(length)`'s,
    *  which replaces the entry. */
-  private def load[T <: AnyRef](path: String, key: Any)(decode: Long => T): T = {
+  private[index] def load[T <: AnyRef](path: String, key: Any)(decode: Long => T): T = {
     val f = new File(path)
     val mtime = f.lastModified
     val length = f.length
@@ -73,9 +74,6 @@ object ShardCache {
         else DiskannFormat.readFile(diskannPath, cosineMetadata = cosine)
       LoadedShard(graph, IndexCatalog.readIds(idsPath))
     }
-
-  /** The `coarse.hnsw` probe-selection graph at `path`. */
-  def coarseGraph(path: String): HnswIndex = load(path, "coarse")(_ => HnswFormat.readFile(path))
 
   /** The frozen `pca.bin` transform at `path`. */
   def pca(path: String): PcaCodec.Pca = load(path, "pca")(_ => PcaCodec.read(path))

@@ -472,16 +472,20 @@ object AnnScaleSmoke {
         Ann.searchTable(queries, "qvec", emb, "vec_id", "as_imi_flat", 10).count()
       }
       // probe-selection microbench, driver-side (no Spark job): the same
-      // 512 queries × nprobe=512 selection over the same 65,536-cell table
-      val imiCents = IndexCatalog.readCentroids(java.nio.file.Paths.get(
-        IndexCatalog.indexDir(Ann.root(spark), "as_imi"), "centroids.bin").toString)
+      // 512 queries × nprobe=512 selection over the same 65,536-cell table,
+      // through each clone's coarse quantizer (table decoded before timing)
+      val imiCoarse = graft.index.Coarse.of(spark, imiMeta)
+      val flatCoarse = graft.index.Coarse.of(spark,
+        IndexCatalog.load(Ann.root(spark), "as_imi_flat"))
+      val imiCents = imiCoarse.cents
+      flatCoarse.cents
       val qsArr = queries.orderBy("qid").collect().map(_.getSeq[Float](1).toArray)
       run("probe_select_decomposed_512q") {
-        qsArr.foreach(q => graft.index.KMeansLite.nearestPImi(imiCents, 8, q, imiNprobe))
+        qsArr.foreach(q => imiCoarse.probes(q, imiNprobe))
         qsArr.length.toLong
       }
       run("probe_select_product_512q") {
-        qsArr.foreach(q => graft.index.KMeansLite.nearestP(imiCents, q, imiNprobe))
+        qsArr.foreach(q => flatCoarse.probes(q, imiNprobe))
         qsArr.length.toLong
       }
       // ---- IVF_HNSW at scale (round-17): the HNSW coarse quantizer over
@@ -494,34 +498,29 @@ object AnnScaleSmoke {
       locally {
         // clone first (save() mkdirs the index dir the graph build writes
         // into), then pay the one-off coarse-graph cost as its own op
-        IndexCatalog.save(Ann.root(spark),
-          imiMeta.copy(name = "as_ivfhnsw", imiB = 0, coarseHnswM = 32))
-        Seq("centroids.bin", "radii.bin").foreach { f =>
-          val src = java.nio.file.Paths.get(
-            IndexCatalog.indexDir(Ann.root(spark), "as_imi"), f)
-          if (java.nio.file.Files.exists(src))
-            java.nio.file.Files.copy(src, java.nio.file.Paths.get(
-              IndexCatalog.indexDir(Ann.root(spark), "as_ivfhnsw"), f),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
+        val hnswMeta = imiMeta.copy(name = "as_ivfhnsw", imiB = 0, coarseHnswM = 32)
+        IndexCatalog.save(Ann.root(spark), hnswMeta)
+        val radii = java.nio.file.Paths.get(
+          IndexCatalog.indexDir(Ann.root(spark), "as_imi"), "radii.bin")
+        if (java.nio.file.Files.exists(radii))
+          java.nio.file.Files.copy(radii, java.nio.file.Paths.get(
+            IndexCatalog.indexDir(Ann.root(spark), "as_ivfhnsw"), "radii.bin"),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // the clone's quantizer: the same table and its probe graph (the
+        // build's batch-parallel deterministic HnswIndex.addAll — the r17
+        // sequential loop cost 31 s at these 65,536 cells)
         run("ivfhnsw_coarse_build") {
-          val ix = new graft.core.HnswIndex(imiCents(0).length,
-            graft.core.Metric.L2, 32)
-          // batch-parallel deterministic bulk build (HnswIndex.addAll) —
-          // the r17 sequential loop cost 31 s at these 65,536 cells
-          ix.addAll(imiCents)
-          graft.core.HnswFormat.writeFile(ix, java.nio.file.Paths.get(
-            IndexCatalog.indexDir(Ann.root(spark), "as_ivfhnsw"),
-            "coarse.hnsw").toString)
+          graft.index.Coarse.write(IndexCatalog.indexDir(Ann.root(spark), "as_ivfhnsw"),
+            imiCents, imiCents(0).length, Ann.BuildParams(coarseHnswM = 32))
           imiCents.length.toLong
         }
+        val coarse = graft.index.Coarse.of(spark, hnswMeta)
         runServe("ivfhnsw_search_table_512q") {
           Ann.searchTable(queries, "qvec", emb, "vec_id", "as_ivfhnsw", 10).count()
         }
-        val hnswMeta = IndexCatalog.load(Ann.root(spark), "as_ivfhnsw")
-        val coarse = Ann.coarseProbe(spark, hnswMeta)
+        coarse.probes(qsArr(0), imiNprobe) // decode the graph before timing
         run("probe_select_hnsw_512q") {
-          qsArr.foreach(q => Ann.selectProbes(imiCents, 0, q, imiNprobe, coarse))
+          qsArr.foreach(q => coarse.probes(q, imiNprobe))
           qsArr.length.toLong
         }
         // probe-set quality: mean overlap of the graph's nprobe=512 set
@@ -529,9 +528,8 @@ object AnnScaleSmoke {
         // bounds any serve-level recall delta vs as_imi_flat)
         var overlap = 0L
         qsArr.foreach { q =>
-          val exact = graft.index.KMeansLite.nearestP(imiCents, q, imiNprobe).toSet
-          overlap += Ann.selectProbes(imiCents, 0, q, imiNprobe, coarse)
-            .count(exact)
+          val exact = flatCoarse.probes(q, imiNprobe).toSet
+          overlap += coarse.probes(q, imiNprobe).count(exact)
         }
         if (ops.contains("probe_select_hnsw_512q"))
           ops("probe_select_hnsw_512q") = ops("probe_select_hnsw_512q") +

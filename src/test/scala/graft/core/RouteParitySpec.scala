@@ -91,8 +91,9 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** One index per storage shape the driver-local scorers branch on: raw
    *  vectors, per-probe and flat ADC, OPQ rotation, byte and packed SQ,
-   *  RFlat re-rank, narrow / thresholded / wide Hamming, a coarse graph,
-   *  IMI cells, and the non-L2 metrics. */
+   *  RFlat re-rank, narrow / thresholded / wide Hamming, a coarse graph
+   *  (over exact and SQ rows), IMI cells (exact and PQ), and the non-L2
+   *  metrics. */
   private def factoryShapes: Seq[(String, Ann.BuildParams)] = {
     val base = Ann.BuildParams(nprobe = 4)
     Seq(
@@ -105,6 +106,8 @@ class RouteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       "rp_lsh256" -> "LSH256",
       "rp_lsh32_rf" -> "LSH32,RFlat",
       "rp_ivfhnsw" -> "IVF16_HNSW8,Flat",
+      "rp_ivfhnswsq" -> "IVF16_HNSW8,SQ8",
+      "rp_imiflat" -> "IMI2x2,Flat",
       "rp_imipq" -> "IMI2x2,PQ4"
     ).map { case (name, f) => name -> Ann.parseFactory(f, base) } ++ Seq(
       "rp_ivfpq_ip" -> Ann.parseFactory("IVF16,PQ4", base.copy(metric = "ip")),

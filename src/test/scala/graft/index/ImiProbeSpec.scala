@@ -9,7 +9,7 @@ import graft.core.Simd
  * set must equal a full (fl(d1+d2), cellId) sort over the product table at
  * EVERY nprobe — including boundaries that cut through tie groups — and
  * probe1 must be exactly the decomposed per-half argmin the stored
- * assignment (AnnEngine.assignUdf) and the `ann_imi_probe1` oracle
+ * assignment ([[Coarse.assign]]) and the `ann_imi_probe1` oracle
  * compute. The reference comparator uses the DECOMPOSED float arithmetic
  * (two half-dim accumulations + one add), never full-dim accumulation:
  * mixing the two conventions can round a near-tie differently (956e6c7).

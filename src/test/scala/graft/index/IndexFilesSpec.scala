@@ -8,11 +8,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Index files on disk and in memory: every decoded index file (graph
- *  shards, `coarse.hnsw`, `pca.bin`) has one [[ShardCache]] entry per live
- *  path, forgotten when a drop deletes it and replaced when a rebuild
- *  rewrites it; `metadata.json` names the files under its directory
- *  relative to it, so an index directory answers the same searches under
- *  another root. */
+ *  shards, `centroids.bin`, `coarse.hnsw`, `pca.bin`) has one [[ShardCache]]
+ *  entry per live path, forgotten when a drop deletes it and replaced when
+ *  a rebuild rewrites it; `metadata.json` names the files under its
+ *  directory relative to it, so an index directory answers the same
+ *  searches under another root. */
 class IndexFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val work = Files.createTempDirectory("graft-index-files")
 
@@ -48,7 +48,7 @@ class IndexFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Ann.searchBatch(emb, "vec_id", "fc_ivfh", queries, 10).collect().length == 30)
       assert(Ann.searchHits(spark, "fc_pca", queries.head, 10).collect().length == 10)
     }
-    val coarse = Set(s"${dirOf("fc_ivfh")}/coarse.hnsw")
+    val coarse = Set("centroids.bin", "coarse.hnsw").map(f => s"${dirOf("fc_ivfh")}/$f")
     val pca = Set(s"${dirOf("fc_pca")}/pca.bin")
     serve()
     assert(cached("fc_ivfh") == coarse && cached("fc_pca") == pca, ShardCache.cachedPaths)
@@ -70,6 +70,40 @@ class IndexFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     Ann.drop(spark, "fc_ivfh")
     Ann.drop(spark, "fc_pca")
     assert(cached("fc_ivfh").isEmpty && cached("fc_pca").isEmpty, ShardCache.cachedPaths)
+  }
+
+  test("one centroid-table decode per generation on the distributed route; rebuilds answer from the new table") {
+    val five = emb.orderBy("vec_id").limit(5).select("embedding").collect()
+      .map(_.getSeq[Float](0).toArray).toSeq
+    def hits(name: String): Seq[Seq[(Long, Float)]] = five.map(q =>
+      Ann.searchHits(spark, name, q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq)
+    spark.conf.set("spark.graft.localMaxBytes", "0")
+    try for ((name, factory, rebuilt) <- Seq(
+        ("fc_ivfhnsw", "IVF16_HNSW8,Flat", "IVF8_HNSW8,Flat"),
+        ("fc_imipq", "IMI2x2,PQ4", "IMI2x1,PQ4"),
+        ("fc_ivfsq", "IVF16,SQ8", "IVF8,SQ8"))) {
+      Ann.buildIndexFactory(emb, "embedding", "vec_id", name, factory, Ann.BuildParams(nprobe = 2))
+      val files = (Seq("centroids.bin") ++ (if (factory.contains("HNSW")) Seq("coarse.hnsw") else Nil))
+        .map(f => s"${dirOf(name)}/$f").toSet
+      ShardCache.forget(files)
+      val loads0 = ShardCache.loads
+      assert(hits(name).forall(_.length == 10), factory)
+      assert(Ann.searchBatch(emb, "vec_id", name, five, 10).collect().length == 50, factory)
+      Ann.rangeSearch(emb, "vec_id", name, five.head, 20f).collect()
+      // one decode of each coarse file for all seven calls, driver and tasks
+      assert(ShardCache.loads - loads0 == files.size && cached(name) == files,
+        s"$factory: ${ShardCache.loads - loads0} decodes, ${cached(name)}")
+
+      Ann.buildIndexFactory(emb, "embedding", "vec_id", name, rebuilt, Ann.BuildParams(nprobe = 2))
+      Ann.buildIndexFactory(emb, "embedding", "vec_id", s"${name}_ref", rebuilt,
+        Ann.BuildParams(nprobe = 2))
+      assert(hits(name) == hits(s"${name}_ref"), rebuilt)
+      val nlist = IndexCatalog.load(Ann.root(spark), name).nlist
+      assert(nlist < 16 &&
+        IndexCatalog.readCentroids(s"${dirOf(name)}/centroids.bin").length == nlist, rebuilt)
+      Ann.drop(spark, name)
+      assert(cached(name).isEmpty, ShardCache.cachedPaths)
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
   }
 
   private val names = Seq("p_graph", "p_ivf", "p_pca")

@@ -68,27 +68,30 @@ class IvfHnswSpec extends AnyFunSuite {
       "IVF32_HNSW16,Flat", Ann.BuildParams(nprobe = 4))
     val meta = IndexCatalog.load(Ann.root(spark), "ivfh_sel")
     val cents = IndexCatalog.readCentroids(s"${dirOf("ivfh_sel")}/centroids.bin")
-    val coarse = Ann.coarseProbe(spark, meta)
+    val coarse = Coarse.of(spark, meta)
+    assert(coarse.cents.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
+    val loads0 = ShardCache.loads
     val rnd = new java.util.Random(7L)
     val nq = 50
     var hit = 0; var tot = 0
     for (_ <- 0 until nq) {
       val q = Array.fill(cents(0).length)(rnd.nextGaussian().toFloat * 0.3f)
       val exact = KMeansLite.nearestP(cents, q, 4).toSet
-      val graph = Ann.selectProbes(cents, 0, q, 4, coarse).toSet
+      val graph = coarse.probes(q, 4).toSet
       assert(graph.size == 4)
       hit += graph.intersect(exact).size; tot += 4
     }
     assert(hit.toDouble / tot >= 0.9, s"graph probe recall ${hit.toDouble / tot}")
+    // 50 selections decode the graph once
+    assert(ShardCache.loads - loads0 == 1)
   }
 
   test("graph-probed search == manual scan over the graph's own probe set; ExactServe parity") {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "ivfh_probe",
       "IVF16_HNSW8,Flat", Ann.BuildParams(nprobe = 4))
     val meta = IndexCatalog.load(Ann.root(spark), "ivfh_probe")
-    val cents = IndexCatalog.readCentroids(s"${dirOf("ivfh_probe")}/centroids.bin")
-    val coarse = Ann.coarseProbe(spark, meta)
-    val probes = Ann.selectProbes(cents, 0, q0, 4, coarse).toSet
+    val probes = Coarse.of(spark, meta).probes(q0, 4).toSet
+    assert(probes.size == 4)
     // distributed route
     spark.conf.set("spark.graft.localMaxBytes", "0")
     val dist = Ann.search(emb, "vec_id", "ivfh_probe", q0, 10)
@@ -107,7 +110,7 @@ class IvfHnswSpec extends AnyFunSuite {
       (id, s)
     }.sortBy(t => (t._2, t._1)).take(10).map(t => (t._1, t._2.toFloat)).toSeq
     assert(dist == want)
-    // job-free route answers identically (same CoarseProbe selection)
+    // job-free route answers identically (same Coarse probe selection)
     spark.conf.set("spark.graft.localMaxBytes", (64L << 20).toString)
     val local = Ann.search(emb, "vec_id", "ivfh_probe", q0, 10)
       .select("vec_id", "_distance").collect()
@@ -137,7 +140,8 @@ class IvfHnswSpec extends AnyFunSuite {
     // each rebuild changes the coarse.hnsw generation. The one cache must
     // REPLACE per path, not accumulate a graph per generation for the JVM
     // lifetime (tens of MB each at design-point nlist), and the single-query
-    // and batch serves of one generation share one decode.
+    // and batch serves of one generation share one decode of each file (the
+    // build already decoded the centroid table to assign its rows).
     val dir = dirOf("ivfh_evict")
     for (round <- 1 to 3) {
       Ann.buildIndexFactory(emb, "embedding", "vec_id", "ivfh_evict",
@@ -146,8 +150,8 @@ class IvfHnswSpec extends AnyFunSuite {
       Ann.search(emb, "vec_id", "ivfh_evict", q0, 5).count()
       Ann.searchBatch(emb, "vec_id", "ivfh_evict", Seq(q0), 5).count()
       assert(ShardCache.loads - loads0 == 1, s"round $round: coarse graph decodes")
-      assert(ShardCache.cachedPaths.filter(_.startsWith(s"$dir/")) == Set(s"$dir/coarse.hnsw"),
-        s"round $round: ${ShardCache.cachedPaths}")
+      assert(ShardCache.cachedPaths.filter(_.startsWith(s"$dir/")) ==
+        Set(s"$dir/centroids.bin", s"$dir/coarse.hnsw"), s"round $round: ${ShardCache.cachedPaths}")
     }
   }
 }

@@ -240,14 +240,15 @@ class OpqChainSpec extends AnyFunSuite {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "oc_cp",
       "IVF16_HNSW8,Flat", Ann.BuildParams(nprobe = 4))
     val meta = IndexCatalog.load(Ann.root(spark), "oc_cp")
-    val path = s"${dirOf("oc_cp")}/coarse.hnsw"
-    ShardCache.forget(_ == path)
+    val paths = Set("centroids.bin", "coarse.hnsw").map(f => s"${dirOf("oc_cp")}/$f")
+    ShardCache.forget(paths)
     val loads0 = ShardCache.loads
-    val a = Ann.coarseProbe(spark, meta)
-    val b = Ann.coarseProbe(spark, meta)
-    assert(a.select(q0, 4).toSeq == b.select(q0, 4).toSeq)
-    // two probes of one generation cost one decode: no per-query file read
-    assert(ShardCache.loads - loads0 == 1 && ShardCache.cachedPaths.contains(path))
+    val a = Coarse.of(spark, meta)
+    val b = Coarse.of(spark, meta)
+    assert(a.probes(q0, 4).toSeq == b.probes(q0, 4).toSeq)
+    // two handles of one generation cost one decode of each file: no
+    // per-query file read
+    assert(ShardCache.loads - loads0 == 2 && paths.subsetOf(ShardCache.cachedPaths))
     assert(KMeansLite.nearestPImi(
       Array.fill(4)(Array.fill(4)(0f)), 1, Array.fill(4)(0f), 0).isEmpty)
   }
